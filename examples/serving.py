@@ -39,7 +39,7 @@ if __name__ == "__main__":
         .option("pathGlobFilter", "events.parquet")
         .parquet(SF)
     )
-    ingest.attach(stream, f"{work}/ckpt", availableNow=True).awaitTermination()
+    ingest.run(stream, f"{work}/ckpt")
     print("weekly totals from stream-maintained partials:")
     ingest.serve_weekly().orderBy("week_start", "event_type").show(8)
     print("compacted partial rows:", ingest.compact_partials())

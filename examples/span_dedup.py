@@ -73,7 +73,7 @@ def main():
         min_docs=3,
     )
     for i in range(3):
-        ingest._process(spark.read.parquet(f"{src}/b{i}"), i)
+        ingest.process_batch(spark.read.parquet(f"{src}/b{i}"), i)
         print(f"after batch {i} (latest report per doc):")
         ingest.reports().orderBy("doc_id").show()
 

@@ -121,8 +121,7 @@ spark.streams.addListener(cap)
 try:
     work = tempfile.mkdtemp(prefix="smx_rollup_")
     ingest = RollupIngest(spark, work + "/rollup")
-    q = ingest.attach(stream_of(events_src), work + "/ckpt")
-    q.awaitTermination()
+    ingest.run(stream_of(events_src), work + "/ckpt")
     if not cap.wait_for(N_FILES):
         print(
             f"WARNING: rollup_ingest: only {len(cap.rows())}/{N_FILES} "

@@ -404,10 +404,10 @@ def test_perceptual_ingest_replay_is_exactly_once(spark, tmp_path):
     b1 = spark.createDataFrame(
         [(3, 7), (4, 6)], "media_id long, sig long"
     )
-    ingest._process(b0, 0)
-    ingest._process(b1, 1)
+    ingest.process_batch(b0, 0)
+    ingest.process_batch(b1, 1)
     first = sorted(tuple(r) for r in ingest.pairs().collect())
-    ingest._process(b1, 1)  # replay
+    ingest.process_batch(b1, 1)  # replay
     second = sorted(tuple(r) for r in ingest.pairs().collect())
     assert first == second
     # sanity: cross-batch pair (0,3,0),(1,3,0) and in-batch (0,1,0) exist
@@ -539,6 +539,6 @@ def test_perceptual_ingest_wide_grouped_stream(spark, tmp_path):
     replay = spark.read.parquet(str(tmp_path / "history")).filter(
         f"ingest_batch = {last}"
     ).drop("ingest_batch")
-    ingest._process(replay, int(last))
+    ingest.process_batch(replay, int(last))
     again = {tuple(r) for r in ingest.pairs().collect()}
     assert again == want

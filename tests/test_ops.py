@@ -674,55 +674,6 @@ def test_normalize_event_ts_is_session_timezone_independent(spark):
     assert len(utc) == 50
 
 
-def test_stream_neardup_incremental_equals_batch(spark, tmp_path):
-    """The streaming near-dup candidates must equal the batch pair set
-    even when rows arrive across MULTIPLE micro-batches — pairs between a
-    new row and rows from earlier batches only exist via the state store
-    (ids + band keys), which is the incremental-ingest contract."""
-    from pyspark.sql import functions as F
-
-    from vector_lake_spark import queries as Q
-    from vector_lake_spark.functions.vectors import to_double_array
-    from vector_lake_spark.operators.ann import lsh_neardup_pairs
-    from vector_lake_spark.streaming.neardup import (
-        banded_keys,
-        stream_neardup_candidates,
-    )
-
-    sf = "/root/testdata/sf0.001"
-    emb = spark.read.parquet(f"{sf}/embeddings.parquet")
-    src = str(tmp_path / "src")
-    emb.repartition(4).write.parquet(src)  # 4 files -> 4 micro-batches
-
-    stream = (
-        spark.readStream.schema(emb.schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(src)
-    )
-    v = to_double_array(F.col("embedding"))
-    shard, bkeys = banded_keys(v, Q.H4, Q.NEARDUP_BANDS)
-    keyed = stream.select("vec_id", shard.alias("shard"), bkeys.alias("bkeys"))
-    cands = stream_neardup_candidates(
-        keyed, Q.NEARDUP_N_BANDS, state_ttl_ms=None  # bounded test stream
-    )
-    name = Q._run_stream_to_memory(cands, "append")
-    got = {
-        (r["id_a"], r["id_b"]) for r in spark.table(name).collect()
-    }
-
-    batch = lsh_neardup_pairs(
-        emb,
-        Q.H4,
-        threshold=-1.0,  # keep ALL candidate pairs: compare candidate sets
-        n_bands=Q.NEARDUP_N_BANDS,
-        band_bits=Q.NEARDUP_BAND_BITS,
-        carry_vectors=True,
-    )
-    want = {(r["id_a"], r["id_b"]) for r in batch.collect()}
-    assert got == want
-    assert len(got) > 0
-
-
 def test_neardup_ingest_bounded_state_multi_batch(spark, tmp_path):
     """The bounded-state ingest (NearDupIngest, r05 verdict #1) must
     reproduce the batch candidate set across MULTIPLE micro-batches
@@ -796,107 +747,6 @@ def test_neardup_ingest_bounded_state_multi_batch(spark, tmp_path):
     hist = spark.read.parquet(str(tmp_path / "history"))
     assert hist.count() == emb.count()
     assert set(hist.columns) == {"vec_id", "shard", "bkeys", "ingest_batch"}
-
-
-def test_hybrid_neardup_ttl_evicts_and_matches_batch(spark, tmp_path):
-    """The TTL-evicting hybrid (r06 verdict #3): buckets idle past the
-    processing-time TTL hand their members off to the parquet history
-    (KIND_EVICT), the sink's history join recovers new-vs-evicted pairs,
-    and the TOTAL pair set equals the batch operator's candidate set no
-    matter WHEN buckets evict — completeness is eviction-timing
-    invariant, which is the whole design. With a 1 ms TTL every bucket
-    idle for one micro-batch evicts, so the final state store must hold
-    strictly fewer buckets than the corpus touches overall."""
-    import json
-    import time as _time
-
-    from pyspark.sql import functions as F
-
-    from vector_lake_spark import queries as Q
-    from vector_lake_spark.functions.vectors import to_double_array
-    from vector_lake_spark.operators.ann import lsh_neardup_pairs
-    from vector_lake_spark.streaming.neardup import (
-        HybridNearDup,
-        banded_keys,
-        explode_band_keys,
-    )
-
-    sf = "/root/testdata/sf0.001"
-    emb = spark.read.parquet(f"{sf}/embeddings.parquet")
-    src = str(tmp_path / "src")
-    emb.repartition(4).write.parquet(src)  # 4 files -> 4 micro-batches
-
-    stream = (
-        spark.readStream.schema(emb.schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(src)
-    )
-    v = to_double_array(F.col("embedding"))
-    shard, bkeys = banded_keys(v, Q.H4, Q.NEARDUP_BANDS)
-    keyed = stream.select("vec_id", shard.alias("shard"), bkeys.alias("bkeys"))
-
-    hybrid = HybridNearDup(
-        spark,
-        str(tmp_path / "history"),
-        str(tmp_path / "pairs"),
-        Q.NEARDUP_N_BANDS,
-        state_ttl_ms=1,  # evict aggressively: every idle bucket, every batch
-    )
-    t0 = _time.time()
-    q = hybrid.run(keyed, checkpoint=str(tmp_path / "ckpt"))
-    assert _time.time() - t0 > 0.004  # 4 batches comfortably exceed the TTL
-
-    got = {(r["id_a"], r["id_b"]) for r in hybrid.pairs().collect()}
-    want = {
-        (r["id_a"], r["id_b"])
-        for r in lsh_neardup_pairs(
-            emb,
-            Q.H4,
-            threshold=-1.0,  # keep ALL candidates: compare candidate sets
-            n_bands=Q.NEARDUP_N_BANDS,
-            band_bits=Q.NEARDUP_BAND_BITS,
-            carry_vectors=True,
-        ).collect()
-    }
-    assert got == want
-    assert len(got) > 0
-
-    # eviction actually ran: the parquet history holds handed-off bucket
-    # members, and the final state store holds FEWER buckets than the
-    # corpus's total distinct bucket keys (with a 1 ms TTL, roughly only
-    # the last batch's buckets can still be hot)
-    hist = spark.read.parquet(str(tmp_path / "history"))
-    assert hist.count() > 0
-    assert set(hist.columns) == {
-        "vec_id", "shard", "band", "bkey", "bkeys", "ingest_batch",
-    }
-    batch_keyed = emb.select(
-        "vec_id", shard.alias("shard"), bkeys.alias("bkeys")
-    )
-    total_buckets = (
-        explode_band_keys(batch_keyed, Q.NEARDUP_N_BANDS)
-        .select("shard", "band", "bkey")
-        .distinct()
-        .count()
-    )
-    progs = [json.loads(p.json) for p in q.recentProgress]
-    state_rows = [
-        op["numRowsTotal"]
-        for p in progs
-        for op in p.get("stateOperators") or []
-    ]
-    assert state_rows, "stateful operator must report state metrics"
-    assert state_rows[-1] < total_buckets
-
-    # regression gate (r06 verdict #9): TTL keeps state strictly under
-    # the whole-corpus bucket count, and data batches clear a
-    # collapse-level throughput floor
-    from vector_lake_spark.streaming.metrics import assert_floors, summarize
-
-    assert_floors(
-        summarize(progs), min_rows_per_sec=5.0,
-        max_state_rows=total_buckets - 1, min_batches=4,
-    )
 
 
 def _make_bmp(width, height, rgb):
@@ -1462,8 +1312,7 @@ def test_stream_rollup_multi_batch_equals_direct(spark, tmp_path):
         .parquet(src)
     )
     ingest = RollupIngest(spark, str(tmp_path / "rollup"))
-    q = ingest.attach(stream, str(tmp_path / "ckpt"), availableNow=True)
-    q.awaitTermination()
+    ingest.run(stream, str(tmp_path / "ckpt"))
     parts = ingest.partials()
     assert parts.select("ingest_batch").distinct().count() == 3
     got = {
@@ -1487,6 +1336,39 @@ def test_stream_rollup_multi_batch_equals_direct(spark, tmp_path):
         .collect()
     }
     assert got == direct
+
+
+def test_maintainer_run_dispatches_process_batch_per_micro_batch(
+    spark, tmp_path, monkeypatch
+):
+    """``run`` looks up ``process_batch`` when each micro-batch arrives,
+    so a wrapper patched onto the class (as the traced benchmark run
+    does) sees exactly one call per micro-batch."""
+    from vector_lake_spark.streaming.rollup import RollupIngest
+
+    src = str(tmp_path / "src")
+    for day in ("2024-01-01", "2024-01-02"):  # 2 files -> 2 micro-batches
+        spark.sql(
+            f"SELECT TIMESTAMP'{day} 12:00:00' AS ts, "
+            f"'click' AS event_type, 1.5D AS value"
+        ).coalesce(1).write.mode("append").parquet(src)
+    stream = (
+        spark.readStream.schema(spark.read.parquet(src).schema)
+        .option("maxFilesPerTrigger", 1)
+        .parquet(src)
+    )
+    calls = []
+    process_batch = RollupIngest.process_batch
+
+    def counting(self, batch, batch_id):
+        calls.append(batch_id)
+        return process_batch(self, batch, batch_id)
+
+    monkeypatch.setattr(RollupIngest, "process_batch", counting)
+    ingest = RollupIngest(spark, str(tmp_path / "rollup"))
+    ingest.run(stream, str(tmp_path / "ckpt"))
+    assert calls == [0, 1]
+    assert ingest.partials().select("ingest_batch").distinct().count() == 2
 
 
 def test_stream_rollup_replay_idempotent_and_compaction_invariant(
@@ -1605,7 +1487,7 @@ def test_neardup_compact_between_crash_and_replay(spark, tmp_path):
         tuple(r) for r in ingest.process_batch(b1, 1).select("id_a", "id_b").collect()
     }
     assert replay == first
-    hist = ingest._history()
+    hist = spark.read.parquet(str(tmp_path / "hist"))
     assert hist.count() == hist.select("vec_id").distinct().count()
     total_pairs = ingest.pairs().count()
     assert total_pairs == ingest.pairs().distinct().count()
@@ -2303,7 +2185,7 @@ def test_span_ingest_stream_equals_batch_with_retroactive_update(
     )
     full = spark.createDataFrame(rows, schema)
     replay = full.join(docs_last, "doc_id", "left_semi")
-    ingest._process(replay, int(last))
+    ingest.process_batch(replay, int(last))
     again = {
         r.doc_id: (r.n_dup_positions, r.n_spans, r.dup_tokens)
         for r in ingest.reports().collect()
@@ -2333,13 +2215,13 @@ def test_span_ingest_refuses_reingest_of_existing_doc(spark, tmp_path):
         [(0, "one two three four"), (1, "five six seven eight")],
         "doc_id long, text string",
     )
-    ingest._process(b1, 0)
+    ingest.process_batch(b1, 0)
     # replay of batch 0 itself: fine (exactly-once overwrite)
-    ingest._process(b1, 0)
+    ingest.process_batch(b1, 0)
     # doc 0 arriving again in a LATER batch: refused by name
     b2 = spark.createDataFrame(
         [(0, "a revised version of doc zero"), (9, "a brand new doc")],
         "doc_id long, text string",
     )
     with _pytest.raises(ValueError, match="append-only"):
-        ingest._process(b2, 1)
+        ingest.process_batch(b2, 1)

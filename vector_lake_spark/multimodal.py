@@ -1046,15 +1046,6 @@ def extract_wav_features(df: DataFrame) -> DataFrame:
     return _audio_stats_operator(df, decode_wav)
 
 
-def extract_flac_features(df: DataFrame) -> DataFrame:
-    """REAL lossless-audio decode over Arrow batches (r08): FLAC
-    payloads → rate/channels/duration/RMS via the full Rice/LPC
-    decoder (``flac.py``)."""
-    from vector_lake_spark.flac import decode_flac
-
-    return _audio_stats_operator(df, decode_flac)
-
-
 def extract_audio_features(df: DataFrame) -> DataFrame:
     """Magic-dispatched audio stats over a mixed WAV/FLAC column — the
     audio counterpart of ``probe_media``'s route-by-container stance."""

@@ -3,11 +3,10 @@
 The Population Stability Index between a reference and a current period,
 per group — the production monitor for feature/score distribution drift
 (PSI > 0.1 = watch, > 0.2 = act; Siddiqi, "Credit Risk Scorecards",
-2006).  This module holds the SINGLE shared kernel — bucketing, period
-split, smoothing, and the PSI fold — consumed by both the batch query
-(``queries.q_drift_psi``) and the streaming maintainer
-(``streaming.drift.DriftMonitor``), so batch-vs-stream oracle equality
-cannot drift (same discipline as ``RollupIngest.partial_agg``).
+2006).  This module holds the single kernel — bucketing, period split,
+smoothing, and the PSI fold — behind the registry's ``drift_psi``
+(``queries.q_drift_psi``), whose DuckDB oracle (``SQL_DRIFT_PSI``) takes
+its breakpoints and split from the constants here.
 
 Design constraints mirrored in the DuckDB oracle term-for-term:
 
@@ -24,8 +23,8 @@ Design constraints mirrored in the DuckDB oracle term-for-term:
   monitor exists to catch.
 
 At 100 TB the fact table contributes only the conditional bucket counts
-(decomposable — partial-aggregable map-side, mergeable across streaming
-micro-batches); all PSI arithmetic runs on the |groups| × 10 aggregate.
+(decomposable — partial-aggregable map-side); all PSI arithmetic runs on
+the |groups| × 10 aggregate.
 """
 
 from __future__ import annotations
@@ -42,9 +41,8 @@ PSI_SPLIT_EPOCH = 1705363200
 
 
 def bucket_counts(events: DataFrame) -> DataFrame:
-    """Decomposable per-(event_type, bucket) period counts — the only
-    pass over the fact table.  Counts are sums, so per-micro-batch
-    partials merged in any order equal the direct aggregate."""
+    """Per-(event_type, bucket) period counts — the only pass over the
+    fact table."""
     cents = F.round(F.col("value") * F.lit(100.0), 0).cast("long")
     bucket = reduce(
         lambda a, b: a + b,
@@ -63,18 +61,13 @@ def bucket_counts(events: DataFrame) -> DataFrame:
 
 
 def psi_from_counts(per_bucket: DataFrame) -> DataFrame:
-    """The PSI fold over (event_type, bucket, n_ref, n_cur) counts:
-    complete the full bucket grid, smooth, and sum the divergence terms.
-    Input may carry duplicate (type, bucket) rows (e.g. un-compacted
-    per-batch partials) — they are re-summed first."""
-    per_bucket = (
-        per_bucket.groupBy("event_type", "bucket")
-        .agg(F.sum("n_ref").alias("n_ref"), F.sum("n_cur").alias("n_cur"))
-        # two consumers below (the totals and the grid left-join); the
-        # eager materialization of this ≤|types|×10-row aggregate pins
-        # the upstream scan to exactly one execution
-        .localCheckpoint(eager=True)
-    )
+    """The PSI fold over one (event_type, bucket, n_ref, n_cur) row per
+    bucket: complete the full bucket grid, smooth, and sum the
+    divergence terms."""
+    # two consumers below (the totals and the grid left-join); the eager
+    # materialization of this ≤|types|×10-row aggregate pins the
+    # upstream scan to exactly one execution
+    per_bucket = per_bucket.localCheckpoint(eager=True)
     tot = per_bucket.groupBy("event_type").agg(
         F.sum("n_ref").alias("t_ref"), F.sum("n_cur").alias("t_cur")
     )

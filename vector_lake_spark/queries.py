@@ -43,9 +43,14 @@ from vector_lake_spark.operators.dedup import (
     DEFAULT_MAX_SHINGLE_FREQ,
     embedding_neardup_pairs,
     exact_dedup_groups,
-    minhash_neardup_pairs,
     ngram_jaccard_pairs,
     simhash,
+)
+from vector_lake_spark.operators.drift import (
+    PSI_BREAKS_CENTS,
+    PSI_SPLIT_EPOCH,
+    bucket_counts,
+    psi_from_counts,
 )
 from vector_lake_spark.operators.events import sessionize, sliding_agg, tumbling_agg
 from vector_lake_spark.operators.topk import topk_cosine, topk_cosine_batch, topk_l2
@@ -1334,12 +1339,6 @@ SELECT id AS doc_id, round(r, 6) AS rank FROM {prev}
 
 
 SQL_GRAPH_PAGERANK = _sql_graph_pagerank()
-
-
-def q_dedup_minhash(spark, sf):
-    # Approximate (Spark ML MinHashLSH banding) — not SQL-expressible;
-    # driver records the weaker rows-only check.
-    return minhash_neardup_pairs(_t(spark, sf, "documents"), threshold=0.4)
 
 
 def q_dedup_minhash_native(spark, sf):
@@ -4630,8 +4629,8 @@ def q_dedup_stream_neardup(spark, sf):
     must reproduce the batch ``vec_neardup_lsh`` pairs exactly, so it
     shares that query's DuckDB oracle. The LSH keys are computed by the
     same native column expressions as batch; no float math crosses into
-    Python anywhere. (The low-latency stateful variant keeps its own
-    multi-micro-batch equivalence test in tests/test_ops.py.)"""
+    Python anywhere. (Multi-micro-batch equivalence, replay and
+    compaction are pinned in tests/test_ops.py.)"""
     import tempfile
 
     from vector_lake_spark.functions.vectors import dot, norm
@@ -5550,8 +5549,7 @@ def q_ev_stream_rollup(spark, sf):
     work = tempfile.mkdtemp(prefix="stream_rollup_")
     atexit.register(shutil.rmtree, work, ignore_errors=True)
     ingest = RollupIngest(spark, work + "/rollup")
-    q = ingest.attach(stream, work + "/ckpt", availableNow=True)
-    q.awaitTermination()
+    ingest.run(stream, work + "/ckpt")
     return ingest.serve_weekly()
 
 
@@ -6134,8 +6132,7 @@ def q_ev_stream_scd2(spark, sf):
     work = tempfile.mkdtemp(prefix="stream_scd2_")
     atexit.register(shutil.rmtree, work, ignore_errors=True)
     ingest = SCD2Ingest(spark, work + "/intervals", work + "/quarantine")
-    q = ingest.attach(stream, work + "/ckpt", availableNow=True)
-    q.awaitTermination()
+    ingest.run(stream, work + "/ckpt")
     return ingest.serve_intervals()
 
 
@@ -7074,89 +7071,18 @@ HAVING count(dt) >= 1
 """
 
 
-# PSI: log-spaced breakpoints in integer cents (powers of √10) so the
-# bucket decision is pure integer comparison — no transcendental boundary
-# hazard. value has 2-decimal precision; round(value*100) recovers exact
-# cents in both engines.
-PSI_BREAKS_CENTS = [3, 10, 32, 100, 316, 1000, 3162, 10000, 31623]
-# Reference/current split as UTC epoch seconds (2024-01-16T00:00:00Z) —
-# compared via unix_micros so the cut is session-timezone-independent
-# (a string→timestamp literal would parse in the session zone and move
-# rows between periods under a non-UTC session; the oracle's naive
-# comparison is UTC wall time).
-PSI_SPLIT_EPOCH = 1705363200
-
-
 def q_drift_psi(spark, sf):
     """Population Stability Index per event_type between a reference
     window (first 15 days) and the current window — the production
     drift monitor for feature/score distributions (PSI > 0.2 ⇒ act).
-    Buckets are fixed log-spaced breakpoints on exact integer cents
-    (round(value·100)), so bucketing is integer comparison, never a
-    float/ln boundary decision.  The full |types| × 10 bucket grid is
-    materialized (explode of a literal sequence on the 5-row totals) so
-    buckets empty in BOTH periods still contribute their Laplace-smoothed
-    term — dropping them underestimates PSI exactly when a distribution
-    collapses into few buckets, the high-drift case the monitor exists
-    to catch; smoothing is (n+½)/(N+5), and with all 10 buckets present
-    the smoothed shares sum to 1.
+    The kernel — integer-cent buckets, the full |types| × 10 grid and
+    (n+½)/(N+5) smoothing — lives in ``operators/drift.py``.
 
     100 TB shape: one scan → groupBy (type, bucket) with the two period
     counts as conditional aggregates (map-side combine; output is at most
     |types| × 10 rows); the grid completion and PSI arithmetic run on
     that tiny aggregate — nothing but counts ever shuffles."""
-    e = _events(spark, sf)
-    cents = F.round(F.col("value") * F.lit(100.0), 0).cast("long")
-    bucket = reduce(
-        lambda a, b: a + b,
-        [
-            (F.col("cents") >= F.lit(b)).cast("int")
-            for b in PSI_BREAKS_CENTS
-        ],
-    )
-    is_cur = F.unix_micros(F.col("ts")) >= F.lit(
-        PSI_SPLIT_EPOCH * 1_000_000
-    )
-    per_bucket = (
-        e.select("event_type", "ts", cents.alias("cents"))
-        .withColumn("bucket", bucket)
-        .groupBy("event_type", "bucket")
-        .agg(
-            F.sum(F.when(~is_cur, 1).otherwise(0)).alias("n_ref"),
-            F.sum(F.when(is_cur, 1).otherwise(0)).alias("n_cur"),
-        )
-        # two consumers below (the totals and the grid left-join); the
-        # eager materialization of this ≤|types|×10-row aggregate pins
-        # the fact scan to exactly one execution
-        .localCheckpoint(eager=True)
-    )
-    tot = per_bucket.groupBy("event_type").agg(
-        F.sum("n_ref").alias("t_ref"), F.sum("n_cur").alias("t_cur")
-    )
-    grid = tot.withColumn(
-        "bucket", F.explode(F.sequence(F.lit(0), F.lit(9)))
-    )
-    filled = (
-        grid.join(F.broadcast(per_bucket), ["event_type", "bucket"], "left")
-        .withColumn("n_ref", F.coalesce(F.col("n_ref"), F.lit(0)))
-        .withColumn("n_cur", F.coalesce(F.col("n_cur"), F.lit(0)))
-    )
-    p_ref = (F.col("n_ref") + F.lit(0.5)) / (F.col("t_ref") + F.lit(5.0))
-    p_cur = (F.col("n_cur") + F.lit(0.5)) / (F.col("t_cur") + F.lit(5.0))
-    return (
-        filled.select(
-            "event_type",
-            "n_ref",
-            "n_cur",
-            ((p_cur - p_ref) * (F.log(p_cur) - F.log(p_ref))).alias("term"),
-        )
-        .groupBy("event_type")
-        .agg(
-            F.sum("n_ref").cast("long").alias("rows_ref"),
-            F.sum("n_cur").cast("long").alias("rows_cur"),
-            F.round(F.sum("term"), 6).alias("psi"),
-        )
-    )
+    return psi_from_counts(bucket_counts(_events(spark, sf)))
 
 
 _PSI_BUCKET_SQL = " + ".join(

@@ -105,15 +105,6 @@ def summarize(progress: list[dict], include_empty: bool = False) -> list[dict]:
     return out
 
 
-def summarize_query(query, include_empty: bool = False) -> list[dict]:
-    """``summarize`` over a (finished) StreamingQuery's recentProgress."""
-    import json as _json
-
-    return summarize(
-        [_json.loads(p.json) for p in query.recentProgress], include_empty
-    )
-
-
 def assert_floors(
     rows: list[dict],
     min_rows_per_sec: float,

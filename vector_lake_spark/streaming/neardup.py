@@ -2,32 +2,18 @@
 incremental ingestion half of the 100 TB near-dup story.
 
 The batch scale path (``operators/ann.lsh_neardup_pairs``) buckets rows
-on (shard, band, band-key) and equi-joins within buckets. This module
-makes the SAME candidate keys available incrementally, with two
-operators at different points on the latency/state trade-off:
+on (shard, band, band-key) and equi-joins within buckets.
+``NearDupIngest`` makes the SAME candidate keys available incrementally
+with bounded state: every ingested row's band keys live in a persisted
+parquet history table (exactly the shape ``dedup_incremental`` uses for
+exact-dedup fingerprints, queries.py); each micro-batch emits
+new-vs-history pairs via a batch equi-join against that table plus
+new-vs-new pairs via the batch operator's own bucket join, then appends
+its keys to the history. The streaming state store holds NOTHING, all
+pairing runs as JVM hash joins (no Python kernel at all), and history
+I/O is 8-byte keys, never vectors or text.
 
-1. ``NearDupIngest`` — **the production posture (r05 verdict #1):
-   bounded state.** Every ingested row's band keys live in a persisted
-   parquet history table (exactly the shape ``dedup_incremental`` uses
-   for exact-dedup fingerprints, queries.py); each micro-batch emits
-   new-vs-history pairs via a batch equi-join against that table plus
-   new-vs-new pairs via the batch operator's own bucket join, then
-   appends its keys to the history. The streaming state store holds
-   NOTHING — per-bucket state is zero across micro-batches, all pairing
-   runs as JVM hash joins (no Python kernel at all), and history I/O is
-   8-byte keys, never vectors or text.
-
-2. ``stream_neardup_candidates`` — the low-latency stateful variant
-   (``applyInPandasWithState``): pairs are emitted within the
-   micro-batch that completes them, at the cost of per-bucket state
-   that grows with corpus size (ids + band keys, never vectors —
-   ~72 B/row/band). Its comparison kernel is numpy-vectorized (one
-   (state × batch) integer matrix op per bucket per micro-batch, no
-   interpreted per-pair loop). Use it for bounded/windowed streams;
-   for unbounded ingest, compact into ``NearDupIngest``'s history
-   posture.
-
-Both emit each candidate pair exactly once under the identical
+Each candidate pair is emitted exactly once under the identical
 first-matching-band rule the batch join uses, so the union of emissions
 over any prefix of the stream equals the batch candidate set over that
 prefix. Batch-vs-stream equivalence is oracle-gated by the registry's
@@ -43,51 +29,28 @@ Scale posture notes:
   exact cosine kernel runs in Spark after the sink. Nothing
   float-sensitive crosses the Arrow boundary, which is what keeps the
   stream hash-oracle-able.
-- ``NearDupIngest`` restart semantics are exactly-once: every per-batch
-  write is a dynamic partition overwrite of that batch's own
-  ``ingest_batch=N`` partition, and the history join excludes the
-  batch's own partition — so a replayed batch overwrites its earlier
+- Restart semantics are exactly-once via the shared maintainer policy
+  (``streaming/maintainer.py``): both per-batch writes overwrite the
+  batch's own ``ingest_batch=N`` partition, and the history join
+  excludes that partition — so a replayed batch overwrites its earlier
   attempt with the identical deterministic result instead of appending
   duplicates or pairing the batch against its own keys.
 """
 
 from __future__ import annotations
 
-from collections.abc import Iterator
 from functools import reduce
 
-import pandas as pd
 from pyspark.sql import Column, DataFrame, functions as F
 from pyspark.sql import types as T
-from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
+
+from vector_lake_spark.fsutil import read_if_exists
+from vector_lake_spark.streaming.maintainer import Maintainer
 
 OUTPUT_SCHEMA = T.StructType(
     [
         T.StructField("id_a", T.LongType(), False),
         T.StructField("id_b", T.LongType(), False),
-    ]
-)
-
-# parallel arrays: ids[i] pairs with bkeys_flat[i*n_bands:(i+1)*n_bands]
-STATE_SCHEMA = T.StructType(
-    [
-        T.StructField("ids", T.ArrayType(T.LongType()), False),
-        T.StructField("bkeys_flat", T.ArrayType(T.LongType()), False),
-    ]
-)
-
-# Hybrid (TTL-evicting) mode output: tagged union of three row kinds.
-KIND_PAIR, KIND_EVICT, KIND_NEW = 0, 1, 2
-HYBRID_SCHEMA = T.StructType(
-    [
-        T.StructField("kind", T.IntegerType(), False),
-        T.StructField("id_a", T.LongType(), True),
-        T.StructField("id_b", T.LongType(), True),
-        T.StructField("vec_id", T.LongType(), True),
-        T.StructField("shard", T.LongType(), True),
-        T.StructField("band", T.IntegerType(), True),
-        T.StructField("bkey", T.LongType(), True),
-        T.StructField("bkeys", T.ArrayType(T.LongType()), True),
     ]
 )
 
@@ -190,7 +153,7 @@ def cross_candidate_pairs(
     )
 
 
-class NearDupIngest:
+class NearDupIngest(Maintainer):
     """Incremental near-dup candidate ingestion with BOUNDED state and
     EXACTLY-ONCE restart semantics.
 
@@ -220,40 +183,16 @@ class NearDupIngest:
     This is ``dedup_incremental``'s posture applied to near-dup: the
     stream does one bounded join per batch against an 8-byte-key table,
     every kernel is a JVM hash join, and nothing accretes in executor
-    memory between batches. At 100 TB add ``shard`` to the history
-    partitioning so the per-batch join prunes to the shards the batch
-    actually touches."""
-
-    COMPACTED_BATCH = -1  # sentinel partition for compacted history
+    memory between batches. ``run`` takes a stream of (vec_id, shard,
+    bkeys) rows."""
 
     def __init__(
-        self,
-        spark,
-        history_path: str,
-        pairs_path: str,
-        n_bands: int,
-        partition_history_by_shard: bool = False,
+        self, spark, history_path: str, pairs_path: str, n_bands: int
     ):
-        self.spark = spark
+        super().__init__(spark)
         self.history_path = str(history_path)
         self.pairs_path = str(pairs_path)
         self.n_bands = n_bands
-        self.partition_history_by_shard = partition_history_by_shard
-
-    def _read_if_exists(self, path: str) -> DataFrame | None:
-        from vector_lake_spark.fsutil import read_if_exists
-
-        return read_if_exists(self.spark, path)
-
-    def _history(self) -> DataFrame | None:
-        return self._read_if_exists(self.history_path)
-
-    def _hist_partitions(self):
-        return (
-            ["ingest_batch", "shard"]
-            if self.partition_history_by_shard
-            else ["ingest_batch"]
-        )
 
     def process_batch(self, batch: DataFrame, batch_id: int) -> DataFrame:
         """Emit batch ``batch_id``'s candidate pairs (into its
@@ -261,47 +200,23 @@ class NearDupIngest:
         (its ``history_path`` partition). Idempotent per batch_id —
         both writes are dynamic partition overwrites of that batch's
         partition only. Returns the (already materialized) pairs."""
-        if batch_id < 0:
-            raise ValueError(
-                f"batch_id must be >= 0 (got {batch_id}); "
-                f"{self.COMPACTED_BATCH} is reserved for compacted history"
-            )
+        prior = self._prior(self.history_path, batch_id)
         # the batch feeds three consumers (within-pairs, cross-pairs,
         # history write) — pin it so the source is read once
         batch = batch.localCheckpoint(eager=True)
         pairs = within_candidate_pairs(batch, self.n_bands)
-        hist = self._history()
-        if hist is not None:
-            # exclude this batch's own partition: a crashed earlier
-            # attempt may have written it, and pairing the batch against
-            # its own keys would duplicate every within-batch pair
-            # (partition-pruned — the excluded files are never read)
-            prior = hist.filter(F.col("ingest_batch") != F.lit(batch_id))
+        if prior is not None:
             pairs = pairs.unionByName(
-                cross_candidate_pairs(
-                    batch, prior.drop("ingest_batch"), self.n_bands
-                )
+                cross_candidate_pairs(batch, prior, self.n_bands)
             )
         pairs = pairs.localCheckpoint(eager=True)
-        (
-            pairs.withColumn("ingest_batch", F.lit(batch_id).cast("long"))
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("ingest_batch")
-            .parquet(self.pairs_path)
-        )
-        (
-            batch.withColumn("ingest_batch", F.lit(batch_id).cast("long"))
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy(*self._hist_partitions())
-            .parquet(self.history_path)
-        )
+        self._overwrite(pairs, self.pairs_path, batch_id)
+        self._overwrite(batch, self.history_path, batch_id)
         return pairs
 
     def pairs(self) -> DataFrame:
         """All pairs emitted so far (the partition column dropped)."""
-        df = self._read_if_exists(self.pairs_path)
+        df = read_if_exists(self.spark, self.pairs_path)
         if df is None:
             return self.spark.createDataFrame([], schema=OUTPUT_SCHEMA)
         return df.select("id_a", "id_b")
@@ -311,511 +226,8 @@ class NearDupIngest:
         appends one file (per partition) to the history, so a
         long-lived stream accretes thousands of tiny parquet files —
         the same pathology the store's ``compact`` fixes. Contents
-        unchanged; crash-safety via the shared staged-write + rename
-        swap (``fsutil.staged_replace``).
-
-        **Replay safety (r06 review fix):** the NEWEST batch partition
-        is deliberately left unfolded. Structured Streaming commits
-        batch N's checkpoint before starting N+1, so at most the newest
-        batch can be crashed-but-uncommitted; folding it into the
-        reserved ``ingest_batch=-1`` partition would let its keys escape
-        ``process_batch``'s own-partition exclusion on replay —
-        duplicate pairs and duplicate history keys, forever. Folding
-        strictly-older partitions is always safe: their batches are
-        committed and can never replay. Returns the total history row
-        count."""
-        from vector_lake_spark.fsutil import staged_replace
-
-        hist = self._history()
-        if hist is None:
-            return 0
-        real = [
-            r[0]
-            for r in hist.select("ingest_batch").distinct().collect()
-            if r[0] >= 0
-        ]
-        newest = max(real) if real else None
-        folded = (
-            hist
-            if newest is None
-            else hist.filter(F.col("ingest_batch") != F.lit(newest))
-        ).withColumn("ingest_batch", F.lit(self.COMPACTED_BATCH).cast("long"))
-        if newest is not None:
-            folded = folded.unionByName(
-                hist.filter(F.col("ingest_batch") == F.lit(newest))
-            )
-        # pin the contents BEFORE touching the directory (never read and
-        # replace the same files in one job)
-        data = folded.localCheckpoint(eager=True)
-        n = data.count()
-
-        def write_staged(staging: str) -> None:
-            if self.partition_history_by_shard:
-                data.repartition("shard").write.partitionBy(
-                    *self._hist_partitions()
-                ).parquet(staging)
-            else:
-                data.repartition("ingest_batch").write.partitionBy(
-                    "ingest_batch"
-                ).parquet(staging)
-
-        staged_replace(self.spark, self.history_path, write_staged)
-        return n
-
-    def foreach_batch(self):
-        """``writeStream.foreachBatch`` hook: one idempotent
-        ``process_batch`` per micro-batch, keyed by the streaming
-        engine's ``batch_id``."""
-
-        def fn(batch_df: DataFrame, batch_id: int) -> None:
-            self.process_batch(batch_df, int(batch_id))
-
-        return fn
-
-    def run(self, keyed_stream: DataFrame, checkpoint: str):
-        """Drain a bounded stream of (vec_id, shard, bkeys) rows through
-        the ingest with availableNow; returns the finished query."""
-        q = (
-            keyed_stream.writeStream.foreachBatch(self.foreach_batch())
-            .option("checkpointLocation", checkpoint)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-        return q
-
-
-# ---------------------------------------------------------------------------
-# Low-latency stateful variant (applyInPandasWithState)
-# ---------------------------------------------------------------------------
-
-
-def _bucket_pairs(ids, bk, new_ids, new_bk, band: int, n_bands: int):
-    """The bucket kernel shared by the NoTimeout and TTL variants:
-    candidate pairs for one (shard, band, bkey) bucket given its hot
-    state (ids, bk) and the arriving batch (new_ids, new_bk), under the
-    first-matching-band ownership rule. Returns (id_a, id_b) arrays."""
-    import numpy as np
-
-    out_a: list = []
-    out_b: list = []
-
-    # state-vs-batch: one vectorized (n_state × n_batch) comparison.
-    # first-matching-band rule, identical to the batch join's
-    # residual: this bucket (band index `band`) owns a pair iff no
-    # earlier band already matched.
-    if len(ids) and len(new_ids):
-        if band > 0:
-            earlier = (
-                bk[:, None, :band] == new_bk[None, :, :band]
-            ).any(axis=2)
-        else:
-            earlier = np.zeros((len(ids), len(new_ids)), dtype=bool)
-        keep = ~earlier & (ids[:, None] != new_ids[None, :])
-        si, ni = np.nonzero(keep)
-        if len(si):
-            a, b = ids[si], new_ids[ni]
-            out_a.append(np.minimum(a, b))
-            out_b.append(np.maximum(a, b))
-
-    # batch-vs-batch: each row against its in-batch prefix (same
-    # arrival-order semantics as before), prefix comparison
-    # vectorized per row
-    for i in range(1, len(new_ids)):
-        if band > 0:
-            earlier = (new_bk[:i, :band] == new_bk[i, :band]).any(axis=1)
-        else:
-            earlier = np.zeros(i, dtype=bool)
-        keep = ~earlier & (new_ids[:i] != new_ids[i])
-        partners = new_ids[:i][keep]
-        if len(partners):
-            out_a.append(np.minimum(partners, new_ids[i]))
-            out_b.append(np.maximum(partners, new_ids[i]))
-
-    if not out_a:
-        return None, None
-    return np.concatenate(out_a), np.concatenate(out_b)
-
-
-def _load_state(state: GroupState, n_bands: int):
-    import numpy as np
-
-    if state.exists:
-        ids = np.asarray(state.get[0], dtype=np.int64)
-        bk = np.asarray(state.get[1], dtype=np.int64).reshape(-1, n_bands)
-    else:
-        ids = np.empty(0, dtype=np.int64)
-        bk = np.empty((0, n_bands), dtype=np.int64)
-    return ids, bk
-
-
-def _batch_arrays(chunks, n_bands: int):
-    import numpy as np
-
-    new_ids = np.concatenate(
-        [c["vec_id"].to_numpy(dtype=np.int64) for c in chunks]
-    )
-    new_bk = np.asarray(
-        [[int(x) for x in row] for c in chunks for row in c["bkeys"]],
-        dtype=np.int64,
-    ).reshape(len(new_ids), n_bands)
-    return new_ids, new_bk
-
-
-def _emit_candidates(n_bands: int):
-    def fn(
-        key: tuple, pdfs: Iterator[pd.DataFrame], state: GroupState
-    ) -> Iterator[pd.DataFrame]:
-        import numpy as np
-
-        _shard, band, _bkey = key
-        ids, bk = _load_state(state, n_bands)
-        chunks = [pdf for pdf in pdfs if len(pdf)]
-        if not chunks:
-            state.update((ids.tolist(), bk.reshape(-1).tolist()))
-            return
-        new_ids, new_bk = _batch_arrays(chunks, n_bands)
-        out_a, out_b = _bucket_pairs(ids, bk, new_ids, new_bk, band, n_bands)
-        ids = np.concatenate([ids, new_ids])
-        bk = np.vstack([bk, new_bk])
-        state.update((ids.tolist(), bk.reshape(-1).tolist()))
-        if out_a is not None:
-            yield pd.DataFrame({"id_a": out_a, "id_b": out_b})
-
-    return fn
-
-
-def _hybrid_frame(kind: int, n: int, **cols) -> pd.DataFrame:
-    """One HYBRID_SCHEMA-shaped pandas frame with the unused columns
-    null (object dtype so Arrow maps them to nullable long/int)."""
-    base: dict = {
-        "kind": pd.Series([kind] * n, dtype="int32"),
-        "id_a": pd.Series([None] * n, dtype="object"),
-        "id_b": pd.Series([None] * n, dtype="object"),
-        "vec_id": pd.Series([None] * n, dtype="object"),
-        "shard": pd.Series([None] * n, dtype="object"),
-        "band": pd.Series([None] * n, dtype="object"),
-        "bkey": pd.Series([None] * n, dtype="object"),
-        "bkeys": pd.Series([None] * n, dtype="object"),
-    }
-    for name, values in cols.items():
-        base[name] = pd.Series(list(values), dtype="object")
-    return pd.DataFrame(base)
-
-
-def _emit_candidates_ttl(n_bands: int, ttl_ms: int):
-    """TTL-evicting kernel (HYBRID_SCHEMA output). Three row kinds:
-
-    - KIND_PAIR: hot candidate pairs (same kernel as the NoTimeout
-      variant);
-    - KIND_EVICT: on processing-time timeout, the bucket's members
-      (vec_id, shard, band, bkey, bkeys) — handed off to the parquet
-      history by ``HybridNearDup``'s sink — then ``state.remove()``;
-    - KIND_NEW: one passthrough row per arriving input row (emitted
-      only from its band-0 bucket, so exactly once per row), which the
-      sink joins against the cold history for new-vs-evicted pairs.
-
-    A (row, bucket) entry is therefore in the bucket's hot state XOR in
-    the history, and ownership across buckets stays the shared
-    first-matching-band rule — each pair is emitted exactly once, by
-    the hot kernel or by the sink's history join."""
-
-    def fn(
-        key: tuple, pdfs: Iterator[pd.DataFrame], state: GroupState
-    ) -> Iterator[pd.DataFrame]:
-        import numpy as np
-
-        shard, band, bkey = key
-        if state.hasTimedOut:
-            ids, bk = _load_state(state, n_bands)
-            state.remove()
-            if len(ids):
-                yield _hybrid_frame(
-                    KIND_EVICT,
-                    len(ids),
-                    vec_id=[int(i) for i in ids],
-                    shard=[int(shard)] * len(ids),
-                    band=[int(band)] * len(ids),
-                    bkey=[int(bkey)] * len(ids),
-                    bkeys=[[int(x) for x in row] for row in bk],
-                )
-            return
-
-        ids, bk = _load_state(state, n_bands)
-        chunks = [pdf for pdf in pdfs if len(pdf)]
-        if not chunks:
-            state.update((ids.tolist(), bk.reshape(-1).tolist()))
-            state.setTimeoutDuration(ttl_ms)
-            return
-        new_ids, new_bk = _batch_arrays(chunks, n_bands)
-        out_a, out_b = _bucket_pairs(ids, bk, new_ids, new_bk, band, n_bands)
-        ids = np.concatenate([ids, new_ids])
-        bk = np.vstack([bk, new_bk])
-        state.update((ids.tolist(), bk.reshape(-1).tolist()))
-        state.setTimeoutDuration(ttl_ms)
-        if out_a is not None:
-            yield _hybrid_frame(
-                KIND_PAIR,
-                len(out_a),
-                id_a=[int(a) for a in out_a],
-                id_b=[int(b) for b in out_b],
-            )
-        if int(band) == 0:
-            yield _hybrid_frame(
-                KIND_NEW,
-                len(new_ids),
-                vec_id=[int(i) for i in new_ids],
-                shard=[int(shard)] * len(new_ids),
-                bkeys=[[int(x) for x in row] for row in new_bk],
-            )
-
-    return fn
-
-
-def stream_neardup_candidates(
-    keyed: DataFrame, n_bands: int, *, state_ttl_ms: int | None
-) -> DataFrame:
-    """Incremental candidate-pair emission over a stream of
-    (vec_id long, shard long, bkeys array<long>) — the LOW-LATENCY
-    variant: pairs surface in the micro-batch that completes them.
-
-    Each row fans out to its ``n_bands`` bucket keys (narrow 8-byte
-    explode, mirrors batch); each bucket's stateful group emits every
-    candidate pair exactly once across the whole stream. The kernel is
-    numpy-vectorized integer comparison (no per-pair Python loop).
-
-    ``state_ttl_ms`` is the eviction knob (r06 verdict #3) and is a
-    REQUIRED keyword (r07 verdict #3): passing ``None`` keeps every
-    bucket hot forever — state grows with corpus size (ids + band
-    keys, ~72 B/row, never vectors), which is right ONLY for bounded
-    or windowed streams, so the unbounded mode must be opted into
-    explicitly rather than arrived at by default. With a TTL, buckets
-    idle longer than ``state_ttl_ms``
-    processing-time evict their members as KIND_EVICT rows
-    (HYBRID_SCHEMA) and the state store stays bounded by the hot
-    working set; use ``HybridNearDup`` to land those evictions in a
-    parquet history and keep the pair set COMPLETE via a per-batch
-    history join — or ``NearDupIngest`` when latency doesn't matter."""
-    exploded = explode_band_keys(keyed, n_bands)
-    grouped = exploded.groupBy("shard", "band", "bkey")
-    if state_ttl_ms is None:
-        return grouped.applyInPandasWithState(
-            _emit_candidates(n_bands),
-            outputStructType=OUTPUT_SCHEMA,
-            stateStructType=STATE_SCHEMA,
-            outputMode="append",
-            timeoutConf=GroupStateTimeout.NoTimeout,
-        )
-    if state_ttl_ms <= 0:
-        raise ValueError(f"state_ttl_ms must be positive (got {state_ttl_ms})")
-    return grouped.applyInPandasWithState(
-        _emit_candidates_ttl(n_bands, int(state_ttl_ms)),
-        outputStructType=HYBRID_SCHEMA,
-        stateStructType=STATE_SCHEMA,
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.ProcessingTimeTimeout,
-    )
-
-
-def cross_pairs_vs_bucket_history(
-    new_keyed: DataFrame, hist_buckets: DataFrame, n_bands: int
-) -> DataFrame:
-    """New-vs-EVICTED pairs: join the new rows (exploded to all bands)
-    against the per-bucket eviction history on the exact bucket key.
-
-    Unlike ``cross_candidate_pairs`` the history side is NOT exploded —
-    an evicted row exists only at the buckets that actually timed out,
-    while its other buckets may still be hot. Ownership stays globally
-    unique: the first-matching-band residual (over the FULL stored
-    ``bkeys`` of both sides) suppresses every band but the first match,
-    and at that band the old row's entry is in the hot state XOR the
-    history — so the pair is emitted by exactly one of the hot kernel
-    and this join."""
-    kn = explode_band_keys(new_keyed, n_bands).select(
-        F.col("vec_id").alias("id_n"), "shard", "band", "bkey",
-        F.col("bkeys").alias("bka"),
-    )
-    kh = hist_buckets.select(
-        F.col("vec_id").alias("id_h"), "shard", "band", "bkey",
-        F.col("bkeys").alias("bkb"),
-    )
-    return (
-        kn.join(kh, ["shard", "band", "bkey"])
-        .filter(F.col("id_n") != F.col("id_h"))
-        .filter(_no_earlier_band_match(n_bands))
-        .select(
-            F.least("id_n", "id_h").alias("id_a"),
-            F.greatest("id_n", "id_h").alias("id_b"),
-        )
-    )
-
-
-class HybridNearDup:
-    """Hot/cold near-dup ingestion: the low-latency stateful kernel for
-    the RECENT window, the ``NearDupIngest`` parquet posture for
-    everything older — the compact-to-history handoff the r06 verdict
-    asked for (#3).
-
-    The stateful operator runs with ``state_ttl_ms``; its tagged output
-    is routed per micro-batch by :meth:`foreach_batch`:
-
-    - KIND_PAIR rows (hot pairs) → ``pairs_path`` partition
-      ``ingest_batch=N`` (dynamic partition overwrite — replay
-      idempotent, same as ``NearDupIngest``);
-    - KIND_NEW rows joined against the history as of BEFORE this batch
-      (own partition excluded) → cold new-vs-evicted pairs, into the
-      same partition;
-    - KIND_EVICT rows → ``history_path`` partition ``ingest_batch=N``.
-
-    A batch's evictions can never pair with that same batch's new rows
-    (a bucket that received data cannot time out in the same batch), so
-    joining against the PRIOR history is complete, and the pair set
-    over any prefix of the stream equals the batch operator's candidate
-    set regardless of WHEN buckets evict. State is bounded by the hot
-    working set (buckets idle > TTL hold nothing)."""
-
-    def __init__(
-        self,
-        spark,
-        history_path: str,
-        pairs_path: str,
-        n_bands: int,
-        state_ttl_ms: int,
-    ):
-        self.spark = spark
-        self.history_path = str(history_path)
-        self.pairs_path = str(pairs_path)
-        self.n_bands = n_bands
-        self.state_ttl_ms = int(state_ttl_ms)
-
-    def _read_if_exists(self, path: str) -> DataFrame | None:
-        from vector_lake_spark.fsutil import read_if_exists
-
-        return read_if_exists(self.spark, path)
-
-    def process_batch(self, tagged: DataFrame, batch_id: int) -> None:
-        if batch_id < 0:
-            raise ValueError(f"batch_id must be >= 0 (got {batch_id})")
-        tagged = tagged.localCheckpoint(eager=True)  # three consumers
-        pairs = tagged.filter(F.col("kind") == KIND_PAIR).select(
-            "id_a", "id_b"
-        )
-        new_rows = tagged.filter(F.col("kind") == KIND_NEW).select(
-            "vec_id", "shard", "bkeys"
-        )
-        evicts = tagged.filter(F.col("kind") == KIND_EVICT).select(
-            "vec_id", "shard", "band", "bkey", "bkeys"
-        )
-        hist = self._read_if_exists(self.history_path)
-        if hist is not None:
-            # exclude this batch's own partition (crashed-attempt replay)
-            prior = hist.filter(
-                F.col("ingest_batch") != F.lit(batch_id)
-            ).drop("ingest_batch")
-            pairs = pairs.unionByName(
-                cross_pairs_vs_bucket_history(
-                    new_rows, prior, self.n_bands
-                )
-            )
-        pairs = pairs.localCheckpoint(eager=True)
-        # An EMPTY dynamic-overwrite write touches no partition but does
-        # create a fileless directory that later reads can't infer a
-        # schema from — skip it. Replay stays idempotent: the stateful
-        # replay is deterministic, so a batch whose frame is empty now
-        # was empty on the crashed attempt too.
-        if pairs.limit(1).count():
-            (
-                pairs.withColumn(
-                    "ingest_batch", F.lit(batch_id).cast("long")
-                )
-                .write.mode("overwrite")
-                .option("partitionOverwriteMode", "dynamic")
-                .partitionBy("ingest_batch")
-                .parquet(self.pairs_path)
-            )
-        if evicts.limit(1).count():
-            (
-                evicts.withColumn(
-                    "ingest_batch", F.lit(batch_id).cast("long")
-                )
-                .write.mode("overwrite")
-                .option("partitionOverwriteMode", "dynamic")
-                .partitionBy("ingest_batch")
-                .parquet(self.history_path)
-            )
-
-    def foreach_batch(self):
-        def fn(batch_df: DataFrame, batch_id: int) -> None:
-            self.process_batch(batch_df, int(batch_id))
-
-        return fn
-
-    def pairs(self) -> DataFrame:
-        df = self._read_if_exists(self.pairs_path)
-        if df is None:
-            return self.spark.createDataFrame([], schema=OUTPUT_SCHEMA)
-        return df.select("id_a", "id_b")
-
-    def start(self, keyed_stream: DataFrame, checkpoint: str):
-        """Start the continuous hybrid ingest (production posture: runs
-        until stopped; state stays bounded by the TTL)."""
-        tagged = stream_neardup_candidates(
-            keyed_stream, self.n_bands, state_ttl_ms=self.state_ttl_ms
-        )
-        return (
-            tagged.writeStream.foreachBatch(self.foreach_batch())
-            .option("checkpointLocation", checkpoint)
-            .start()
-        )
-
-    def run(
-        self,
-        keyed_stream: DataFrame,
-        checkpoint: str,
-        drain_idle_batches: int = 3,
-        timeout_s: float = 300.0,
-    ):
-        """Drain a bounded stream, then stop once ``drain_idle_batches``
-        consecutive micro-batches saw zero input rows (the first idle
-        batch fires any expired processing-time timeouts, so evictions
-        flush before the stop). ``Trigger.AvailableNow`` can NOT be used
-        here: with processing-time timeouts armed the engine keeps
-        scheduling empty batches and ``awaitTermination`` never returns
-        (observed in this container, Spark 4.1 — see the test), so the
-        bounded drain polls progress and stops explicitly. Returns the
-        stopped query."""
-        import json
-        import time
-
-        q = self.start(keyed_stream, checkpoint)
-        deadline = time.time() + timeout_s
-        while time.time() < deadline:
-            if not q.isActive:
-                # surface the real failure instead of masking it as a
-                # drain timeout (r07 advice)
-                exc = q.exception()
-                if exc is not None:
-                    raise exc
-                raise RuntimeError(
-                    "hybrid near-dup query terminated before the drain "
-                    "went idle"
-                )
-            progs = [json.loads(p.json) for p in q.recentProgress]
-            # count batches, newest first, since the last one with data
-            idle = 0
-            for p in reversed(progs):
-                if p["numInputRows"] == 0:
-                    idle += 1
-                else:
-                    break
-            if progs and idle >= drain_idle_batches:
-                break
-            time.sleep(0.2)
-        else:
-            q.stop()
-            raise TimeoutError(
-                f"hybrid near-dup drain did not go idle within {timeout_s}s"
-            )
-        q.stop()
-        q.awaitTermination()
-        return q
+        unchanged. The NEWEST batch partition stays unfolded: folding a
+        crashed-but-uncommitted batch would let its keys escape
+        ``process_batch``'s own-partition exclusion on replay (r06
+        review). Returns the total history row count."""
+        return self._compact(self.history_path, lambda older: older)

@@ -11,17 +11,17 @@ history×history — through ONE banded-Hamming join
 the batch operator's full pair set over the stream prefix (the same
 contract ``PerceptualIndex.incremental_pairs`` tests in batch form).
 
-Posture, copied deliberately from ``NearDupIngest``:
+Posture, shared with ``NearDupIngest``:
 
 - **Zero streaming state**: all pairing runs as JVM hash joins inside
   ``foreachBatch``; the only cross-batch artifact is the signature
   history parquet (8-byte sigs + ids, never pixels/samples).
-- **Exactly-once under replay**: both the batch's history partition and
-  its pairs partition are dynamic overwrites of ``ingest_batch=N``, and
-  the history side of the join EXCLUDES the batch's own partition — a
-  replayed micro-batch overwrites its earlier attempt with the same
-  deterministic result instead of appending duplicates or pairing
-  against its own keys.
+- **Exactly-once under replay** (``streaming/maintainer.py``): both the
+  batch's history partition and its pairs partition are dynamic
+  overwrites of ``ingest_batch=N``, and the history side of the join
+  EXCLUDES the batch's own partition — a replayed micro-batch
+  overwrites its earlier attempt with the same deterministic result
+  instead of appending duplicates or pairing against its own keys.
 - **Block count** is sized once per batch from metadata-cheap counts
   (history file footers + the materialized batch), not from re-running
   any codec chain.
@@ -31,16 +31,20 @@ from __future__ import annotations
 
 from collections.abc import Sequence
 
-from pyspark.sql import DataFrame, functions as F
+from pyspark.sql import DataFrame
 
 from vector_lake_spark.operators.binary import (
     _mark_new,
     auto_hamming_blocks,
     hamming_neardup_pairs,
 )
+from vector_lake_spark.streaming.maintainer import Maintainer
 
 
-class PerceptualIngest:
+class PerceptualIngest(Maintainer):
+    """``run`` takes a stream of signature rows ((group_cols…, id,
+    sig))."""
+
     def __init__(
         self,
         spark,
@@ -51,7 +55,7 @@ class PerceptualIngest:
         id_col: str = "media_id",
         group_cols: Sequence[str] = (),
     ):
-        self.spark = spark
+        super().__init__(spark)
         self.history_dir = str(history_dir)
         self.pairs_dir = str(pairs_dir)
         self.radius = radius
@@ -59,29 +63,13 @@ class PerceptualIngest:
         self.id_col = id_col
         self.group_cols = list(group_cols)
 
-    def _history(self, exclude_batch: int) -> DataFrame | None:
-        # existence probe, not try/except: only genuine path-absence maps
-        # to "no history yet" — a corrupt footer / permission / transient
-        # FS error must PROPAGATE, or the batch would silently emit only
-        # batch×batch pairs and its deterministic overwrite would lose
-        # the batch×history pairs forever (ADVICE r11; the r06-reviewed
-        # probe NearDupIngest already uses)
-        from vector_lake_spark.fsutil import read_if_exists
-
-        hist = read_if_exists(self.spark, self.history_dir)
-        if hist is None:
-            return None  # first batch: no history yet
-        return hist.filter(
-            F.col("ingest_batch") != exclude_batch
-        ).drop("ingest_batch")
-
-    def _process(self, batch_df: DataFrame, batch_id: int) -> None:
+    def process_batch(self, batch_df: DataFrame, batch_id: int) -> None:
         cols = [*self.group_cols, self.id_col, "sig"]
         batch = batch_df.select(*cols).localCheckpoint(eager=True)
         n_new = batch.count()
         if n_new == 0:
             return
-        hist = self._history(int(batch_id))
+        hist = self._prior(self.history_dir, batch_id)
         corpus = batch if hist is None else hist.unionByName(batch)
         n_total = n_new + (0 if hist is None else hist.count())
         total_bits = 64 * self.n_longs
@@ -103,40 +91,9 @@ class PerceptualIngest:
             batch.select(*self.group_cols, self.id_col),
             self.id_col,
             group_cols=self.group_cols,
-        ).withColumn(
-            # long, matching NearDupIngest — the two ingest modules must
-            # agree on the schema of the same logical column (ADVICE r11)
-            "ingest_batch",
-            F.lit(int(batch_id)).cast("long"),
         )
-        (
-            new_pairs.write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("ingest_batch")
-            .parquet(self.pairs_dir)
-        )
-        (
-            batch.withColumn(
-                "ingest_batch", F.lit(int(batch_id)).cast("long")
-            )
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("ingest_batch")
-            .parquet(self.history_dir)
-        )
-
-    def run(self, sig_stream: DataFrame, checkpoint: str):
-        """Attach to a streaming DataFrame of signature rows
-        ((group_cols…, id, sig)) and process until the source drains
-        (availableNow). Returns the StreamingQuery."""
-        q = (
-            sig_stream.writeStream.foreachBatch(self._process)
-            .option("checkpointLocation", checkpoint)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-        return q
+        self._overwrite(new_pairs, self.pairs_dir, batch_id)
+        self._overwrite(batch, self.history_dir, batch_id)
 
     def pairs(self) -> DataFrame:
         return self.spark.read.parquet(self.pairs_dir).drop(

@@ -2,9 +2,9 @@
 the merge-on-read rollup story (``queries.q_ev_rollup_merge``).
 
 ``RollupIngest`` maintains a persisted parquet table of DECOMPOSABLE
-aggregate partials — (day, event_type) → (cnt, sv) — under the same
-exactly-once discipline as ``NearDupIngest`` (streaming/neardup.py):
-each micro-batch partial-aggregates ITS OWN rows and lands them in the
+aggregate partials — (day, event_type) → (cnt, sv) — under the shared
+exactly-once policy of the foreachBatch maintainers
+(streaming/maintainer.py): each micro-batch partial-aggregates ITS OWN rows and lands them in the
 table's ``ingest_batch=N`` partition via dynamic partition overwrite,
 so a crashed-and-replayed batch overwrites its earlier attempt with the
 identical deterministic result instead of double-counting. The
@@ -34,15 +34,16 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, functions as F
 
-COMPACTED_BATCH = -1  # reserved partition; streaming batch ids are >= 0
+from vector_lake_spark.fsutil import read_if_exists
+from vector_lake_spark.streaming.maintainer import Maintainer
 
 
-class RollupIngest:
+class RollupIngest(Maintainer):
     """Exactly-once incremental maintenance of a (day, event_type)
     partial-aggregate table, foreachBatch-driven."""
 
     def __init__(self, spark, rollup_path: str):
-        self.spark = spark
+        super().__init__(spark)
         self.rollup_path = str(rollup_path)
 
     # -- ingest ---------------------------------------------------------
@@ -59,41 +60,14 @@ class RollupIngest:
         ).agg(F.count(F.lit(1)).alias("cnt"), F.sum("value").alias("sv"))
 
     def process_batch(self, batch: DataFrame, batch_id: int) -> None:
-        """foreachBatch hook: land this batch's partials in its own
+        """Land this batch's partials in its own
         ``ingest_batch=batch_id`` partition (dynamic overwrite →
         idempotent replay)."""
-        if batch_id < 0:
-            raise ValueError(
-                f"batch_id must be >= 0 (got {batch_id}); "
-                f"{COMPACTED_BATCH} is reserved for compacted partials"
-            )
-        (
-            self.partial_agg(batch)
-            .withColumn("ingest_batch", F.lit(batch_id).cast("long"))
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("ingest_batch")
-            .parquet(self.rollup_path)
-        )
-
-    def attach(self, stream_df: DataFrame, checkpoint_dir: str, **kwargs):
-        """Wire a streaming events DataFrame into the maintainer.
-        Returns the started StreamingQuery (caller controls trigger /
-        awaitTermination)."""
-        return (
-            stream_df.writeStream.foreachBatch(
-                lambda b, bid: self.process_batch(b, bid)
-            )
-            .option("checkpointLocation", str(checkpoint_dir))
-            .trigger(**(kwargs or {"availableNow": True}))
-            .start()
-        )
+        self._overwrite(self.partial_agg(batch), self.rollup_path, batch_id)
 
     # -- serve ----------------------------------------------------------
 
     def partials(self) -> DataFrame | None:
-        from vector_lake_spark.fsutil import read_if_exists
-
         return read_if_exists(self.spark, self.rollup_path)
 
     def serve_weekly(self, delta: DataFrame | None = None) -> DataFrame:
@@ -128,49 +102,14 @@ class RollupIngest:
         reserved ``ingest_batch=-1`` partition — rollup compaction both
         defragments (one file) and SHRINKS (decomposable partials
         re-aggregate), so steady-state size is the key space, not the
-        ingest history. Crash-safety via the shared staged-write +
-        rename swap (``fsutil.staged_replace``).
-
-        **Replay safety (r06 review fix):** the NEWEST batch partition
-        is left unfolded — only the newest batch can be
-        crashed-but-uncommitted (Structured Streaming commits N before
-        starting N+1), and folding it would double-count that batch
-        when its replay re-creates the partition beside the already-
-        merged ``-1`` copy. Strictly-older partitions are committed and
-        can never replay, so folding them is always safe. Returns the
-        compacted table's row count."""
-        from vector_lake_spark.fsutil import staged_replace
-
-        parts = self.partials()
-        if parts is None:
-            return 0
-        real = [
-            r[0]
-            for r in parts.select("ingest_batch").distinct().collect()
-            if r[0] >= 0
-        ]
-        newest = max(real) if real else None
-        foldable = (
-            parts
-            if newest is None
-            else parts.filter(F.col("ingest_batch") != F.lit(newest))
+        ingest history. The NEWEST batch partition stays unfolded:
+        folding a crashed-but-uncommitted batch would double-count it
+        when its replay re-creates the partition beside the merged
+        ``-1`` copy (r06 review). Returns the compacted table's row
+        count."""
+        return self._compact(
+            self.rollup_path,
+            lambda older: older.groupBy("day", "event_type").agg(
+                F.sum("cnt").alias("cnt"), F.sum("sv").alias("sv")
+            ),
         )
-        data = (
-            foldable.groupBy("day", "event_type")
-            .agg(F.sum("cnt").alias("cnt"), F.sum("sv").alias("sv"))
-            .withColumn("ingest_batch", F.lit(COMPACTED_BATCH).cast("long"))
-        )
-        if newest is not None:
-            data = data.unionByName(
-                parts.filter(F.col("ingest_batch") == F.lit(newest))
-            )
-        data = data.localCheckpoint(eager=True)  # pin BEFORE the swap
-        n = data.count()
-
-        def write_staged(staging: str) -> None:
-            data.repartition("ingest_batch").write.partitionBy(
-                "ingest_batch"
-            ).parquet(staging)
-
-        staged_replace(self.spark, self.rollup_path, write_staged)
-        return n

@@ -4,7 +4,7 @@
 ``SCD2Ingest`` maintains a persisted parquet table of versioned validity
 intervals — one row per (entity, version), the open version carrying
 ``valid_to = NULL`` — under the same exactly-once discipline as the
-other foreachBatch maintainers (streaming/rollup.py, neardup.py):
+other foreachBatch maintainers (streaming/maintainer.py):
 
 - The table is partitioned by ``bucket = pmod(xxhash64(user_id), B)``.
   A micro-batch touches only the buckets its entities hash into: read
@@ -42,8 +42,14 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, Window, functions as F
 
+from vector_lake_spark.fsutil import read_if_exists
+from vector_lake_spark.streaming.maintainer import (
+    Maintainer,
+    checked_batch_id,
+)
 
-class SCD2Ingest:
+
+class SCD2Ingest(Maintainer):
     """Exactly-once incremental maintenance of an SCD2 interval table,
     foreachBatch-driven. Tracks ``event_type`` per ``user_id`` by
     default (the registry entry's shape); key/attr/order columns are
@@ -56,7 +62,7 @@ class SCD2Ingest:
         quarantine_path: str,
         n_buckets: int = 16,
     ):
-        self.spark = spark
+        super().__init__(spark)
         self.intervals_path = str(intervals_path)
         self.quarantine_path = str(quarantine_path)
         self.n_buckets = int(n_buckets)
@@ -68,24 +74,19 @@ class SCD2Ingest:
             "long"
         )
 
-    def _read(self, path: str) -> DataFrame | None:
-        from vector_lake_spark.fsutil import read_if_exists
-
-        return read_if_exists(self.spark, path)
-
     def intervals(self) -> DataFrame | None:
         """The raw maintained table (bucket, user_id, state, version,
         valid_from, valid_to, cp_event_id, last_seen, last_seen_eid)."""
-        return self._read(self.intervals_path)
+        return read_if_exists(self.spark, self.intervals_path)
 
     def quarantine(self) -> DataFrame | None:
-        return self._read(self.quarantine_path)
+        return read_if_exists(self.spark, self.quarantine_path)
 
     # -- ingest ---------------------------------------------------------
 
     def process_batch(self, batch: DataFrame, batch_id: int) -> None:
-        """foreachBatch hook: fold this batch's (user_id, ts, event_id,
-        event_type) rows into the interval table.
+        """Fold this batch's (user_id, ts, event_id, event_type) rows
+        into the interval table.
 
         Steps: derive the batch's buckets and partition-prune EVERY
         read of the existing table to them (the batch's users — hence
@@ -95,8 +96,7 @@ class SCD2Ingest:
         recompute change points over (existing change points of
         affected buckets ∪ accepted rows); rewrite only those
         buckets."""
-        if batch_id < 0:
-            raise ValueError(f"batch_id must be >= 0 (got {batch_id})")
+        checked_batch_id(batch_id)
         # pin the deduped batch ONCE up front (r12, guide §1.2): the
         # bucket collect below and every later consumer (watermark join
         # or direct fold) read the checkpoint — previously the bucket
@@ -156,15 +156,7 @@ class SCD2Ingest:
         # exactly-once; quarantine(N) is an operator signal and becomes
         # the full batch after a replay.
         if late is not None and not late.isEmpty():
-            (
-                late.withColumn(
-                    "ingest_batch", F.lit(batch_id).cast("long")
-                )
-                .write.mode("overwrite")
-                .option("partitionOverwriteMode", "dynamic")
-                .partitionBy("ingest_batch")
-                .parquet(self.quarantine_path)
-            )
+            self._overwrite(late, self.quarantine_path, batch_id)
         if accepted.isEmpty():
             return
 
@@ -268,22 +260,8 @@ class SCD2Ingest:
             # files in one job
             .localCheckpoint(eager=True)
         )
-        (
-            result.write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("bucket")
-            .parquet(self.intervals_path)
-        )
-
-    def attach(self, stream_df: DataFrame, checkpoint_dir: str, **kwargs):
-        """Wire a streaming events DataFrame into the maintainer."""
-        return (
-            stream_df.writeStream.foreachBatch(
-                lambda b, bid: self.process_batch(b, bid)
-            )
-            .option("checkpointLocation", str(checkpoint_dir))
-            .trigger(**(kwargs or {"availableNow": True}))
-            .start()
+        self._overwrite(
+            result, self.intervals_path, partition_col="bucket"
         )
 
     # -- serve ----------------------------------------------------------

@@ -28,9 +28,9 @@ Posture, shared with the other ingests:
   8-byte ints, text never persists or shuffles), `docs` (doc_id roster
   for zero-filling), `reports` (per-doc span aggregates) — each
   partitioned by `ingest_batch` (long, the cross-module convention).
-- **Exactly-once under replay**: all three writes are dynamic
-  overwrites of `ingest_batch=N`, and every read of history/docs
-  EXCLUDES the batch's own partition.
+- **Exactly-once under replay** (`streaming/maintainer.py`): all three
+  writes are dynamic overwrites of `ingest_batch=N`, and every read of
+  history/docs EXCLUDES the batch's own partition.
 - **Bounded per-batch work**: the frequency aggregate scans history's
   (h, doc_id) columns (8+8 bytes/row — a column-pruned scan, not a
   text scan); span recomputation touches only affected docs' pos rows.
@@ -44,7 +44,7 @@ Posture, shared with the other ingests:
   same goes for document UPDATES: re-ingesting an existing doc_id
   would leave the old version's pos rows in history, silently
   double-counting positions and inflating gram frequencies — so
-  `_process` REFUSES batches containing already-rostered ids (a
+  `process_batch` REFUSES batches containing already-rostered ids (a
   cheap anti-join against `docs`; replays are exempt because every
   read excludes the batch's own partition). Route updates through a
   delete (tombstone) + re-ingest once deletions exist.
@@ -54,15 +54,17 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, Window, functions as F
 
-from vector_lake_spark.fsutil import read_if_exists
 from vector_lake_spark.operators.dedup import (
     positional_shingle_hashes,
     span_report_agg,
     spans_from_positions,
 )
+from vector_lake_spark.streaming.maintainer import Maintainer
 
 
-class SpanDedupIngest:
+class SpanDedupIngest(Maintainer):
+    """``run`` takes a stream of (id, text) rows."""
+
     def __init__(
         self,
         spark,
@@ -74,7 +76,7 @@ class SpanDedupIngest:
         text_col: str = "text",
         id_col: str = "doc_id",
     ):
-        self.spark = spark
+        super().__init__(spark)
         self.history_dir = str(history_dir)
         self.docs_dir = str(docs_dir)
         self.reports_dir = str(reports_dir)
@@ -82,25 +84,6 @@ class SpanDedupIngest:
         self.min_docs = min_docs
         self.text_col = text_col
         self.id_col = id_col
-
-    def _prior(self, path: str, exclude_batch: int) -> DataFrame | None:
-        hist = read_if_exists(self.spark, path)
-        if hist is None:
-            return None
-        return hist.filter(
-            F.col("ingest_batch") != exclude_batch
-        ).drop("ingest_batch")
-
-    def _overwrite(self, df: DataFrame, path: str, batch_id: int) -> None:
-        (
-            df.withColumn(
-                "ingest_batch", F.lit(int(batch_id)).cast("long")
-            )
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("ingest_batch")
-            .parquet(path)
-        )
 
     def _zero_fill(self, ids: DataFrame, report: DataFrame) -> DataFrame:
         """Left-join a span report onto a doc-id roster, zero-filling
@@ -117,7 +100,7 @@ class SpanDedupIngest:
             ),
         )
 
-    def _process(self, batch_df: DataFrame, batch_id: int) -> None:
+    def process_batch(self, batch_df: DataFrame, batch_id: int) -> None:
         id_col = self.id_col
         batch = batch_df.select(id_col, self.text_col).localCheckpoint(
             eager=True
@@ -125,7 +108,7 @@ class SpanDedupIngest:
         if batch.count() == 0:
             return
         batch_ids = batch.select(id_col).distinct()
-        roster = self._prior(self.docs_dir, int(batch_id))
+        roster = self._prior(self.docs_dir, batch_id)
         if roster is not None:
             # re-ingest guard (review r12): an existing id's old pos
             # rows would stay in history and silently corrupt both the
@@ -148,7 +131,7 @@ class SpanDedupIngest:
         new_pos = positional_shingle_hashes(
             batch, self.text_col, id_col, self.n
         ).localCheckpoint(eager=True)
-        hist_pos = self._prior(self.history_dir, int(batch_id))
+        hist_pos = self._prior(self.history_dir, batch_id)
         all_pos = (
             new_pos if hist_pos is None
             else hist_pos.unionByName(new_pos)
@@ -201,19 +184,6 @@ class SpanDedupIngest:
         self._overwrite(report, self.reports_dir, batch_id)
         self._overwrite(new_pos, self.history_dir, batch_id)
         self._overwrite(batch_ids, self.docs_dir, batch_id)
-
-    def run(self, doc_stream: DataFrame, checkpoint: str):
-        """Attach to a streaming DataFrame of (id, text) rows and
-        process until the source drains (availableNow). Returns the
-        finished StreamingQuery."""
-        q = (
-            doc_stream.writeStream.foreachBatch(self._process)
-            .option("checkpointLocation", checkpoint)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-        return q
 
     def reports(self) -> DataFrame:
         """Latest report per document, zero-filled over the full doc
