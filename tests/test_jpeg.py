@@ -1249,3 +1249,21 @@ def test_sequential_encoder_matches_per_block_reference():
                     ) + b"\xff\xd9"
                     assert new.endswith(want_tail), (
                         px.shape, precision, subsample, rst, quality)
+
+
+def test_huffman_lut_cache_is_bounded():
+    """The per-DHT decode-LUT cache clears on full at both insert sites
+    (ndarray and list forms): cap + 1 distinct table specs leave at most
+    cap entries, and a decode after the clear is byte-identical."""
+    from vector_lake_spark import jpeg as J
+
+    img = (np.arange(24 * 40).reshape(24, 40) * 7 % 256).astype(np.uint8)
+    f = encode_jpeg(img, 75)
+    before = decode_jpeg_pixels(f).tobytes()
+    J._LL_LUT_CACHE.clear()
+    bits = [0] * 15 + [1]  # one 16-bit code: a valid spec per symbol
+    for sym in range(J._LL_LUT_CACHE_CAP + 1):
+        build = J._huff_lut16 if sym % 2 else J._huff_lut16_lists
+        build(bits, [sym])
+        assert len(J._LL_LUT_CACHE) <= J._LL_LUT_CACHE_CAP
+    assert decode_jpeg_pixels(f).tobytes() == before

@@ -2225,3 +2225,46 @@ def test_span_ingest_refuses_reingest_of_existing_doc(spark, tmp_path):
     )
     with _pytest.raises(ValueError, match="append-only"):
         ingest.process_batch(b2, 1)
+
+
+MAP_ROWS_DDL = "id long, k int, tag string, payload binary"
+MAP_ROWS_CASES = {
+    # case: (input rows, input partitions, fn, expected output rows)
+    "one_to_one": (
+        6, 2, lambda i: [(i, 0)], [(i, 0) for i in range(6)],
+    ),
+    "one_to_many": (
+        6, 2, lambda i: [(i, k) for k in range(i % 3)],
+        [(i, k) for i in range(6) for k in range(i % 3)],
+    ),
+    "zero_rows": (6, 2, lambda i: [], []),
+    # more partitions than rows: most input partitions are empty
+    "empty_partitions": (
+        3, 8, lambda i: [(i, 1)], [(i, 1) for i in range(3)],
+    ),
+    "empty_input": (0, 4, lambda i: [(i, 1)], []),
+}
+
+
+@pytest.mark.parametrize("schema_kind", ["struct", "ddl"])
+@pytest.mark.parametrize("case", sorted(MAP_ROWS_CASES))
+def test_map_rows(spark, case, schema_kind):
+    """map_rows: 1:1, 1:N and zero-row functions, and empty input
+    partitions, all give correctly typed output; a StructType and the
+    equivalent DDL string give the same result."""
+    from pyspark.sql import types as T
+
+    from vector_lake_spark.rowmap import map_rows
+
+    n, parts, pairs, expected = MAP_ROWS_CASES[case]
+    struct = T.StructType.fromDDL(MAP_ROWS_DDL)
+
+    def fn(row):
+        for i, k in pairs(row.id):
+            yield i, k, f"t{k}", bytes([k])
+
+    df = spark.range(n).repartition(parts)
+    out = map_rows(df, fn, struct if schema_kind == "struct" else MAP_ROWS_DDL)
+    assert out.schema == struct
+    got = sorted(tuple(r) for r in out.collect())
+    assert got == [(i, k, f"t{k}", bytearray([k])) for i, k in expected]

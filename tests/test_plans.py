@@ -1393,3 +1393,36 @@ def test_simhash_sql_matches_dsl(spark):
         ).otherwise(F.lit(0).cast("long"))
     slow = per_doc.select(F.col("doc_id"), sim.alias("simhash"))
     assert _canon_analyzed(slow) == _canon_analyzed(fast)
+
+
+def test_map_in_pandas_has_one_choke_point():
+    """Python-per-document stages run through ``rowmap.map_rows``:
+    ``mapInPandas`` is called there and in the two whole-batch
+    operators only (``store.query_batch``'s per-shard matmul and
+    ``adapter.embed_texts_df``), so per-document instrumentation and
+    error handling have one place to land."""
+    import ast
+    import pathlib
+
+    root = pathlib.Path(Q.__file__).parent
+    sites = []
+
+    def walk(node, path, func):
+        for child in ast.iter_child_nodes(node):
+            name = func
+            if isinstance(child, (ast.FunctionDef, ast.AsyncFunctionDef)):
+                name = child.name
+            if (
+                isinstance(child, ast.Attribute)
+                and child.attr == "mapInPandas"
+            ):
+                sites.append((path, func))
+            walk(child, path, name)
+
+    for p in sorted(root.rglob("*.py")):
+        walk(ast.parse(p.read_text()), p.relative_to(root).as_posix(), None)
+    assert sorted(sites) == [
+        ("adapter.py", "embed_texts_df"),
+        ("rowmap.py", "map_rows"),
+        ("store.py", "query_batch"),
+    ]

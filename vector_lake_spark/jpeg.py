@@ -557,8 +557,7 @@ def _huff_lut16_lists(bits, vals):
     hit = _LL_LUT_CACHE.get(key)
     if hit is None:
         sym, ln = _huff_lut16(bits, vals)
-        hit = (sym.tolist(), ln.tolist())
-        _LL_LUT_CACHE[key] = hit
+        hit = _lut_cache_put(key, (sym.tolist(), ln.tolist()))
     return hit
 
 
@@ -588,22 +587,30 @@ class _ScanReader:
         cur = pos
         drops: list[int] = []
         terminated = False
-        for i in (np.flatnonzero(arr[pos:] == 0xFF) + pos).tolist():
-            if i < cur:
-                continue
-            nxt = int(arr[i + 1]) if i + 1 < arr.size else None
-            if nxt == 0x00:
-                drops.append(i + 1)
-                continue
-            segs.append(
-                self._seg(arr, cur, i, drops, 0x100 if nxt is None else nxt)
-            )
-            drops = []
-            if nxt is not None and 0xD0 <= nxt <= 0xD7:
-                cur = i + 2
-                continue
-            terminated = True
-            break
+        # search for 0xFF in doubling chunks, stopping at the scan's
+        # terminating marker: one whole-tail search per scan would cost
+        # O(scans x file size) on a progressive file
+        lo, step = pos, 4096
+        while not terminated and lo < arr.size:
+            hi = min(lo + step, arr.size)
+            step *= 2
+            for i in (np.flatnonzero(arr[lo:hi] == 0xFF) + lo).tolist():
+                if i < cur:
+                    continue
+                nxt = int(arr[i + 1]) if i + 1 < arr.size else None
+                if nxt == 0x00:
+                    drops.append(i + 1)
+                    continue
+                segs.append(self._seg(
+                    arr, cur, i, drops, 0x100 if nxt is None else nxt
+                ))
+                drops = []
+                if nxt is not None and 0xD0 <= nxt <= 0xD7:
+                    cur = i + 2
+                    continue
+                terminated = True
+                break
+            lo = hi
         if not terminated:
             # ran off the payload with no marker: the old reader's fill
             # IndexError, surfaced as a loud ValueError
@@ -918,7 +925,7 @@ def decode_jpeg_pixels(payload: bytes) -> np.ndarray:
 
 
 def decode_jpeg(payload: bytes) -> dict:
-    """Stats-shaped decode (the `multimodal._extract_image_stats`
+    """Stats-shaped decode (the `multimodal._decode_stats`
     contract): dimensions + per-channel means."""
     px = decode_jpeg_pixels(payload).astype(np.float64)
     if px.ndim == 2:
@@ -1580,7 +1587,20 @@ DC_SYMBOLS_LL = list(range(17))
 DC_CODES_LL = _canonical_codes(DC_SYMBOLS_LL, 5)
 
 
+# Huffman decode LUTs keyed by DHT spec, in ndarray (_huff_lut16) and
+# list (_huff_lut16_lists) form. An entry is a 65,536-slot table
+# (~0.5-1.5 MB), so a corpus with per-file optimized tables would grow
+# the cache without bound: both insert sites go through one
+# clear-on-full cap (the vp8l._PREFIX_CODE_CACHE policy).
 _LL_LUT_CACHE: dict = {}
+_LL_LUT_CACHE_CAP = 64
+
+
+def _lut_cache_put(key, value):
+    if len(_LL_LUT_CACHE) >= _LL_LUT_CACHE_CAP:
+        _LL_LUT_CACHE.clear()
+    _LL_LUT_CACHE[key] = value
+    return value
 
 
 def _huff_lut16(bits, vals):
@@ -1607,9 +1627,7 @@ def _huff_lut16(bits, vals):
             code += 1
             k += 1
         code <<= 1
-    out = (sym, ln)
-    _LL_LUT_CACHE[key] = out
-    return out
+    return _lut_cache_put(key, (sym, ln))
 
 
 def _unstuffed_entropy(payload: bytes, pos: int):

@@ -1,8 +1,11 @@
 """Multimodal (image/audio/video) column plumbing.
 
-Media are opaque ``binary`` columns + typed metadata structs; transforms run
-as Arrow-batched ``mapInPandas`` over the binary payloads so the bytes never
-pass through Python row-at-a-time serde. Decode status (r06):
+Media are opaque ``binary`` columns + typed metadata structs. Every
+per-document transform is one ``rowmap.map_rows`` stage: (media_id,
+payload) reaches the Python worker in Arrow batches, a per-document
+function decodes or probes each payload there, and only its typed
+result rows come back, so the bytes never leave the executors. Decode
+status (r06):
 
 - REAL, stdlib-only: uncompressed 24-bit BMP (``decode_bmp`` — struct
   parsing → dims + channel means), PNG at **every legal IHDR
@@ -41,10 +44,9 @@ executor memory.
 
 from __future__ import annotations
 
-from collections.abc import Iterator
-
-import pandas as pd
 from pyspark.sql import DataFrame, functions as F, types as T
+
+from vector_lake_spark.rowmap import map_rows
 
 MEDIA_SCHEMA = T.StructType(
     [
@@ -589,20 +591,12 @@ def extract_image_features(df: DataFrame, dim: int = 8) -> DataFrame:
     Projects (media_id, payload) only — column pruning drops the rest of
     the row before the Python boundary."""
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            yield pd.DataFrame(
-                {
-                    "media_id": pdf["media_id"],
-                    "n_bytes": pdf["payload"].map(
-                        lambda p: len(p) if p is not None else 0
-                    ),
-                    "feature": pdf["payload"].map(lambda p: _fake_feature(p, dim)),
-                }
-            )
+    def one(row):
+        mid, p = row
+        yield mid, len(p) if p is not None else 0, _fake_feature(p, dim)
 
-    return df.select("media_id", "payload").mapInPandas(
-        batches, schema=IMAGE_FEATURES_SCHEMA
+    return map_rows(
+        df.select("media_id", "payload"), one, IMAGE_FEATURES_SCHEMA
     )
 
 
@@ -665,69 +659,59 @@ def probe_media(df: DataFrame) -> DataFrame:
     from vector_lake_spark.mkv import is_mkv, probe_mkv
     from vector_lake_spark.mp4 import is_mp4, probe_mp4
 
-    def one(mid, payload):
+    def one(row):
+        mid, payload = row
         data = bytes(payload)
         if is_mp4(data):
             info = probe_mp4(data)
             video = [t for t in info["tracks"] if t["handler"] == "vide"]
             t = video[0] if video else None
-            return {
-                "media_id": mid,
-                "container": "mp4",
-                "codec": t["codec"] if t else None,
-                "width": t["width"] if t else None,
-                "height": t["height"] if t else None,
-                "duration_ms": info["duration_ms"],
-                "n_frames": t["n_samples"] if t else 0,
-                "decodable": bool(t and t["codec"] in ("jpeg", "mjpa")),
-            }
-        if is_mkv(data):
+            yield (
+                mid,
+                "mp4",
+                t["codec"] if t else None,
+                t["width"] if t else None,
+                t["height"] if t else None,
+                info["duration_ms"],
+                t["n_samples"] if t else 0,
+                bool(t and t["codec"] in ("jpeg", "mjpa")),
+            )
+        elif is_mkv(data):
             info = probe_mkv(data)
             video = [t for t in info["tracks"] if t["track_type"] == 1]
             t = video[0] if video else None
-            return {
-                "media_id": mid,
-                "container": info["doc_type"],
-                "codec": t["codec"] if t else None,
-                "width": t["width"] if t else None,
-                "height": t["height"] if t else None,
-                "duration_ms": info["duration_ms"],
-                "n_frames": info["n_blocks"],
+            yield (
+                mid,
+                info["doc_type"],
+                t["codec"] if t else None,
+                t["width"] if t else None,
+                t["height"] if t else None,
+                info["duration_ms"],
+                info["n_blocks"],
                 # intraframe V_MJPEG blocks decode natively (late r09);
                 # interframe codecs still gate by name — the flag must
                 # agree with decode_mkv_frames, which picks ANY V_MJPEG
                 # video track, not just the first
-                "decodable": any(v["codec"] == "V_MJPEG" for v in video),
-            }
-        info = probe_avi(data)  # raises its own named error on non-AVI
-        return {
-            "media_id": mid,
-            "container": "avi",
-            "codec": info.get("codec", "MJPG"),
-            "width": info.get("width"),
-            "height": info.get("height"),
-            "duration_ms": (
-                int(info["n_frames"] * 1000 / info["fps"])
-                if info.get("fps")
-                else None
-            ),
-            "n_frames": info["n_frames"],
-            "decodable": True,
-        }
-
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            rows = [
-                one(mid, payload)
-                for mid, payload in zip(pdf["media_id"], pdf["payload"])
-            ]
-            yield pd.DataFrame(
-                rows, columns=[f.name for f in MEDIA_PROBE_SCHEMA.fields]
+                any(v["codec"] == "V_MJPEG" for v in video),
+            )
+        else:
+            info = probe_avi(data)  # raises its own named error on non-AVI
+            yield (
+                mid,
+                "avi",
+                info.get("codec", "MJPG"),
+                info.get("width"),
+                info.get("height"),
+                (
+                    int(info["n_frames"] * 1000 / info["fps"])
+                    if info.get("fps")
+                    else None
+                ),
+                info["n_frames"],
+                True,
             )
 
-    return df.select("media_id", "payload").mapInPandas(
-        batches, schema=MEDIA_PROBE_SCHEMA
-    )
+    return map_rows(df.select("media_id", "payload"), one, MEDIA_PROBE_SCHEMA)
 
 
 def extract_video_frames(df: DataFrame, every_ms: int = 1000) -> DataFrame:
@@ -749,90 +733,82 @@ def extract_video_frames(df: DataFrame, every_ms: int = 1000) -> DataFrame:
     from vector_lake_spark.mkv import decode_mkv_frames, is_mkv, probe_mkv
     from vector_lake_spark.mp4 import decode_mp4_frames, is_mp4, probe_mp4
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            rows = []
-            for mid, payload in zip(pdf["media_id"], pdf["payload"]):
-                data = bytes(payload)
-                if is_mkv(data):
-                    info = probe_mkv(data)
-                    video = [
-                        t for t in info["tracks"] if t["track_type"] == 1
-                    ]
-                    if not video:
-                        raise ValueError("Matroska has no video track")
-                    # size the sampling from the SAME track decode will
-                    # pick (the V_MJPEG one); a no-MJPEG file keeps
-                    # video[0] so decode raises its named codec gate
-                    tr = next(
-                        (t for t in video if t["codec"] == "V_MJPEG"),
-                        video[0],
-                    )
-                    n_frames = info["blocks_by_track"].get(
-                        tr["track_number"], 0
-                    )
-                    fps = (
-                        n_frames * 1000.0 / info["duration_ms"]
-                        if info["duration_ms"]
-                        else 0
-                    )
-                    decode = decode_mkv_frames
-                elif is_mp4(data):
-                    info = probe_mp4(data)
-                    video = [
-                        t for t in info["tracks"] if t["handler"] == "vide"
-                    ]
-                    if not video:
-                        raise ValueError("MP4 has no video track")
-                    tr = video[0]
-                    # rate from the track's own timescale and raw stts
-                    # tick duration — the floor-rounded duration_ms
-                    # drifts the stride for real-world timescales
-                    # (r07 advice)
-                    ticks = sum(c * d for c, d in tr["timing"])
-                    if ticks:
-                        fps = tr["n_samples"] * tr["timescale"] / ticks
-                    elif tr["duration_ms"]:
-                        fps = tr["n_samples"] * 1000.0 / tr["duration_ms"]
-                    else:
-                        fps = 0
-                    n_frames, decode = tr["n_samples"], decode_mp4_frames
-                else:
-                    info = probe_avi(data)
-                    fps = info.get("fps")
-                    n_frames, decode = info["n_frames"], decode_avi_frames
-                if not fps:
-                    # never fabricate timestamps from an invented rate —
-                    # the module contract is raise-by-name
-                    raise ValueError(
-                        "video without a usable frame rate — cannot "
-                        "compute sample offsets"
-                    )
-                stride = max(int(round(every_ms * fps / 1000.0)), 1)
-                wanted = list(range(0, n_frames, stride))
-                _, frames = decode(data, wanted)
-                for fno, px in frames:
-                    px3 = px if px.ndim == 3 else px[:, :, None].repeat(3, 2)
-                    means = px3.reshape(-1, 3).mean(axis=0)
-                    rows.append(
-                        {
-                            "media_id": mid,
-                            "frame_no": fno,
-                            "offset_ms": int(fno * 1000 / fps),
-                            "width": int(px.shape[1]),
-                            "height": int(px.shape[0]),
-                            "mean_r": round(float(means[0]), 4),
-                            "mean_g": round(float(means[1]), 4),
-                            "mean_b": round(float(means[2]), 4),
-                        }
-                    )
-            yield pd.DataFrame(
-                rows,
-                columns=[f.name for f in VIDEO_FRAME_SCHEMA.fields],
+    def frames_of(row):
+        mid, payload = row
+        data = bytes(payload)
+        if is_mkv(data):
+            info = probe_mkv(data)
+            video = [
+                t for t in info["tracks"] if t["track_type"] == 1
+            ]
+            if not video:
+                raise ValueError("Matroska has no video track")
+            # size the sampling from the SAME track decode will
+            # pick (the V_MJPEG one); a no-MJPEG file keeps
+            # video[0] so decode raises its named codec gate
+            tr = next(
+                (t for t in video if t["codec"] == "V_MJPEG"),
+                video[0],
+            )
+            n_frames = info["blocks_by_track"].get(
+                tr["track_number"], 0
+            )
+            fps = (
+                n_frames * 1000.0 / info["duration_ms"]
+                if info["duration_ms"]
+                else 0
+            )
+            decode = decode_mkv_frames
+        elif is_mp4(data):
+            info = probe_mp4(data)
+            video = [
+                t for t in info["tracks"] if t["handler"] == "vide"
+            ]
+            if not video:
+                raise ValueError("MP4 has no video track")
+            tr = video[0]
+            # rate from the track's own timescale and raw stts
+            # tick duration — the floor-rounded duration_ms
+            # drifts the stride for real-world timescales
+            # (r07 advice)
+            ticks = sum(c * d for c, d in tr["timing"])
+            if ticks:
+                fps = tr["n_samples"] * tr["timescale"] / ticks
+            elif tr["duration_ms"]:
+                fps = tr["n_samples"] * 1000.0 / tr["duration_ms"]
+            else:
+                fps = 0
+            n_frames, decode = tr["n_samples"], decode_mp4_frames
+        else:
+            info = probe_avi(data)
+            fps = info.get("fps")
+            n_frames, decode = info["n_frames"], decode_avi_frames
+        if not fps:
+            # never fabricate timestamps from an invented rate —
+            # the module contract is raise-by-name
+            raise ValueError(
+                "video without a usable frame rate — cannot "
+                "compute sample offsets"
+            )
+        stride = max(int(round(every_ms * fps / 1000.0)), 1)
+        wanted = list(range(0, n_frames, stride))
+        _, frames = decode(data, wanted)
+        for fno, px in frames:
+            px3 = px if px.ndim == 3 else px[:, :, None].repeat(3, 2)
+            means = px3.reshape(-1, 3).mean(axis=0)
+            yield (
+                mid,
+                fno,
+                int(fno * 1000 / fps),
+                int(px.shape[1]),
+                int(px.shape[0]),
+                round(float(means[0]), 4),
+                round(float(means[1]), 4),
+                round(float(means[2]), 4),
             )
 
-    return df.select("media_id", "payload").mapInPandas(
-        batches, schema=VIDEO_FRAME_SCHEMA
+    return map_rows(
+        df.select("media_id", "payload"), frames_of, VIDEO_FRAME_SCHEMA
     )
 
 
@@ -871,43 +847,33 @@ WAV_FEATURES_SCHEMA = T.StructType(
 )
 
 
-def _extract_image_stats(df: DataFrame, decode_fn) -> DataFrame:
-    """Shared Arrow kernel wrapper for real image decodes: the operator
-    shape (column-pruned mapInPandas, IMAGE stats schema) is identical
-    for every codec — swapping a codec in changes only ``decode_fn``
-    (the promise the BMP docstring makes, now structural — r06
-    review)."""
+def _decode_stats(df: DataFrame, decode_fn, schema) -> DataFrame:
+    """Shared stats operator for real image and audio decodes: the
+    shape (column-pruned ``map_rows``, one stats row per payload) is
+    identical for every codec — swapping a codec in changes only
+    ``decode_fn``, whose result dict supplies ``schema``'s columns
+    after ``media_id``."""
+    cols = schema.fieldNames()[1:]
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            rows = []
-            for mid, payload in zip(pdf["media_id"], pdf["payload"]):
-                d = decode_fn(bytes(payload))
-                d["media_id"] = mid
-                rows.append(d)
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "media_id", "width", "height", "mean_r", "mean_g", "mean_b",
-                ],
-            )
+    def one(row):
+        mid, payload = row
+        d = decode_fn(bytes(payload))
+        yield (mid, *(d[c] for c in cols))
 
-    return df.select("media_id", "payload").mapInPandas(
-        batches, schema=BMP_FEATURES_SCHEMA
-    )
+    return map_rows(df.select("media_id", "payload"), one, schema)
 
 
 def extract_bmp_features(df: DataFrame) -> DataFrame:
     """REAL image decode over Arrow batches (r05): uncompressed 24-bit
     BMP payloads → dimensions + channel means, stdlib-only."""
-    return _extract_image_stats(df, decode_bmp)
+    return _decode_stats(df, decode_bmp, BMP_FEATURES_SCHEMA)
 
 
 def extract_png_features(df: DataFrame) -> DataFrame:
     """REAL compressed-image decode over Arrow batches (r06): 8-bit PNG
     payloads → dimensions + channel means via stdlib zlib + numpy
     filter reconstruction."""
-    return _extract_image_stats(df, decode_png)
+    return _decode_stats(df, decode_png, BMP_FEATURES_SCHEMA)
 
 
 def extract_jpeg_features(df: DataFrame) -> DataFrame:
@@ -916,7 +882,7 @@ def extract_jpeg_features(df: DataFrame) -> DataFrame:
     Huffman + IDCT decoder (``jpeg.py``)."""
     from vector_lake_spark.jpeg import decode_jpeg
 
-    return _extract_image_stats(df, decode_jpeg)
+    return _decode_stats(df, decode_jpeg, BMP_FEATURES_SCHEMA)
 
 
 def extract_gif_features(df: DataFrame) -> DataFrame:
@@ -926,7 +892,7 @@ def extract_gif_features(df: DataFrame) -> DataFrame:
     disposal spec before the stats are taken."""
     from vector_lake_spark.gif import decode_gif
 
-    return _extract_image_stats(df, decode_gif)
+    return _decode_stats(df, decode_gif, BMP_FEATURES_SCHEMA)
 
 
 def extract_tiff_features(df: DataFrame) -> DataFrame:
@@ -935,7 +901,7 @@ def extract_tiff_features(df: DataFrame) -> DataFrame:
     predictor, gray/RGB) → dimensions + channel means (``tiff.py``)."""
     from vector_lake_spark.tiff import decode_tiff
 
-    return _extract_image_stats(df, decode_tiff)
+    return _decode_stats(df, decode_tiff, BMP_FEATURES_SCHEMA)
 
 
 def extract_webp_features(df: DataFrame) -> DataFrame:
@@ -945,7 +911,7 @@ def extract_webp_features(df: DataFrame) -> DataFrame:
     payloads raise their named gates."""
     from vector_lake_spark.webp import decode_webp
 
-    return _extract_image_stats(df, decode_webp)
+    return _decode_stats(df, decode_webp, BMP_FEATURES_SCHEMA)
 
 
 EXIF_SCHEMA = (
@@ -964,27 +930,20 @@ def extract_exif(df: DataFrame) -> DataFrame:
     contract mirrors ``probe_media``'s route-don't-crash stance)."""
     from vector_lake_spark.exif import probe_exif
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        cols = [
-            "has_exif", "byte_order", "orientation", "width", "height",
-            "datetime", "datetime_original",
-        ]
-        for pdf in it:
-            rows = []
-            for mid, payload in zip(pdf["media_id"], pdf["payload"]):
-                try:
-                    d = probe_exif(bytes(payload))
-                except ValueError:
-                    d = dict.fromkeys(cols)
-                rows.append((mid, *(d[c] for c in cols)))
-            yield pd.DataFrame(
-                rows, columns=["media_id", *cols]
-            ).astype({"orientation": "Int32", "width": "Int32",
-                      "height": "Int32"})
+    cols = [
+        "has_exif", "byte_order", "orientation", "width", "height",
+        "datetime", "datetime_original",
+    ]
 
-    return df.select("media_id", "payload").mapInPandas(
-        batches, schema=EXIF_SCHEMA
-    )
+    def one(row):
+        mid, payload = row
+        try:
+            d = probe_exif(bytes(payload))
+        except ValueError:
+            d = dict.fromkeys(cols)
+        yield (mid, *(d[c] for c in cols))
+
+    return map_rows(df.select("media_id", "payload"), one, EXIF_SCHEMA)
 
 
 def _decode_audio(payload: bytes) -> dict:
@@ -1018,35 +977,14 @@ def _decode_audio(payload: bytes) -> dict:
     )
 
 
-def _audio_stats_operator(df: DataFrame, decode_fn) -> DataFrame:
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            rows = []
-            for mid, payload in zip(pdf["media_id"], pdf["payload"]):
-                d = decode_fn(bytes(payload))
-                d["media_id"] = mid
-                rows.append(d)
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "media_id", "sample_rate", "n_channels", "n_samples",
-                    "duration_ms", "rms",
-                ],
-            )
-
-    return df.select("media_id", "payload").mapInPandas(
-        batches, schema=WAV_FEATURES_SCHEMA
-    )
-
-
 def extract_wav_features(df: DataFrame) -> DataFrame:
     """REAL audio decode over Arrow batches (r05; all integer PCM
     widths since r08): WAV payloads → rate/channels/duration/RMS via
     the stdlib ``wave`` module."""
-    return _audio_stats_operator(df, decode_wav)
+    return _decode_stats(df, decode_wav, WAV_FEATURES_SCHEMA)
 
 
 def extract_audio_features(df: DataFrame) -> DataFrame:
     """Magic-dispatched audio stats over a mixed WAV/FLAC column — the
     audio counterpart of ``probe_media``'s route-by-container stance."""
-    return _audio_stats_operator(df, _decode_audio)
+    return _decode_stats(df, _decode_audio, WAV_FEATURES_SCHEMA)

@@ -16,7 +16,7 @@ exact XOR/bit_count re-check is EXACT at those radii — not an
 approximation like hyperplane LSH.
 
 Scale posture: pixels never leave the Arrow stage — the decoder and
-the hash both run inside one ``mapInPandas`` and only (id, int64
+the hash both run inside one ``rowmap.map_rows`` stage and only (id, int64
 signature) rows shuffle. The reference has no image operators at all
 (SURVEY §2.B multimodal); decoders are this repo's own
 (gif/jpeg/tiff/png/vp8l modules).
@@ -24,10 +24,10 @@ signature) rows shuffle. The reference has no image operators at all
 
 from __future__ import annotations
 
-from collections.abc import Iterator
-
 import numpy as np
 from pyspark.sql import DataFrame
+
+from vector_lake_spark.rowmap import map_rows
 
 
 def _to_gray(px: np.ndarray) -> np.ndarray:
@@ -285,15 +285,13 @@ def image_signatures(
     kind: str = "dhash",
 ) -> DataFrame:
     """(id, payload) → (id, sig) perceptual signatures through ONE
-    Arrow ``mapInPandas`` stage: decode + downsample + hash per row,
+    ``map_rows`` stage: decode + downsample + hash per row,
     pixels never serialized out of Python. ``kind``: "dhash"/"ahash"
     emit one int64 (``sig long``); "dhash256" emits the 4×int64 wide
     signature (``sig array<long>`` — r11). Downstream, feed
     ``binary.hamming_neardup_pairs`` (exact at radius < n_blocks;
     n_longs=4 for dhash256) or the ``vec_topk_hamming`` XOR kernel for
     query-time lookup."""
-    import pandas as pd
-
     try:
         hasher = {
             "dhash": dhash64, "ahash": ahash64, "dhash256": dhash256,
@@ -306,21 +304,14 @@ def image_signatures(
         ) from None
     wide = kind == "dhash256"
 
-    def batches(it: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        for pdf in it:
-            sigs = [
-                hasher(decode_image_gray(p)) for p in pdf[payload_col]
-            ]
-            yield pd.DataFrame(
-                {
-                    id_col: pdf[id_col],
-                    "sig": sigs if wide else pd.array(sigs, "int64"),
-                }
-            )
+    def one(row):
+        mid, payload = row
+        yield mid, hasher(decode_image_gray(payload))
 
-    return df.select(id_col, payload_col).mapInPandas(
-        batches,
-        schema=f"{id_col} long, sig " + ("array<long>" if wide else "long"),
+    return map_rows(
+        df.select(id_col, payload_col),
+        one,
+        f"{id_col} long, sig " + ("array<long>" if wide else "long"),
     )
 
 
@@ -373,7 +364,7 @@ def video_frame_signatures(
 ) -> DataFrame:
     """(id, payload) → (id, frame_no, sig) per-frame perceptual
     signatures for VIDEO near-dup (r11): container probe + selective
-    frame decode + dHash all inside ONE Arrow ``mapInPandas`` — pixels
+    frame decode + dHash all inside ONE ``map_rows`` stage — pixels
     and container bytes never leave Python, only (id, int, int64) rows
     shuffle. Downstream, near-dup videos come from per-frame-index
     banded-Hamming joins aggregated per video pair (two re-encodes of
@@ -382,8 +373,6 @@ def video_frame_signatures(
     the caller's ``frame_indices`` knob; cost is frames_hashed ×
     decode, never duration × decode (the selective-decode contract of
     avi/mp4/mkv)."""
-    import pandas as pd
-
     try:
         hasher = {
             "dhash": dhash64, "ahash": ahash64, "dhash256": dhash256,
@@ -397,18 +386,14 @@ def video_frame_signatures(
     idx = list(frame_indices)
     wide = kind == "dhash256"
 
-    def batches(it: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        for pdf in it:
-            rows = []
-            for mid, payload in zip(pdf[id_col], pdf[payload_col]):
-                for fno, gray in decode_video_frames_gray(payload, idx):
-                    rows.append((mid, fno, hasher(gray)))
-            yield pd.DataFrame(
-                rows, columns=[id_col, "frame_no", "sig"]
-            )
+    def frames_of(row):
+        mid, payload = row
+        for fno, gray in decode_video_frames_gray(payload, idx):
+            yield mid, fno, hasher(gray)
 
-    return df.select(id_col, payload_col).mapInPandas(
-        batches,
-        schema=f"{id_col} long, frame_no int, sig "
+    return map_rows(
+        df.select(id_col, payload_col),
+        frames_of,
+        f"{id_col} long, frame_no int, sig "
         + ("array<long>" if wide else "long"),
     )

@@ -14,6 +14,7 @@ from __future__ import annotations
 import math
 from functools import reduce
 
+import numpy as np
 from pyspark.sql import DataFrame, SparkSession, Window, functions as F
 
 from vector_lake_spark import oracles as O
@@ -54,6 +55,7 @@ from vector_lake_spark.operators.drift import (
 )
 from vector_lake_spark.operators.events import sessionize, sliding_agg, tumbling_agg
 from vector_lake_spark.operators.topk import topk_cosine, topk_cosine_batch, topk_l2
+from vector_lake_spark.rowmap import map_rows
 
 # ---------------------------------------------------------------------------
 # Shared deterministic constants
@@ -137,6 +139,13 @@ def _auto_spread_n(spark: SparkSession, df: DataFrame) -> int | None:
     except Exception:
         return None
     return p
+
+
+def _spread(spark: SparkSession, src: DataFrame, df: DataFrame) -> DataFrame:
+    """``df`` round-robin spread to ``_auto_spread_n(spark, src)``
+    partitions, or ``df`` itself when ``src`` needs no spread."""
+    n = _auto_spread_n(spark, src)
+    return df.repartition(n) if n else df
 
 
 def _events(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1705,9 +1714,7 @@ def q_text_boilerplate_ngrams(spark, sf):
     # single-file local input runs the shingle explode in ONE task —
     # the same local-mode artifact text_repetition documents; the
     # round-robin spread is a no-op on any many-file production table
-    spread = _auto_spread_n(spark, d)
-    if spread:
-        d = d.repartition(spread)
+    d = _spread(spark, d, d)
     return (
         d.select(
             "doc_id", F.explode(shingles(F.col("text"), 5)).alias("gram")
@@ -1769,9 +1776,7 @@ def q_pipe_span_dedup(spark, sf):
     )
 
     d = _t(spark, sf, "documents")
-    spread = _auto_spread_n(spark, d)
-    if spread:
-        d = d.repartition(spread)
+    d = _spread(spark, d, d)
     base = d.select(
         "doc_id", token_count(F.col("text")).alias("n_tokens")
     )
@@ -2238,9 +2243,7 @@ def q_text_repetition(spark, sf):
     from vector_lake_spark.functions.text import repetition_ratio
 
     d = _t(spark, sf, "documents").select("doc_id", "source", "text")
-    spread = _auto_spread_n(spark, d)
-    if spread:
-        d = d.repartition(spread)
+    d = _spread(spark, d, d)
     return d.select(
         "doc_id",
         "source",
@@ -2371,9 +2374,7 @@ def q_pipe_quality_filter(spark, sf):
     feature is the heavy one — measured 3.6 s single-task vs 0.4 s
     spread at sf0.1) and is skipped entirely on many-file inputs."""
     d = _t(spark, sf, "documents").select("doc_id", "text")
-    spread = _auto_spread_n(spark, d)
-    if spread:
-        d = d.repartition(spread)
+    d = _spread(spark, d, d)
     score = quality_prob_expr(F.col("text"))
     return d.select(
         "doc_id",
@@ -2405,15 +2406,15 @@ def q_pipe_curation_e2e(spark, sf):
     from vector_lake_spark.functions.text import fingerprint64
 
     d = _t(spark, sf, "documents").select("doc_id", "source", "text")
-    spread = _auto_spread_n(spark, d)
-    if spread:
+    spread = _spread(spark, d, d)
+    if spread is not d:
         # barrier, not just a repartition: Catalyst pushes the quality
         # FILTER below a bare Repartition back into the single-file scan
         # (the right one-pass plan on a many-file cluster input, but it
         # re-serializes the whole pipeline into one local task — measured
         # 4.3 s vs 1.3 s). The checkpoint pins the spread; it exists only
         # on the local single-file path, never at scale.
-        d = d.repartition(spread).localCheckpoint(eager=False)
+        d = spread.localCheckpoint(eager=False)
     kept = d.filter(
         quality_prob_expr(F.col("text")) >= QUALITY_KEEP_THRESHOLD
     )
@@ -2611,9 +2612,7 @@ def q_pipe_contamination(spark, sf):
     # local-mode artifact as dedup_ngram_jaccard — SCALE.md); skipped on
     # many-file inputs so no width caps a big cluster
     d = _t(spark, sf, "documents").select("doc_id", "text")
-    spread = _auto_spread_n(spark, d)
-    if spread:
-        d = d.repartition(spread)
+    d = _spread(spark, d, d)
     sh = (
         d.select(
             "doc_id",
@@ -5193,7 +5192,7 @@ GROUP BY event_type
 # ---------------------------------------------------------------------------
 
 def q_mm_feature_extract(spark, sf):
-    """Arrow mapInPandas feature extraction over a binary payload column
+    """Arrow-batched feature extraction over a binary payload column
     (multimodal plumbing; the deterministic fake feature stands in for
     the stubbed codec). The fake is pure integer arithmetic over payload
     bytes — per lane j: (Σ bytes at positions ≡ j mod 8) mod 997 / 997 —
@@ -7311,9 +7310,7 @@ def q_pipe_dedup_report(spark, sf):
     from vector_lake_spark.functions.text import fingerprint64
 
     d = _t(spark, sf, "documents").select("doc_id", "text")
-    spread = _auto_spread_n(spark, d)
-    if spread:
-        d = d.repartition(spread)
+    d = _spread(spark, d, d)
     scored = d.select(
         "doc_id",
         fingerprint64(F.col("text")).alias("fp"),
@@ -7529,7 +7526,7 @@ def q_mm_gif_roundtrip(spark, sf):
     colors are closed-form integer arithmetic over doc_id / n_chars),
     push it through the full GIF89a encoder AND decoder (`gif.py` —
     real variable-width LZW, palette build, container walk) inside one
-    Arrow `mapInPandas`, and emit the DECODED integer channel sums.
+    `map_rows` stage, and emit the DECODED integer channel sums.
     The oracle recomputes the same sums arithmetically, so a green hash
     proves the codec round-trips bit-exactly over the whole table — the
     'decoder agrees with an independent derivation' stance of
@@ -7552,42 +7549,25 @@ def q_mm_gif_roundtrip(spark, sf):
         ((F.col("n_chars") * 11 + 7) % 256).cast("int").alias("bb"),
     )
 
-    def batches(it):
-        import numpy as np
-        import pandas as pd
+    def one(r):
+        img = np.empty((r.h, r.w, 3), dtype=np.uint8)
+        img[0::2] = (r.ar, r.ag, r.ab)  # even rows: color A
+        img[1::2] = (r.br, r.bg, r.bb)  # odd rows: color B
+        px = decode_gif_pixels(encode_gif(img)).astype(np.int64)
+        yield (
+            r.media_id,
+            px.shape[1],
+            px.shape[0],
+            int(px[:, :, 0].sum()),
+            int(px[:, :, 1].sum()),
+            int(px[:, :, 2].sum()),
+        )
 
-        for pdf in it:
-            rows = []
-            for r in pdf.itertuples(index=False):
-                img = np.empty((r.h, r.w, 3), dtype=np.uint8)
-                img[0::2] = (r.ar, r.ag, r.ab)  # even rows: color A
-                img[1::2] = (r.br, r.bg, r.bb)  # odd rows: color B
-                px = decode_gif_pixels(encode_gif(img)).astype(np.int64)
-                rows.append(
-                    (
-                        r.media_id,
-                        px.shape[1],
-                        px.shape[0],
-                        int(px[:, :, 0].sum()),
-                        int(px[:, :, 1].sum()),
-                        int(px[:, :, 2].sum()),
-                    )
-                )
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "media_id", "width", "height", "sum_r", "sum_g", "sum_b",
-                ],
-            )
-
-    spread = _auto_spread_n(spark, d)
-    if spread:
-        # per-row codec work in ONE task is the narrow-local-source
-        # artifact _auto_spread_n exists for; no-op on real tables
-        params = params.repartition(spread)
-    return params.mapInPandas(
-        batches,
-        schema=(
+    params = _spread(spark, d, params)
+    return map_rows(
+        params,
+        one,
+        (
             "media_id long, width int, height int, "
             "sum_r long, sum_g long, sum_b long"
         ),
@@ -7651,9 +7631,7 @@ def q_pipe_decontaminate(spark, sf):
     # spread before the shingle explode (local-mode single-file artifact,
     # same as pipe_contamination / dedup_ngram_jaccard — SCALE.md); no-op
     # on many-file cluster inputs
-    spread = _auto_spread_n(spark, d)
-    if spread:
-        d = d.repartition(spread)
+    d = _spread(spark, d, d)
     is_bench = (F.col("doc_id") % DECON_BENCH_MOD == 0) & (
         F.col("doc_id") < DECON_BENCH_CAP
     )
@@ -7782,7 +7760,7 @@ def q_mm_media_probe(spark, sf):
     """Container-math correctness at table scale (the `mm_gif_roundtrip`
     stance applied to video): per document, mux a real photo-JPEG MP4
     with doc-derived geometry (n_frames = n_chars%7+2 tiny constant
-    frames at fps = doc_id%3+2) inside one Arrow `mapInPandas`, run the
+    frames at fps = doc_id%3+2) inside one `map_rows` stage, run the
     REAL box-walk probe (`mp4.py` — ftyp/moov/stbl sample-table
     resolution) over the bytes, and emit the PROBED integers. The
     oracle recomputes them arithmetically (duration_ms =
@@ -7802,55 +7780,38 @@ def q_mm_media_probe(spark, sf):
         (F.col("doc_id") % 200).cast("int").alias("shade"),
     )
 
-    def batches(it):
-        import numpy as np
-        import pandas as pd
+    tile_cache: dict = {}
 
-        tile_cache: dict = {}
-        for pdf in it:
-            rows = []
-            for r in pdf.itertuples(index=False):
-                if r.shade not in tile_cache:
-                    tile_cache[r.shade] = encode_jpeg(
-                        np.full((8, 8), r.shade, dtype=np.uint8), 100
-                    )
-                frame = tile_cache[r.shade]
-                payload = encode_mp4_mjpeg([frame] * r.n_frames, r.fps, 8, 8)
-                info = probe_mp4(payload)
-                t = info["tracks"][0]
-                # the probe's resolved per-sample sizes must re-add to
-                # exactly n_frames x the encoder's frame length — the
-                # stsz/stsc/stco round trip, asserted inside the hash
-                sizes_match = (
-                    sum(s for _, s in t["samples"])
-                    == len(frame) * r.n_frames
-                )
-                rows.append(
-                    (
-                        r.media_id,
-                        t["n_samples"],
-                        info["duration_ms"],
-                        t["width"],
-                        t["height"],
-                        bool(sizes_match),
-                    )
-                )
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "media_id", "n_frames", "duration_ms", "width",
-                    "height", "sizes_match",
-                ],
+    def one(r):
+        if r.shade not in tile_cache:
+            tile_cache[r.shade] = encode_jpeg(
+                np.full((8, 8), r.shade, dtype=np.uint8), 100
             )
+        frame = tile_cache[r.shade]
+        payload = encode_mp4_mjpeg([frame] * r.n_frames, r.fps, 8, 8)
+        info = probe_mp4(payload)
+        t = info["tracks"][0]
+        # the probe's resolved per-sample sizes must re-add to
+        # exactly n_frames x the encoder's frame length — the
+        # stsz/stsc/stco round trip, asserted inside the hash
+        sizes_match = (
+            sum(s for _, s in t["samples"])
+            == len(frame) * r.n_frames
+        )
+        yield (
+            r.media_id,
+            t["n_samples"],
+            info["duration_ms"],
+            t["width"],
+            t["height"],
+            bool(sizes_match),
+        )
 
-    spread = _auto_spread_n(spark, d)
-    if spread:
-        # per-row codec work in ONE task is the narrow-local-source
-        # artifact _auto_spread_n exists for; no-op on real tables
-        params = params.repartition(spread)
-    return params.mapInPandas(
-        batches,
-        schema=(
+    params = _spread(spark, d, params)
+    return map_rows(
+        params,
+        one,
+        (
             "media_id long, n_frames long, duration_ms long, width int, "
             "height int, sizes_match boolean"
         ),
@@ -7907,39 +7868,29 @@ def q_mm_container_probe(spark, sf):
         ((F.col("doc_id") / 3).cast("long") % 4).cast("int").alias("lace"),
     )
 
-    def mux(it):
-        import numpy as np
-        import pandas as pd
+    muxers = [encode_avi_mjpeg, encode_mp4_mjpeg, encode_mkv_mjpeg]
+    lacings = (None, "xiph", "ebml", "fixed")
+    tile_cache: dict = {}
 
-        muxers = [encode_avi_mjpeg, encode_mp4_mjpeg, encode_mkv_mjpeg]
-        lacings = (None, "xiph", "ebml", "fixed")
-        tile_cache: dict = {}
-        for pdf in it:
-            rows = []
-            for r in pdf.itertuples(index=False):
-                if r.shade not in tile_cache:
-                    tile_cache[r.shade] = encode_jpeg(
-                        np.full((8, 8), r.shade, dtype=np.uint8), 100
-                    )
-                frame = tile_cache[r.shade]
-                if r.kind == 2:
-                    payload = encode_mkv_mjpeg(
-                        [frame] * r.n_frames, r.fps, 8, 8,
-                        lacing=lacings[r.lace],
-                    )
-                else:
-                    payload = muxers[r.kind](
-                        [frame] * r.n_frames, r.fps, 8, 8
-                    )
-                rows.append((r.media_id, payload))
-            yield pd.DataFrame(rows, columns=["media_id", "payload"])
+    def mux(r):
+        if r.shade not in tile_cache:
+            tile_cache[r.shade] = encode_jpeg(
+                np.full((8, 8), r.shade, dtype=np.uint8), 100
+            )
+        frame = tile_cache[r.shade]
+        if r.kind == 2:
+            payload = encode_mkv_mjpeg(
+                [frame] * r.n_frames, r.fps, 8, 8,
+                lacing=lacings[r.lace],
+            )
+        else:
+            payload = muxers[r.kind](
+                [frame] * r.n_frames, r.fps, 8, 8
+            )
+        yield r.media_id, payload
 
-    spread = _auto_spread_n(spark, d)
-    if spread:
-        # per-row codec work in ONE task is the narrow-local-source
-        # artifact _auto_spread_n exists for; no-op on real tables
-        params = params.repartition(spread)
-    media = params.mapInPandas(mux, schema="media_id long, payload binary")
+    params = _spread(spark, d, params)
+    media = map_rows(params, mux, "media_id long, payload binary")
     return probe_media(media)
 
 
@@ -7988,67 +7939,50 @@ def q_mm_webp_probe(spark, sf):
         (F.col("doc_id") % 3).cast("int").alias("kind"),
     )
 
-    def batches(it):
-        import struct
+    import struct
 
-        import pandas as pd
+    def riff(fourcc: bytes, chunk: bytes) -> bytes:
+        if len(chunk) % 2:
+            chunk += b"\x00"
+        body = b"WEBP" + fourcc + struct.pack("<I", len(chunk)) + chunk
+        return b"RIFF" + struct.pack("<I", len(body)) + body
 
-        def riff(fourcc: bytes, chunk: bytes) -> bytes:
-            if len(chunk) % 2:
-                chunk += b"\x00"
-            body = b"WEBP" + fourcc + struct.pack("<I", len(chunk)) + chunk
-            return b"RIFF" + struct.pack("<I", len(body)) + body
-
-        for pdf in it:
-            rows = []
-            for r in pdf.itertuples(index=False):
-                if r.kind == 0:  # VP8: frame tag, start code, 14-bit dims
-                    chunk = b"\x00\x00\x00" + b"\x9d\x01\x2a" + struct.pack(
-                        "<HH", r.w, r.h
-                    )
-                elif r.kind == 1:  # VP8L: sig + packed LSB-first fields
-                    bits = (
-                        (r.w - 1)
-                        | ((r.h - 1) << 14)
-                        | (int(r.alpha) << 28)
-                    )
-                    chunk = b"\x2f" + struct.pack("<I", bits)
-                else:  # VP8X: flags byte + 24-bit canvas dims
-                    flags = (0x10 if r.alpha else 0) | (0x02 if r.anim else 0)
-                    chunk = (
-                        bytes([flags])
-                        + b"\x00\x00\x00"
-                        + (r.w - 1).to_bytes(3, "little")
-                        + (r.h - 1).to_bytes(3, "little")
-                    )
-                    # 10-byte body; probe requires >= 10 after the header
-                info = probe_webp(riff([b"VP8 ", b"VP8L", b"VP8X"][r.kind], chunk))
-                rows.append(
-                    (
-                        r.media_id,
-                        info["format"],
-                        info["width"],
-                        info["height"],
-                        info["has_alpha"],
-                        info["animated"],
-                    )
-                )
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "media_id", "format", "width", "height",
-                    "has_alpha", "animated",
-                ],
+    def one(r):
+        if r.kind == 0:  # VP8: frame tag, start code, 14-bit dims
+            chunk = b"\x00\x00\x00" + b"\x9d\x01\x2a" + struct.pack(
+                "<HH", r.w, r.h
             )
+        elif r.kind == 1:  # VP8L: sig + packed LSB-first fields
+            bits = (
+                (r.w - 1)
+                | ((r.h - 1) << 14)
+                | (int(r.alpha) << 28)
+            )
+            chunk = b"\x2f" + struct.pack("<I", bits)
+        else:  # VP8X: flags byte + 24-bit canvas dims
+            flags = (0x10 if r.alpha else 0) | (0x02 if r.anim else 0)
+            chunk = (
+                bytes([flags])
+                + b"\x00\x00\x00"
+                + (r.w - 1).to_bytes(3, "little")
+                + (r.h - 1).to_bytes(3, "little")
+            )
+            # 10-byte body; probe requires >= 10 after the header
+        info = probe_webp(riff([b"VP8 ", b"VP8L", b"VP8X"][r.kind], chunk))
+        yield (
+            r.media_id,
+            info["format"],
+            info["width"],
+            info["height"],
+            info["has_alpha"],
+            info["animated"],
+        )
 
-    spread = _auto_spread_n(spark, d)
-    if spread:
-        # per-row codec work in ONE task is the narrow-local-source
-        # artifact _auto_spread_n exists for; no-op on real tables
-        params = params.repartition(spread)
-    return params.mapInPandas(
-        batches,
-        schema=(
+    params = _spread(spark, d, params)
+    return map_rows(
+        params,
+        one,
+        (
             "media_id long, format string, width int, height int, "
             "has_alpha boolean, animated boolean"
         ),
@@ -8100,47 +8034,32 @@ def q_mm_webp_roundtrip(spark, sf):
         (F.col("doc_id") % 2 == 0).alias("palette"),
     )
 
-    def batches(it):
-        import numpy as np
-        import pandas as pd
+    def one(r):
+        y = np.arange(r.h)[:, None, None]
+        x = np.arange(r.w)[None, :, None]
+        c = np.arange(3)[None, None, :]
+        px = (r.base + y + x + c).astype(np.uint8)
+        f = encode_webp_lossless(
+            px, use_palette=(True if r.palette else False)
+        )
+        out = decode_webp_pixels(f)
+        dec = out["pixels"]
+        yield (
+            r.media_id,
+            out["width"],
+            out["height"],
+            int(dec[:, :, :3].astype(np.int64).sum()),
+            bool(
+                not out["has_alpha"]
+                and (dec[:, :, 3] == 255).all()
+            ),
+        )
 
-        for pdf in it:
-            rows = []
-            for r in pdf.itertuples(index=False):
-                y = np.arange(r.h)[:, None, None]
-                x = np.arange(r.w)[None, :, None]
-                c = np.arange(3)[None, None, :]
-                px = (r.base + y + x + c).astype(np.uint8)
-                f = encode_webp_lossless(
-                    px, use_palette=(True if r.palette else False)
-                )
-                out = decode_webp_pixels(f)
-                dec = out["pixels"]
-                rows.append(
-                    (
-                        r.media_id,
-                        out["width"],
-                        out["height"],
-                        int(dec[:, :, :3].astype(np.int64).sum()),
-                        bool(
-                            not out["has_alpha"]
-                            and (dec[:, :, 3] == 255).all()
-                        ),
-                    )
-                )
-            yield pd.DataFrame(
-                rows,
-                columns=["media_id", "width", "height", "pix_sum", "alpha_ok"],
-            )
-
-    spread = _auto_spread_n(spark, d)
-    if spread:
-        # per-row codec work in ONE task is the narrow-local-source
-        # artifact _auto_spread_n exists for; no-op on real tables
-        params = params.repartition(spread)
-    return params.mapInPandas(
-        batches,
-        schema=(
+    params = _spread(spark, d, params)
+    return map_rows(
+        params,
+        one,
+        (
             "media_id long, width int, height int, pix_sum long, "
             "alpha_ok boolean"
         ),
@@ -8204,131 +8123,115 @@ def q_mm_wav_depths(spark, sf):
         (F.col("n_chars") % 16).cast("int").alias("quant"),
         ((F.col("n_chars") % 50 + 10) * 2).cast("int").alias("n_samples"),
     )
-    spread = _auto_spread_n(spark, d)
-    if spread:
-        params = params.repartition(spread)
+    params = _spread(spark, d, params)
 
-    def batches(it):
-        import io
-        import wave
+    import io
+    import wave
 
-        import numpy as np
-        import pandas as pd
+    from vector_lake_spark.g711 import alaw_level, ulaw_level
 
-        from vector_lake_spark.g711 import alaw_level, ulaw_level
-
-        for pdf in it:
-            rows = []
-            for r in pdf.itertuples(index=False):
-                if r.mode < 4:  # integer PCM, width-scaled amplitude
-                    width = r.mode + 1
-                    amp = r.base_amp << (8 * (r.mode))
-                    buf = io.BytesIO()
-                    with wave.open(buf, "wb") as w:
-                        w.setnchannels(1)
-                        w.setsampwidth(width)
-                        w.setframerate(8000)
-                        frames = bytearray()
-                        for i in range(r.n_samples):
-                            s = amp if i % 2 == 0 else -amp
-                            if width == 1:
-                                frames += bytes([(s + 128) & 0xFF])
-                            else:
-                                frames += int(s).to_bytes(
-                                    width, "little", signed=True
-                                )
-                        w.writeframes(bytes(frames))
-                    payload = buf.getvalue()
-                    bits = width * 8
-                elif r.mode == 4:  # mu-law at an exact decode level
-                    amp = ulaw_level(r.seg, r.quant)
-                    sq = np.where(
-                        np.arange(r.n_samples) % 2 == 0, amp, -amp
-                    ).astype(np.int16)
-                    payload = encode_wav_ext(sq, 8000, "ulaw")
-                    bits = 8
-                elif r.mode == 5:  # A-law at an exact decode level
-                    amp = alaw_level(r.seg, r.quant)
-                    sq = np.where(
-                        np.arange(r.n_samples) % 2 == 0, amp, -amp
-                    ).astype(np.int16)
-                    payload = encode_wav_ext(sq, 8000, "alaw")
-                    bits = 8
-                elif r.mode in (6, 7):  # IEEE float 32/64
-                    famp = r.base_amp / 64.0
-                    sq = np.where(
-                        np.arange(r.n_samples) % 2 == 0, famp, -famp
-                    )
-                    fmt = "float32" if r.mode == 6 else "float64"
-                    payload = encode_wav_ext(sq, 8000, fmt)
-                    bits = 32 if r.mode == 6 else 64
-                elif r.mode == 8:  # IMA ADPCM triangle, crafted nibbles
-                    import struct as _st
-
-                    from vector_lake_spark.adpcm import mux_ima_adpcm_wav
-
-                    P = r.base_amp * 16
-                    n = r.n_samples
-                    u = (n - 1) // 2
-                    dn = n - 1 - u
-                    n_nib = ((n - 1 + 7) // 8) * 8
-                    nibs = [1] * u + [9] * dn + [0] * (n_nib - (n - 1))
-                    packed = bytes(
-                        nibs[i] | (nibs[i + 1] << 4)
-                        for i in range(0, n_nib, 2)
-                    )
-                    block = _st.pack("<hBB", P, 0, 0) + packed
-                    payload = mux_ima_adpcm_wav(
-                        block, 8000, 1, 4 + n_nib // 2, n
-                    )
-                    bits = 4
-                else:  # mode 9: MS ADPCM triangle at the delta floor
-                    import struct as _st
-
-                    from vector_lake_spark.adpcm import mux_ms_adpcm_wav
-
-                    P = r.base_amp * 16
-                    n = r.n_samples  # always even: u == dn below
-                    u = (n - 2) // 2
-                    # high nibble first; +16 climb then -16 descent
-                    nibs = [1] * u + [15] * u
-                    packed = bytes(
-                        (nibs[i] << 4) | nibs[i + 1]
-                        for i in range(0, len(nibs), 2)
-                    )
-                    block = (
-                        bytes([0])  # coefficient pair 0
-                        + _st.pack("<h", 16)  # delta at the floor
-                        + _st.pack("<h", P)  # s1
-                        + _st.pack("<h", P)  # s2
-                        + packed
-                    )
-                    payload = mux_ms_adpcm_wav(
-                        block, 8000, 1, 7 + len(packed), n
-                    )
-                    bits = 4
-                out = decode_wav(payload)
-                rows.append(
-                    (
-                        r.media_id,
-                        out["codec"],
-                        bits,
-                        out["n_samples"],
-                        out["duration_ms"],
-                        out["rms"],
-                    )
-                )
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "media_id", "codec", "bits", "n_samples", "duration_ms",
-                    "rms",
-                ],
+    def one(r):
+        if r.mode < 4:  # integer PCM, width-scaled amplitude
+            width = r.mode + 1
+            amp = r.base_amp << (8 * (r.mode))
+            buf = io.BytesIO()
+            with wave.open(buf, "wb") as w:
+                w.setnchannels(1)
+                w.setsampwidth(width)
+                w.setframerate(8000)
+                frames = bytearray()
+                for i in range(r.n_samples):
+                    s = amp if i % 2 == 0 else -amp
+                    if width == 1:
+                        frames += bytes([(s + 128) & 0xFF])
+                    else:
+                        frames += int(s).to_bytes(
+                            width, "little", signed=True
+                        )
+                w.writeframes(bytes(frames))
+            payload = buf.getvalue()
+            bits = width * 8
+        elif r.mode == 4:  # mu-law at an exact decode level
+            amp = ulaw_level(r.seg, r.quant)
+            sq = np.where(
+                np.arange(r.n_samples) % 2 == 0, amp, -amp
+            ).astype(np.int16)
+            payload = encode_wav_ext(sq, 8000, "ulaw")
+            bits = 8
+        elif r.mode == 5:  # A-law at an exact decode level
+            amp = alaw_level(r.seg, r.quant)
+            sq = np.where(
+                np.arange(r.n_samples) % 2 == 0, amp, -amp
+            ).astype(np.int16)
+            payload = encode_wav_ext(sq, 8000, "alaw")
+            bits = 8
+        elif r.mode in (6, 7):  # IEEE float 32/64
+            famp = r.base_amp / 64.0
+            sq = np.where(
+                np.arange(r.n_samples) % 2 == 0, famp, -famp
             )
+            fmt = "float32" if r.mode == 6 else "float64"
+            payload = encode_wav_ext(sq, 8000, fmt)
+            bits = 32 if r.mode == 6 else 64
+        elif r.mode == 8:  # IMA ADPCM triangle, crafted nibbles
+            import struct as _st
 
-    return params.mapInPandas(
-        batches,
-        schema=(
+            from vector_lake_spark.adpcm import mux_ima_adpcm_wav
+
+            P = r.base_amp * 16
+            n = r.n_samples
+            u = (n - 1) // 2
+            dn = n - 1 - u
+            n_nib = ((n - 1 + 7) // 8) * 8
+            nibs = [1] * u + [9] * dn + [0] * (n_nib - (n - 1))
+            packed = bytes(
+                nibs[i] | (nibs[i + 1] << 4)
+                for i in range(0, n_nib, 2)
+            )
+            block = _st.pack("<hBB", P, 0, 0) + packed
+            payload = mux_ima_adpcm_wav(
+                block, 8000, 1, 4 + n_nib // 2, n
+            )
+            bits = 4
+        else:  # mode 9: MS ADPCM triangle at the delta floor
+            import struct as _st
+
+            from vector_lake_spark.adpcm import mux_ms_adpcm_wav
+
+            P = r.base_amp * 16
+            n = r.n_samples  # always even: u == dn below
+            u = (n - 2) // 2
+            # high nibble first; +16 climb then -16 descent
+            nibs = [1] * u + [15] * u
+            packed = bytes(
+                (nibs[i] << 4) | nibs[i + 1]
+                for i in range(0, len(nibs), 2)
+            )
+            block = (
+                bytes([0])  # coefficient pair 0
+                + _st.pack("<h", 16)  # delta at the floor
+                + _st.pack("<h", P)  # s1
+                + _st.pack("<h", P)  # s2
+                + packed
+            )
+            payload = mux_ms_adpcm_wav(
+                block, 8000, 1, 7 + len(packed), n
+            )
+            bits = 4
+        out = decode_wav(payload)
+        yield (
+            r.media_id,
+            out["codec"],
+            bits,
+            out["n_samples"],
+            out["duration_ms"],
+            out["rms"],
+        )
+
+    return map_rows(
+        params,
+        one,
+        (
             "media_id long, codec string, bits int, n_samples long, "
             "duration_ms long, rms double"
         ),
@@ -8419,52 +8322,36 @@ def q_mm_webp_anim(spark, sf):
         ((F.col("doc_id") * 7 + 3) % 200).cast("int").alias("patch"),
         (F.col("n_chars") % 5).cast("int").alias("loop"),
     )
-    spread = _auto_spread_n(spark, d)
-    if spread:
-        params = params.repartition(spread)
+    params = _spread(spark, d, params)
 
-    def batches(it):
-        import numpy as np
-        import pandas as pd
+    def one(r):
+        f0 = np.zeros((8, 8, 4), dtype=np.uint8)
+        f0[:, :, :3] = r.base
+        f0[:, :, 3] = 255
+        f1 = np.zeros((4, 4, 4), dtype=np.uint8)
+        f1[:, :, :3] = r.patch
+        f1[:, :, 3] = 255
+        payload = encode_webp_animation(
+            [f0, f1],
+            [40, 60],
+            offsets=[(0, 0), (2, 4)],
+            blends=[False, False],
+            loop=int(r.loop),
+        )
+        meta, frames = decode_webp_frames(payload, [1])
+        canvas = frames[0][1].astype(np.int64)
+        yield (
+            r.media_id,
+            meta["n_frames"],
+            meta["loop_count"],
+            int(canvas[:, :, :3].sum()),
+            int(canvas[:, :, 3].sum()),
+        )
 
-        for pdf in it:
-            rows = []
-            for r in pdf.itertuples(index=False):
-                f0 = np.zeros((8, 8, 4), dtype=np.uint8)
-                f0[:, :, :3] = r.base
-                f0[:, :, 3] = 255
-                f1 = np.zeros((4, 4, 4), dtype=np.uint8)
-                f1[:, :, :3] = r.patch
-                f1[:, :, 3] = 255
-                payload = encode_webp_animation(
-                    [f0, f1],
-                    [40, 60],
-                    offsets=[(0, 0), (2, 4)],
-                    blends=[False, False],
-                    loop=int(r.loop),
-                )
-                meta, frames = decode_webp_frames(payload, [1])
-                canvas = frames[0][1].astype(np.int64)
-                rows.append(
-                    (
-                        r.media_id,
-                        meta["n_frames"],
-                        meta["loop_count"],
-                        int(canvas[:, :, :3].sum()),
-                        int(canvas[:, :, 3].sum()),
-                    )
-                )
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "media_id", "n_frames", "loop_count", "rgb_sum",
-                    "alpha_sum",
-                ],
-            )
-
-    return params.mapInPandas(
-        batches,
-        schema=(
+    return map_rows(
+        params,
+        one,
+        (
             "media_id long, n_frames int, loop_count int, rgb_sum long, "
             "alpha_sum long"
         ),
@@ -8508,43 +8395,27 @@ def q_mm_flac_roundtrip(spark, sf):
         ((F.col("n_chars") % 50 + 10) * 2).cast("int").alias("n"),
         (F.col("doc_id") % 2 + 1).cast("int").alias("ch"),
     )
-    spread = _auto_spread_n(spark, d)
-    if spread:
-        params = params.repartition(spread)
+    params = _spread(spark, d, params)
 
-    def batches(it):
-        import numpy as np
-        import pandas as pd
+    def one(r):
+        wave = np.where(
+            np.arange(r.n) % 2 == 0, r.amp, -r.amp
+        ).astype(np.int64)
+        s = np.repeat(wave[:, None], r.ch, axis=1)
+        out = decode_flac(encode_flac(s, 8000, 16))
+        yield (
+            r.media_id,
+            out["sample_rate"],
+            out["n_channels"],
+            out["n_samples"],
+            out["duration_ms"],
+            out["rms"],
+        )
 
-        for pdf in it:
-            rows = []
-            for r in pdf.itertuples(index=False):
-                wave = np.where(
-                    np.arange(r.n) % 2 == 0, r.amp, -r.amp
-                ).astype(np.int64)
-                s = np.repeat(wave[:, None], r.ch, axis=1)
-                out = decode_flac(encode_flac(s, 8000, 16))
-                rows.append(
-                    (
-                        r.media_id,
-                        out["sample_rate"],
-                        out["n_channels"],
-                        out["n_samples"],
-                        out["duration_ms"],
-                        out["rms"],
-                    )
-                )
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "media_id", "sample_rate", "n_channels", "n_samples",
-                    "duration_ms", "rms",
-                ],
-            )
-
-    return params.mapInPandas(
-        batches,
-        schema=(
+    return map_rows(
+        params,
+        one,
+        (
             "media_id long, sample_rate int, n_channels int, "
             "n_samples long, duration_ms long, rms double"
         ),
@@ -8589,41 +8460,33 @@ def q_pipe_warc_extract(spark, sf):
         (F.col("doc_id") % 3).cast("int").alias("k"),
         (F.col("doc_id") % 7).cast("int").alias("crawler"),
     )
-    spread = _auto_spread_n(spark, d)
-    if spread:
-        params = params.repartition(spread)
+    params = _spread(spark, d, params)
 
     statuses = [200, 301, 404]
 
-    def mux(it):
-        import pandas as pd
+    def mux(r):
+        blob = encode_warc(
+            [
+                {
+                    "warc_type": "response",
+                    "url": f"http://example.com/doc/{r.media_id}",
+                    "http_status": statuses[r.k],
+                    "http_headers": {
+                        "content-type": "text/plain; charset=utf-8"
+                    },
+                    "body": r.text,
+                    "mime": "application/http; msgtype=response",
+                },
+                {
+                    "warc_type": "warcinfo",
+                    "mime": "application/warc-fields",
+                    "body": f"software: crawler-{r.crawler}",
+                },
+            ]
+        )
+        yield r.media_id, blob
 
-        for pdf in it:
-            rows = []
-            for r in pdf.itertuples(index=False):
-                blob = encode_warc(
-                    [
-                        {
-                            "warc_type": "response",
-                            "url": f"http://example.com/doc/{r.media_id}",
-                            "http_status": statuses[r.k],
-                            "http_headers": {
-                                "content-type": "text/plain; charset=utf-8"
-                            },
-                            "body": r.text,
-                            "mime": "application/http; msgtype=response",
-                        },
-                        {
-                            "warc_type": "warcinfo",
-                            "mime": "application/warc-fields",
-                            "body": f"software: crawler-{r.crawler}",
-                        },
-                    ]
-                )
-                rows.append((r.media_id, blob))
-            yield pd.DataFrame(rows, columns=["media_id", "payload"])
-
-    blobs = params.mapInPandas(mux, schema="media_id long, payload binary")
+    blobs = map_rows(params, mux, "media_id long, payload binary")
     recs = extract_warc_records(blobs)
     return recs.select(
         "media_id", "record_index", "warc_type", "url", "http_status",
@@ -8672,35 +8535,26 @@ def q_text_html_extract(spark, sf):
         F.col("text"),
         F.col("n_chars"),
     )
-    spread = _auto_spread_n(spark, d)
-    if spread:
-        params = params.repartition(spread)
+    params = _spread(spark, d, params)
 
-    def batches(it):
-        import pandas as pd
+    def one(r):
+        page = (
+            f"<html><head><title>Doc  {r.media_id}</title>"
+            f"<style>p {{ color: red }}</style></head><body>"
+            f"<script>if (1<2) {{ trackPage({r.media_id}); }}"
+            f"</script><h1>Doc &amp; {r.media_id}</h1>"
+            f"<p>{r.text}</p>"
+            f"<noscript>enable javascript</noscript>"
+            f"<div>chars: {r.n_chars}</div></body></html>"
+        )
+        text, title = html_extract(page)  # ONE parser pass
+        flat = text.replace("\n", " ")
+        yield r.media_id, title, flat, len(flat)
 
-        for pdf in it:
-            rows = []
-            for r in pdf.itertuples(index=False):
-                page = (
-                    f"<html><head><title>Doc  {r.media_id}</title>"
-                    f"<style>p {{ color: red }}</style></head><body>"
-                    f"<script>if (1<2) {{ trackPage({r.media_id}); }}"
-                    f"</script><h1>Doc &amp; {r.media_id}</h1>"
-                    f"<p>{r.text}</p>"
-                    f"<noscript>enable javascript</noscript>"
-                    f"<div>chars: {r.n_chars}</div></body></html>"
-                )
-                text, title = html_extract(page)  # ONE parser pass
-                flat = text.replace("\n", " ")
-                rows.append((r.media_id, title, flat, len(flat)))
-            yield pd.DataFrame(
-                rows, columns=["media_id", "title", "flat_text", "n_clean"]
-            )
-
-    return params.mapInPandas(
-        batches,
-        schema="media_id long, title string, flat_text string, n_clean long",
+    return map_rows(
+        params,
+        one,
+        "media_id long, title string, flat_text string, n_clean long",
     )
 
 
@@ -8770,105 +8624,88 @@ def q_mm_tiff_roundtrip(spark, sf):
     )
     comps = ["none", "packbits", "lzw", "deflate"]
 
-    def batches(it):
-        import numpy as np
-        import pandas as pd
-
-        for pdf in it:
-            rows = []
-            for r in pdf.itertuples(index=False):
-                y = np.arange(r.h)[:, None, None]
-                x = np.arange(r.w)[None, :, None]
-                c3 = np.arange(3)[None, None, :]
-                cmap = None
-                bit_depth = None
-                miw = False
-                if r.m == 0:  # gray8: base + y + x < 256
-                    px = (r.base + y + x)[:, :, 0].astype(np.uint8)
-                elif r.m == 1:  # rgb8
-                    px = (r.base + y + x + c3).astype(np.uint8)
-                elif r.m == 2:  # gray16: 251*base + 7y + 3x < 65536
-                    px = (251 * r.base + 7 * y + 3 * x)[:, :, 0].astype(
-                        np.uint16
-                    )
-                elif r.m == 3:  # rgb16
-                    px = (251 * r.base + 7 * y + 3 * x + 5 * c3).astype(
-                        np.uint16
-                    )
-                elif r.m == 4:  # palette: idx = y + x (< 256), linear map
-                    px = (y + x)[:, :, 0].astype(np.uint8)
-                    i = np.arange(r.h + r.w - 1)
-                    cmap = np.stack(
-                        [
-                            100 * r.base + 257 * i,
-                            50000 - 123 * i,
-                            13 * i + 999,
-                        ],
-                        axis=1,
-                    ).astype(np.uint16)
-                elif r.m == 5:  # 1-bit MinIsWhite parity page
-                    px = ((r.base + y + x) & 1)[:, :, 0].astype(np.uint8)
-                    bit_depth, miw = 1, True
-                elif r.m == 6:  # 2-bit: 2*(y%2) + x%2
-                    px = (2 * (y % 2) + (x % 2))[:, :, 0].astype(np.uint8)
-                    bit_depth = 2
-                else:  # 4-bit: 4*(y%4) + x%4
-                    px = (4 * (y % 4) + (x % 4))[:, :, 0].astype(np.uint8)
-                    bit_depth = 4
-                comp = comps[r.k]
-                ts = 16 if r.tiled else None
-                if r.m == 5:
-                    # the bilevel mode sweeps the CCITT fax schemes
-                    # (striped per spec) with PackBits as the k=3 tiled
-                    # representative; the otherwise-inert predictor
-                    # flag splits G3 between 1-D and T.4 2-D (late r09)
-                    comp = ("ccitt-rle", "g3", "g4", "packbits")[r.k]
-                    if r.k == 1 and r.pred:
-                        comp = "g3-2d"
-                    if r.k != 3:
-                        ts = None
-                f = encode_tiff(
-                    px,
-                    compression=comp,
-                    predictor=bool(r.pred) and r.m < 5,
-                    tile_size=ts,
-                    colormap=cmap,
-                    bit_depth=bit_depth,
-                    min_is_white=miw,
-                    planar=bool(r.plv) and r.m in (1, 3),
-                )
-                info = probe_tiff(f)["pages"][0]
-                dec = decode_tiff_pixels(f)
-                rows.append(
-                    (
-                        r.media_id,
-                        dec.shape[1],
-                        dec.shape[0],
-                        dec.shape[2],
-                        int(info["bits_per_sample"][0]),
-                        int(info["photometric"]),
-                        info["compression"],
-                        info["predictor"] == 2,
-                        bool(info["planar"]),
-                        info["n_tiles"],
-                        int(dec.astype(np.int64).sum()),
-                    )
-                )
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "media_id", "width", "height", "channels", "bits",
-                    "photometric", "compression", "predictor", "planar",
-                    "n_tiles", "pix_sum",
-                ],
+    def one(r):
+        y = np.arange(r.h)[:, None, None]
+        x = np.arange(r.w)[None, :, None]
+        c3 = np.arange(3)[None, None, :]
+        cmap = None
+        bit_depth = None
+        miw = False
+        if r.m == 0:  # gray8: base + y + x < 256
+            px = (r.base + y + x)[:, :, 0].astype(np.uint8)
+        elif r.m == 1:  # rgb8
+            px = (r.base + y + x + c3).astype(np.uint8)
+        elif r.m == 2:  # gray16: 251*base + 7y + 3x < 65536
+            px = (251 * r.base + 7 * y + 3 * x)[:, :, 0].astype(
+                np.uint16
             )
+        elif r.m == 3:  # rgb16
+            px = (251 * r.base + 7 * y + 3 * x + 5 * c3).astype(
+                np.uint16
+            )
+        elif r.m == 4:  # palette: idx = y + x (< 256), linear map
+            px = (y + x)[:, :, 0].astype(np.uint8)
+            i = np.arange(r.h + r.w - 1)
+            cmap = np.stack(
+                [
+                    100 * r.base + 257 * i,
+                    50000 - 123 * i,
+                    13 * i + 999,
+                ],
+                axis=1,
+            ).astype(np.uint16)
+        elif r.m == 5:  # 1-bit MinIsWhite parity page
+            px = ((r.base + y + x) & 1)[:, :, 0].astype(np.uint8)
+            bit_depth, miw = 1, True
+        elif r.m == 6:  # 2-bit: 2*(y%2) + x%2
+            px = (2 * (y % 2) + (x % 2))[:, :, 0].astype(np.uint8)
+            bit_depth = 2
+        else:  # 4-bit: 4*(y%4) + x%4
+            px = (4 * (y % 4) + (x % 4))[:, :, 0].astype(np.uint8)
+            bit_depth = 4
+        comp = comps[r.k]
+        ts = 16 if r.tiled else None
+        if r.m == 5:
+            # the bilevel mode sweeps the CCITT fax schemes
+            # (striped per spec) with PackBits as the k=3 tiled
+            # representative; the otherwise-inert predictor
+            # flag splits G3 between 1-D and T.4 2-D (late r09)
+            comp = ("ccitt-rle", "g3", "g4", "packbits")[r.k]
+            if r.k == 1 and r.pred:
+                comp = "g3-2d"
+            if r.k != 3:
+                ts = None
+        f = encode_tiff(
+            px,
+            compression=comp,
+            predictor=bool(r.pred) and r.m < 5,
+            tile_size=ts,
+            colormap=cmap,
+            bit_depth=bit_depth,
+            min_is_white=miw,
+            planar=bool(r.plv) and r.m in (1, 3),
+        )
+        info = probe_tiff(f)["pages"][0]
+        dec = decode_tiff_pixels(f)
+        yield (
+            r.media_id,
+            dec.shape[1],
+            dec.shape[0],
+            dec.shape[2],
+            int(info["bits_per_sample"][0]),
+            int(info["photometric"]),
+            info["compression"],
+            info["predictor"] == 2,
+            bool(info["planar"]),
+            info["n_tiles"],
+            int(dec.astype(np.int64).sum()),
+        )
 
-    spread = _auto_spread_n(spark, d)
-    if spread:
-        params = params.repartition(spread)
-    return params.mapInPandas(
-        batches,
-        schema=(
+    params = _spread(spark, d, params)
+    return map_rows(
+        params,
+        one,
+        (
             "media_id long, width int, height int, channels int, "
             "bits int, photometric int, compression string, "
             "predictor boolean, planar boolean, n_tiles int, pix_sum long"
@@ -8986,71 +8823,55 @@ def q_mm_jpeg12_roundtrip(spark, sf):
         (F.col("doc_id") % 7 + 1).cast("int").alias("pred"),
     )
 
-    def batches(it):
-        import numpy as np
-        import pandas as pd
-
-        for pdf in it:
-            rows = []
-            for r in pdf.itertuples(index=False):
-                by = np.arange(r.hb)[:, None, None]
-                bx = np.arange(r.wb)[None, :, None]
-                c3 = np.arange(3)[None, None, :]
-                vals = (16 * r.base + 7 * by + 3 * bx + 5 * c3).astype(
-                    np.uint16
-                )
-                if r.gray:
-                    vals = vals[:, :, 0]
-                px = np.repeat(np.repeat(vals, 8, axis=0), 8, axis=1)
-                if r.ftype == 1:
-                    f = encode_jpeg_progressive(px, quality=100, precision=12)
-                elif r.ftype == 2:
-                    f = encode_jpeg_lossless(
-                        px, predictor=r.pred, precision=12
-                    )
-                else:
-                    f = encode_jpeg(
-                        px,
-                        quality=100,
-                        precision=12,
-                        restart_interval=2 if r.rst else 0,
-                    )
-                dec = decode_jpeg_pixels(f)
-                # read the frame type back from the stream itself
-                marker = next(
-                    name
-                    for sig, name in (
-                        (b"\xff\xc1", "sequential"),
-                        (b"\xff\xc2", "progressive"),
-                        (b"\xff\xc3", "lossless"),
-                    )
-                    if sig in f
-                )
-                rows.append(
-                    (
-                        r.media_id,
-                        dec.shape[1],
-                        dec.shape[0],
-                        1 if dec.ndim == 2 else dec.shape[2],
-                        marker,
-                        int(dec.max()),
-                        int(dec.astype(np.int64).sum()),
-                    )
-                )
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "media_id", "width", "height", "channels",
-                    "frame_type", "max_sample", "pix_sum",
-                ],
+    def one(r):
+        by = np.arange(r.hb)[:, None, None]
+        bx = np.arange(r.wb)[None, :, None]
+        c3 = np.arange(3)[None, None, :]
+        vals = (16 * r.base + 7 * by + 3 * bx + 5 * c3).astype(
+            np.uint16
+        )
+        if r.gray:
+            vals = vals[:, :, 0]
+        px = np.repeat(np.repeat(vals, 8, axis=0), 8, axis=1)
+        if r.ftype == 1:
+            f = encode_jpeg_progressive(px, quality=100, precision=12)
+        elif r.ftype == 2:
+            f = encode_jpeg_lossless(
+                px, predictor=r.pred, precision=12
             )
+        else:
+            f = encode_jpeg(
+                px,
+                quality=100,
+                precision=12,
+                restart_interval=2 if r.rst else 0,
+            )
+        dec = decode_jpeg_pixels(f)
+        # read the frame type back from the stream itself
+        marker = next(
+            name
+            for sig, name in (
+                (b"\xff\xc1", "sequential"),
+                (b"\xff\xc2", "progressive"),
+                (b"\xff\xc3", "lossless"),
+            )
+            if sig in f
+        )
+        yield (
+            r.media_id,
+            dec.shape[1],
+            dec.shape[0],
+            1 if dec.ndim == 2 else dec.shape[2],
+            marker,
+            int(dec.max()),
+            int(dec.astype(np.int64).sum()),
+        )
 
-    spread = _auto_spread_n(spark, d)
-    if spread:
-        params = params.repartition(spread)
-    return params.mapInPandas(
-        batches,
-        schema=(
+    params = _spread(spark, d, params)
+    return map_rows(
+        params,
+        one,
+        (
             "media_id long, width int, height int, channels int, "
             "frame_type string, max_sample int, pix_sum long"
         ),
@@ -9120,56 +8941,40 @@ def q_mm_rle8_roundtrip(spark, sf):
         (F.col("doc_id") % 90).cast("int").alias("a"),
     )
 
-    def batches(it):
-        import numpy as np
-        import pandas as pd
+    def one(r):
+        i = np.arange(16)
+        pal = np.stack(
+            [7 * i + r.a, 255 - 9 * i, 3 * i + 40], axis=1
+        ).astype(np.uint8)
+        y = np.arange(r.h)[:, None]
+        x = np.arange(r.w)[None, :]
+        f0 = ((y % 4) + 4 * (x % 4)).astype(np.uint8)
+        f1 = f0.copy()
+        f1[r.h - 1, :] = 5  # bottom row only: a true delta
+        f2 = f1.copy()
+        f2[r.h - 1, :] = 9
+        payload = encode_avi_rle8([f0, f1, f2], pal, fps=5)
+        info = probe_avi(payload)
+        sizes = [s for _, s in info["frames"]]
+        _, frames = decode_avi_frames(payload)
+        sums = [int(px.astype(np.int64).sum()) for _, px in frames]
+        yield (
+            r.media_id,
+            info["width"],
+            info["height"],
+            info["n_frames"],
+            info["codec"],
+            sizes[1] * 4 < sizes[0] and sizes[2] * 4 < sizes[0],
+            sums[0],
+            sums[1],
+            sums[2],
+        )
 
-        for pdf in it:
-            rows = []
-            for r in pdf.itertuples(index=False):
-                i = np.arange(16)
-                pal = np.stack(
-                    [7 * i + r.a, 255 - 9 * i, 3 * i + 40], axis=1
-                ).astype(np.uint8)
-                y = np.arange(r.h)[:, None]
-                x = np.arange(r.w)[None, :]
-                f0 = ((y % 4) + 4 * (x % 4)).astype(np.uint8)
-                f1 = f0.copy()
-                f1[r.h - 1, :] = 5  # bottom row only: a true delta
-                f2 = f1.copy()
-                f2[r.h - 1, :] = 9
-                payload = encode_avi_rle8([f0, f1, f2], pal, fps=5)
-                info = probe_avi(payload)
-                sizes = [s for _, s in info["frames"]]
-                _, frames = decode_avi_frames(payload)
-                sums = [int(px.astype(np.int64).sum()) for _, px in frames]
-                rows.append(
-                    (
-                        r.media_id,
-                        info["width"],
-                        info["height"],
-                        info["n_frames"],
-                        info["codec"],
-                        sizes[1] * 4 < sizes[0] and sizes[2] * 4 < sizes[0],
-                        sums[0],
-                        sums[1],
-                        sums[2],
-                    )
-                )
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "media_id", "width", "height", "n_frames", "codec",
-                    "delta_smaller", "sum0", "sum1", "sum2",
-                ],
-            )
-
-    spread = _auto_spread_n(spark, d)
-    if spread:
-        params = params.repartition(spread)
-    return params.mapInPandas(
-        batches,
-        schema=(
+    params = _spread(spark, d, params)
+    return map_rows(
+        params,
+        one,
+        (
             "media_id long, width int, height int, n_frames int, "
             "codec string, delta_smaller boolean, "
             "sum0 long, sum1 long, sum2 long"
@@ -9246,52 +9051,36 @@ def q_mm_mp3_probe(spark, sf):
         (F.col("n_chars") % 2 == 0).alias("tagged"),
     )
 
-    def batches(it):
-        import pandas as pd
+    def one(r):
+        payload = mux_mp3_frames(
+            r.n_frames,
+            version=("1", "2", "2.5")[r.v3],
+            layer=r.layer,
+            bitrate_idx=r.br_idx,
+            rate_idx=r.rate_idx,
+            mono=r.mono,
+            pad_every=3 if r.padded else 0,
+            id3v2_bytes=64 if r.tagged else 0,
+            id3v1=r.tagged,
+        )
+        info = probe_mp3(payload)
+        yield (
+            r.media_id,
+            info["version"],
+            info["layer"],
+            info["sample_rate"],
+            info["n_channels"],
+            info["n_frames"],
+            info["stream_bytes"],
+            info["duration_ms"],
+            info["bitrate_kbps"],
+        )
 
-        for pdf in it:
-            rows = []
-            for r in pdf.itertuples(index=False):
-                payload = mux_mp3_frames(
-                    r.n_frames,
-                    version=("1", "2", "2.5")[r.v3],
-                    layer=r.layer,
-                    bitrate_idx=r.br_idx,
-                    rate_idx=r.rate_idx,
-                    mono=r.mono,
-                    pad_every=3 if r.padded else 0,
-                    id3v2_bytes=64 if r.tagged else 0,
-                    id3v1=r.tagged,
-                )
-                info = probe_mp3(payload)
-                rows.append(
-                    (
-                        r.media_id,
-                        info["version"],
-                        info["layer"],
-                        info["sample_rate"],
-                        info["n_channels"],
-                        info["n_frames"],
-                        info["stream_bytes"],
-                        info["duration_ms"],
-                        info["bitrate_kbps"],
-                    )
-                )
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "media_id", "version", "layer", "sample_rate",
-                    "n_channels", "n_frames", "stream_bytes", "duration_ms",
-                    "bitrate_kbps",
-                ],
-            )
-
-    spread = _auto_spread_n(spark, d)
-    if spread:
-        params = params.repartition(spread)
-    return params.mapInPandas(
-        batches,
-        schema=(
+    params = _spread(spark, d, params)
+    return map_rows(
+        params,
+        one,
+        (
             "media_id long, version string, layer int, sample_rate int, "
             "n_channels int, n_frames long, stream_bytes long, "
             "duration_ms long, bitrate_kbps int"
@@ -9395,65 +9184,50 @@ def q_mm_ogg_probe(spark, sf):
         (F.col("doc_id") % 400).cast("int").alias("pre_skip"),
     )
 
-    def batches(it):
-        import pandas as pd
+    rates = (8000, 22050, 44100, 48000)
 
-        rates = (8000, 22050, 44100, 48000)
-        for pdf in it:
-            rows = []
-            for r in pdf.itertuples(index=False):
-                if r.opus:
-                    idpkt = opus_id_packet(r.channels, r.pre_skip, 48000)
-                else:
-                    idpkt = vorbis_id_packet(r.channels, rates[r.rate_idx])
-                pages = [
-                    {
-                        "serial": 1,
-                        "seq": 0,
-                        "granule": 0,
-                        "bos": True,
-                        "packets": [idpkt],
-                    }
-                ]
-                for i in range(r.n_audio):
-                    pages.append(
-                        {
-                            "serial": 1,
-                            "seq": i + 1,
-                            "granule": (i + 1) * r.gstep,
-                            "eos": i == r.n_audio - 1,
-                            "packets": [bytes([i & 0xFF]) * r.pkt_bytes],
-                        }
-                    )
-                info = probe_ogg(mux_ogg_pages(pages))
-                rows.append(
-                    (
-                        r.media_id,
-                        info["codec"],
-                        info["sample_rate"],
-                        info["n_channels"],
-                        info["n_pages"],
-                        info["n_packets"],
-                        info["duration_ms"],
-                        info["total_bytes"],
-                        info["eos"],
-                    )
-                )
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "media_id", "codec", "sample_rate", "n_channels",
-                    "n_pages", "n_packets", "duration_ms", "total_bytes",
-                    "eos",
-                ],
+    def one(r):
+        if r.opus:
+            idpkt = opus_id_packet(r.channels, r.pre_skip, 48000)
+        else:
+            idpkt = vorbis_id_packet(r.channels, rates[r.rate_idx])
+        pages = [
+            {
+                "serial": 1,
+                "seq": 0,
+                "granule": 0,
+                "bos": True,
+                "packets": [idpkt],
+            }
+        ]
+        for i in range(r.n_audio):
+            pages.append(
+                {
+                    "serial": 1,
+                    "seq": i + 1,
+                    "granule": (i + 1) * r.gstep,
+                    "eos": i == r.n_audio - 1,
+                    "packets": [bytes([i & 0xFF]) * r.pkt_bytes],
+                }
             )
+        info = probe_ogg(mux_ogg_pages(pages))
+        yield (
+            r.media_id,
+            info["codec"],
+            info["sample_rate"],
+            info["n_channels"],
+            info["n_pages"],
+            info["n_packets"],
+            info["duration_ms"],
+            info["total_bytes"],
+            info["eos"],
+        )
 
-    spread = _auto_spread_n(spark, d)
-    if spread:
-        params = params.repartition(spread)
-    return params.mapInPandas(
-        batches,
-        schema=(
+    params = _spread(spark, d, params)
+    return map_rows(
+        params,
+        one,
+        (
             "media_id long, codec string, sample_rate int, n_channels int, "
             "n_pages long, n_packets long, duration_ms long, "
             "total_bytes long, eos boolean"
@@ -9720,73 +9494,60 @@ def q_pipe_crawl_e2e(spark, sf):
         (F.col("doc_id") % 3).cast("int").alias("k"),
         (F.col("doc_id") % 7 == 0).alias("dup"),
     )
-    spread = _auto_spread_n(spark, d)
-    if spread:
-        params = params.repartition(spread)
+    params = _spread(spark, d, params)
     statuses = [200, 301, 404]
 
-    def mux(it):
-        import pandas as pd
+    def mux(r):
+        title = "Mirror" if r.dup else f"Doc {r.media_id}"
+        body = CRAWL_MIRROR_TEXT if r.dup else r.text
+        page = (
+            f"<html><head><title>{title}</title>"
+            f"<style>nav {{ display: none }}</style></head>"
+            f"<body><script>track({r.media_id});</script>"
+            f"<h1>{title}</h1><p>{body}</p>"
+            f"<noscript>enable javascript</noscript></body></html>"
+        )
+        url = (
+            "http://mirror.example/landing"
+            if r.dup
+            else f"http://example.com/page/{r.media_id}"
+        )
+        blob = encode_warc(
+            [
+                {
+                    "warc_type": "response",
+                    "url": url,
+                    "http_status": statuses[r.k],
+                    "http_headers": {
+                        "content-type": "text/html; charset=utf-8"
+                    },
+                    "body": page,
+                    "mime": "application/http; msgtype=response",
+                },
+                {
+                    "warc_type": "warcinfo",
+                    "mime": "application/warc-fields",
+                    "body": "software: crawler-e2e",
+                },
+            ]
+        )
+        yield r.media_id, blob
 
-        for pdf in it:
-            rows = []
-            for r in pdf.itertuples(index=False):
-                title = "Mirror" if r.dup else f"Doc {r.media_id}"
-                body = CRAWL_MIRROR_TEXT if r.dup else r.text
-                page = (
-                    f"<html><head><title>{title}</title>"
-                    f"<style>nav {{ display: none }}</style></head>"
-                    f"<body><script>track({r.media_id});</script>"
-                    f"<h1>{title}</h1><p>{body}</p>"
-                    f"<noscript>enable javascript</noscript></body></html>"
-                )
-                url = (
-                    "http://mirror.example/landing"
-                    if r.dup
-                    else f"http://example.com/page/{r.media_id}"
-                )
-                blob = encode_warc(
-                    [
-                        {
-                            "warc_type": "response",
-                            "url": url,
-                            "http_status": statuses[r.k],
-                            "http_headers": {
-                                "content-type": "text/html; charset=utf-8"
-                            },
-                            "body": page,
-                            "mime": "application/http; msgtype=response",
-                        },
-                        {
-                            "warc_type": "warcinfo",
-                            "mime": "application/warc-fields",
-                            "body": "software: crawler-e2e",
-                        },
-                    ]
-                )
-                rows.append((r.media_id, blob))
-            yield pd.DataFrame(rows, columns=["media_id", "payload"])
-
-    blobs = params.mapInPandas(mux, schema="media_id long, payload binary")
+    blobs = map_rows(params, mux, "media_id long, payload binary")
     resp = extract_warc_records(blobs).filter(
         (F.col("warc_type") == "response") & (F.col("http_status") == 200)
     )
 
-    def clean(it):
-        import pandas as pd
+    def clean(row):
+        mid, body = row
+        text, title = html_extract(body)
+        flat = text.replace("\n", " ")
+        yield mid, title, flat, len(flat)
 
-        for pdf in it:
-            rows = []
-            for mid, body in zip(pdf["media_id"], pdf["body"]):
-                text, title = html_extract(body)
-                flat = text.replace("\n", " ")
-                rows.append((mid, title, flat, len(flat)))
-            yield pd.DataFrame(
-                rows, columns=["media_id", "title", "flat", "n_clean"]
-            )
-
-    cleaned = resp.select("media_id", "body").mapInPandas(
-        clean, schema="media_id long, title string, flat string, n_clean long"
+    cleaned = map_rows(
+        resp.select("media_id", "body"),
+        clean,
+        "media_id long, title string, flat string, n_clean long",
     )
     scored = cleaned.select(
         "media_id",
@@ -9890,8 +9651,6 @@ def _render_dhash_grid(sig: int):
     """9x8 grayscale grid whose dHash is exactly ``sig``: each row walks
     from 128 in ±8 steps, so grid[y, x+1] > grid[y, x] iff bit y*8+x is
     set (strictly — ties impossible). Values stay in [64, 192]."""
-    import numpy as np
-
     grid = np.zeros((8, 9), dtype=np.uint8)
     for y in range(8):
         v = 128
@@ -9924,30 +9683,15 @@ def q_mm_image_neardup(spark, sf):
     d = _t(spark, sf, "documents")
     params = d.select(F.col("doc_id").alias("media_id"))
 
-    def mux(it):
-        import numpy as np
-        import pandas as pd
+    from vector_lake_spark.gif import encode_gif
 
-        from vector_lake_spark.gif import encode_gif
+    def mux(r):
+        grid = _render_dhash_grid(_dhash_fixture_sig(r.media_id))
+        img = np.kron(grid, np.ones((2, 2), dtype=np.uint8))
+        yield r.media_id, encode_gif(np.repeat(img[:, :, None], 3, axis=2))
 
-        for pdf in it:
-            payloads = []
-            for doc_id in pdf["media_id"]:
-                grid = _render_dhash_grid(_dhash_fixture_sig(int(doc_id)))
-                img = np.kron(grid, np.ones((2, 2), dtype=np.uint8))
-                payloads.append(
-                    encode_gif(np.repeat(img[:, :, None], 3, axis=2))
-                )
-            yield pd.DataFrame(
-                {"media_id": pdf["media_id"], "payload": payloads}
-            )
-
-    spread = _auto_spread_n(spark, d)
-    if spread:
-        params = params.repartition(spread)
-    media = params.mapInPandas(
-        mux, schema="media_id long, payload binary"
-    )
+    params = _spread(spark, d, params)
+    media = map_rows(params, mux, "media_id long, payload binary")
     sigs = image_signatures(media, kind="dhash")
     # n_blocks pinned to the minimal config the docstring describes:
     # the auto default would fire a count() job that re-runs the whole
@@ -10027,8 +9771,6 @@ def _render_dhash_grid256(longs: list[int]):
     """16×17 grayscale grid whose dhash256 is exactly ``longs``: each
     row walks from 128 in ±4 steps (16 steps ⇒ range [64, 192], strict
     comparisons, ties impossible)."""
-    import numpy as np
-
     grid = np.zeros((16, 17), dtype=np.uint8)
     for y in range(16):
         v = 128
@@ -10060,32 +9802,17 @@ def q_mm_image_neardup_wide(spark, sf):
     d = _t(spark, sf, "documents")
     params = d.select(F.col("doc_id").alias("media_id"))
 
-    def mux(it):
-        import numpy as np
-        import pandas as pd
+    from vector_lake_spark.gif import encode_gif
 
-        from vector_lake_spark.gif import encode_gif
+    def mux(r):
+        grid = _render_dhash_grid256(
+            _dhash_fixture_sig256(r.media_id)
+        )
+        img = np.kron(grid, np.ones((2, 2), dtype=np.uint8))
+        yield r.media_id, encode_gif(np.repeat(img[:, :, None], 3, axis=2))
 
-        for pdf in it:
-            payloads = []
-            for doc_id in pdf["media_id"]:
-                grid = _render_dhash_grid256(
-                    _dhash_fixture_sig256(int(doc_id))
-                )
-                img = np.kron(grid, np.ones((2, 2), dtype=np.uint8))
-                payloads.append(
-                    encode_gif(np.repeat(img[:, :, None], 3, axis=2))
-                )
-            yield pd.DataFrame(
-                {"media_id": pdf["media_id"], "payload": payloads}
-            )
-
-    spread = _auto_spread_n(spark, d)
-    if spread:
-        params = params.repartition(spread)
-    media = params.mapInPandas(
-        mux, schema="media_id long, payload binary"
-    )
+    params = _spread(spark, d, params)
+    media = map_rows(params, mux, "media_id long, payload binary")
     sigs = image_signatures(media, kind="dhash256")
     # minimal pinned config (the auto default resolves to 8 at every
     # registry scale and would re-run the codec chain for a count —
@@ -10197,8 +9924,6 @@ def _render_phash_grid(sig: int):
     Amplitudes divide by the basis-column norms (√32 for the DC factor,
     4 otherwise), keeping Σ|amplitude| = 1008/16 = 63 → pixels in
     [65, 191], no clipping at any doc_id."""
-    import numpy as np
-
     pos = [p for p in range(1, 64) if (sig >> p) & 1]
     t = PHASH_COEFF_SUM / len(pos)
     n = np.arange(32)
@@ -10239,29 +9964,14 @@ def q_mm_image_phash(spark, sf):
     d = _t(spark, sf, "documents")
     params = d.select(F.col("doc_id").alias("media_id"))
 
-    def mux(it):
-        import numpy as np
-        import pandas as pd
+    from vector_lake_spark.gif import encode_gif
 
-        from vector_lake_spark.gif import encode_gif
+    def mux(r):
+        grid = _render_phash_grid(_phash_fixture_sig(r.media_id))
+        yield r.media_id, encode_gif(np.repeat(grid[:, :, None], 3, axis=2))
 
-        for pdf in it:
-            payloads = []
-            for doc_id in pdf["media_id"]:
-                grid = _render_phash_grid(_phash_fixture_sig(int(doc_id)))
-                payloads.append(
-                    encode_gif(np.repeat(grid[:, :, None], 3, axis=2))
-                )
-            yield pd.DataFrame(
-                {"media_id": pdf["media_id"], "payload": payloads}
-            )
-
-    spread = _auto_spread_n(spark, d)
-    if spread:
-        params = params.repartition(spread)
-    media = params.mapInPandas(
-        mux, schema="media_id long, payload binary"
-    )
+    params = _spread(spark, d, params)
+    media = map_rows(params, mux, "media_id long, payload binary")
     sigs = image_signatures(media, kind="phash")
     # minimal config pinned for the same reason as mm_image_neardup:
     # auto would fire a count() that re-runs the codec chain, and it
@@ -10340,55 +10050,40 @@ def q_mm_exif_probe(spark, sf):
         (F.col("doc_id") % 10 == 9).alias("bare"),
     )
 
-    def batches(it):
-        import numpy as np
-        import pandas as pd
+    from vector_lake_spark.jpeg import encode_jpeg
 
-        from vector_lake_spark.jpeg import encode_jpeg
+    base_jpeg = encode_jpeg(np.full((16, 16), 40, dtype=np.uint8), 90)
 
-        base_jpeg = encode_jpeg(np.full((16, 16), 40, dtype=np.uint8), 90)
-        for pdf in it:
-            rows = []
-            for r in pdf.itertuples(index=False):
-                if r.bare:
-                    payload = base_jpeg
-                else:
-                    dt = f"2024:{r.mo:02d}:{r.dy:02d} {r.hh:02d}:{r.mi:02d}:{r.ss:02d}"
-                    dto = f"2024:{r.mo:02d}:{r.dy:02d} {r.hh2:02d}:{r.mi:02d}:{r.ss:02d}"
-                    payload = insert_exif_app1(
-                        base_jpeg,
-                        build_exif_tiff(
-                            r.ori, r.w, r.h, dt, dto,
-                            "II" if r.ii else "MM",
-                        ),
-                    )
-                info = probe_exif(payload)
-                rows.append(
-                    (
-                        r.media_id,
-                        info["has_exif"],
-                        info["byte_order"],
-                        info["orientation"],
-                        info["width"],
-                        info["height"],
-                        info["datetime"],
-                        info["datetime_original"],
-                    )
-                )
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "media_id", "has_exif", "byte_order", "orientation",
-                    "width", "height", "datetime", "datetime_original",
-                ],
+    def one(r):
+        if r.bare:
+            payload = base_jpeg
+        else:
+            dt = f"2024:{r.mo:02d}:{r.dy:02d} {r.hh:02d}:{r.mi:02d}:{r.ss:02d}"
+            dto = f"2024:{r.mo:02d}:{r.dy:02d} {r.hh2:02d}:{r.mi:02d}:{r.ss:02d}"
+            payload = insert_exif_app1(
+                base_jpeg,
+                build_exif_tiff(
+                    r.ori, r.w, r.h, dt, dto,
+                    "II" if r.ii else "MM",
+                ),
             )
+        info = probe_exif(payload)
+        yield (
+            r.media_id,
+            info["has_exif"],
+            info["byte_order"],
+            info["orientation"],
+            info["width"],
+            info["height"],
+            info["datetime"],
+            info["datetime_original"],
+        )
 
-    spread = _auto_spread_n(spark, d)
-    if spread:
-        params = params.repartition(spread)
-    return params.mapInPandas(
-        batches,
-        schema=(
+    params = _spread(spark, d, params)
+    return map_rows(
+        params,
+        one,
+        (
             "media_id long, has_exif boolean, byte_order string, "
             "orientation int, width int, height int, datetime string, "
             "datetime_original string"
@@ -10449,51 +10144,38 @@ def q_mm_image_orient(spark, sf):
         (F.col("doc_id") % 8 + 1).cast("int").alias("ori"),
     )
 
-    def batches(it):
-        import numpy as np
-        import pandas as pd
-
-        from vector_lake_spark.exif import probe_exif
-        from vector_lake_spark.operators.imagehash import (
-            INVERSE_ORIENTATION,
-            apply_exif_orientation,
-            decode_image_gray,
-            dhash64,
-        )
-        from vector_lake_spark.tiff import encode_tiff
-
-        for pdf in it:
-            rows = []
-            for r in pdf.itertuples(index=False):
-                sig = _dhash_fixture_sig(int(r.media_id))
-                upright = np.kron(
-                    _render_dhash_grid(sig),
-                    np.ones((2, 2), dtype=np.uint8),
-                )
-                stored = apply_exif_orientation(
-                    upright, INVERSE_ORIENTATION[r.ori]
-                )
-                payload = encode_tiff(
-                    np.ascontiguousarray(stored), orientation=r.ori
-                )
-                # the pipeline under test: probe -> decode -> correct
-                # -> hash (all against the real bytes)
-                info = probe_exif(payload)
-                ori = info["orientation"] or 1
-                px = apply_exif_orientation(
-                    decode_image_gray(payload), ori
-                )
-                rows.append((r.media_id, ori, dhash64(px)))
-            yield pd.DataFrame(
-                rows, columns=["media_id", "orientation", "sig"]
-            )
-
-    spread = _auto_spread_n(spark, d)
-    if spread:
-        params = params.repartition(spread)
-    return params.mapInPandas(
-        batches, schema="media_id long, orientation int, sig long"
+    from vector_lake_spark.exif import probe_exif
+    from vector_lake_spark.operators.imagehash import (
+        INVERSE_ORIENTATION,
+        apply_exif_orientation,
+        decode_image_gray,
+        dhash64,
     )
+    from vector_lake_spark.tiff import encode_tiff
+
+    def one(r):
+        sig = _dhash_fixture_sig(int(r.media_id))
+        upright = np.kron(
+            _render_dhash_grid(sig),
+            np.ones((2, 2), dtype=np.uint8),
+        )
+        stored = apply_exif_orientation(
+            upright, INVERSE_ORIENTATION[r.ori]
+        )
+        payload = encode_tiff(
+            np.ascontiguousarray(stored), orientation=r.ori
+        )
+        # the pipeline under test: probe -> decode -> correct
+        # -> hash (all against the real bytes)
+        info = probe_exif(payload)
+        ori = info["orientation"] or 1
+        px = apply_exif_orientation(
+            decode_image_gray(payload), ori
+        )
+        yield r.media_id, ori, dhash64(px)
+
+    params = _spread(spark, d, params)
+    return map_rows(params, one, "media_id long, orientation int, sig long")
 
 
 def _sql_mm_image_orient() -> str:
@@ -10532,7 +10214,7 @@ def _image_dedup_sigs(spark, sf):
     pinning: per document the upright fixture image (closed-form dHash,
     q_mm_image_neardup) is stored INVERSE-rotated as a real TIFF whose
     IFD carries Orientation tag doc_id%8+1 (the mm_image_orient
-    fixture), and ONE mapInPandas does the full curation prelude —
+    fixture), and ONE map_rows stage does the full curation prelude —
     probe the EXIF tag, decode the pixels, correct upright, hash.
     Pixels and payloads never leave Python; only (media_id, sig int64)
     rows emerge."""
@@ -10542,43 +10224,34 @@ def _image_dedup_sigs(spark, sf):
         (F.col("doc_id") % 8 + 1).cast("int").alias("ori"),
     )
 
-    def batches(it):
-        import numpy as np
-        import pandas as pd
+    from vector_lake_spark.exif import probe_exif
+    from vector_lake_spark.operators.imagehash import (
+        INVERSE_ORIENTATION,
+        apply_exif_orientation,
+        decode_image_gray,
+        dhash64,
+    )
+    from vector_lake_spark.tiff import encode_tiff
 
-        from vector_lake_spark.exif import probe_exif
-        from vector_lake_spark.operators.imagehash import (
-            INVERSE_ORIENTATION,
-            apply_exif_orientation,
-            decode_image_gray,
-            dhash64,
+    def one(r):
+        upright = np.kron(
+            _render_dhash_grid(_dhash_fixture_sig(int(r.media_id))),
+            np.ones((2, 2), dtype=np.uint8),
         )
-        from vector_lake_spark.tiff import encode_tiff
+        stored = apply_exif_orientation(
+            upright, INVERSE_ORIENTATION[r.ori]
+        )
+        payload = encode_tiff(
+            np.ascontiguousarray(stored), orientation=r.ori
+        )
+        info = probe_exif(payload)
+        px = apply_exif_orientation(
+            decode_image_gray(payload), info["orientation"] or 1
+        )
+        yield r.media_id, dhash64(px)
 
-        for pdf in it:
-            rows = []
-            for r in pdf.itertuples(index=False):
-                upright = np.kron(
-                    _render_dhash_grid(_dhash_fixture_sig(int(r.media_id))),
-                    np.ones((2, 2), dtype=np.uint8),
-                )
-                stored = apply_exif_orientation(
-                    upright, INVERSE_ORIENTATION[r.ori]
-                )
-                payload = encode_tiff(
-                    np.ascontiguousarray(stored), orientation=r.ori
-                )
-                info = probe_exif(payload)
-                px = apply_exif_orientation(
-                    decode_image_gray(payload), info["orientation"] or 1
-                )
-                rows.append((r.media_id, dhash64(px)))
-            yield pd.DataFrame(rows, columns=["media_id", "sig"])
-
-    spread = _auto_spread_n(spark, d)
-    if spread:
-        params = params.repartition(spread)
-    return params.mapInPandas(batches, schema="media_id long, sig long")
+    params = _spread(spark, d, params)
+    return map_rows(params, one, "media_id long, sig long")
 
 
 def q_pipe_image_dedup_e2e(spark, sf):
@@ -10704,8 +10377,6 @@ def _render_audio_pcm(sig: int):
     strict comparisons can never flip (worst-case-aligned bound in
     operators/audiofp docstring). The loudest possible walk sums to
     ~13.4k < 32767: no clipping at any doc_id."""
-    import numpy as np
-
     # the 9 cosine lines depend only on the band index — computed once
     # per process (r12, guide §4.5 "heavyweight init once"): same
     # np.cos over the same inputs, and the amp·cos accumulation below
@@ -10752,8 +10423,6 @@ def _mux_audio_fixture(samples, mode: int) -> bytes:
     import struct
 
     if mode == 1:
-        import numpy as np
-
         from vector_lake_spark.multimodal import encode_wav_ext
 
         return encode_wav_ext(
@@ -10803,24 +10472,16 @@ def q_mm_audio_neardup(spark, sf):
     d = _t(spark, sf, "documents")
     params = d.select(F.col("doc_id").alias("media_id"))
 
-    def batches(it):
-        import pandas as pd
+    def one(r):
+        payload = _mux_audio_fixture(
+            _render_audio_pcm(_audio_fixture_sig(r.media_id)),
+            r.media_id % 4,
+        )
+        samples, _rate = decode_wav_samples(payload)
+        yield r.media_id, audio_fingerprint64(samples)
 
-        for pdf in it:
-            rows = []
-            for doc_id in pdf["media_id"]:
-                payload = _mux_audio_fixture(
-                    _render_audio_pcm(_audio_fixture_sig(int(doc_id))),
-                    int(doc_id) % 4,
-                )
-                samples, _rate = decode_wav_samples(payload)
-                rows.append((doc_id, audio_fingerprint64(samples)))
-            yield pd.DataFrame(rows, columns=["media_id", "sig"])
-
-    spread = _auto_spread_n(spark, d)
-    if spread:
-        params = params.repartition(spread)
-    sigs = params.mapInPandas(batches, schema="media_id long, sig long")
+    params = _spread(spark, d, params)
+    sigs = map_rows(params, one, "media_id long, sig long")
     return hamming_neardup_pairs(
         sigs, radius=7, id_col="media_id", n_blocks=8
     )
@@ -10918,32 +10579,19 @@ def q_mm_audio_neardup_long(spark, sf):
     d = _t(spark, sf, "documents")
     params = d.select(F.col("doc_id").alias("media_id"))
 
-    def mux(it):
-        import numpy as np
-        import pandas as pd
-
-        for pdf in it:
-            payloads = []
-            for doc_id in pdf["media_id"]:
-                clip = np.concatenate(
-                    [
-                        _render_audio_pcm(
-                            _audio_long_fixture_sig(int(doc_id), w)
-                        )
-                        for w in range(AUDIO_LONG_WINDOWS)
-                    ]
+    def mux(r):
+        clip = np.concatenate(
+            [
+                _render_audio_pcm(
+                    _audio_long_fixture_sig(r.media_id, w)
                 )
-                payloads.append(mux_pcm16_wav(clip))
-            yield pd.DataFrame(
-                {"media_id": pdf["media_id"], "payload": payloads}
-            )
+                for w in range(AUDIO_LONG_WINDOWS)
+            ]
+        )
+        yield r.media_id, mux_pcm16_wav(clip)
 
-    spread = _auto_spread_n(spark, d)
-    if spread:
-        params = params.repartition(spread)
-    media = params.mapInPandas(
-        mux, schema="media_id long, payload binary"
-    )
+    params = _spread(spark, d, params)
+    media = map_rows(params, mux, "media_id long, payload binary")
     sigs = audio_window_signatures(media).localCheckpoint(eager=False)
     pairs = hamming_neardup_pairs(
         sigs,
@@ -11058,38 +10706,26 @@ def q_mm_video_neardup(spark, sf):
     d = _t(spark, sf, "documents")
     params = d.select(F.col("doc_id").alias("media_id"))
 
-    def mux(it):
-        import numpy as np
-        import pandas as pd
+    from vector_lake_spark.avi import encode_avi_rle8
 
-        from vector_lake_spark.avi import encode_avi_rle8
-
-        pal = np.repeat(
-            np.arange(256, dtype=np.uint8)[:, None], 3, axis=1
-        )
-        for pdf in it:
-            payloads = []
-            for doc_id in pdf["media_id"]:
-                frames = [
-                    np.kron(
-                        _render_dhash_grid(
-                            _video_fixture_sig(int(doc_id), f)
-                        ),
-                        np.ones((2, 2), dtype=np.uint8),
-                    )
-                    for f in range(3)
-                ]
-                payloads.append(encode_avi_rle8(frames, pal, fps=10))
-            yield pd.DataFrame(
-                {"media_id": pdf["media_id"], "payload": payloads}
-            )
-
-    spread = _auto_spread_n(spark, d)
-    if spread:
-        params = params.repartition(spread)
-    media = params.mapInPandas(
-        mux, schema="media_id long, payload binary"
+    pal = np.repeat(
+        np.arange(256, dtype=np.uint8)[:, None], 3, axis=1
     )
+
+    def mux(r):
+        frames = [
+            np.kron(
+                _render_dhash_grid(
+                    _video_fixture_sig(r.media_id, f)
+                ),
+                np.ones((2, 2), dtype=np.uint8),
+            )
+            for f in range(3)
+        ]
+        yield r.media_id, encode_avi_rle8(frames, pal, fps=10)
+
+    params = _spread(spark, d, params)
+    media = map_rows(params, mux, "media_id long, payload binary")
     sigs = video_frame_signatures(
         media, frame_indices=(0, 1, 2)
     ).localCheckpoint(eager=False)

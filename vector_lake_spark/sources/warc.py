@@ -34,6 +34,8 @@ import zlib
 
 from pyspark.sql import DataFrame, types as T
 
+from vector_lake_spark.rowmap import map_rows
+
 CRLF = b"\r\n"
 
 
@@ -252,32 +254,24 @@ def extract_warc_records(df: DataFrame) -> DataFrame:
     """Explode (media_id, payload) WARC blobs into one row per record —
     the crawl-ingestion operator: bytes stay on the executors, only the
     extracted text + metadata enter the relational plan."""
-    import pandas as pd
 
-    def batches(it):
-        for pdf in it:
-            rows = []
-            for mid, payload in zip(pdf["media_id"], pdf["payload"]):
-                for i, rec in enumerate(parse_warc(bytes(payload))):
-                    mime = rec["mime"]
-                    if rec["http_headers"]:
-                        mime = rec["http_headers"].get("content-type", mime)
-                    rows.append(
-                        (
-                            mid,
-                            i,
-                            rec["warc_type"],
-                            rec["url"],
-                            rec["http_status"],
-                            mime,
-                            rec["body"],
-                            rec["block_length"],
-                        )
-                    )
-            yield pd.DataFrame(
-                rows, columns=[f.name for f in WARC_RECORDS_SCHEMA.fields]
+    def records_of(row):
+        mid, payload = row
+        for i, rec in enumerate(parse_warc(bytes(payload))):
+            mime = rec["mime"]
+            if rec["http_headers"]:
+                mime = rec["http_headers"].get("content-type", mime)
+            yield (
+                mid,
+                i,
+                rec["warc_type"],
+                rec["url"],
+                rec["http_status"],
+                mime,
+                rec["body"],
+                rec["block_length"],
             )
 
-    return df.select("media_id", "payload").mapInPandas(
-        batches, schema=WARC_RECORDS_SCHEMA
+    return map_rows(
+        df.select("media_id", "payload"), records_of, WARC_RECORDS_SCHEMA
     )
