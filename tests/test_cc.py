@@ -1,19 +1,16 @@
-"""Connected-components: min-label propagation vs large-star/small-star.
+"""Connected components: large-star/small-star contraction.
 
-Propagation rounds scale with component diameter (fine for shallow
-near-dup clusters, degenerate for chains); star contraction is the
-O(log) high-diameter path. Both must produce identical
-(id, cluster_id=component min) labelings.
+Star contraction closes a component in O(log) rounds whatever its
+diameter (min-label propagation, the design it replaced, needed one round
+per hop). Its (id, cluster_id=component min) labeling is checked against
+a Python union-find reference.
 """
 
 import random
 
 import pytest
 
-from vector_lake_spark.operators.dedup import (
-    connected_components,
-    connected_components_star,
-)
+from vector_lake_spark.operators.dedup import connected_components_star
 
 
 def _labels(df):
@@ -49,16 +46,14 @@ def test_star_matches_propagation_random_graph(spark, seed):
     nodes = spark.range(n).withColumnRenamed("id", "doc_id")
 
     want = _python_cc(n, edges)
-    got_prop = _labels(connected_components(pairs, nodes))
     got_star = _labels(connected_components_star(pairs, nodes))
-    assert got_prop == want
     assert got_star == want
 
 
 def test_star_closes_deep_chain(spark):
-    """A diameter-4096 path: propagation would need 4096 rounds (its
-    max_iter raise is the honest backstop); star contraction must close
-    it within its default 30-round budget and label every node 0."""
+    """A diameter-4096 path: propagation would need 4096 rounds; star
+    contraction must close it within its default 30-round budget and
+    label every node 0."""
     n = 4097
     pairs = (
         spark.range(n - 1)
@@ -71,13 +66,14 @@ def test_star_closes_deep_chain(spark):
 
 
 def test_propagation_raises_on_deep_chain(spark):
-    """The diameter-bound algorithm must refuse (not silently mislabel)
-    when a component is wider than its iteration budget."""
+    """CC must refuse (not silently mislabel) when a component needs
+    more rounds than its budget: star contraction takes 9 rounds to close
+    (and confirm) a 200-node path, so 4 cannot."""
     n = 200
     pairs = spark.range(n - 1).selectExpr("id AS id_a", "id + 1 AS id_b")
     nodes = spark.range(n).withColumnRenamed("id", "doc_id")
     with pytest.raises(RuntimeError, match="did not converge"):
-        connected_components(pairs, nodes, max_iter=10)
+        connected_components_star(pairs, nodes, max_iter=4)
 
 
 def test_observed_fingerprint_matches_direct_agg(spark):

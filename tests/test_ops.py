@@ -186,33 +186,6 @@ def test_embedding_neardup_guard_refuses_big_input(spark):
     assert embedding_neardup_pairs(emb, threshold=0.99).count() >= 0
 
 
-def test_minhash_ml_variant_cross_check(spark):
-    """The Spark-ML ``MinHashLSH`` variant was dropped from the query
-    registry in round 3 (redundant with the oracle-checked native variant);
-    this cross-check keeps the ML formulation working: it must run, emit the
-    contract schema, and agree with the exact n-gram Jaccard join at the
-    same threshold (approxSimilarityJoin computes the exact distance on
-    its candidates, so only LSH candidate misses can diverge)."""
-    from vector_lake_spark.operators.dedup import (
-        minhash_neardup_pairs,
-        ngram_jaccard_pairs,
-    )
-
-    docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
-    ml = minhash_neardup_pairs(docs, threshold=0.4)
-    assert set(ml.columns) >= {"id_a", "id_b"}
-    ml_pairs = {(r["id_a"], r["id_b"]) for r in ml.collect()}
-    exact = {
-        (r["id_a"], r["id_b"])
-        for r in ngram_jaccard_pairs(docs, n=3, threshold=0.4).collect()
-    }
-    assert exact, "no near-dup pairs in testdata — test is vacuous"
-    missed = exact - ml_pairs
-    assert len(missed) <= max(1, len(exact) // 10), (
-        f"ML variant missed {len(missed)}/{len(exact)} exact pairs"
-    )
-
-
 def test_asof_join_semantics(spark):
     """Hand-built fixture: strict inequality, per-key isolation, no-match
     rows, and same-(key, ts) right-side tie-breaking."""
@@ -254,7 +227,7 @@ def test_connected_components_transitive_chain(spark):
     # singletons label themselves
     from pyspark.sql import functions as F
 
-    from vector_lake_spark.operators.dedup import connected_components
+    from vector_lake_spark.operators.dedup import connected_components_star
 
     pairs = spark.createDataFrame(
         [(1, 2), (2, 3), (7, 9)], "id_a long, id_b long"
@@ -262,7 +235,7 @@ def test_connected_components_transitive_chain(spark):
     nodes = spark.range(1, 11).select(F.col("id").alias("doc_id"))
     out = {
         r["doc_id"]: r["cluster_id"]
-        for r in connected_components(pairs, nodes).collect()
+        for r in connected_components_star(pairs, nodes).collect()
     }
     assert out[1] == out[2] == out[3] == 1
     assert out[7] == out[9] == 7
@@ -389,16 +362,16 @@ def test_ngram_cap_neutralizes_universal_shingle(spark):
 def test_connected_components_raises_on_nonconvergence(spark):
     from pyspark.sql import functions as F
 
-    from vector_lake_spark.operators.dedup import connected_components
+    from vector_lake_spark.operators.dedup import connected_components_star
 
-    # a 12-node chain has diameter 11 > max_iter=3 → must raise, not
-    # silently return a split cluster
+    # star contraction needs 5 rounds to close (and confirm) a 12-node
+    # chain, so max_iter=3 must raise, not silently return a split cluster
     pairs = spark.createDataFrame(
         [(i, i + 1) for i in range(11)], "id_a long, id_b long"
     )
     nodes = spark.range(0, 12).select(F.col("id").alias("doc_id"))
     with pytest.raises(RuntimeError, match="did not converge"):
-        connected_components(pairs, nodes, max_iter=3)
+        connected_components_star(pairs, nodes, max_iter=3)
 
 
 def test_stream_stream_interval_join_matches_batch(spark, tmp_path):
@@ -541,7 +514,7 @@ def test_last_driver_rounds_counts_only_passing_rows(tmp_path):
     """
     import json
 
-    from vector_lake_spark.queries import _last_driver_rounds
+    from __spark_entry__ import _last_driver_rounds
 
     (tmp_path / "CORRECTNESS_r01.json").write_text(json.dumps({
         "good_old": {"hash_match": True, "rows_match": True, "err": None},
@@ -562,6 +535,22 @@ def test_last_driver_rounds_counts_only_passing_rows(tmp_path):
     assert "broken" not in rounds  # nothing matched -> sorts first
     assert "errored" not in rounds  # err set -> failure, sorts first
     assert "not_a_row" not in rounds
+
+
+def test_queries_are_stalest_first_in_table_order():
+    """``queries()`` is the driver's sampling order: ascending by newest
+    passing driver round (never-checked first), ties kept in
+    ``REGISTRY`` order, over exactly the names ``oracle_sql()`` has."""
+    import __spark_entry__ as E
+    from vector_lake_spark import queries as Q
+
+    names = list(E.queries())
+    rounds = E._last_driver_rounds()
+    table = list(Q.REGISTRY)
+    keys = [(rounds.get(n, 0), table.index(n)) for n in names]
+    assert keys == sorted(keys)
+    assert len(names) == len(table) == len(set(names))
+    assert set(names) == set(E.oracle_sql())
 
 
 def test_event_loading_mutates_no_session_conf(spark):

@@ -1426,3 +1426,25 @@ def test_map_in_pandas_has_one_choke_point():
         ("rowmap.py", "map_rows"),
         ("store.py", "query_batch"),
     ]
+
+
+def test_engine_reads_no_correctness_records():
+    """The driver's sampling order lives in ``__spark_entry__.queries()``:
+    no module under ``vector_lake_spark/`` names the driver's
+    ``CORRECTNESS_`` record files, in code, strings or docstrings, so
+    importing the engine never globs or parses them."""
+    import ast
+    import pathlib
+
+    root = pathlib.Path(Q.__file__).parent
+    hits = []
+    for p in sorted(root.rglob("*.py")):
+        for node in ast.walk(ast.parse(p.read_text())):
+            text = (
+                node.value if isinstance(node, ast.Constant) else
+                node.id if isinstance(node, ast.Name) else
+                node.attr if isinstance(node, ast.Attribute) else None
+            )
+            if isinstance(text, str) and "CORRECTNESS_" in text:
+                hits.append((p.relative_to(root).as_posix(), node.lineno))
+    assert hits == []

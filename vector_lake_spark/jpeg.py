@@ -561,6 +561,30 @@ def _huff_lut16_lists(bits, vals):
     return hit
 
 
+def _unstuff(arr: np.ndarray, start: int):
+    """Entropy bytes of ``arr`` from ``start`` up to the next marker, with
+    the 0xFF00 stuffing removed. The 0xFF search runs in doubling chunks
+    and stops at the marker, so a scan costs O(its own bytes), not
+    O(rest of file). Returns (data, drops, end, marker): ``drops`` are the
+    offsets of the removed 0x00 bytes, ``end`` the offset of the marker's
+    0xFF and ``marker`` its second byte (0x100 for a 0xFF with no byte
+    after it; None, with ``end`` = len(arr), if no marker follows)."""
+    drops: list[int] = []
+    end, marker = arr.size, None
+    lo, step = start, 1024
+    while lo < arr.size and marker is None:
+        hi = min(lo + step, arr.size)
+        for i in (np.flatnonzero(arr[lo:hi] == 0xFF) + lo).tolist():
+            nxt = int(arr[i + 1]) if i + 1 < arr.size else 0x100
+            if nxt:
+                end, marker = i, nxt
+                break
+            drops.append(i + 1)
+        lo, step = hi, step * 2
+    data = np.delete(arr[start:end], np.asarray(drops, np.intp) - start)
+    return data, drops, end, marker
+
+
 class _ScanReader:
     """Window-cursor reader over ONE scan's entropy data (r13, guide
     §4.2 — VERDICT r12 #3): the stream is unstuffed once and split at
@@ -576,63 +600,31 @@ class _ScanReader:
     did."""
 
     __slots__ = (
-        "payload", "segs", "si", "data", "orig", "nbytes", "nbits",
+        "payload", "segs", "si", "data", "after", "nbytes", "nbits",
         "end_marker", "seg_start", "p",
     )
 
     def __init__(self, payload: bytes, pos: int):
         self.payload = payload
         arr = np.frombuffer(payload, np.uint8)
+        pad = b"\xff" * 68  # covers window probes + boundary-spanning reads
         segs = []
-        cur = pos
-        drops: list[int] = []
-        terminated = False
-        # search for 0xFF in doubling chunks, stopping at the scan's
-        # terminating marker: one whole-tail search per scan would cost
-        # O(scans x file size) on a progressive file
-        lo, step = pos, 4096
-        while not terminated and lo < arr.size:
-            hi = min(lo + step, arr.size)
-            step *= 2
-            for i in (np.flatnonzero(arr[lo:hi] == 0xFF) + lo).tolist():
-                if i < cur:
-                    continue
-                nxt = int(arr[i + 1]) if i + 1 < arr.size else None
-                if nxt == 0x00:
-                    drops.append(i + 1)
-                    continue
-                segs.append(self._seg(
-                    arr, cur, i, drops, 0x100 if nxt is None else nxt
-                ))
-                drops = []
-                if nxt is not None and 0xD0 <= nxt <= 0xD7:
-                    cur = i + 2
-                    continue
-                terminated = True
+        while True:
+            data, drops, end, marker = _unstuff(arr, pos)
+            # kept index of the byte after each dropped 0x00: ``pos``
+            # maps a cursor back through these few offsets
+            after = np.asarray(drops, np.int64) - pos - np.arange(len(drops))
+            segs.append((data.tobytes() + pad, after, int(data.size),
+                         int(data.size) * 8, marker, pos))
+            if marker is None or not 0xD0 <= marker <= 0xD7:
                 break
-            lo = hi
-        if not terminated:
-            # ran off the payload with no marker: the old reader's fill
-            # IndexError, surfaced as a loud ValueError
-            segs.append(self._seg(arr, cur, arr.size, drops, None))
+            pos = end + 2
         self.segs = segs
         self.si = 0
         self._load(0)
 
-    @staticmethod
-    def _seg(arr, start, end, drops, marker):
-        keep = np.ones(end - start, dtype=bool)
-        for d in drops:
-            if start <= d < end:
-                keep[d - start] = False
-        data = arr[start:end][keep]
-        orig = (np.flatnonzero(keep) + start).tolist()
-        pad = b"\xff" * 68  # covers window probes + boundary-spanning reads
-        return (data.tobytes() + pad, orig, int(data.size),
-                int(data.size) * 8, marker, start)
-
     def _load(self, si):
-        (self.data, self.orig, self.nbytes, self.nbits,
+        (self.data, self.after, self.nbytes, self.nbits,
          self.end_marker, self.seg_start) = self.segs[si]
         self.p = 0
 
@@ -656,7 +648,8 @@ class _ScanReader:
         j = (p - 1) >> 3
         if j >= self.nbytes:
             j = self.nbytes - 1  # EOI 1-feeding never advanced the old pos
-        return self.orig[j] + (2 if self.data[j] == 0xFF else 1)
+        orig = self.seg_start + j + int(np.searchsorted(self.after, j, "right"))
+        return orig + (2 if self.data[j] == 0xFF else 1)
 
     def read_bits(self, n: int) -> int:
         p = self.p
@@ -871,8 +864,9 @@ def decode_jpeg_pixels(payload: bytes) -> np.ndarray:
     # entropy-decode into zigzag-order coefficient arrays; the IDCT runs
     # ONCE over all blocks at the end, shared with the progressive path
     # (batch stacked-matmul; on entropy-dense content the Huffman loop
-    # dominates either way — scripts/codec_stress.py — but the shared
-    # tail removes the duplicated upsample/color code)
+    # dominates either way — measured in r07 with a since-removed
+    # script — but the shared tail removes the duplicated upsample/color
+    # code)
     coefs = [
         np.zeros((mcus_y * vi, mcus_x * hi, 64), dtype=np.int32)
         for _, _, hi, vi in comps
@@ -1638,29 +1632,8 @@ def _unstuffed_entropy(payload: bytes, pos: int):
     unexpected in-stream marker, raised only if decode actually needs
     bits at/past it, and a TRUNCATED trailing 0xFF (no byte follows)
     counts as a bad marker rather than a clean end (r12 ADVICE #3)."""
-    arr = np.frombuffer(payload, np.uint8)[pos:]
-    ff = np.flatnonzero(arr == 0xFF)
-    drop = []
-    end = arr.size
-    bad = None
-    for i in ff.tolist():
-        if i >= end:
-            break
-        nxt = int(arr[i + 1]) if i + 1 < arr.size else None
-        if nxt == 0x00:
-            drop.append(i + 1)
-        elif nxt == 0xD9:
-            end = i
-            break
-        else:
-            end = i
-            bad = 0x100 if nxt is None else nxt  # 0x100 = truncated FF
-            break
-    keep = np.ones(end, dtype=bool)
-    for i in drop:
-        if i < end:
-            keep[i] = False
-    data = arr[:end][keep]
+    data, _, _, marker = _unstuff(np.frombuffer(payload, np.uint8), pos)
+    bad = None if marker in (None, 0xD9) else marker  # RSTn ends it too
     return data, int(data.size) * 8, bad
 
 

@@ -12,7 +12,7 @@ LLM-pipeline operators, each designed scale-first:
 - SimHash:    60-bit sign-aggregated token-hash fingerprint; near-dup =
               small Hamming distance. Fingerprints are 8 bytes/doc → the
               pair-join input is tiny regardless of corpus size.
-- MinHash+LSH: Spark ML MinHashLSH banding (approxSimilarityJoin) — the
+- MinHash+LSH: native-expression signatures + band equi-joins — the
               sub-quadratic scale path for near-dup at 100 TB.
 - embedding near-dup: exact cosine self-join above a threshold (baseline);
               LSH shard-bucketed variant is the scale path (operators/ann).
@@ -316,41 +316,6 @@ def _minhash_params(num_hashes: int, seed: int = 7):
     ]
 
 
-def minhash_signature(
-    text_col,
-    num_hashes: int = 16,
-    n: int = 3,
-):
-    """MinHash signature as a pure column expression: for each of
-    ``num_hashes`` seeded affine permutations, the minimum of
-    ``(a·(h mod 2³⁰) + c) mod (2⁶¹−1)`` over the document's distinct
-    n-gram shingle hashes. No ML pipeline, no fit step, deterministic —
-    and expressible in the DuckDB oracle with identical arithmetic.
-    Returns NULL for docs with no shingles."""
-    hashes = F.transform(shingles(text_col, n), lambda g: token_hash60(g))
-    params = _minhash_params(num_hashes)
-
-    def perms(h):
-        return F.array(
-            *[
-                (F.lit(a) * (h % MINHASH_M) + F.lit(c)) % F.lit(MINHASH_P)
-                for (a, c) in params
-            ]
-        )
-
-    # One traversal of the shingle list updating all positions at once —
-    # num_hashes separate array_min(transform(...)) projections would each
-    # re-inline (and re-compute) the whole shingle pipeline after
-    # projection collapse.
-    init = F.array(*[F.lit(MINHASH_P).cast("long")] * num_hashes)
-    sig = F.aggregate(
-        hashes,
-        init,
-        lambda acc, h: F.zip_with(acc, perms(h), lambda x, y: F.least(x, y)),
-    )
-    return F.when(F.size(hashes) > 0, sig).otherwise(F.lit(None))
-
-
 def minhash_native_pairs(
     df: DataFrame,
     num_hashes: int = 16,
@@ -371,10 +336,11 @@ def minhash_native_pairs(
     n_bands = num_hashes // band_size
     # Relational signature computation: explode shingle hashes, then one
     # plain min-aggregate per signature position. A single nested
-    # higher-order expression (minhash_signature) computes the same values
-    # but its expression tree is large enough that Catalyst planning +
-    # codegen dominate (~13s regardless of data size); the explode/agg
-    # form plans in milliseconds and shuffles only (id, hash) pairs.
+    # higher-order expression (aggregate/zip_with over the shingle list)
+    # computes the same values but its expression tree is large enough
+    # that Catalyst planning + codegen dominate (~13s regardless of data
+    # size); the explode/agg form plans in milliseconds and shuffles only
+    # (id, hash) pairs.
     params = _minhash_params(num_hashes)
     if repartition_input:
         df = df.select(id_col, text_col).repartition(repartition_input)
@@ -451,130 +417,6 @@ def minhash_native_pairs(
     )
 
 
-def minhash_neardup_pairs(
-    df: DataFrame,
-    threshold: float = 0.5,
-    num_hashes: int = 16,
-    n: int = 3,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    parallelism: int | None = None,
-):
-    """MinHash+LSH approximate Jaccard similarity join (Spark ML banding) —
-    the sub-quadratic scale path. Deterministic given the seed. Returns
-    (id_a, id_b, approx_jaccard).
-
-    Featurization is ``HashingTF`` (a stateless transformer: shingle →
-    bucket via hashing), not ``CountVectorizer`` — the latter's ``fit``
-    materializes the full distinct-shingle vocabulary on the driver, a
-    guaranteed OOM at 100 TB. Hash-bucket collisions (2²⁰ buckets) only
-    perturb the Jaccard estimate, which is already approximate."""
-    from pyspark.ml.feature import HashingTF, MinHashLSH
-
-    sh = (
-        df.select(
-            F.col(id_col).alias("id"), shingles(F.col(text_col), n).alias("grams")
-        )
-        .filter(F.size("grams") > 0)
-        # width defaults to the cluster's core count — a fixed literal
-        # would cap a 1000-core cluster (r03 verdict #4)
-        .repartition(parallelism or df.sparkSession.sparkContext.defaultParallelism)
-    )
-    tf = HashingTF(
-        inputCol="grams", outputCol="features", binary=True, numFeatures=1 << 20
-    )
-    feats = tf.transform(sh).select("id", "features")
-    mh = MinHashLSH(
-        inputCol="features", outputCol="hashes", numHashTables=num_hashes, seed=42
-    )
-    mh_model = mh.fit(feats)
-    pairs = mh_model.approxSimilarityJoin(
-        feats, feats, 1.0 - threshold, distCol="jaccard_dist"
-    )
-    return (
-        pairs.select(
-            F.col("datasetA.id").alias("id_a"),
-            F.col("datasetB.id").alias("id_b"),
-            F.round(1.0 - F.col("jaccard_dist"), 6).alias("approx_jaccard"),
-        )
-        .filter(F.col("id_a") < F.col("id_b"))
-    )
-
-
-def connected_components(
-    pairs: DataFrame,
-    nodes: DataFrame,
-    id_col: str = "doc_id",
-    max_iter: int = 50,
-) -> DataFrame:
-    """Duplicate-cluster assignment: connected components over a near-dup
-    pair list via min-label propagation. Returns (id_col, cluster_id)
-    for EVERY node — singletons label themselves.
-
-    The training-pipeline use: near-dup *pairs* (Jaccard/SimHash/MinHash)
-    must become disjoint *clusters* before keep-one-per-cluster dedup,
-    otherwise A~B, B~C keeps both A and C.
-
-    Scale shape: each iteration is one join + one min-aggregate, both
-    shuffling (id, label) pairs — 16 bytes/row regardless of document
-    size. Iteration count is the cluster diameter (near-dup clusters are
-    shallow; capped at ``max_iter``), with a driver-side convergence
-    check per round (a count, not a collect). Lineage is truncated per
-    iteration with ``localCheckpoint`` — without it the plan doubles per
-    round and Catalyst planning dominates (SCALE.md: plan size is a
-    cost)."""
-    edges = (
-        pairs.select(F.col("id_a").alias("a"), F.col("id_b").alias("b"))
-        .union(pairs.select(F.col("id_b").alias("a"), F.col("id_a").alias("b")))
-        .localCheckpoint(eager=True)
-    )
-    # Iterate ONLY over nodes that appear in a pair — in a dedup corpus
-    # that's a tiny fraction of all documents; the (typically dominant)
-    # singleton mass joins back label=self at the end with zero
-    # iteration cost.
-    labels = (
-        edges.select(F.col("a").alias("id"))
-        .distinct()
-        .withColumn("cluster_id", F.col("id"))
-        .localCheckpoint(eager=True)
-    )
-    for _ in range(max_iter):
-        nbr = edges.join(
-            labels.withColumnRenamed("id", "b_id"),
-            edges.b == F.col("b_id"),
-        ).select(F.col("a").alias("id"), "cluster_id")
-        new_labels = (
-            labels.union(nbr)
-            .groupBy("id")
-            .agg(F.min("cluster_id").alias("cluster_id"))
-            .localCheckpoint(eager=True)
-        )
-        changed = (
-            new_labels.withColumnRenamed("cluster_id", "new_cid")
-            .join(labels, "id")
-            .filter(F.col("new_cid") != F.col("cluster_id"))
-            .count()
-        )
-        labels = new_labels
-        if changed == 0:
-            break
-    else:
-        # exhausting max_iter with labels still moving means a component
-        # wider than the budget — returning the partial labels would
-        # silently split one true cluster into several (and a downstream
-        # keep-one-per-cluster dedup would keep duplicates)
-        raise RuntimeError(
-            f"connected_components did not converge within {max_iter} "
-            f"iterations ({changed} labels still changing); raise max_iter"
-        )
-    singletons = nodes.select(F.col(id_col).alias("id")).join(
-        labels.select("id"), "id", "left_anti"
-    ).withColumn("cluster_id", F.col("id"))
-    return labels.union(singletons).select(
-        F.col("id").alias(id_col), "cluster_id"
-    )
-
-
 def connected_components_star(
     pairs: DataFrame,
     nodes: DataFrame,
@@ -582,24 +424,27 @@ def connected_components_star(
     max_iter: int = 30,
     stats: dict | None = None,
 ) -> DataFrame:
-    """Connected components via alternating large-star / small-star
-    (the MapReduce CC algorithm of Kiveris et al., SoCC'14) — the
-    HIGH-DIAMETER-safe alternative to ``connected_components``.
+    """Duplicate-cluster assignment: connected components over a
+    near-dup pair list via alternating large-star / small-star (the
+    MapReduce CC algorithm of Kiveris et al., SoCC'14). Returns
+    (id_col, cluster_id=component min) for EVERY node — singletons label
+    themselves. Near-dup *pairs* must become disjoint *clusters* before
+    keep-one-per-cluster dedup, otherwise A~B, B~C keeps both A and C.
 
-    Min-label propagation needs ``diameter`` rounds: right for near-dup
-    clusters (shallow, measured 2-4 rounds) and degenerate for chain-like
-    graphs (a path of 1M nodes would need 1M rounds). Star contraction
-    converges in O(log² n) rounds worst-case (O(log n) in practice —
-    measured: a diameter-4096 chain closes in 7 rounds, see SCALE.md),
-    at the price of ~3x the shuffles per round; every shuffled row is an
-    (int, int) edge regardless of document size.
+    Min-label propagation would need ``diameter`` rounds: right for
+    near-dup clusters (shallow, measured 2-4 rounds) and degenerate for
+    chain-like graphs (a path of 1M nodes would need 1M rounds). Star
+    contraction converges in O(log² n) rounds worst-case (O(log n) in
+    practice — measured: a diameter-4096 chain closes in 7 rounds, see
+    SCALE.md), at the price of ~3x the shuffles per round; every
+    shuffled row is an (int, int) edge regardless of document size.
 
     large-star: every node's bigger neighbors re-attach to the minimum
     of its closed neighborhood; small-star: the smaller neighbors (and
     the node) attach to that minimum. At the fixpoint the edge set is a
     star per component centered at the component minimum, so labels read
-    off directly — identical (id, cluster_id=component min) semantics to
-    ``connected_components``, singletons labeling themselves."""
+    off directly. Exhausting ``max_iter`` raises rather than return a
+    split cluster."""
     u, v = F.col("u"), F.col("v")
 
     def _canon(e):

@@ -1,10 +1,10 @@
 """Graph operators over similarity/near-dup edge lists.
 
-``connected_components`` (operators/dedup.py) handles cluster membership;
-this module adds fixed-iteration PageRank — a centrality score over the
-near-dup graph that surfaces "template hub" documents (one boilerplate
-page near-duplicating hundreds of others scores high and is a removal
-candidate for training corpora).
+``connected_components_star`` (operators/dedup.py) handles cluster
+membership; this module adds fixed-iteration PageRank — a centrality
+score over the near-dup graph that surfaces "template hub" documents
+(one boilerplate page near-duplicating hundreds of others scores high
+and is a removal candidate for training corpora).
 
 Scale shape per iteration: one equi-join of (edge, rank) + one sum
 aggregate — shuffles 16-byte (id, contribution) rows, text never moves.

@@ -2,16 +2,20 @@
 
 Every implemented operator from SURVEY.md §2 (and the north-star extension
 families) is exposed here as a named query: a Spark callable
-``(spark, sf_dir) -> DataFrame`` plus, where SQL-expressible, the exact
-DuckDB oracle SQL computing the same result (same formulas, same rounding,
-same deterministic tie-breaks — see ``oracles.py``).
+``(spark, sf_dir) -> DataFrame`` and the exact DuckDB oracle SQL computing
+the same result (same formulas, same rounding, same deterministic
+tie-breaks — see ``oracles.py``). Both are declared once, as one row of
+``REGISTRY`` at the bottom of this module; ``QUERIES`` and ``ORACLES`` are
+by-name views of it.
 
-``__spark_entry__.py`` re-exports this registry to the driver.
+``__spark_entry__.py`` re-exports this registry to the driver and owns the
+driver's sampling order; importing this module reads no files.
 """
 
 from __future__ import annotations
 
 import math
+from collections.abc import Callable
 from functools import reduce
 
 import numpy as np
@@ -10794,494 +10798,218 @@ SQL_MM_VIDEO_NEARDUP = _sql_mm_video_neardup()
 # Registry
 # ---------------------------------------------------------------------------
 #
-# The external driver verifies at most the first 50 registry entries per
-# round (observed: CORRECTNESS_r01/r02 are each exactly the first 50 keys in
-# dict order).  To rotate every query through that window, QUERIES is sorted
-# stalest-first: queries never driver-checked come first, then by the round
-# of their newest CORRECTNESS_r{N}.json row.  _LAST_DRIVER_ROUND must be
-# updated when a new CORRECTNESS file lands.
+# One row per query: name -> (builder, DuckDB oracle SQL), so a builder
+# without an oracle, or an oracle without a builder, cannot be written.
+# Row order is the base order only: the driver's sampling order
+# (never-checked first, then stalest-first) is computed by
+# ``__spark_entry__.queries()`` (docs/ROTATION.md).
 
-_BASE_QUERIES = {
-    "vec_topk_cosine": q_vec_topk_cosine,
-    "vec_topk_l2": q_vec_topk_l2,
-    "vec_topk_batch": q_vec_topk_batch,
-    "vec_topk_truncated": q_vec_topk_truncated,
-    "vec_topk_quantized": q_vec_topk_quantized,
-    "hybrid_topk": q_hybrid_topk,
-    "lsh_shard_assign": q_lsh_shard_assign,
-    "lsh_shard_hist": q_lsh_shard_hist,
-    "ann_lsh_topk": q_ann_lsh_topk,
-    "ann_lsh_recall": q_ann_lsh_recall,
-    "vec_pq_recall": q_vec_pq_recall,
-    "vec_ood_score": q_vec_ood_score,
-    "text_zipf_fit": q_text_zipf_fit,
-    "pipe_dedup_report": q_pipe_dedup_report,
-    "sketch_rolling_dau": q_sketch_rolling_dau,
-    "mm_gif_roundtrip": q_mm_gif_roundtrip,
-    "pipe_decontaminate": q_pipe_decontaminate,
-    "sketch_heavy_hitters": q_sketch_heavy_hitters,
-    "mm_media_probe": q_mm_media_probe,
-    "mm_container_probe": q_mm_container_probe,
-    "mm_webp_probe": q_mm_webp_probe,
-    "mm_webp_roundtrip": q_mm_webp_roundtrip,
-    "mm_wav_depths": q_mm_wav_depths,
-    "mm_webp_anim": q_mm_webp_anim,
-    "mm_flac_roundtrip": q_mm_flac_roundtrip,
-    "mm_tiff_roundtrip": q_mm_tiff_roundtrip,
-    "mm_jpeg12_roundtrip": q_mm_jpeg12_roundtrip,
-    "mm_rle8_roundtrip": q_mm_rle8_roundtrip,
-    "mm_mp3_probe": q_mm_mp3_probe,
-    "mm_ogg_probe": q_mm_ogg_probe,
-    "mm_image_neardup": q_mm_image_neardup,
-    "mm_image_neardup_wide": q_mm_image_neardup_wide,
-    "mm_image_phash": q_mm_image_phash,
-    "mm_exif_probe": q_mm_exif_probe,
-    "mm_image_orient": q_mm_image_orient,
-    "pipe_image_dedup_e2e": q_pipe_image_dedup_e2e,
-    "mm_audio_neardup": q_mm_audio_neardup,
-    "mm_audio_neardup_long": q_mm_audio_neardup_long,
-    "mm_video_neardup": q_mm_video_neardup,
-    "pipe_url_dedup": q_pipe_url_dedup,
-    "text_gopher_rules": q_text_gopher_rules,
-    "pipe_crawl_e2e": q_pipe_crawl_e2e,
-    "pipe_warc_extract": q_pipe_warc_extract,
-    "text_html_extract": q_text_html_extract,
-    "vec_neardup_pairs": q_vec_neardup_pairs,
-    "vec_neardup_lsh": q_vec_neardup_lsh,
-    "vec_centroid_by_label": q_vec_centroid_by_label,
-    "dedup_exact": q_dedup_exact,
-    "dedup_incremental": q_dedup_incremental,
-    "dedup_ngram_jaccard": q_dedup_ngram_jaccard,
-    "dedup_jaccard_deep": q_dedup_jaccard_deep,
-    "dedup_containment": q_dedup_containment,
-    "vec_dim_stats": q_vec_dim_stats,
-    "dedup_clusters": q_dedup_clusters,
-    "dedup_keep_best": q_dedup_keep_best,
-    "dedup_simhash": q_dedup_simhash,
-    "dedup_edit_distance": q_dedup_edit_distance,
-    "graph_pagerank": q_graph_pagerank,
-    "graph_knn_edges": q_graph_knn_edges,
-    "graph_knn_mutual": q_graph_knn_mutual,
-    "graph_triangles": q_graph_triangles,
-    # dedup_minhash (Spark-ML HashingTF variant) was dropped from the
-    # registry in round 3: it is rows-only (no oracle is possible for the
-    # hash-dependent banding) and validates nothing the oracle-checked
-    # native variant below doesn't.  The code stays as a cross-check test
-    # (tests/test_ops.py) so the ML formulation keeps working.
-    "dedup_minhash_native": q_dedup_minhash_native,
-    "ann_ivf_topk": q_ann_ivf_topk,
-    "ann_ivf_quantized": q_ann_ivf_quantized,
-    "text_stats_by_lang": q_text_stats_by_lang,
-    "text_quality": q_text_quality,
-    "text_langid": q_text_langid,
-    "text_token_top20": q_text_token_top20,
-    "text_boilerplate_ngrams": q_text_boilerplate_ngrams,
-    "pipe_span_dedup": q_pipe_span_dedup,
-    "text_bpe_tokens": q_text_bpe_tokens,
-    "text_fingerprint": q_text_fingerprint,
-    "text_tfidf_top20": q_text_tfidf_top20,
-    "vec_quantize_int8": q_vec_quantize_int8,
-    "pipe_clean_corpus": q_pipe_clean_corpus,
-    "pipe_split_stats": q_pipe_split_stats,
-    "pipe_pack_sequences": q_pipe_pack_sequences,
-    "pipe_contamination": q_pipe_contamination,
-    "pipe_stratified_sample": q_pipe_stratified_sample,
-    "vec_semantic_dedup": q_vec_semantic_dedup,
-    "text_redact_pii": q_text_redact_pii,
-    "text_repetition": q_text_repetition,
-    "text_chunk_windows": q_text_chunk_windows,
-    "pipe_quality_filter": q_pipe_quality_filter,
-    "pipe_curation_e2e": q_pipe_curation_e2e,
-    "text_lm_surprisal": q_text_lm_surprisal,
-    "ev_anomaly_zscore": q_ev_anomaly_zscore,
-    "pipe_domain_mix": q_pipe_domain_mix,
-    "pipe_shuffle_shards": q_pipe_shuffle_shards,
-    "text_length_histogram": q_text_length_histogram,
-    "profile_documents": q_profile_documents,
-    "q1_pricing": q_q1_pricing,
-    "q6_forecast_revenue": q_q6_forecast_revenue,
-    "q3_top_orders": q_q3_top_orders,
-    "q4_late_orders": q_q4_late_orders,
-    "q5_nation_revenue": q_q5_nation_revenue,
-    "q7_nation_volume": q_q7_nation_volume,
-    "q8_market_share": q_q8_market_share,
-    "q15_top_supplier": q_q15_top_supplier,
-    "q2_min_cost_supplier": q_q2_min_cost_supplier,
-    "q9_product_profit": q_q9_product_profit,
-    "q12_late_priority": q_q12_late_priority,
-    "q20_dominant_suppliers": q_q20_dominant_suppliers,
-    "q21_waiting_suppliers": q_q21_waiting_suppliers,
-    "q11_important_stock": q_q11_important_stock,
-    "q10_returned_items": q_q10_returned_items,
-    "q14_promo_revenue": q_q14_promo_revenue,
-    "q19_disjunctive_revenue": q_q19_disjunctive_revenue,
-    "q16_supplier_variety": q_q16_supplier_variety,
-    "q22_idle_balance": q_q22_idle_balance,
-    "q13_customer_distribution": q_q13_customer_distribution,
-    "q17_small_qty_revenue": q_q17_small_qty_revenue,
-    "q18_large_orders": q_q18_large_orders,
-    "agg_rollup": q_agg_rollup,
-    "grouping_sets": q_grouping_sets,
-    "cube_status_priority": q_cube_status_priority,
-    "above_avg_customers": q_above_avg_customers,
-    "monthly_revenue_trend": q_monthly_revenue_trend,
-    "segment_quantiles": q_segment_quantiles,
-    "brand_revenue": q_brand_revenue,
-    "distinct_customers_by_status": q_distinct_customers_by_status,
-    "ev_json_extract": q_ev_json_extract,
-    "ev_gapfill_locf": q_ev_gapfill_locf,
-    "ev_ohlc_daily": q_ev_ohlc_daily,
-    "ev_variant_extract": q_ev_variant_extract,
-    "ev_asof_join": q_ev_asof_join,
-    "ev_funnel": q_ev_funnel,
-    "ev_retention_cohorts": q_ev_retention_cohorts,
-    "ev_dau_new_returning": q_ev_dau_new_returning,
-    "ev_error_window": q_ev_error_window,
-    "token_count_salted": q_token_count_salted,
-    "win_top3_per_nation": q_win_top3_per_nation,
-    "win_running_total": q_win_running_total,
-    "win_moving_avg": q_win_moving_avg,
-    "win_range_frame": q_win_range_frame,
-    "win_distribution": q_win_distribution,
-    "vec_label_separation": q_vec_label_separation,
-    "join_semi": q_join_semi,
-    "join_anti": q_join_anti,
-    "setop_nations": q_setop_nations,
-    "setop_suppkeys_all": q_setop_suppkeys_all,
-    "pivot_status_by_priority": q_pivot_status_by_priority,
-    "ev_tumbling": q_ev_tumbling,
-    "ev_sliding": q_ev_sliding,
-    "ev_sessionize": q_ev_sessionize,
-    "ev_stream_tumbling": q_ev_stream_tumbling,
-    "ev_stream_sliding": q_ev_stream_sliding,
-    "ev_stream_session": q_ev_stream_session,
-    "ev_stream_interval_join": q_ev_stream_interval_join,
-    "dedup_stream_exact": q_dedup_stream_exact,
-    "dedup_stream_neardup": q_dedup_stream_neardup,
-    "ev_top_users": q_ev_top_users,
-    "mm_binary_stats": q_mm_binary_stats,
-    "mm_feature_extract": q_mm_feature_extract,
-    "mm_frame_sample": q_mm_frame_sample,
-    "ann_ivf_stored": q_ann_ivf_stored,
-    "ev_rollup_merge": q_ev_rollup_merge,
-    "ev_stream_rollup": q_ev_stream_rollup,
-    "sketch_distinct_users": q_sketch_distinct_users,
-    "sketch_user_overlap": q_sketch_user_overlap,
-    "sketch_value_percentiles": q_sketch_value_percentiles,
-    "ev_status_islands": q_ev_status_islands,
-    "cdc_latest_state": q_cdc_latest_state,
-    "zorder_events": q_zorder_events,
-    "vec_topk_filtered": q_vec_topk_filtered,
-    "vec_topk_pq": q_vec_topk_pq,
-    "ann_ivfpq_topk": q_ann_ivfpq_topk,
-    "cdc_scd2_intervals": q_cdc_scd2_intervals,
-    "ivm_join_agg": q_ivm_join_agg,
-    "vec_maxsim_topk": q_vec_maxsim_topk,
-    "vec_topk_hamming": q_vec_topk_hamming,
-    "vec_topk_hamming_stored": q_vec_topk_hamming_stored,
-    "vec_topk_hamming_batch": q_vec_topk_hamming_batch,
-    "vec_hamming_recall": q_vec_hamming_recall,
-    "ann_ivf_recall": q_ann_ivf_recall,
-    "dq_lineitem_report": q_dq_lineitem_report,
-    "vec_topk_rrf": q_vec_topk_rrf,
-    "pipe_token_budget": q_pipe_token_budget,
-    "pipe_temperature_mix": q_pipe_temperature_mix,
-    "ev_stream_scd2": q_ev_stream_scd2,
-    "cdc_diff_snapshots": q_cdc_diff_snapshots,
-    "pipe_weighted_sample": q_pipe_weighted_sample,
-    "ev_trend_per_user": q_ev_trend_per_user,
-    "text_entropy": q_text_entropy,
-    "ev_anomaly_mad": q_ev_anomaly_mad,
-    "ev_transition_matrix": q_ev_transition_matrix,
-    "ev_twap": q_ev_twap,
-    "drift_psi": q_drift_psi,
-}
-
-# Round of each query's newest PASSING driver CORRECTNESS row, derived from
-# the CORRECTNESS_r{N}.json files the external driver writes at the repo root
-# (absent from every file = never checked -> sorts first).  Reading the
-# files directly makes the rotation self-maintaining: when a new round's
-# file lands, the next import re-ranks automatically.
-#
-# Only rows that actually passed count as verification: hash_match true, or
-# rows_match true with no error.  A row with err set or hash_match false is
-# a FAILURE, not a verification -- counting it would rotate a broken query
-# out of the driver's window and leave it unre-checked for many rounds.
-# Failed / no-oracle rows therefore contribute nothing (round 0) and keep
-# sorting to the front until they go green.
-def _last_driver_rounds(root: str | None = None) -> dict:
-    import glob
-    import json
-    import os
-    import re
-
-    rounds: dict = {}
-    if root is None:
-        root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-    for path in sorted(glob.glob(os.path.join(root, "CORRECTNESS_r*.json"))):
-        m = re.search(r"CORRECTNESS_r(\d+)\.json$", path)
-        if not m:
-            continue
-        rnd = int(m.group(1))
-        try:
-            with open(path) as f:
-                for name, row in json.load(f).items():
-                    if not isinstance(row, dict):
-                        continue
-                    passed = row.get("err") is None and (
-                        row.get("hash_match") is True
-                        or row.get("rows_match") is True
-                    )
-                    if passed:
-                        rounds[name] = max(rounds.get(name, 0), rnd)
-        except (OSError, ValueError, AttributeError):
-            continue
-    return rounds
-
-
-_LAST_DRIVER_ROUND = _last_driver_rounds()
-
-# Stalest-first (stable within a round, preserving _BASE_QUERIES order):
-# never-checked queries land inside the driver's 50-row window first.
-#
-# _FRONTLOAD pins names to the very front of the window, AHEAD of
-# never-checked entries — used when the implementation neighborhood of an
-# already-checked entry was rewritten and the evidence must be refreshed
-# this round regardless of age. r12 pins the entries whose
-# implementation neighborhood changed this round (plus the recorded r11
-# obligation):
-#   - dedup_simhash / dedup_edit_distance / graph_pagerank /
-#     pipe_dedup_report: the SimHash near-dup family — candidates now
-#     ride binary.hamming_neardup_pairs with auto block sizing over
-#     total_bits=60 (VERDICT r11 #1; the minimal config is bit-for-bit
-#     the legacy 4×15 banding at oracle scales, but the evidence must
-#     re-attach to the new code). dedup_simhash/pipe_dedup_report are
-#     the fingerprint/funnel queries the verdict named alongside the
-#     actual pair consumers; pinned with them.
-#   - mm_audio_neardup: codec matrix widened to four containers
-#     (PCM16 / float32 / exact-regime IMA ADPCM / FLAC) over the new
-#     non-PCM routing in audiofp.decode_wav_samples (VERDICT r11 #2).
-#   - mm_image_neardup: recorded r11 obligation (docs/ROTATION.md) —
-#     its newest evidence (r10) predates the late-r11 group_cols
-#     generalization of hamming_neardup_pairs.
-# Budget check: 6 pins + 3 new entries (mm_audio_neardup_long,
-# mm_image_phash, pipe_span_dedup) + the 41 r08-dated entries = 50
-# exactly, so every r08 entry clears the window and the post-r12
-# minimum evidence age is r09.
-# r11 pinned graph_knn_edges/_mutual, graph_triangles,
-# q2_min_cost_supplier (all green r11). r10 pinned mm_wav_depths,
-# mm_container_probe, mm_ogg_probe, mm_mp3_probe, vec_neardup_lsh,
-# vec_semantic_dedup (all green r10). See docs/ROTATION.md.
-_FRONTLOAD: tuple[str, ...] = (
-    "dedup_simhash",
-    "dedup_edit_distance",
-    "graph_pagerank",
-    "pipe_dedup_report",
-    "mm_audio_neardup",
-    "mm_image_neardup",
-)
-
-QUERIES = dict(
-    sorted(
-        _BASE_QUERIES.items(),
-        key=lambda kv: (
-            -1 if kv[0] in _FRONTLOAD else _LAST_DRIVER_ROUND.get(kv[0], 0)
-        ),
-    )
-)
-
-ORACLES = {
-    "vec_topk_cosine": SQL_VEC_TOPK_COSINE,
-    "vec_topk_l2": SQL_VEC_TOPK_L2,
-    "vec_topk_batch": SQL_VEC_TOPK_BATCH,
-    "vec_topk_truncated": SQL_VEC_TOPK_TRUNCATED,
-    "vec_topk_quantized": SQL_VEC_TOPK_QUANTIZED,
-    "hybrid_topk": SQL_HYBRID_TOPK,
-    "lsh_shard_assign": SQL_LSH_SHARD_ASSIGN,
-    "lsh_shard_hist": SQL_LSH_SHARD_HIST,
-    "ann_lsh_topk": SQL_ANN_LSH_TOPK,
-    "ann_lsh_recall": SQL_ANN_LSH_RECALL,
-    "vec_pq_recall": SQL_VEC_PQ_RECALL,
-    "vec_ood_score": SQL_VEC_OOD_SCORE,
-    "text_zipf_fit": SQL_TEXT_ZIPF_FIT,
-    "pipe_dedup_report": SQL_PIPE_DEDUP_REPORT,
-    "sketch_rolling_dau": SQL_SKETCH_ROLLING_DAU,
-    "mm_gif_roundtrip": SQL_MM_GIF_ROUNDTRIP,
-    "pipe_decontaminate": SQL_PIPE_DECONTAMINATE,
-    "sketch_heavy_hitters": SQL_SKETCH_HEAVY_HITTERS,
-    "mm_media_probe": SQL_MM_MEDIA_PROBE,
-    "mm_container_probe": SQL_MM_CONTAINER_PROBE,
-    "mm_webp_probe": SQL_MM_WEBP_PROBE,
-    "mm_webp_roundtrip": SQL_MM_WEBP_ROUNDTRIP,
-    "mm_wav_depths": SQL_MM_WAV_DEPTHS,
-    "mm_webp_anim": SQL_MM_WEBP_ANIM,
-    "mm_flac_roundtrip": SQL_MM_FLAC_ROUNDTRIP,
-    "mm_tiff_roundtrip": SQL_MM_TIFF_ROUNDTRIP,
-    "mm_jpeg12_roundtrip": SQL_MM_JPEG12_ROUNDTRIP,
-    "mm_rle8_roundtrip": SQL_MM_RLE8_ROUNDTRIP,
-    "mm_mp3_probe": SQL_MM_MP3_PROBE,
-    "mm_ogg_probe": SQL_MM_OGG_PROBE,
-    "mm_image_neardup": SQL_MM_IMAGE_NEARDUP,
-    "mm_image_neardup_wide": SQL_MM_IMAGE_NEARDUP_WIDE,
-    "mm_image_phash": SQL_MM_IMAGE_PHASH,
-    "pipe_image_dedup_e2e": SQL_PIPE_IMAGE_DEDUP_E2E,
-    "mm_audio_neardup": SQL_MM_AUDIO_NEARDUP,
-    "mm_audio_neardup_long": SQL_MM_AUDIO_NEARDUP_LONG,
-    "mm_video_neardup": SQL_MM_VIDEO_NEARDUP,
-    "mm_exif_probe": SQL_MM_EXIF_PROBE,
-    "mm_image_orient": SQL_MM_IMAGE_ORIENT,
-    "pipe_url_dedup": SQL_PIPE_URL_DEDUP,
-    "text_gopher_rules": SQL_TEXT_GOPHER_RULES,
-    "pipe_crawl_e2e": SQL_PIPE_CRAWL_E2E,
-    "pipe_warc_extract": SQL_PIPE_WARC_EXTRACT,
-    "text_html_extract": SQL_TEXT_HTML_EXTRACT,
-    "vec_neardup_pairs": SQL_VEC_NEARDUP_PAIRS,
-    "vec_neardup_lsh": SQL_VEC_NEARDUP_LSH,
-    "vec_centroid_by_label": SQL_VEC_CENTROID_BY_LABEL,
-    "dedup_exact": SQL_DEDUP_EXACT,
-    "dedup_incremental": SQL_DEDUP_INCREMENTAL,
-    "dedup_ngram_jaccard": SQL_DEDUP_NGRAM_JACCARD,
-    "dedup_jaccard_deep": SQL_DEDUP_JACCARD_DEEP,
-    "dedup_containment": SQL_DEDUP_CONTAINMENT,
-    "vec_dim_stats": SQL_VEC_DIM_STATS,
-    "dedup_clusters": SQL_DEDUP_CLUSTERS,
-    "dedup_keep_best": SQL_DEDUP_KEEP_BEST,
-    "dedup_simhash": SQL_DEDUP_SIMHASH,
-    "dedup_edit_distance": SQL_DEDUP_EDIT_DISTANCE,
-    "graph_pagerank": SQL_GRAPH_PAGERANK,
-    "graph_knn_edges": SQL_GRAPH_KNN_EDGES,
-    "graph_knn_mutual": SQL_GRAPH_KNN_MUTUAL,
-    "graph_triangles": SQL_GRAPH_TRIANGLES,
-    "dedup_minhash_native": SQL_DEDUP_MINHASH_NATIVE,
-    # dedup_minhash (ML variant): rows-only by design
-    "ann_ivf_topk": SQL_ANN_IVF,
-    "ann_ivf_quantized": SQL_ANN_IVF_QUANTIZED,
-    "text_stats_by_lang": SQL_TEXT_STATS_BY_LANG,
-    "text_quality": SQL_TEXT_QUALITY,
-    "text_langid": SQL_TEXT_LANGID,
-    "text_token_top20": SQL_TEXT_TOKEN_TOP20,
-    "text_boilerplate_ngrams": SQL_TEXT_BOILERPLATE_NGRAMS,
-    "pipe_span_dedup": SQL_PIPE_SPAN_DEDUP,
-    "text_bpe_tokens": SQL_TEXT_BPE_TOKENS,
-    "text_fingerprint": SQL_TEXT_FINGERPRINT,
-    "text_tfidf_top20": SQL_TEXT_TFIDF_TOP20,
-    "vec_quantize_int8": SQL_VEC_QUANTIZE_INT8,
-    "pipe_clean_corpus": SQL_PIPE_CLEAN_CORPUS,
-    "pipe_split_stats": SQL_PIPE_SPLIT_STATS,
-    "pipe_pack_sequences": SQL_PIPE_PACK_SEQUENCES,
-    "pipe_contamination": SQL_PIPE_CONTAMINATION,
-    "pipe_stratified_sample": SQL_PIPE_STRATIFIED_SAMPLE,
-    "vec_semantic_dedup": SQL_VEC_SEMANTIC_DEDUP,
-    "text_redact_pii": SQL_TEXT_REDACT_PII,
-    "text_repetition": SQL_TEXT_REPETITION,
-    "text_chunk_windows": SQL_TEXT_CHUNK_WINDOWS,
-    "pipe_quality_filter": SQL_PIPE_QUALITY_FILTER,
-    "pipe_curation_e2e": SQL_PIPE_CURATION_E2E,
-    "text_lm_surprisal": SQL_TEXT_LM_SURPRISAL,
-    "ev_anomaly_zscore": SQL_EV_ANOMALY_ZSCORE,
-    "pipe_domain_mix": SQL_PIPE_DOMAIN_MIX,
-    "pipe_shuffle_shards": SQL_PIPE_SHUFFLE_SHARDS,
-    "text_length_histogram": SQL_TEXT_LENGTH_HISTOGRAM,
-    "profile_documents": SQL_PROFILE_DOCUMENTS,
-    "q1_pricing": SQL_Q1_PRICING,
-    "q6_forecast_revenue": SQL_Q6_FORECAST_REVENUE,
-    "q3_top_orders": SQL_Q3_TOP_ORDERS,
-    "q4_late_orders": SQL_Q4_LATE_ORDERS,
-    "q5_nation_revenue": SQL_Q5_NATION_REVENUE,
-    "q7_nation_volume": SQL_Q7_NATION_VOLUME,
-    "q8_market_share": SQL_Q8_MARKET_SHARE,
-    "q15_top_supplier": SQL_Q15_TOP_SUPPLIER,
-    "q2_min_cost_supplier": SQL_Q2_MIN_COST_SUPPLIER,
-    "q9_product_profit": SQL_Q9_PRODUCT_PROFIT,
-    "q12_late_priority": SQL_Q12_LATE_PRIORITY,
-    "q20_dominant_suppliers": SQL_Q20_DOMINANT_SUPPLIERS,
-    "q21_waiting_suppliers": SQL_Q21_WAITING_SUPPLIERS,
-    "q11_important_stock": SQL_Q11_IMPORTANT_STOCK,
-    "q10_returned_items": SQL_Q10_RETURNED_ITEMS,
-    "q14_promo_revenue": SQL_Q14_PROMO_REVENUE,
-    "q19_disjunctive_revenue": SQL_Q19_DISJUNCTIVE_REVENUE,
-    "q16_supplier_variety": SQL_Q16_SUPPLIER_VARIETY,
-    "q22_idle_balance": SQL_Q22_IDLE_BALANCE,
-    "q13_customer_distribution": SQL_Q13_CUSTOMER_DISTRIBUTION,
-    "q17_small_qty_revenue": SQL_Q17_SMALL_QTY_REVENUE,
-    "q18_large_orders": SQL_Q18_LARGE_ORDERS,
-    "agg_rollup": SQL_AGG_ROLLUP,
-    "grouping_sets": SQL_GROUPING_SETS,
-    "cube_status_priority": SQL_CUBE_STATUS_PRIORITY,
-    "above_avg_customers": SQL_ABOVE_AVG_CUSTOMERS,
-    "monthly_revenue_trend": SQL_MONTHLY_REVENUE_TREND,
-    "segment_quantiles": SQL_SEGMENT_QUANTILES,
-    "brand_revenue": SQL_BRAND_REVENUE,
-    "distinct_customers_by_status": SQL_DISTINCT_CUSTOMERS_BY_STATUS,
-    "ev_json_extract": SQL_EV_JSON_EXTRACT,
-    "ev_gapfill_locf": SQL_EV_GAPFILL_LOCF,
-    "ev_ohlc_daily": SQL_EV_OHLC_DAILY,
-    "ev_variant_extract": SQL_EV_VARIANT_EXTRACT,
-    "ev_asof_join": SQL_EV_ASOF_JOIN,
-    "ev_funnel": SQL_EV_FUNNEL,
-    "ev_retention_cohorts": SQL_EV_RETENTION_COHORTS,
-    "ev_dau_new_returning": SQL_EV_DAU_NEW_RETURNING,
-    "ev_error_window": SQL_EV_ERROR_WINDOW,
-    "token_count_salted": SQL_TOKEN_COUNT_SALTED,
-    "win_top3_per_nation": SQL_WIN_TOP3_PER_NATION,
-    "win_running_total": SQL_WIN_RUNNING_TOTAL,
-    "win_moving_avg": SQL_WIN_MOVING_AVG,
-    "win_range_frame": SQL_WIN_RANGE_FRAME,
-    "win_distribution": SQL_WIN_DISTRIBUTION,
-    "vec_label_separation": SQL_VEC_LABEL_SEPARATION,
-    "join_semi": SQL_JOIN_SEMI,
-    "join_anti": SQL_JOIN_ANTI,
-    "setop_nations": SQL_SETOP_NATIONS,
-    "setop_suppkeys_all": SQL_SETOP_SUPPKEYS_ALL,
-    "pivot_status_by_priority": SQL_PIVOT_STATUS_BY_PRIORITY,
-    "ev_tumbling": SQL_EV_TUMBLING,
-    "ev_sliding": SQL_EV_SLIDING,
-    "ev_sessionize": SQL_EV_SESSIONIZE,
-    "ev_stream_tumbling": SQL_EV_STREAM_TUMBLING,
-    "ev_stream_sliding": SQL_EV_SLIDING,
-    "ev_stream_session": SQL_EV_STREAM_SESSION,
-    "ev_stream_interval_join": SQL_EV_STREAM_INTERVAL_JOIN,
-    "dedup_stream_exact": SQL_DEDUP_STREAM_EXACT,
+REGISTRY: dict[str, tuple[Callable[[SparkSession, str], DataFrame], str]] = {
+    "vec_topk_cosine": (q_vec_topk_cosine, SQL_VEC_TOPK_COSINE),
+    "vec_topk_l2": (q_vec_topk_l2, SQL_VEC_TOPK_L2),
+    "vec_topk_batch": (q_vec_topk_batch, SQL_VEC_TOPK_BATCH),
+    "vec_topk_truncated": (q_vec_topk_truncated, SQL_VEC_TOPK_TRUNCATED),
+    "vec_topk_quantized": (q_vec_topk_quantized, SQL_VEC_TOPK_QUANTIZED),
+    "hybrid_topk": (q_hybrid_topk, SQL_HYBRID_TOPK),
+    "lsh_shard_assign": (q_lsh_shard_assign, SQL_LSH_SHARD_ASSIGN),
+    "lsh_shard_hist": (q_lsh_shard_hist, SQL_LSH_SHARD_HIST),
+    "ann_lsh_topk": (q_ann_lsh_topk, SQL_ANN_LSH_TOPK),
+    "ann_lsh_recall": (q_ann_lsh_recall, SQL_ANN_LSH_RECALL),
+    "vec_pq_recall": (q_vec_pq_recall, SQL_VEC_PQ_RECALL),
+    "vec_ood_score": (q_vec_ood_score, SQL_VEC_OOD_SCORE),
+    "text_zipf_fit": (q_text_zipf_fit, SQL_TEXT_ZIPF_FIT),
+    "pipe_dedup_report": (q_pipe_dedup_report, SQL_PIPE_DEDUP_REPORT),
+    "sketch_rolling_dau": (q_sketch_rolling_dau, SQL_SKETCH_ROLLING_DAU),
+    "mm_gif_roundtrip": (q_mm_gif_roundtrip, SQL_MM_GIF_ROUNDTRIP),
+    "pipe_decontaminate": (q_pipe_decontaminate, SQL_PIPE_DECONTAMINATE),
+    "sketch_heavy_hitters": (q_sketch_heavy_hitters, SQL_SKETCH_HEAVY_HITTERS),
+    "mm_media_probe": (q_mm_media_probe, SQL_MM_MEDIA_PROBE),
+    "mm_container_probe": (q_mm_container_probe, SQL_MM_CONTAINER_PROBE),
+    "mm_webp_probe": (q_mm_webp_probe, SQL_MM_WEBP_PROBE),
+    "mm_webp_roundtrip": (q_mm_webp_roundtrip, SQL_MM_WEBP_ROUNDTRIP),
+    "mm_wav_depths": (q_mm_wav_depths, SQL_MM_WAV_DEPTHS),
+    "mm_webp_anim": (q_mm_webp_anim, SQL_MM_WEBP_ANIM),
+    "mm_flac_roundtrip": (q_mm_flac_roundtrip, SQL_MM_FLAC_ROUNDTRIP),
+    "mm_tiff_roundtrip": (q_mm_tiff_roundtrip, SQL_MM_TIFF_ROUNDTRIP),
+    "mm_jpeg12_roundtrip": (q_mm_jpeg12_roundtrip, SQL_MM_JPEG12_ROUNDTRIP),
+    "mm_rle8_roundtrip": (q_mm_rle8_roundtrip, SQL_MM_RLE8_ROUNDTRIP),
+    "mm_mp3_probe": (q_mm_mp3_probe, SQL_MM_MP3_PROBE),
+    "mm_ogg_probe": (q_mm_ogg_probe, SQL_MM_OGG_PROBE),
+    "mm_image_neardup": (q_mm_image_neardup, SQL_MM_IMAGE_NEARDUP),
+    "mm_image_neardup_wide": (q_mm_image_neardup_wide, SQL_MM_IMAGE_NEARDUP_WIDE),
+    "mm_image_phash": (q_mm_image_phash, SQL_MM_IMAGE_PHASH),
+    "mm_exif_probe": (q_mm_exif_probe, SQL_MM_EXIF_PROBE),
+    "mm_image_orient": (q_mm_image_orient, SQL_MM_IMAGE_ORIENT),
+    "pipe_image_dedup_e2e": (q_pipe_image_dedup_e2e, SQL_PIPE_IMAGE_DEDUP_E2E),
+    "mm_audio_neardup": (q_mm_audio_neardup, SQL_MM_AUDIO_NEARDUP),
+    "mm_audio_neardup_long": (q_mm_audio_neardup_long, SQL_MM_AUDIO_NEARDUP_LONG),
+    "mm_video_neardup": (q_mm_video_neardup, SQL_MM_VIDEO_NEARDUP),
+    "pipe_url_dedup": (q_pipe_url_dedup, SQL_PIPE_URL_DEDUP),
+    "text_gopher_rules": (q_text_gopher_rules, SQL_TEXT_GOPHER_RULES),
+    "pipe_crawl_e2e": (q_pipe_crawl_e2e, SQL_PIPE_CRAWL_E2E),
+    "pipe_warc_extract": (q_pipe_warc_extract, SQL_PIPE_WARC_EXTRACT),
+    "text_html_extract": (q_text_html_extract, SQL_TEXT_HTML_EXTRACT),
+    "vec_neardup_pairs": (q_vec_neardup_pairs, SQL_VEC_NEARDUP_PAIRS),
+    "vec_neardup_lsh": (q_vec_neardup_lsh, SQL_VEC_NEARDUP_LSH),
+    "vec_centroid_by_label": (q_vec_centroid_by_label, SQL_VEC_CENTROID_BY_LABEL),
+    "dedup_exact": (q_dedup_exact, SQL_DEDUP_EXACT),
+    "dedup_incremental": (q_dedup_incremental, SQL_DEDUP_INCREMENTAL),
+    "dedup_ngram_jaccard": (q_dedup_ngram_jaccard, SQL_DEDUP_NGRAM_JACCARD),
+    "dedup_jaccard_deep": (q_dedup_jaccard_deep, SQL_DEDUP_JACCARD_DEEP),
+    "dedup_containment": (q_dedup_containment, SQL_DEDUP_CONTAINMENT),
+    "vec_dim_stats": (q_vec_dim_stats, SQL_VEC_DIM_STATS),
+    "dedup_clusters": (q_dedup_clusters, SQL_DEDUP_CLUSTERS),
+    "dedup_keep_best": (q_dedup_keep_best, SQL_DEDUP_KEEP_BEST),
+    "dedup_simhash": (q_dedup_simhash, SQL_DEDUP_SIMHASH),
+    "dedup_edit_distance": (q_dedup_edit_distance, SQL_DEDUP_EDIT_DISTANCE),
+    "graph_pagerank": (q_graph_pagerank, SQL_GRAPH_PAGERANK),
+    "graph_knn_edges": (q_graph_knn_edges, SQL_GRAPH_KNN_EDGES),
+    "graph_knn_mutual": (q_graph_knn_mutual, SQL_GRAPH_KNN_MUTUAL),
+    "graph_triangles": (q_graph_triangles, SQL_GRAPH_TRIANGLES),
+    "dedup_minhash_native": (q_dedup_minhash_native, SQL_DEDUP_MINHASH_NATIVE),
+    "ann_ivf_topk": (q_ann_ivf_topk, SQL_ANN_IVF),
+    "ann_ivf_quantized": (q_ann_ivf_quantized, SQL_ANN_IVF_QUANTIZED),
+    "text_stats_by_lang": (q_text_stats_by_lang, SQL_TEXT_STATS_BY_LANG),
+    "text_quality": (q_text_quality, SQL_TEXT_QUALITY),
+    "text_langid": (q_text_langid, SQL_TEXT_LANGID),
+    "text_token_top20": (q_text_token_top20, SQL_TEXT_TOKEN_TOP20),
+    "text_boilerplate_ngrams": (q_text_boilerplate_ngrams, SQL_TEXT_BOILERPLATE_NGRAMS),
+    "pipe_span_dedup": (q_pipe_span_dedup, SQL_PIPE_SPAN_DEDUP),
+    "text_bpe_tokens": (q_text_bpe_tokens, SQL_TEXT_BPE_TOKENS),
+    "text_fingerprint": (q_text_fingerprint, SQL_TEXT_FINGERPRINT),
+    "text_tfidf_top20": (q_text_tfidf_top20, SQL_TEXT_TFIDF_TOP20),
+    "vec_quantize_int8": (q_vec_quantize_int8, SQL_VEC_QUANTIZE_INT8),
+    "pipe_clean_corpus": (q_pipe_clean_corpus, SQL_PIPE_CLEAN_CORPUS),
+    "pipe_split_stats": (q_pipe_split_stats, SQL_PIPE_SPLIT_STATS),
+    "pipe_pack_sequences": (q_pipe_pack_sequences, SQL_PIPE_PACK_SEQUENCES),
+    "pipe_contamination": (q_pipe_contamination, SQL_PIPE_CONTAMINATION),
+    "pipe_stratified_sample": (q_pipe_stratified_sample, SQL_PIPE_STRATIFIED_SAMPLE),
+    "vec_semantic_dedup": (q_vec_semantic_dedup, SQL_VEC_SEMANTIC_DEDUP),
+    "text_redact_pii": (q_text_redact_pii, SQL_TEXT_REDACT_PII),
+    "text_repetition": (q_text_repetition, SQL_TEXT_REPETITION),
+    "text_chunk_windows": (q_text_chunk_windows, SQL_TEXT_CHUNK_WINDOWS),
+    "pipe_quality_filter": (q_pipe_quality_filter, SQL_PIPE_QUALITY_FILTER),
+    "pipe_curation_e2e": (q_pipe_curation_e2e, SQL_PIPE_CURATION_E2E),
+    "text_lm_surprisal": (q_text_lm_surprisal, SQL_TEXT_LM_SURPRISAL),
+    "ev_anomaly_zscore": (q_ev_anomaly_zscore, SQL_EV_ANOMALY_ZSCORE),
+    "pipe_domain_mix": (q_pipe_domain_mix, SQL_PIPE_DOMAIN_MIX),
+    "pipe_shuffle_shards": (q_pipe_shuffle_shards, SQL_PIPE_SHUFFLE_SHARDS),
+    "text_length_histogram": (q_text_length_histogram, SQL_TEXT_LENGTH_HISTOGRAM),
+    "profile_documents": (q_profile_documents, SQL_PROFILE_DOCUMENTS),
+    "q1_pricing": (q_q1_pricing, SQL_Q1_PRICING),
+    "q6_forecast_revenue": (q_q6_forecast_revenue, SQL_Q6_FORECAST_REVENUE),
+    "q3_top_orders": (q_q3_top_orders, SQL_Q3_TOP_ORDERS),
+    "q4_late_orders": (q_q4_late_orders, SQL_Q4_LATE_ORDERS),
+    "q5_nation_revenue": (q_q5_nation_revenue, SQL_Q5_NATION_REVENUE),
+    "q7_nation_volume": (q_q7_nation_volume, SQL_Q7_NATION_VOLUME),
+    "q8_market_share": (q_q8_market_share, SQL_Q8_MARKET_SHARE),
+    "q15_top_supplier": (q_q15_top_supplier, SQL_Q15_TOP_SUPPLIER),
+    "q2_min_cost_supplier": (q_q2_min_cost_supplier, SQL_Q2_MIN_COST_SUPPLIER),
+    "q9_product_profit": (q_q9_product_profit, SQL_Q9_PRODUCT_PROFIT),
+    "q12_late_priority": (q_q12_late_priority, SQL_Q12_LATE_PRIORITY),
+    "q20_dominant_suppliers": (q_q20_dominant_suppliers, SQL_Q20_DOMINANT_SUPPLIERS),
+    "q21_waiting_suppliers": (q_q21_waiting_suppliers, SQL_Q21_WAITING_SUPPLIERS),
+    "q11_important_stock": (q_q11_important_stock, SQL_Q11_IMPORTANT_STOCK),
+    "q10_returned_items": (q_q10_returned_items, SQL_Q10_RETURNED_ITEMS),
+    "q14_promo_revenue": (q_q14_promo_revenue, SQL_Q14_PROMO_REVENUE),
+    "q19_disjunctive_revenue": (q_q19_disjunctive_revenue, SQL_Q19_DISJUNCTIVE_REVENUE),
+    "q16_supplier_variety": (q_q16_supplier_variety, SQL_Q16_SUPPLIER_VARIETY),
+    "q22_idle_balance": (q_q22_idle_balance, SQL_Q22_IDLE_BALANCE),
+    "q13_customer_distribution": (
+        q_q13_customer_distribution,
+        SQL_Q13_CUSTOMER_DISTRIBUTION,
+    ),
+    "q17_small_qty_revenue": (q_q17_small_qty_revenue, SQL_Q17_SMALL_QTY_REVENUE),
+    "q18_large_orders": (q_q18_large_orders, SQL_Q18_LARGE_ORDERS),
+    "agg_rollup": (q_agg_rollup, SQL_AGG_ROLLUP),
+    "grouping_sets": (q_grouping_sets, SQL_GROUPING_SETS),
+    "cube_status_priority": (q_cube_status_priority, SQL_CUBE_STATUS_PRIORITY),
+    "above_avg_customers": (q_above_avg_customers, SQL_ABOVE_AVG_CUSTOMERS),
+    "monthly_revenue_trend": (q_monthly_revenue_trend, SQL_MONTHLY_REVENUE_TREND),
+    "segment_quantiles": (q_segment_quantiles, SQL_SEGMENT_QUANTILES),
+    "brand_revenue": (q_brand_revenue, SQL_BRAND_REVENUE),
+    "distinct_customers_by_status": (
+        q_distinct_customers_by_status,
+        SQL_DISTINCT_CUSTOMERS_BY_STATUS,
+    ),
+    "ev_json_extract": (q_ev_json_extract, SQL_EV_JSON_EXTRACT),
+    "ev_gapfill_locf": (q_ev_gapfill_locf, SQL_EV_GAPFILL_LOCF),
+    "ev_ohlc_daily": (q_ev_ohlc_daily, SQL_EV_OHLC_DAILY),
+    "ev_variant_extract": (q_ev_variant_extract, SQL_EV_VARIANT_EXTRACT),
+    "ev_asof_join": (q_ev_asof_join, SQL_EV_ASOF_JOIN),
+    "ev_funnel": (q_ev_funnel, SQL_EV_FUNNEL),
+    "ev_retention_cohorts": (q_ev_retention_cohorts, SQL_EV_RETENTION_COHORTS),
+    "ev_dau_new_returning": (q_ev_dau_new_returning, SQL_EV_DAU_NEW_RETURNING),
+    "ev_error_window": (q_ev_error_window, SQL_EV_ERROR_WINDOW),
+    "token_count_salted": (q_token_count_salted, SQL_TOKEN_COUNT_SALTED),
+    "win_top3_per_nation": (q_win_top3_per_nation, SQL_WIN_TOP3_PER_NATION),
+    "win_running_total": (q_win_running_total, SQL_WIN_RUNNING_TOTAL),
+    "win_moving_avg": (q_win_moving_avg, SQL_WIN_MOVING_AVG),
+    "win_range_frame": (q_win_range_frame, SQL_WIN_RANGE_FRAME),
+    "win_distribution": (q_win_distribution, SQL_WIN_DISTRIBUTION),
+    "vec_label_separation": (q_vec_label_separation, SQL_VEC_LABEL_SEPARATION),
+    "join_semi": (q_join_semi, SQL_JOIN_SEMI),
+    "join_anti": (q_join_anti, SQL_JOIN_ANTI),
+    "setop_nations": (q_setop_nations, SQL_SETOP_NATIONS),
+    "setop_suppkeys_all": (q_setop_suppkeys_all, SQL_SETOP_SUPPKEYS_ALL),
+    "pivot_status_by_priority": (
+        q_pivot_status_by_priority,
+        SQL_PIVOT_STATUS_BY_PRIORITY,
+    ),
+    "ev_tumbling": (q_ev_tumbling, SQL_EV_TUMBLING),
+    "ev_sliding": (q_ev_sliding, SQL_EV_SLIDING),
+    "ev_sessionize": (q_ev_sessionize, SQL_EV_SESSIONIZE),
+    "ev_stream_tumbling": (q_ev_stream_tumbling, SQL_EV_STREAM_TUMBLING),
+    "ev_stream_sliding": (q_ev_stream_sliding, SQL_EV_SLIDING),
+    "ev_stream_session": (q_ev_stream_session, SQL_EV_STREAM_SESSION),
+    "ev_stream_interval_join": (q_ev_stream_interval_join, SQL_EV_STREAM_INTERVAL_JOIN),
+    "dedup_stream_exact": (q_dedup_stream_exact, SQL_DEDUP_STREAM_EXACT),
     # incremental banded-LSH candidates must equal the batch pair set
-    "dedup_stream_neardup": SQL_VEC_NEARDUP_LSH,
-    "ev_top_users": SQL_EV_TOP_USERS,
-    "mm_binary_stats": SQL_MM_BINARY_STATS,
-    "mm_frame_sample": SQL_MM_FRAME_SAMPLE,
-    # pinned-codebook IVF is deterministic SQL → same oracle as ann_ivf_topk
-    "ann_ivf_stored": SQL_ANN_IVF,
+    "dedup_stream_neardup": (q_dedup_stream_neardup, SQL_VEC_NEARDUP_LSH),
+    "ev_top_users": (q_ev_top_users, SQL_EV_TOP_USERS),
+    "mm_binary_stats": (q_mm_binary_stats, SQL_MM_BINARY_STATS),
     # the deterministic byte-fold stand-in is plain integer arithmetic
-    "mm_feature_extract": SQL_MM_FEATURE_EXTRACT,
-    "ev_rollup_merge": SQL_EV_ROLLUP_MERGE,
+    "mm_feature_extract": (q_mm_feature_extract, SQL_MM_FEATURE_EXTRACT),
+    "mm_frame_sample": (q_mm_frame_sample, SQL_MM_FRAME_SAMPLE),
+    # pinned-codebook IVF is deterministic SQL -> same oracle as ann_ivf_topk
+    "ann_ivf_stored": (q_ann_ivf_stored, SQL_ANN_IVF),
+    "ev_rollup_merge": (q_ev_rollup_merge, SQL_EV_ROLLUP_MERGE),
     # stream-maintained partials must merge to the batch recompute
-    "ev_stream_rollup": SQL_EV_ROLLUP_MERGE,
-    "sketch_distinct_users": SQL_SKETCH_DISTINCT_USERS,
-    "sketch_user_overlap": SQL_SKETCH_USER_OVERLAP,
-    "sketch_value_percentiles": SQL_SKETCH_VALUE_PERCENTILES,
-    "ev_status_islands": SQL_EV_STATUS_ISLANDS,
-    "cdc_latest_state": SQL_CDC_LATEST_STATE,
-    "zorder_events": SQL_ZORDER_EVENTS,
-    "vec_topk_filtered": SQL_VEC_TOPK_FILTERED,
-    "vec_topk_pq": SQL_VEC_TOPK_PQ,
-    "ann_ivfpq_topk": SQL_ANN_IVFPQ,
-    "cdc_scd2_intervals": SQL_CDC_SCD2_INTERVALS,
-    "ivm_join_agg": SQL_IVM_JOIN_AGG,
-    "vec_maxsim_topk": SQL_VEC_MAXSIM,
-    "vec_topk_hamming": SQL_VEC_TOPK_HAMMING,
-    "vec_topk_hamming_stored": SQL_VEC_TOPK_HAMMING,
-    "vec_topk_hamming_batch": SQL_VEC_TOPK_HAMMING_BATCH,
-    "vec_hamming_recall": SQL_VEC_HAMMING_RECALL,
-    "ann_ivf_recall": SQL_ANN_IVF_RECALL,
-    "dq_lineitem_report": SQL_DQ_LINEITEM_REPORT,
-    "vec_topk_rrf": SQL_VEC_TOPK_RRF,
-    "pipe_token_budget": SQL_PIPE_TOKEN_BUDGET,
-    "pipe_temperature_mix": SQL_PIPE_TEMPERATURE_MIX,
-    "ev_stream_scd2": SQL_CDC_SCD2_INTERVALS,
-    "cdc_diff_snapshots": SQL_CDC_DIFF_SNAPSHOTS,
-    "pipe_weighted_sample": SQL_PIPE_WEIGHTED_SAMPLE,
-    "ev_trend_per_user": SQL_EV_TREND_PER_USER,
-    "text_entropy": SQL_TEXT_ENTROPY,
-    "ev_anomaly_mad": SQL_EV_ANOMALY_MAD,
-    "ev_transition_matrix": SQL_EV_TRANSITION_MATRIX,
-    "ev_twap": SQL_EV_TWAP,
-    "drift_psi": SQL_DRIFT_PSI,
+    "ev_stream_rollup": (q_ev_stream_rollup, SQL_EV_ROLLUP_MERGE),
+    "sketch_distinct_users": (q_sketch_distinct_users, SQL_SKETCH_DISTINCT_USERS),
+    "sketch_user_overlap": (q_sketch_user_overlap, SQL_SKETCH_USER_OVERLAP),
+    "sketch_value_percentiles": (
+        q_sketch_value_percentiles,
+        SQL_SKETCH_VALUE_PERCENTILES,
+    ),
+    "ev_status_islands": (q_ev_status_islands, SQL_EV_STATUS_ISLANDS),
+    "cdc_latest_state": (q_cdc_latest_state, SQL_CDC_LATEST_STATE),
+    "zorder_events": (q_zorder_events, SQL_ZORDER_EVENTS),
+    "vec_topk_filtered": (q_vec_topk_filtered, SQL_VEC_TOPK_FILTERED),
+    "vec_topk_pq": (q_vec_topk_pq, SQL_VEC_TOPK_PQ),
+    "ann_ivfpq_topk": (q_ann_ivfpq_topk, SQL_ANN_IVFPQ),
+    "cdc_scd2_intervals": (q_cdc_scd2_intervals, SQL_CDC_SCD2_INTERVALS),
+    "ivm_join_agg": (q_ivm_join_agg, SQL_IVM_JOIN_AGG),
+    "vec_maxsim_topk": (q_vec_maxsim_topk, SQL_VEC_MAXSIM),
+    "vec_topk_hamming": (q_vec_topk_hamming, SQL_VEC_TOPK_HAMMING),
+    "vec_topk_hamming_stored": (q_vec_topk_hamming_stored, SQL_VEC_TOPK_HAMMING),
+    "vec_topk_hamming_batch": (q_vec_topk_hamming_batch, SQL_VEC_TOPK_HAMMING_BATCH),
+    "vec_hamming_recall": (q_vec_hamming_recall, SQL_VEC_HAMMING_RECALL),
+    "ann_ivf_recall": (q_ann_ivf_recall, SQL_ANN_IVF_RECALL),
+    "dq_lineitem_report": (q_dq_lineitem_report, SQL_DQ_LINEITEM_REPORT),
+    "vec_topk_rrf": (q_vec_topk_rrf, SQL_VEC_TOPK_RRF),
+    "pipe_token_budget": (q_pipe_token_budget, SQL_PIPE_TOKEN_BUDGET),
+    "pipe_temperature_mix": (q_pipe_temperature_mix, SQL_PIPE_TEMPERATURE_MIX),
+    "ev_stream_scd2": (q_ev_stream_scd2, SQL_CDC_SCD2_INTERVALS),
+    "cdc_diff_snapshots": (q_cdc_diff_snapshots, SQL_CDC_DIFF_SNAPSHOTS),
+    "pipe_weighted_sample": (q_pipe_weighted_sample, SQL_PIPE_WEIGHTED_SAMPLE),
+    "ev_trend_per_user": (q_ev_trend_per_user, SQL_EV_TREND_PER_USER),
+    "text_entropy": (q_text_entropy, SQL_TEXT_ENTROPY),
+    "ev_anomaly_mad": (q_ev_anomaly_mad, SQL_EV_ANOMALY_MAD),
+    "ev_transition_matrix": (q_ev_transition_matrix, SQL_EV_TRANSITION_MATRIX),
+    "ev_twap": (q_ev_twap, SQL_EV_TWAP),
+    "drift_psi": (q_drift_psi, SQL_DRIFT_PSI),
 }
+
+QUERIES = {name: build for name, (build, _) in REGISTRY.items()}
+ORACLES = {name: sql for name, (_, sql) in REGISTRY.items()}
