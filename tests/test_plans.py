@@ -1428,6 +1428,42 @@ def test_map_in_pandas_has_one_choke_point():
     ]
 
 
+def test_store_writes_have_one_path_each():
+    """The store's writes have one place each, so read-side caches have
+    few places to invalidate: in ``store.py`` a DataFrame ``.write``
+    appears only in the append writer (``_append``) and the staged
+    shard rewrite (``_swap_shards``), and across the library the Hadoop
+    ``getFileSystem`` call appears only in ``fsutil.py``."""
+    import ast
+    import pathlib
+
+    root = pathlib.Path(Q.__file__).parent
+    writes, fs_calls = [], []
+
+    def walk(node, path, func, called):
+        for child in ast.iter_child_nodes(node):
+            name = func
+            if isinstance(child, (ast.FunctionDef, ast.AsyncFunctionDef)):
+                name = child.name
+            if isinstance(child, ast.Call):
+                called.add(id(child.func))
+            if isinstance(child, ast.Attribute):
+                # `df.write` is a property; `stream.write(b)` is a call
+                if child.attr == "write" and id(child) not in called:
+                    writes.append((path, name))
+                if child.attr == "getFileSystem":
+                    fs_calls.append(path)
+            walk(child, path, name, called)
+
+    for p in sorted(root.rglob("*.py")):
+        walk(ast.parse(p.read_text()), p.relative_to(root).as_posix(), None, set())
+    assert sorted(w for w in writes if w[0] == "store.py") == [
+        ("store.py", "_append"),
+        ("store.py", "_swap_shards"),
+    ]
+    assert sorted(set(fs_calls)) == ["fsutil.py"]
+
+
 def test_engine_reads_no_correctness_records():
     """The driver's sampling order lives in ``__spark_entry__.queries()``:
     no module under ``vector_lake_spark/`` names the driver's

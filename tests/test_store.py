@@ -363,6 +363,9 @@ def test_dimension_validation(spark, tmp_path, rng):
         lake.add_batch([[0.1, 0.2, 0.3]])  # 3 != 4
     with _pytest.raises(ValueError, match="dimension"):
         lake.query([0.1, 0.2], k=2)
+    part = SparkPartition(spark, str(tmp_path / "plake"), partition_key="k", dimension=4)
+    with _pytest.raises(ValueError, match="dimension"):
+        part.query([0.1, 0.2], k=2)
     # lazy ingest path: the bad row fails the persist job, not silently
     # lands in __HIVE_DEFAULT_PARTITION__
     bad = spark.createDataFrame([(["a"], [0.1, 0.2, 0.3])], "id_arr array<string>, vector array<double>")
@@ -705,9 +708,9 @@ def test_upsert_into_empty_store_is_pure_insert(spark, tmp_path, rng):
 
 
 def test_upsert_large_batch_uses_anti_join_path(spark, tmp_path, rng):
-    """Batches above the isin cutoff run the broadcast semi/anti-join
-    form (no thousand-literal plans) — same semantics: replace existing,
-    insert new, exactly-once per id."""
+    """A batch of over a thousand ids takes the same broadcast
+    semi/anti-join path as any other (no per-id literals in the plan):
+    replace existing, insert new, exactly-once per id."""
     lake = SparkVectorLake(spark, str(tmp_path / "lake"), dimension=4, approx_shards=4)
     n = 1200
     vecs = (rng.rand(n, 4) - 0.5).tolist()
@@ -851,7 +854,9 @@ def test_concurrent_mutator_fails_fast_and_loses_nothing(
     holds the maintenance lease, a second mutator on the same location
     must fail FAST with a recoverable error — not interleave swaps and
     silently drop the first writer's shards. Covers all four stage+swap
-    paths, and proves the store is byte-identical after the refusals."""
+    paths and ``delete_shards`` (a shard it deletes between a compact's
+    load and swap would be swapped back in), and proves the store is
+    byte-identical after the refusals."""
     import pytest as _pytest
 
     loc = str(tmp_path / "lake")
@@ -874,6 +879,8 @@ def test_concurrent_mutator_fails_fast_and_loses_nothing(
             )
         with _pytest.raises(IOError, match="single-writer"):
             writer_b.delete_ids([ids[0]])
+        with _pytest.raises(IOError, match="single-writer"):
+            writer_b.delete_shards([0, 1, 2, 3])
 
     # nothing was lost or mutated by the refused attempts
     assert writer_b.count() == 30

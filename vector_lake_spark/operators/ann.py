@@ -28,17 +28,9 @@ from vector_lake_spark.functions.vectors import (
     lit_vector,
     to_double_array,
 )
+from vector_lake_spark.fsutil import read_json, write_json
 from vector_lake_spark.operators import lsh as lsh_mod
 from vector_lake_spark.operators.topk import SCORE_DECIMALS, topk_cosine
-
-
-def _fs_path(spark, path_str: str):
-    """Hadoop FileSystem + Path for any URI scheme (file/hdfs/s3a) —
-    same pattern as ``store.SparkVectorLake._fs_path``."""
-    jvm = spark._jvm
-    p = jvm.org.apache.hadoop.fs.Path(path_str)
-    fs = p.getFileSystem(spark._jsc.hadoopConfiguration())
-    return fs, p
 
 
 def multiprobe_shards(
@@ -524,20 +516,12 @@ class IVFIndex:
     SURVEY.md §3.2); this is the scale-path replacement alongside the LSH
     store."""
 
-    def __init__(self, spark, location: str):
-        import json
+    SIDECAR = "_ivf_meta.json"
 
+    def __init__(self, spark, location: str):
         self.spark = spark
         self.location = str(location)
-        fs, p = _fs_path(spark, f"{self.location}/_ivf_meta.json")
-        stream = fs.open(p)
-        try:
-            raw = bytes(
-                spark._jvm.org.apache.commons.io.IOUtils.toByteArray(stream)
-            )
-        finally:
-            stream.close()
-        meta = json.loads(raw.decode())
+        meta = read_json(spark, f"{self.location}/{self.SIDECAR}")
         self.centroids = meta["centroids"]
         self.vec_col = meta["vec_col"]
         self.id_col = meta["id_col"]
@@ -547,22 +531,15 @@ class IVFIndex:
             int(k): int(v) for k, v in meta.get("counts", {}).items()
         } or None
 
-    def _write_meta(self) -> None:
-        import json
-
-        meta = {
-            "centroids": self.centroids,
-            "vec_col": self.vec_col,
-            "id_col": self.id_col,
-        }
-        if self.counts is not None:
-            meta["counts"] = {str(k): v for k, v in self.counts.items()}
-        fs, p = _fs_path(self.spark, f"{self.location}/_ivf_meta.json")
-        out = fs.create(p, True)
-        try:
-            out.write(bytearray(json.dumps(meta).encode()))
-        finally:
-            out.close()
+    @classmethod
+    def _write_meta(cls, spark, location, centroids, vec_col, id_col, counts):
+        """The one sidecar serialization (``build`` and ``append``)."""
+        write_json(spark, f"{location}/{cls.SIDECAR}", {
+            "centroids": centroids,
+            "vec_col": vec_col,
+            "id_col": id_col,
+            "counts": {str(k): v for k, v in counts.items()},
+        })
 
     @classmethod
     def build(
@@ -581,8 +558,6 @@ class IVFIndex:
         iterative fit entirely and assign with the pure-expression argmin
         (``assign_centroid_expr``) — the deterministic, oracle-checkable
         path used by the registry's ``ann_ivf_stored``."""
-        import json
-
         if centroids is not None:
             assigned = df.withColumn(
                 "centroid_id",
@@ -612,24 +587,14 @@ class IVFIndex:
         # of the freshly written data — cheaper than re-running the
         # assignment expressions over the source)
         counts = {
-            str(r["centroid_id"]): r["n"]
+            r["centroid_id"]: r["n"]
             for r in spark.read.parquet(f"{location}/data")
             .groupBy("centroid_id")
             .agg(F.count(F.lit(1)).alias("n"))
             .collect()
         }
-        # bootstrap sidecar (single write path: _write_meta)
-        meta = {"centroids": centroids, "vec_col": vec_col, "id_col": id_col}
-        fs, p = _fs_path(spark, f"{location}/_ivf_meta.json")
-        out = fs.create(p, True)
-        try:
-            out.write(bytearray(json.dumps(meta).encode()))
-        finally:
-            out.close()
-        idx = cls(spark, location)
-        idx.counts = {int(k): int(v) for k, v in counts.items()}
-        idx._write_meta()
-        return idx
+        cls._write_meta(spark, location, centroids, vec_col, id_col, counts)
+        return cls(spark, location)
 
     def append(self, df: DataFrame) -> dict:
         """Incremental index maintenance (r05 verdict #3): assign a new
@@ -680,7 +645,10 @@ class IVFIndex:
             for cid, n in appended.items():
                 merged[cid] = merged.get(cid, 0) + n
             self.counts = merged
-        self._write_meta()
+        self._write_meta(
+            self.spark, self.location, self.centroids, self.vec_col,
+            self.id_col, self.counts,
+        )
         # imbalance from the maintained counts; the disk-vs-sidecar
         # mutation audit stays in an explicit drift() call, which is the
         # one place a full recount is the point

@@ -23,7 +23,6 @@ extends its ANN surface the same way IVF/PQ do (SURVEY.md §2.B), reusing
 
 from __future__ import annotations
 
-import json
 from collections.abc import Sequence
 
 from pyspark.sql import Column, DataFrame, Window, functions as F
@@ -33,7 +32,7 @@ from vector_lake_spark.functions.vectors import (
     lit_vector,
     to_double_array,
 )
-from vector_lake_spark.operators.ann import _fs_path
+from vector_lake_spark.fsutil import read_json, write_json
 
 BITS_PER_HALF = 32
 
@@ -447,21 +446,6 @@ def hamming_neardup_pairs(
     )
 
 
-def _write_sidecar(
-    spark, location: str, meta: dict, name: str = "_sig_meta.json"
-) -> None:
-    """The ONE sidecar serialization path (build and _write_meta both
-    route here — the IVF bootstrap-drift lesson, ann.py:502).
-    ``name`` distinguishes index families sharing the pattern
-    (SignatureIndex keeps the historical default)."""
-    fs, p = _fs_path(spark, f"{location}/{name}")
-    out = fs.create(p, True)
-    try:
-        out.write(bytearray(json.dumps(meta).encode()))
-    finally:
-        out.close()
-
-
 def hamming_topk_batch(
     sig_df: DataFrame,
     corpus: DataFrame,
@@ -490,7 +474,7 @@ def hamming_topk_batch(
     halves = [f"sig_{h}" for h in range(n_halves(dim))]
     qv = to_double_array(F.col(query_vec_col))
     qsig_halves = sig_exprs(qv, dim)
-    # query-side dim guard (mirrors _signed's data-side guard and
+    # query-side dim guard (mirrors SignatureIndex._rows's data-side guard and
     # topk's ValueError): a misaligned query vector must fail loudly,
     # not slice into a garbage-but-valid signature
     qsig_halves[0] = F.when(F.size(qv) == dim, qsig_halves[0]).otherwise(
@@ -543,7 +527,72 @@ def hamming_topk_batch(
     )
 
 
-class SignatureIndex:
+class _SignatureTable:
+    """Persisted per-row signature table + JSON sidecar: the shared
+    ``build / append / drift / load`` of ``SignatureIndex`` and
+    ``PerceptualIndex``. A subclass names its ``SIDECAR`` file, the
+    sidecar ``FIELDS`` (the parameters of its row transform) and the
+    transform ``_rows(df, **fields)``. Rows are a pure per-row function
+    of the input, so appending a batch IS the whole update and
+    build/append order can never change results; the sidecar's
+    ``n_rows`` is the only audit (external-mutation detection)."""
+
+    SIDECAR: str
+    FIELDS: tuple[str, ...]
+
+    def __init__(self, spark, location: str):
+        self.spark = spark
+        self.location = str(location)
+        meta = read_json(spark, f"{self.location}/{self.SIDECAR}")
+        for f in (*self.FIELDS, "n_rows"):
+            setattr(self, f, meta[f])
+
+    def _fields(self) -> dict:
+        return {f: getattr(self, f) for f in self.FIELDS}
+
+    @classmethod
+    def _build(cls, spark, location: str, df: DataFrame, **fields):
+        cls._rows(df, **fields).write.mode("overwrite").parquet(
+            f"{location}/data"
+        )
+        # count what actually landed (metadata-only footer count of the
+        # freshly written files — the IVFIndex.build pattern; no need to
+        # pin the source plan when the count reads the output)
+        n_rows = spark.read.parquet(f"{location}/data").count()
+        write_json(
+            spark, f"{location}/{cls.SIDECAR}", {**fields, "n_rows": n_rows}
+        )
+        return cls(spark, location)
+
+    def append(self, df: DataFrame) -> int:
+        """Incremental maintenance: query results over build+append
+        equal a fresh rebuild of the union by construction (and by
+        test). Returns rows appended."""
+        rows = self._rows(df, **self._fields()).localCheckpoint(eager=True)
+        rows.write.mode("append").parquet(f"{self.location}/data")
+        n = rows.count()
+        self.n_rows += n
+        write_json(
+            self.spark,
+            f"{self.location}/{self.SIDECAR}",
+            {**self._fields(), "n_rows": self.n_rows},
+        )
+        return n
+
+    def drift(self) -> dict:
+        """Sidecar row-count audit: a mismatch means the data directory
+        was mutated outside build/append (rebuild it)."""
+        on_disk = self.load().count()
+        return {
+            "total_rows": on_disk,
+            "counts_match_sidecar": on_disk == self.n_rows,
+        }
+
+    def load(self) -> DataFrame:
+        return self.spark.read.parquet(f"{self.location}/data")
+
+
+class SignatureIndex(_SignatureTable):
     """Persisted sign-bit signature table + JSON sidecar.
 
     ``build`` packs and writes signatures once at ingest; ``topk`` scans
@@ -557,41 +606,15 @@ class SignatureIndex:
     so ``append`` needs no drift tripwire for codebook fitness — only
     the sidecar row-count audit (external-mutation detection)."""
 
-    def __init__(self, spark, location: str):
-        self.spark = spark
-        self.location = str(location)
-        fs, p = _fs_path(spark, f"{self.location}/_sig_meta.json")
-        stream = fs.open(p)
-        try:
-            raw = bytes(
-                spark._jvm.org.apache.commons.io.IOUtils.toByteArray(stream)
-            )
-        finally:
-            stream.close()
-        meta = json.loads(raw.decode())
-        self.dim = int(meta["dim"])
-        self.vec_col = meta["vec_col"]
-        self.id_col = meta["id_col"]
-        self.n_rows = int(meta["n_rows"])
-
-    def _write_meta(self) -> None:
-        _write_sidecar(
-            self.spark,
-            self.location,
-            {
-                "dim": self.dim,
-                "vec_col": self.vec_col,
-                "id_col": self.id_col,
-                "n_rows": self.n_rows,
-            },
-        )
+    SIDECAR = "_sig_meta.json"
+    FIELDS = ("dim", "vec_col", "id_col")
 
     @property
     def sig_cols(self) -> list[str]:
         return [f"sig_{h}" for h in range(n_halves(self.dim))]
 
     @classmethod
-    def _signed(cls, df: DataFrame, dim: int, vec_col: str, id_col: str):
+    def _rows(cls, df: DataFrame, dim: int, vec_col: str, id_col: str):
         v = to_double_array(F.col(vec_col))
         halves = sig_exprs(v, dim)
         # data-side dim guard (the query side already raises in topk):
@@ -624,50 +647,9 @@ class SignatureIndex:
         vec_col: str = "embedding",
         id_col: str = "vec_id",
     ) -> "SignatureIndex":
-        cls._signed(df, dim, vec_col, id_col).write.mode(
-            "overwrite"
-        ).parquet(f"{location}/data")
-        # count what actually landed (metadata-only footer count of the
-        # freshly written files — the IVFIndex.build pattern; no need to
-        # pin the source plan when the count reads the output)
-        n_rows = spark.read.parquet(f"{location}/data").count()
-        _write_sidecar(
-            spark,
-            location,
-            {
-                "dim": dim,
-                "vec_col": vec_col,
-                "id_col": id_col,
-                "n_rows": n_rows,
-            },
+        return cls._build(
+            spark, location, df, dim=dim, vec_col=vec_col, id_col=id_col
         )
-        return cls(spark, location)
-
-    def append(self, df: DataFrame) -> int:
-        """Incremental maintenance: packing is a pure per-row function,
-        so appending a batch's signatures IS the whole update — query
-        results over build+append equal a fresh rebuild of the union by
-        construction (and by test). Returns rows appended."""
-        signed = self._signed(
-            df, self.dim, self.vec_col, self.id_col
-        ).localCheckpoint(eager=True)
-        signed.write.mode("append").parquet(f"{self.location}/data")
-        n = signed.count()
-        self.n_rows += n
-        self._write_meta()
-        return n
-
-    def drift(self) -> dict:
-        """Sidecar row-count audit: a mismatch means the data directory
-        was mutated outside build/append (rebuild it)."""
-        on_disk = self.load().count()
-        return {
-            "total_rows": on_disk,
-            "counts_match_sidecar": on_disk == self.n_rows,
-        }
-
-    def load(self) -> DataFrame:
-        return self.spark.read.parquet(f"{self.location}/data")
 
     def topk(
         self,
@@ -729,7 +711,7 @@ class SignatureIndex:
         )
 
 
-class PerceptualIndex:
+class PerceptualIndex(_SignatureTable):
     """Persisted perceptual-signature table + JSON sidecar — the
     artifact the near-dup scale rungs point at ("persist the signatures
     and let auto size", SCALE.md image/audio/video sections).
@@ -748,39 +730,10 @@ class PerceptualIndex:
     into the sidecar so the pair join always matches within groups."""
 
     SIDECAR = "_psig_meta.json"
+    FIELDS = ("n_longs", "id_col", "group_cols")
 
-    def __init__(self, spark, location: str):
-        self.spark = spark
-        self.location = str(location)
-        fs, p = _fs_path(spark, f"{self.location}/{self.SIDECAR}")
-        stream = fs.open(p)
-        try:
-            raw = bytes(
-                spark._jvm.org.apache.commons.io.IOUtils.toByteArray(stream)
-            )
-        finally:
-            stream.close()
-        meta = json.loads(raw.decode())
-        self.n_longs = int(meta["n_longs"])
-        self.id_col = meta["id_col"]
-        self.group_cols = list(meta["group_cols"])
-        self.n_rows = int(meta["n_rows"])
-
-    def _write_meta(self) -> None:
-        _write_sidecar(
-            self.spark,
-            self.location,
-            {
-                "n_longs": self.n_longs,
-                "id_col": self.id_col,
-                "group_cols": self.group_cols,
-                "n_rows": self.n_rows,
-            },
-            name=self.SIDECAR,
-        )
-
-    @staticmethod
-    def _validated(sig_df: DataFrame, id_col, group_cols, n_longs):
+    @classmethod
+    def _rows(cls, sig_df: DataFrame, n_longs, id_col, group_cols):
         cols = [id_col, *group_cols, "sig"]
         missing = [c for c in cols if c not in sig_df.columns]
         if missing:
@@ -807,50 +760,10 @@ class PerceptualIndex:
         id_col: str = "media_id",
         group_cols: Sequence[str] = (),
     ) -> "PerceptualIndex":
-        groups = list(group_cols)
-        cls._validated(sig_df, id_col, groups, n_longs).write.mode(
-            "overwrite"
-        ).parquet(f"{location}/data")
-        # metadata-only footer count of what actually landed (the
-        # SignatureIndex.build pattern)
-        n_rows = spark.read.parquet(f"{location}/data").count()
-        _write_sidecar(
-            spark,
-            location,
-            {
-                "n_longs": n_longs,
-                "id_col": id_col,
-                "group_cols": groups,
-                "n_rows": n_rows,
-            },
-            name=cls.SIDECAR,
+        return cls._build(
+            spark, location, sig_df,
+            n_longs=n_longs, id_col=id_col, group_cols=list(group_cols),
         )
-        return cls(spark, location)
-
-    def append(self, sig_df: DataFrame) -> int:
-        """Incremental maintenance: signatures are pure per-row
-        functions of the media, so appending a batch IS the whole
-        update. Returns rows appended."""
-        signed = self._validated(
-            sig_df, self.id_col, self.group_cols, self.n_longs
-        ).localCheckpoint(eager=True)
-        signed.write.mode("append").parquet(f"{self.location}/data")
-        n = signed.count()
-        self.n_rows += n
-        self._write_meta()
-        return n
-
-    def drift(self) -> dict:
-        """Sidecar row-count audit: a mismatch means the data directory
-        was mutated outside build/append (rebuild it)."""
-        on_disk = self.load().count()
-        return {
-            "total_rows": on_disk,
-            "counts_match_sidecar": on_disk == self.n_rows,
-        }
-
-    def load(self) -> DataFrame:
-        return self.spark.read.parquet(f"{self.location}/data")
 
     def neardup_pairs(
         self, radius: int, n_blocks: int | None = None
@@ -893,9 +806,9 @@ class PerceptualIndex:
         id's OTHER groups may already be indexed; newness is tracked at
         the join grain. Call ``append(batch_df)`` AFTER collecting the
         pairs — the classic foreachBatch order."""
-        batch = self._validated(
-            batch_df, self.id_col, self.group_cols, self.n_longs
-        ).localCheckpoint(eager=True)
+        batch = self._rows(batch_df, **self._fields()).localCheckpoint(
+            eager=True
+        )
         n_total = self.n_rows + batch.count()
         if n_blocks is None:
             total_bits = 64 * self.n_longs

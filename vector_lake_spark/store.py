@@ -22,6 +22,9 @@ API parity with the reference's ``Index`` / ``VectorLake`` / ``Partition``
 - ``delete_older_than`` — timestamp retention (the schema carries
                      ``timestamp`` per row, reference index.py:198-200);
                      rewrites only shards holding expired rows.
+- ``delete_ids`` / ``upsert_batch`` — row-level delete and replace-by-id
+                     (beyond the reference); ids match through one
+                     broadcast semi/anti join whatever their number.
 - ``warm_load``    ≈ ``Index.load_local`` (index.py:331-335) — cache the
                      store executor-side and materialize it.
 
@@ -41,6 +44,16 @@ Scale design: ``shard_id`` is a physical partition column, so a query's
 Appends never rewrite existing files (the reference rewrites whole segments
 per sync — index.py:307-308 — which cannot scale); small-file compaction is
 an explicit ``compact()`` maintenance op.
+
+Write side: every mutation lands in one of three places, which are also
+the only places that clear the cached read schema —
+``_append`` (route + shard-clustered gzip append: ``persist``, the
+``stream_ingest`` micro-batch, ``upsert_batch`` into an empty store),
+``_rewrite`` → ``_swap_shards`` (staged rewrite of the touched shards under
+the maintenance lease: ``compact``, ``delete_older_than``, ``delete_ids``,
+``upsert_batch``) and ``_remove`` (``delete_shards``, ``delete``).
+``SparkPartition`` overrides only routing (``_route``) and probing
+(``_probes``).
 """
 
 from __future__ import annotations
@@ -54,6 +67,7 @@ from collections.abc import Sequence
 
 from pyspark.sql import DataFrame, SparkSession, functions as F, types as T
 
+from vector_lake_spark.fsutil import fs_path, write_json
 from vector_lake_spark.functions.vectors import to_double_array
 from vector_lake_spark.operators import lsh as lsh_mod
 from vector_lake_spark.operators.topk import topk_cosine
@@ -72,7 +86,8 @@ LAKE_SCHEMA = T.StructType(
 
 def _locked(fn):
     """Run a maintenance method under the store's single-writer lease
-    (``_maintenance_lock``) — applied to every stage+swap mutator."""
+    (``_maintenance_lock``) — applied to ``_rewrite`` and
+    ``delete_shards``."""
 
     @functools.wraps(fn)
     def wrapper(self, *args, **kwargs):
@@ -217,26 +232,37 @@ class SparkVectorLake:
         (S2). Append-only: existing files are never rewritten."""
         if not self._pending:
             return
-        df = self._pending[0]
-        for extra in self._pending[1:]:
-            df = df.unionByName(extra)
-        routed = df.withColumn(
-            "shard_id", lsh_mod.shard_id_expr("`vector`", self.hyperplanes)
-        )
+        self._append(functools.reduce(DataFrame.unionByName, self._pending))
+        self._pending = []
+        self._write_meta(attrs)
+
+    def _route(self):
+        """The shard a row lands in: the LSH bucket of its vector."""
+        return lsh_mod.shard_id_expr("`vector`", self.hyperplanes)
+
+    def _probes(self, vector: Sequence[float], n_probes: int) -> list:
+        """The shards a query reads (multi-probe LSH)."""
+        from vector_lake_spark.operators.ann import multiprobe_shards
+
+        return multiprobe_shards(vector, self.hyperplanes, n_probes)
+
+    def _append(self, df: DataFrame) -> None:
+        """The one append writer (``persist``, the ``stream_ingest``
+        micro-batch, ``upsert_batch`` into an empty store): route, then
+        append as gzip Parquet partitioned by shard."""
         # Cluster rows by shard before writing: without this every write
         # task emits a file into every shard dir (tasks × shards tiny files
         # — the small-file pathology); with it each shard lands in one file
         # per batch.
         (
-            routed.repartition("shard_id")
+            df.withColumn("shard_id", self._route())
+            .repartition("shard_id")
             .write.mode("append")
             .option("compression", "gzip")
             .partitionBy("shard_id")
             .parquet(self._data_path)
         )
-        self._pending = []
         self._read_schema = None
-        self._write_meta(attrs)
 
     @property
     def _data_path(self) -> str:
@@ -253,15 +279,10 @@ class SparkVectorLake:
             "num_shards": self.num_shards,
             "last_update": datetime.datetime.now(datetime.timezone.utc).isoformat(),
         }
-        meta.update({k: _json_safe(v) for k, v in attrs.items()})
+        meta.update(attrs)
         # Hadoop FS write (not pathlib): the sidecar must land next to the
         # data on ANY scheme — file://, hdfs://, s3a:// (docs/S3.md)
-        fs, p = self._fs_path(f"{self.location}/_meta.json")
-        out = fs.create(p, True)
-        try:
-            out.write(bytearray(json.dumps(meta, indent=2, default=str).encode()))
-        finally:
-            out.close()
+        write_json(self.spark, f"{self.location}/_meta.json", _json_safe(meta))
 
     # -- read path ----------------------------------------------------------
 
@@ -320,14 +341,12 @@ class SparkVectorLake:
         semantics of the LSH route still apply: probes are chosen by the
         query vector, so a highly selective predicate may warrant more
         probes to hold recall."""
-        from vector_lake_spark.operators.ann import multiprobe_shards
-
         if len(vector) != self.dimension:
             raise ValueError(
                 f"query vector has dimension {len(vector)}, store expects "
                 f"{self.dimension}"
             )
-        probes = multiprobe_shards(vector, self.hyperplanes, n_probes)
+        probes = self._probes(vector, n_probes)
         pruned = self.load().filter(F.col("shard_id").isin(probes))
         if where is not None:
             pruned = pruned.filter(
@@ -354,19 +373,9 @@ class SparkVectorLake:
         Returns the started StreamingQuery."""
 
         def write_batch(batch_df: DataFrame, batch_id: int) -> None:
-            routed = batch_df.withColumn(
-                "vector", self._validated(F.col("vector"))
-            ).withColumn(
-                "shard_id", lsh_mod.shard_id_expr("`vector`", self.hyperplanes)
+            self._append(
+                batch_df.withColumn("vector", self._validated(F.col("vector")))
             )
-            (
-                routed.repartition("shard_id")
-                .write.mode("append")
-                .option("compression", "gzip")
-                .partitionBy("shard_id")
-                .parquet(self._data_path)
-            )
-            self._read_schema = None
 
         writer = (
             stream_df.writeStream.foreachBatch(write_batch)
@@ -533,12 +542,8 @@ class SparkVectorLake:
     # -- maintenance --------------------------------------------------------
 
     def _fs_path(self, path_str: str):
-        """Hadoop FileSystem + Path for ``path_str`` — scheme-agnostic
-        (file://, hdfs://, s3a://), unlike driver-local shutil."""
-        jvm = self.spark._jvm
-        p = jvm.org.apache.hadoop.fs.Path(path_str)
-        fs = p.getFileSystem(self.spark._jsc.hadoopConfiguration())
-        return fs, p
+        """``fsutil.fs_path`` for this store's session."""
+        return fs_path(self.spark, path_str)
 
     @contextlib.contextmanager
     def _maintenance_lock(self):
@@ -606,11 +611,11 @@ class SparkVectorLake:
         the two renames leaves that shard's only copy in the trash path,
         and the next swap REFUSES to start until it is recovered (renamed
         back) or explicitly deleted. A shard with no rewritten rows is
-        simply removed (retention can empty a shard)."""
+        simply removed (retention can empty a shard). Its one caller,
+        ``_rewrite``, has already refused on leftover trash."""
         self._read_schema = None
         tmp = f"{self.location}/_rewrite_tmp"
         trash_root = f"{self.location}/_trash"
-        self._check_no_leftover_trash()
         fs, trash_root_p = self._fs_path(trash_root)
         (
             rewritten
@@ -649,9 +654,10 @@ class SparkVectorLake:
         """Refuse maintenance while ``{location}/_trash`` exists: after a
         crash mid-swap it holds the ONLY copy of one or more shards, and
         it must be recovered (renamed back) or explicitly deleted by the
-        operator first.  Checked at maintenance entry points too — not
-        just inside ``_swap_shards`` — because a crash that trashed every
-        populated shard leaves ``load()`` empty and the swap unreached."""
+        operator first.  Checked at ``_rewrite``'s entry, before
+        ``load()`` — not inside ``_swap_shards`` — because a crash that
+        trashed every populated shard leaves ``load()`` empty and the
+        swap unreached."""
         trash_root = f"{self.location}/_trash"
         fs, trash_root_p = self._fs_path(trash_root)
         if not fs.exists(trash_root_p):
@@ -689,6 +695,66 @@ class SparkVectorLake:
         )
 
     @_locked
+    def _rewrite(self, leaving=None, arriving=None, staged=None) -> int:
+        """The one shard-rewrite path (``compact``, ``delete_older_than``,
+        ``delete_ids``, ``upsert_batch``), under the maintenance lease.
+
+        ``leaving`` names the rows that leave: a Column predicate over
+        store rows, or a one-column DataFrame of ids matched through a
+        broadcast left-semi/left-anti join; ``None`` means no row leaves
+        and every shard is rewritten (compact). ``arriving`` holds routed
+        rows (store columns + ``shard_id``) that land in their shards.
+        ``staged(rows, n_shards)`` lays the rewritten rows out for the
+        staged write (default: one file per shard).
+
+        The touched shards — those holding a leaving row or receiving an
+        arriving one — come from ONE aggregate job; untouched shards are
+        never rewritten. Their survivors ∪ arrivals are staged and
+        installed by ``_swap_shards``; a shard left empty is removed.
+        Returns the number of touched shards that held a leaving row (0
+        when nothing is touched)."""
+        self._check_no_leftover_trash()
+        df = self.load()
+        if isinstance(leaving, DataFrame):
+            ids = F.broadcast(leaving.toDF("__leaving_id"))
+
+            def rows(d, how):
+                return d.join(ids, d["id"] == ids["__leaving_id"], how)
+
+        else:
+
+            def rows(d, how):
+                if leaving is None:
+                    return d
+                return d.filter(leaving if how == "left_semi" else ~leaving)
+
+        marks = rows(df, "left_semi").select(
+            "shard_id", F.lit(True).alias("__left")
+        )
+        if arriving is not None:
+            marks = marks.unionByName(
+                arriving.select("shard_id", F.lit(False).alias("__left"))
+            )
+        touched = dict(
+            marks.groupBy("shard_id").agg(F.max("__left")).collect()
+        )
+        if not touched:
+            return 0
+        survivors = rows(
+            df.filter(F.col("shard_id").isin(list(touched))), "left_anti"
+        )
+        if arriving is not None:
+            cols = [f.name for f in LAKE_SCHEMA.fields] + ["shard_id"]
+            survivors = survivors.select(cols).unionByName(
+                arriving.select(cols)
+            )
+        if staged is None:
+            rewritten = survivors.repartition("shard_id")
+        else:
+            rewritten = staged(survivors, len(touched))
+        self._swap_shards(rewritten, list(touched))
+        return sum(touched.values())
+
     def compact(
         self,
         target_files_per_shard: int = 1,
@@ -709,40 +775,37 @@ class SparkVectorLake:
         the shard size. (A hash salt here would interleave times across
         every file and leave footers full-span — measured in
         tests/test_store.py::test_compact_time_cluster_narrows_footers.)"""
-        self._check_no_leftover_trash()
-        df = self.load()
-        present = [r["shard_id"] for r in df.select("shard_id").distinct().collect()]
-        if not present:
-            return
-        n_out = target_files_per_shard * len(present)
-        if time_cluster:
-            rewritten = df.repartitionByRange(
-                n_out, "shard_id", "timestamp"
-            ).sortWithinPartitions("shard_id", "timestamp")
-        else:
+
+        def staged(rows: DataFrame, n_shards: int) -> DataFrame:
+            n_out = target_files_per_shard * n_shards
+            if time_cluster:
+                return rows.repartitionByRange(
+                    n_out, "shard_id", "timestamp"
+                ).sortWithinPartitions("shard_id", "timestamp")
             # repartition on shard_id alone would put each shard in ONE
             # task (one file, knob ignored); an intra-shard salt splits
             # hot shards into up to target_files_per_shard files for
             # parallel reads
-            salted = df.withColumn(
+            salted = rows.withColumn(
                 "__salt",
                 F.pmod(F.xxhash64("id"), F.lit(target_files_per_shard)),
             )
-            rewritten = salted.repartition(n_out, "shard_id", "__salt").drop(
+            return salted.repartition(n_out, "shard_id", "__salt").drop(
                 "__salt"
             )
-        self._swap_shards(rewritten, present)
 
+        self._rewrite(staged=staged)
+
+    @_locked
     def delete_shards(self, shard_ids: Sequence) -> None:
         """Per-segment delete (reference S6: ``index.py:312-325`` deletes
         one bucket's file; here one shard = one partition directory).
-        Scheme-agnostic Hadoop FS delete — other shards' files untouched."""
-        self._read_schema = None
+        Scheme-agnostic Hadoop FS delete — other shards' files untouched.
+        Runs under the maintenance lease: a concurrent ``compact`` would
+        otherwise swap its staged copy of a deleted shard back in."""
         for sid in shard_ids:
-            fs, p = self._fs_path(f"{self._data_path}/shard_id={sid}")
-            fs.delete(p, True)
+            self._remove(f"{self._data_path}/shard_id={sid}")
 
-    @_locked
     def delete_older_than(self, cutoff) -> int:
         """Retention delete: drop rows with ``timestamp < cutoff``.
 
@@ -751,27 +814,10 @@ class SparkVectorLake:
         old rows cluster in old files); untouched shards are never
         rewritten. A shard left empty by retention is removed entirely.
         Returns the number of shards rewritten."""
-        self._check_no_leftover_trash()
-        df = self.load()
-        cutoff_col = F.lit(cutoff).cast("timestamp")
-        affected = [
-            r["shard_id"]
-            for r in df.filter(F.col("timestamp") < cutoff_col)
-            .select("shard_id")
-            .distinct()
-            .collect()
-        ]
-        if not affected:
-            return 0
-        kept = (
-            df.filter(F.col("shard_id").isin(list(affected)))
-            .filter(F.col("timestamp") >= cutoff_col)
-            .repartition("shard_id")
+        return self._rewrite(
+            leaving=F.col("timestamp") < F.lit(cutoff).cast("timestamp")
         )
-        self._swap_shards(kept, affected)
-        return len(affected)
 
-    @_locked
     def delete_ids(self, ids: Sequence) -> int:
         """Row-level delete by id — beyond the reference's segment-only
         deletes (S6/S8): GDPR-style point removal without rewriting the
@@ -780,49 +826,14 @@ class SparkVectorLake:
         a shard emptied by the delete is removed. Returns the number of
         shards rewritten.
 
-        At 100 TB the id list is a lookup table, not a literal: for a
-        handful of ids the ``isin`` prunes cheaply; for millions, load
-        them as a DataFrame and use a broadcast anti-join — this method
-        accepts either (a Python sequence or a single-column DataFrame)."""
-        self._check_no_leftover_trash()
-        df = self.load()
-        if isinstance(ids, DataFrame):
-            id_df = ids.toDF("__del_id")
-            hit = F.broadcast(id_df)
-            marked = df.join(
-                hit, df["id"] == hit["__del_id"], "left_semi"
-            )
-            affected = [
-                r["shard_id"]
-                for r in marked.select("shard_id").distinct().collect()
-            ]
-            if not affected:
-                return 0
-            kept = (
-                df.filter(F.col("shard_id").isin(list(affected)))
-                .join(hit, df["id"] == hit["__del_id"], "left_anti")
-                .repartition("shard_id")
-            )
-        else:
-            ids = list(ids)
-            affected = [
-                r["shard_id"]
-                for r in df.filter(F.col("id").isin(ids))
-                .select("shard_id")
-                .distinct()
-                .collect()
-            ]
-            if not affected:
-                return 0
-            kept = (
-                df.filter(F.col("shard_id").isin(list(affected)))
-                .filter(~F.col("id").isin(ids))
-                .repartition("shard_id")
-            )
-        self._swap_shards(kept, affected)
-        return len(affected)
+        ``ids`` is a Python sequence or a single-column DataFrame (at
+        100 TB the id list is a lookup table, not a literal). Either way
+        it is matched through one broadcast left-semi/left-anti join; a
+        Python sequence first becomes a one-column local DataFrame."""
+        if not isinstance(ids, DataFrame):
+            ids = self.spark.createDataFrame([(i,) for i in ids], "id string")
+        return self._rewrite(leaving=ids)
 
-    @_locked
     def upsert_batch(
         self,
         ids: Sequence[str],
@@ -856,107 +867,57 @@ class SparkVectorLake:
                 f"replace-by-id is ill-defined for a batch that contains "
                 f"the same id twice"
             )
-        ids, new_df = self._rows_df(vectors, metadata, documents, ids)
-        self._check_no_leftover_trash()
+        _, new_df = self._rows_df(vectors, metadata, documents, ids)
         # flush any rows a prior add_batch left pending: they must be
         # durable BEFORE the replace-by-id pass so (a) they stay visible
         # after the upsert (the delete-then-append upsert's trailing
         # persist() used to flush them) and (b) a pending row whose id
         # is in this batch gets REPLACED rather than resurrected by a
         # later persist (r06 review finding)
-        if self._pending:
-            self.persist()
+        self.persist()
         fs, data_p = self._fs_path(self._data_path)
         if not fs.exists(data_p):
             # pure insert into an empty store: a single append write is
             # already all-or-nothing for our purposes (no old versions
             # exist that a crash could lose)
-            self._pending.append(new_df)
-            self.persist()
-            return 0
-        routed_new = new_df.withColumn(
-            "shard_id", lsh_mod.shard_id_expr("`vector`", self.hyperplanes)
-        )
-        df = self.load()
-        # a huge replacement batch would inline thousands of isin
-        # literals into the plan — switch to the broadcast semi/anti
-        # form delete_ids already uses (same cutoff rationale)
-        if len(ids) > 1000:
-            id_df = F.broadcast(
-                self.spark.createDataFrame(
-                    [(i,) for i in ids], "__up_id string"
-                )
-            )
-            hit = df.join(id_df, df["id"] == id_df["__up_id"], "left_semi")
-            kept_pred = None
+            self._append(new_df)
+            n_old = 0
         else:
-            hit = df.filter(F.col("id").isin(ids))
-            kept_pred = ~F.col("id").isin(ids)
-        old_shards = {
-            r["shard_id"]
-            for r in hit.select("shard_id").distinct().collect()
-        }
-        new_shards = {
-            r["shard_id"]
-            for r in routed_new.select("shard_id").distinct().collect()
-        }
-        target = sorted(old_shards | new_shards)
-        cols = [f.name for f in LAKE_SCHEMA.fields] + ["shard_id"]
-        survivors = df.filter(F.col("shard_id").isin(target))
-        if kept_pred is not None:
-            survivors = survivors.filter(kept_pred)
-        else:
-            survivors = survivors.join(
-                id_df, survivors["id"] == id_df["__up_id"], "left_anti"
+            n_old = self._rewrite(
+                leaving=new_df.select("id"),
+                arriving=new_df.withColumn("shard_id", self._route()),
             )
-        merged = (
-            survivors.select(cols)
-            .unionByName(routed_new.select(cols))
-            .repartition("shard_id")
-        )
-        self._swap_shards(merged, target)
         self._write_meta({})
-        return len(old_shards)
+        return n_old
 
     def delete(self) -> None:
         """S8 parity: remove the dataset (any URI scheme)."""
+        self._remove(self.location)
+
+    def _remove(self, path: str) -> None:
+        """Recursive delete of a store directory (a shard or the store)."""
         self._read_schema = None
-        fs, p = self._fs_path(self.location)
+        fs, p = self._fs_path(path)
         fs.delete(p, True)
 
 
 class SparkPartition(SparkVectorLake):
     """Reference ``Partition`` parity (index.py:592-607): user-directed
     partitioning by an explicit key instead of LSH — exactly one logical
-    bucket per key value."""
+    bucket per key value. Only routing (every row lands in
+    ``shard_id = partition_key``) and probing (a query reads that one
+    shard) differ; ingest, ``query`` (dimension check, ``where=``) and
+    maintenance are the base store's."""
 
     def __init__(self, spark: SparkSession, location: str, partition_key: str, dimension: int):
         super().__init__(spark, location, dimension, approx_shards=2)
         self.partition_key = partition_key
 
-    def persist(self, **attrs) -> None:
-        if not self._pending:
-            return
-        df = self._pending[0]
-        for extra in self._pending[1:]:
-            df = df.unionByName(extra)
-        routed = df.withColumn("shard_id", F.lit(self.partition_key))
-        (
-            routed.write.mode("append")
-            .option("compression", "gzip")
-            .partitionBy("shard_id")
-            .parquet(self._data_path)
-        )
-        self._pending = []
-        self._read_schema = None
-        self._write_meta(attrs)
+    def _route(self):
+        return F.lit(self.partition_key)
 
-    def query(self, vector: Sequence[float], k: int = 4, n_probes: int = 1) -> DataFrame:
-        pruned = self.load().filter(F.col("shard_id") == self.partition_key)
-        return topk_cosine(
-            pruned, [float(x) for x in vector], k, vec_col="vector", id_col="id",
-            keep_cols=("metadata", "document", "timestamp", "vector"),
-        )
+    def _probes(self, vector: Sequence[float], n_probes: int) -> list:
+        return [self.partition_key]
 
 
 def _json_safe(v):
@@ -969,4 +930,6 @@ def _json_safe(v):
         return [_json_safe(x) for x in v]
     if isinstance(v, dict):
         return {k: _json_safe(x) for k, x in v.items()}
-    return v
+    if v is None or isinstance(v, (str, int, float)):
+        return v
+    return str(v)
