@@ -76,6 +76,10 @@ def test_partition_store(spark, tmp_path, rng):
     part.persist()
     hits = part.query(vecs[3], k=2).collect()
     assert hits[0]["id"] == ids[3]
+    # the batched path reads the same one shard (the _probes hook)
+    qdf = spark.createDataFrame([(7, vecs[3])], "query_id long, qv array<double>")
+    got = part.query_batch(qdf, k=2).filter("rn = 1").collect()
+    assert [(r["query_id"], r["id"]) for r in got] == [(7, ids[3])]
 
 
 def test_compact_reduces_files(spark, tmp_path, rng):
@@ -236,6 +240,8 @@ def test_delete_ids_rewrites_only_affected_shards(spark, tmp_path, rng):
     assert {r["id"] for r in lake.load().select("id").collect()} == left - set(more)
     # no-op on unknown ids
     assert lake.delete_ids(["nope-1", "nope-2"]) == 0
+    # non-string ids are accepted and compared as strings
+    assert lake.delete_ids([1, 2]) == 0
 
 
 def test_swap_shards_crash_recovery(spark, tmp_path, rng, monkeypatch):
@@ -856,7 +862,10 @@ def test_concurrent_mutator_fails_fast_and_loses_nothing(
     silently drop the first writer's shards. Covers all four stage+swap
     paths and ``delete_shards`` (a shard it deletes between a compact's
     load and swap would be swapped back in), and proves the store is
-    byte-identical after the refusals."""
+    byte-identical after the refusals — also when the refused upsert
+    has rows pending from ``add_batch`` (they must not be flushed) or
+    targets a store with no data yet (a second insert would duplicate
+    the ids)."""
     import pytest as _pytest
 
     loc = str(tmp_path / "lake")
@@ -866,9 +875,13 @@ def test_concurrent_mutator_fails_fast_and_loses_nothing(
     writer_a.persist()
 
     writer_b = SparkVectorLake(spark, loc, dimension=4, approx_shards=4)
+    writer_c = SparkVectorLake(spark, loc, dimension=4, approx_shards=4)
+    writer_c.add_batch(vecs[:5])  # pending, not yet persisted
     with writer_a._maintenance_lock():  # writer A mid-maintenance
         with _pytest.raises(IOError, match="_maintenance.lock"):
             writer_b.upsert_batch([ids[0]], [vecs[1]])
+        with _pytest.raises(IOError, match="single-writer"):
+            writer_c.upsert_batch([ids[0]], [vecs[1]])
         with _pytest.raises(IOError, match="single-writer"):
             writer_b.compact()
         with _pytest.raises(IOError, match="single-writer"):
@@ -891,6 +904,14 @@ def test_concurrent_mutator_fails_fast_and_loses_nothing(
     assert writer_b.upsert_batch([ids[0]], [vecs[1]]) == 1
     writer_b.compact()
     assert writer_b.count() == 30
+
+    empty_loc = str(tmp_path / "empty")
+    first = SparkVectorLake(spark, empty_loc, dimension=4, approx_shards=4)
+    second = SparkVectorLake(spark, empty_loc, dimension=4, approx_shards=4)
+    with first._maintenance_lock():
+        with _pytest.raises(IOError, match="single-writer"):
+            second.upsert_batch([ids[0]], [vecs[0]])
+    assert second.count() == 0
 
 
 def test_maintenance_lock_released_on_failure(spark, tmp_path, rng):

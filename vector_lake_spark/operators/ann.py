@@ -531,14 +531,13 @@ class IVFIndex:
             int(k): int(v) for k, v in meta.get("counts", {}).items()
         } or None
 
-    @classmethod
-    def _write_meta(cls, spark, location, centroids, vec_col, id_col, counts):
-        """The one sidecar serialization (``build`` and ``append``)."""
-        write_json(spark, f"{location}/{cls.SIDECAR}", {
-            "centroids": centroids,
-            "vec_col": vec_col,
-            "id_col": id_col,
-            "counts": {str(k): v for k, v in counts.items()},
+    def _write_meta(self) -> None:
+        """Rewrite the sidecar from this index's state (``append``)."""
+        write_json(self.spark, f"{self.location}/{self.SIDECAR}", {
+            "centroids": self.centroids,
+            "vec_col": self.vec_col,
+            "id_col": self.id_col,
+            "counts": {str(k): v for k, v in self.counts.items()},
         })
 
     @classmethod
@@ -593,7 +592,12 @@ class IVFIndex:
             .agg(F.count(F.lit(1)).alias("n"))
             .collect()
         }
-        cls._write_meta(spark, location, centroids, vec_col, id_col, counts)
+        write_json(spark, f"{location}/{cls.SIDECAR}", {
+            "centroids": centroids,
+            "vec_col": vec_col,
+            "id_col": id_col,
+            "counts": {str(k): v for k, v in counts.items()},
+        })
         return cls(spark, location)
 
     def append(self, df: DataFrame) -> dict:
@@ -645,10 +649,7 @@ class IVFIndex:
             for cid, n in appended.items():
                 merged[cid] = merged.get(cid, 0) + n
             self.counts = merged
-        self._write_meta(
-            self.spark, self.location, self.centroids, self.vec_col,
-            self.id_col, self.counts,
-        )
+        self._write_meta()
         # imbalance from the maintained counts; the disk-vs-sidecar
         # mutation audit stays in an explicit drift() call, which is the
         # one place a full recount is the point

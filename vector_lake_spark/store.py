@@ -49,9 +49,10 @@ Write side: every mutation lands in one of three places, which are also
 the only places that clear the cached read schema —
 ``_append`` (route + shard-clustered gzip append: ``persist``, the
 ``stream_ingest`` micro-batch, ``upsert_batch`` into an empty store),
-``_rewrite`` → ``_swap_shards`` (staged rewrite of the touched shards under
-the maintenance lease: ``compact``, ``delete_older_than``, ``delete_ids``,
-``upsert_batch``) and ``_remove`` (``delete_shards``, ``delete``).
+``_rewrite`` → ``_swap_shards`` (staged rewrite of the touched shards:
+``compact``, ``delete_older_than``, ``delete_ids``, ``upsert_batch``) and
+``_remove`` (``delete_shards``, ``delete``). Every mutator that rewrites or
+removes shards runs wholly under the maintenance lease (``_locked``).
 ``SparkPartition`` overrides only routing (``_route``) and probing
 (``_probes``).
 """
@@ -85,13 +86,16 @@ LAKE_SCHEMA = T.StructType(
 
 
 def _locked(fn):
-    """Run a maintenance method under the store's single-writer lease
-    (``_maintenance_lock``) — applied to ``_rewrite`` and
-    ``delete_shards``."""
+    """Run a shard-rewriting or shard-removing mutator (``compact``,
+    ``delete_older_than``, ``delete_ids``, ``upsert_batch``,
+    ``delete_shards``) wholly under the store's single-writer lease
+    (``_maintenance_lock``), after the one leftover-trash check: a
+    refused call has changed nothing."""
 
     @functools.wraps(fn)
     def wrapper(self, *args, **kwargs):
         with self._maintenance_lock():
+            self._check_no_leftover_trash()
             return fn(self, *args, **kwargs)
 
     return wrapper
@@ -412,8 +416,6 @@ class SparkVectorLake:
         import numpy as np
         import pandas as pd
 
-        from vector_lake_spark.operators.ann import multiprobe_shards
-
         # "Small by definition" must be enforced, not assumed: the batch
         # is collected driver-side and broadcast as numpy matrices, so an
         # unbounded queries_df would OOM the driver (r04 VERDICT). Mirror
@@ -431,7 +433,7 @@ class SparkVectorLake:
                 f"tables, or raise max_queries explicitly if the driver "
                 f"can hold the batch."
             )
-        by_shard: dict[int, tuple[list, "np.ndarray"]] = {}
+        by_shard: dict[str, tuple[list, "np.ndarray"]] = {}
         for r in qrows:
             qv = np.asarray(r["qv"], dtype=np.float64)
             if qv.shape[0] != self.dimension:
@@ -439,8 +441,10 @@ class SparkVectorLake:
                     f"query {r['query_id']} has dimension {qv.shape[0]}, "
                     f"store expects {self.dimension}"
                 )
-            for shard in multiprobe_shards(qv, self.hyperplanes, n_probes):
-                ids, mats = by_shard.setdefault(shard, ([], []))
+            # keyed by str: partition keys are strings on the driver but
+            # may read back typed (a numeric-looking key infers as int)
+            for shard in self._probes(qv, n_probes):
+                ids, mats = by_shard.setdefault(str(shard), ([], []))
                 ids.append(r["query_id"])
                 mats.append(qv)
         shard_mats = {
@@ -455,7 +459,7 @@ class SparkVectorLake:
             for pdf in batches:
                 out_qid, out_pos, out_score = [], [], []
                 for shard, grp in pdf.groupby("shard_id"):
-                    entry = bc.value.get(int(shard))
+                    entry = bc.value.get(str(shard))
                     if entry is None or len(grp) == 0:
                         continue
                     qids, qmat = entry
@@ -611,8 +615,8 @@ class SparkVectorLake:
         the two renames leaves that shard's only copy in the trash path,
         and the next swap REFUSES to start until it is recovered (renamed
         back) or explicitly deleted. A shard with no rewritten rows is
-        simply removed (retention can empty a shard). Its one caller,
-        ``_rewrite``, has already refused on leftover trash."""
+        simply removed (retention can empty a shard). Its callers have
+        already refused on leftover trash (``_locked``)."""
         self._read_schema = None
         tmp = f"{self.location}/_rewrite_tmp"
         trash_root = f"{self.location}/_trash"
@@ -654,10 +658,10 @@ class SparkVectorLake:
         """Refuse maintenance while ``{location}/_trash`` exists: after a
         crash mid-swap it holds the ONLY copy of one or more shards, and
         it must be recovered (renamed back) or explicitly deleted by the
-        operator first.  Checked at ``_rewrite``'s entry, before
-        ``load()`` — not inside ``_swap_shards`` — because a crash that
-        trashed every populated shard leaves ``load()`` empty and the
-        swap unreached."""
+        operator first.  Checked once at each leased mutator's entry
+        (``_locked``), before ``load()`` — not inside ``_swap_shards`` —
+        because a crash that trashed every populated shard leaves
+        ``load()`` empty and the swap unreached."""
         trash_root = f"{self.location}/_trash"
         fs, trash_root_p = self._fs_path(trash_root)
         if not fs.exists(trash_root_p):
@@ -694,10 +698,10 @@ class SparkVectorLake:
             "Inspect and recover or delete it manually, then retry."
         )
 
-    @_locked
     def _rewrite(self, leaving=None, arriving=None, staged=None) -> int:
         """The one shard-rewrite path (``compact``, ``delete_older_than``,
-        ``delete_ids``, ``upsert_batch``), under the maintenance lease.
+        ``delete_ids``, ``upsert_batch``); its callers hold the
+        maintenance lease and have run the trash check (``_locked``).
 
         ``leaving`` names the rows that leave: a Column predicate over
         store rows, or a one-column DataFrame of ids matched through a
@@ -713,7 +717,6 @@ class SparkVectorLake:
         installed by ``_swap_shards``; a shard left empty is removed.
         Returns the number of touched shards that held a leaving row (0
         when nothing is touched)."""
-        self._check_no_leftover_trash()
         df = self.load()
         if isinstance(leaving, DataFrame):
             ids = F.broadcast(leaving.toDF("__leaving_id"))
@@ -755,6 +758,7 @@ class SparkVectorLake:
         self._swap_shards(rewritten, list(touched))
         return sum(touched.values())
 
+    @_locked
     def compact(
         self,
         target_files_per_shard: int = 1,
@@ -806,6 +810,7 @@ class SparkVectorLake:
         for sid in shard_ids:
             self._remove(f"{self._data_path}/shard_id={sid}")
 
+    @_locked
     def delete_older_than(self, cutoff) -> int:
         """Retention delete: drop rows with ``timestamp < cutoff``.
 
@@ -818,6 +823,7 @@ class SparkVectorLake:
             leaving=F.col("timestamp") < F.lit(cutoff).cast("timestamp")
         )
 
+    @_locked
     def delete_ids(self, ids: Sequence) -> int:
         """Row-level delete by id — beyond the reference's segment-only
         deletes (S6/S8): GDPR-style point removal without rewriting the
@@ -829,11 +835,15 @@ class SparkVectorLake:
         ``ids`` is a Python sequence or a single-column DataFrame (at
         100 TB the id list is a lookup table, not a literal). Either way
         it is matched through one broadcast left-semi/left-anti join; a
-        Python sequence first becomes a one-column local DataFrame."""
+        Python sequence first becomes a one-column local DataFrame of
+        the ids as strings (the store's ``id`` type)."""
         if not isinstance(ids, DataFrame):
-            ids = self.spark.createDataFrame([(i,) for i in ids], "id string")
+            ids = self.spark.createDataFrame(
+                [(str(i),) for i in ids], "id string"
+            )
         return self._rewrite(leaving=ids)
 
+    @_locked
     def upsert_batch(
         self,
         ids: Sequence[str],
