@@ -5,7 +5,7 @@
 A 100 TB media corpus is processed in exactly this order: the cheap
 metadata pass (`probe_media` — container/codec/dims/duration, no
 entropy decode) routes payloads; only the decodable survivors pay
-frame decode; image stats run the per-codec Arrow operators. All
+frame decode; image stats run one Arrow operator whatever the codec. All
 decoders are this repo's own stdlib/numpy codecs (jpeg.py, gif.py,
 avi.py, mp4.py, mkv.py probes) — no PIL/ffmpeg anywhere.
 """
@@ -31,8 +31,7 @@ def main():
     from vector_lake_spark.jpeg import encode_jpeg, encode_jpeg_progressive
     from vector_lake_spark.mp4 import encode_mp4_mjpeg
     from vector_lake_spark.multimodal import (
-        extract_gif_features,
-        extract_jpeg_features,
+        extract_image_stats,
         extract_video_frames,
         probe_media,
     )
@@ -65,16 +64,14 @@ def main():
     img = rng.integers(0, 256, size=(32, 48, 3), dtype=np.uint8)
     pal = rng.integers(0, 256, size=(32, 3), dtype=np.uint8)
     gif_img = pal[rng.integers(0, 32, size=(24, 40))]
-    jpegs = spark.createDataFrame(
-        [(10, bytearray(encode_jpeg_progressive(img, 90)))],
+    images = spark.createDataFrame(
+        [
+            (10, bytearray(encode_jpeg_progressive(img, 90))),
+            (20, bytearray(encode_gif(gif_img))),
+        ],
         "media_id long, payload binary",
     )
-    gifs = spark.createDataFrame(
-        [(20, bytearray(encode_gif(gif_img)))],
-        "media_id long, payload binary",
-    )
-    extract_jpeg_features(jpegs).show()
-    extract_gif_features(gifs).show()
+    extract_image_stats(images).show()
 
     spark.stop()
 

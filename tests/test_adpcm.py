@@ -1,6 +1,6 @@
 """IMA/DVI ADPCM (`vector_lake_spark.adpcm`, WAV tag 0x0011): spec
 table arithmetic, encode→decode tracking, block/stereo layout, the WAV
-integration through `multimodal.decode_wav`, and the crafted-nibble
+integration through `multimodal.audio_stats`, and the crafted-nibble
 exact-decode regime the mm_wav_depths oracle relies on."""
 
 import struct
@@ -16,7 +16,7 @@ from vector_lake_spark.adpcm import (
     ima_adpcm_encode,
     mux_ima_adpcm_wav,
 )
-from vector_lake_spark.multimodal import decode_wav
+from vector_lake_spark.multimodal import audio_stats
 
 
 def test_spec_tables():
@@ -76,7 +76,7 @@ def test_wav_integration_with_fact_trim():
     sig = (np.cos(np.arange(n) / 11.0) * 3000).astype(np.int64)
     data, ba = ima_adpcm_encode(sig, 1, 505)
     wav = mux_ima_adpcm_wav(data, 11025, 1, ba, n)
-    info = decode_wav(wav)
+    info = audio_stats(wav)
     assert info["codec"] == "ima_adpcm"
     assert info["sample_rate"] == 11025
     assert info["n_samples"] == n  # fact chunk trims the padding
@@ -101,13 +101,13 @@ def test_validation_errors():
         + b"data" + struct.pack("<I", 0)
     )
     with pytest.raises(NotImplementedError, match="format tag 85"):
-        decode_wav(wav)
+        audio_stats(wav)
 
 
 def test_ms_adpcm_roundtrip_and_wav():
     """MS ADPCM (r10): encode→decode tracking on a smooth signal, the
     two verbatim header samples, stereo per-nibble interleave, and the
-    WAV path through decode_wav with fact-chunk trim."""
+    WAV path through audio_stats with fact-chunk trim."""
     from vector_lake_spark.adpcm import (
         ms_adpcm_decode,
         ms_adpcm_encode,
@@ -134,7 +134,7 @@ def test_ms_adpcm_roundtrip_and_wav():
     n = 1234
     data3, ba3 = ms_adpcm_encode(sig[:n], 1, 500)
     wav = mux_ms_adpcm_wav(data3, 22050, 1, ba3, n)
-    info = decode_wav(wav)
+    info = audio_stats(wav)
     assert info["codec"] == "ms_adpcm" and info["n_samples"] == n
     assert info["sample_rate"] == 22050
 

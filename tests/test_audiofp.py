@@ -89,7 +89,7 @@ def test_wav_roundtrip_and_downmix():
 def test_non_pcm_routing_g711(spark_noop=None):
     """r12 (VERDICT r11 #2): the integer-PCM-only gate is CLOSED —
     G.711 WAV routes through the ext RIFF walk to the same linear
-    samples decode_wav reports stats over."""
+    samples audio_stats reports stats over."""
     from vector_lake_spark.g711 import ulaw_decode, ulaw_encode
     from vector_lake_spark.multimodal import encode_wav_ext
 

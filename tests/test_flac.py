@@ -15,12 +15,12 @@ import pytest
 from vector_lake_spark.flac import (
     _crc8,
     _crc16,
-    decode_flac,
     decode_flac_samples,
     encode_flac,
     is_flac,
     probe_flac,
 )
+from vector_lake_spark.multimodal import audio_stats
 
 
 class W:
@@ -259,10 +259,10 @@ def test_probe_and_stats_contract():
     info = probe_flac(f)
     assert (info["sample_rate"], info["n_channels"]) == (16000, 2)
     assert info["bits_per_sample"] == 16 and info["n_samples"] == 400
-    stats = decode_flac(f)
+    stats = audio_stats(f)
     assert stats == {
         "sample_rate": 16000, "n_channels": 2, "n_samples": 400,
-        "duration_ms": 25, "rms": 100.0,
+        "duration_ms": 25, "rms": 100.0, "codec": "flac",
     }
 
 
@@ -277,7 +277,24 @@ def test_encoder_input_validation():
     with pytest.raises(ValueError, match="20-bit"):
         encode_flac(np.zeros((4, 1), dtype=np.int64), 0, 16)
     f = encode_flac(np.zeros((4, 1), dtype=np.int64), (1 << 20) - 1, 16)
-    assert decode_flac(f)["sample_rate"] == (1 << 20) - 1
+    assert audio_stats(f)["sample_rate"] == (1 << 20) - 1
+
+
+def test_audio_stats_match_the_former_flac_stats():
+    """The one audio stats entry reports a FLAC's stats unchanged from
+    the former FLAC-only stats path (values recorded from it): 24-bit
+    stereo, where float64 square sums are inexact, and 16-bit mono."""
+    rng = np.random.default_rng(8)
+    s = rng.integers(-(1 << 23), 1 << 23, (3000, 2))
+    assert audio_stats(encode_flac(s, 48000, 24)) == {
+        "sample_rate": 48000, "n_channels": 2, "n_samples": 3000,
+        "duration_ms": 62, "rms": 4751278.79536, "codec": "flac",
+    }
+    t = (3000 * np.sin(np.arange(4410) * 0.05)).astype(np.int64)[:, None]
+    assert audio_stats(encode_flac(t, 44100, 16)) == {
+        "sample_rate": 44100, "n_channels": 1, "n_samples": 4410,
+        "duration_ms": 100, "rms": 2118.562723, "codec": "flac",
+    }
 
 
 def test_audio_dispatch_through_spark(spark):
@@ -287,10 +304,7 @@ def test_audio_dispatch_through_spark(spark):
     import io
     import wave
 
-    from vector_lake_spark.multimodal import (
-        _decode_audio,
-        extract_audio_features,
-    )
+    from vector_lake_spark.multimodal import extract_audio_stats
 
     buf = io.BytesIO()
     with wave.open(buf, "wb") as w:
@@ -308,16 +322,16 @@ def test_audio_dispatch_through_spark(spark):
         [(1, bytearray(buf.getvalue())), (2, bytearray(flac))],
         "media_id long, payload binary",
     )
-    got = {r["media_id"]: r for r in extract_audio_features(df).collect()}
+    got = {r["media_id"]: r for r in extract_audio_stats(df).collect()}
     assert got[1]["sample_rate"] == 16000 and got[1]["rms"] == 900.0
     assert got[2]["sample_rate"] == 22050 and got[2]["n_channels"] == 2
     assert got[2]["rms"] == 70.0 and got[2]["n_samples"] == 150
     with pytest.raises(NotImplementedError, match="unrecognized audio"):
-        _decode_audio(b"Qfmt....")
+        audio_stats(b"Qfmt....")
     # an Ogg magic is RECOGNIZED since late r09: a truncated page is
     # corrupt (ValueError), a valid stream names its codec gate
     with pytest.raises(ValueError, match="truncated Ogg"):
-        _decode_audio(b"OggS....")
+        audio_stats(b"OggS....")
 
 
 # ---------------------------------------------------------------------------

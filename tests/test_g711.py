@@ -1,5 +1,5 @@
 """G.711 companders (`vector_lake_spark.g711`) and the extended WAV
-formats (`multimodal._decode_wav_ext`): exhaustive cross-checks against
+formats (`multimodal._decode_wav_ext_samples`): exhaustive cross-checks against
 the stdlib `audioop` C implementation where it exists (removed in
 Python 3.13 — the tests skip there, the exhaustive equality having been
 recorded on 3.11), level-exactness invariants that hold everywhere, and
@@ -18,7 +18,7 @@ from vector_lake_spark.g711 import (
     ulaw_encode,
     ulaw_level,
 )
-from vector_lake_spark.multimodal import decode_wav, encode_wav_ext
+from vector_lake_spark.multimodal import audio_stats, encode_wav_ext
 
 try:
     import audioop  # stdlib C reference, deprecated; gone in 3.13
@@ -98,7 +98,7 @@ class TestCodecInvariants:
 
 
 # ---------------------------------------------------------------------------
-# extended WAV formats through decode_wav
+# extended WAV formats through audio_stats
 # ---------------------------------------------------------------------------
 
 
@@ -106,7 +106,7 @@ class TestExtWav:
     def test_ulaw_square_wave_rms_exact(self):
         amp = ulaw_level(4, 11)
         sq = np.array([amp, -amp] * 30, dtype=np.int16)
-        out = decode_wav(encode_wav_ext(sq, 8000, "ulaw"))
+        out = audio_stats(encode_wav_ext(sq, 8000, "ulaw"))
         assert out["codec"] == "ulaw"
         assert out["rms"] == float(amp)
         assert out["n_samples"] == 60
@@ -114,14 +114,14 @@ class TestExtWav:
     def test_alaw_square_wave_rms_exact(self):
         amp = alaw_level(5, 3)
         sq = np.array([amp, -amp] * 30, dtype=np.int16)
-        out = decode_wav(encode_wav_ext(sq, 8000, "alaw"))
+        out = audio_stats(encode_wav_ext(sq, 8000, "alaw"))
         assert out["codec"] == "alaw"
         assert out["rms"] == float(amp)
 
     @pytest.mark.parametrize("fmt,bits", [("float32", 32), ("float64", 64)])
     def test_ieee_float_roundtrip(self, fmt, bits):
         x = np.array([0.5, -0.5] * 25)  # powers of two: exact in f32
-        out = decode_wav(encode_wav_ext(x, 44100, fmt))
+        out = audio_stats(encode_wav_ext(x, 44100, fmt))
         assert out["codec"] == fmt
         assert out["rms"] == 0.5
         assert out["sample_rate"] == 44100
@@ -129,7 +129,7 @@ class TestExtWav:
     def test_stereo_frame_count(self):
         amp = alaw_level(2, 7)
         x = np.array([amp, -amp] * 10, dtype=np.int16)
-        out = decode_wav(encode_wav_ext(x, 16000, "alaw", n_channels=2))
+        out = audio_stats(encode_wav_ext(x, 16000, "alaw", n_channels=2))
         assert out["n_channels"] == 2
         assert out["n_samples"] == 10  # 20 samples / 2 channels
 
@@ -154,7 +154,7 @@ class TestExtWav:
         out += b"fmt " + struct.pack("<I", len(fmt)) + fmt
         out += b"data" + struct.pack("<I", len(data)) + data
         struct.pack_into("<I", out, 4, len(out) - 8)
-        got = decode_wav(bytes(out))
+        got = audio_stats(bytes(out))
         assert got["codec"] == "ulaw"
         assert got["rms"] == float(amp)
 
@@ -173,7 +173,7 @@ class TestExtWav:
         out += b"fmt " + struct.pack("<I", len(fmt)) + fmt
         out += b"data" + struct.pack("<I", len(data)) + data
         struct.pack_into("<I", out, 4, len(out) - 8)
-        got = decode_wav(bytes(out))
+        got = audio_stats(bytes(out))
         assert got["codec"] == "pcm"
         assert got["rms"] == float(amp)
         assert got["n_samples"] == 32
@@ -184,7 +184,7 @@ class TestExtWav:
         out += b"data" + struct.pack("<I", 0)
         struct.pack_into("<I", out, 4, len(out) - 8)
         with pytest.raises(ValueError, match="fmt chunk too short"):
-            decode_wav(bytes(out))
+            audio_stats(bytes(out))
 
     def test_riff_size_covers_pad_byte(self):
         """Odd-length data chunks get a pad byte that the declared RIFF
@@ -201,22 +201,22 @@ class TestExtWav:
         )
         struct.pack_into("<H", base, 20, 0x55)  # MP3-in-WAV
         with pytest.raises(NotImplementedError, match="format tag 85"):
-            decode_wav(bytes(base))
+            audio_stats(bytes(base))
         # ADPCM tags decode since r10; a re-tagged G.711 stream (8-bit
         # "nibbles") is corrupt input for them, not a gate
         struct.pack_into("<H", base, 20, 0x11)
         with pytest.raises(ValueError, match="8-bit nibbles"):
-            decode_wav(bytes(base))
+            audio_stats(bytes(base))
 
     def test_corrupt_riff_is_valueerror(self):
         with pytest.raises(ValueError):
-            decode_wav(b"RIFF\x04\x00\x00\x00WAVE")
+            audio_stats(b"RIFF\x04\x00\x00\x00WAVE")
         base = bytearray(
             encode_wav_ext(np.zeros(4, dtype=np.int16), 8000, "alaw")
         )
         struct.pack_into("<H", base, 34, 16)  # G.711 claiming 16-bit
         with pytest.raises(ValueError, match="16-bit"):
-            decode_wav(bytes(base))
+            audio_stats(bytes(base))
 
     def test_float_odd_width_rejected(self):
         base = bytearray(
@@ -224,7 +224,7 @@ class TestExtWav:
         )
         struct.pack_into("<H", base, 34, 16)
         with pytest.raises(ValueError, match="16-bit"):
-            decode_wav(bytes(base))
+            audio_stats(bytes(base))
 
     def test_pcm_path_reports_codec(self):
         import io
@@ -236,4 +236,4 @@ class TestExtWav:
             w.setsampwidth(2)
             w.setframerate(8000)
             w.writeframes(np.array([5, -5] * 4, dtype="<i2").tobytes())
-        assert decode_wav(buf.getvalue())["codec"] == "pcm"
+        assert audio_stats(buf.getvalue())["codec"] == "pcm"

@@ -9,13 +9,13 @@ import numpy as np
 import pytest
 
 from vector_lake_spark.gif import (
-    decode_gif,
     decode_gif_frames,
     decode_gif_pixels,
     encode_gif,
     probe_gif,
     _lzw_encode,
 )
+from vector_lake_spark.multimodal import image_stats
 
 
 # ---------------------------------------------------------------------------
@@ -120,7 +120,7 @@ def test_too_many_colors_raises():
 def test_stats_decode_contract():
     img = np.zeros((4, 8, 3), dtype=np.uint8)
     img[:, :, 0] = 100
-    d = decode_gif(encode_gif(img))
+    d = image_stats(encode_gif(img))
     assert (d["width"], d["height"]) == (8, 4)
     assert d["mean_r"] == 100.0 and d["mean_g"] == 0.0 and d["mean_b"] == 0.0
 
@@ -349,15 +349,13 @@ def test_probe_truncated_payloads_raise_by_name():
 
 
 def test_magic_dispatch_reaches_gif():
-    from vector_lake_spark.multimodal import _decode_image
-
     img = np.full((2, 3, 3), 200, dtype=np.uint8)
-    d = _decode_image(encode_gif(img))
+    d = image_stats(encode_gif(img))
     assert (d["width"], d["height"]) == (3, 2) and d["mean_r"] == 200.0
 
 
 def test_extract_gif_features_arrow_end_to_end(spark):
-    from vector_lake_spark.multimodal import extract_gif_features
+    from vector_lake_spark.multimodal import extract_image_stats
 
     imgs = []
     for seed in range(4):
@@ -368,7 +366,7 @@ def test_extract_gif_features_arrow_end_to_end(spark):
     df = spark.createDataFrame(rows, "media_id long, payload binary")
     got = {
         r["media_id"]: r
-        for r in extract_gif_features(df).collect()
+        for r in extract_image_stats(df).collect()
     }
     assert len(got) == 4
     for i, im in enumerate(imgs):

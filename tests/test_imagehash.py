@@ -364,7 +364,7 @@ def test_radius_zero_single_block_exact_dups(spark):
 
 
 def test_bmp_dispatch_validates_format():
-    """r10 review: non-24bpp BMPs must hit decode_bmp's named gate, not
+    """r10 review: non-24bpp BMPs must hit decode_bmp_pixels' named gate, not
     silently hash garbage."""
     import struct
 

@@ -27,7 +27,8 @@ import numpy as np
 import pytest
 
 from vector_lake_spark.avi import decode_avi_frames, probe_avi
-from vector_lake_spark.jpeg import decode_jpeg, decode_jpeg_pixels
+from vector_lake_spark.jpeg import decode_jpeg_pixels
+from vector_lake_spark.multimodal import image_stats
 
 # ---------------------------------------------------------------------------
 # JPEG fixture assembly (ITU-T T.81 Annex B segment layout)
@@ -142,7 +143,7 @@ def test_jpeg_interop_color_444_dc_only():
     assert np.all(px[:, :, 1] == exp_g)
     assert np.all(px[:, :, 2] == exp_b)
 
-    stats = decode_jpeg(_COLOR_444)
+    stats = image_stats(_COLOR_444)
     assert (stats["width"], stats["height"]) == (8, 8)
     assert stats["mean_r"] == float(exp_r)
 

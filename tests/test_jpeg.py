@@ -12,10 +12,10 @@ import pytest
 
 from vector_lake_spark.jpeg import (
     ZIGZAG,
-    decode_jpeg,
     decode_jpeg_pixels,
     encode_jpeg,
 )
+from vector_lake_spark.multimodal import image_stats
 
 
 def test_zigzag_is_the_standard_scan():
@@ -72,7 +72,7 @@ def test_noise_image_round_trips_within_quant_error():
 def test_stats_shape_matches_image_contract():
     img = np.full((10, 12, 3), 50, dtype=np.uint8)
     img[:, :, 1] = 100
-    d = decode_jpeg(encode_jpeg(img, 100))
+    d = image_stats(encode_jpeg(img, 100))
     assert (d["width"], d["height"]) == (12, 10)
     assert (d["mean_r"], d["mean_g"], d["mean_b"]) == (50.0, 100.0, 50.0)
 
@@ -105,7 +105,7 @@ def test_unsupported_features_raise_loudly():
 
 
 def test_jpeg_through_spark_arrow_boundary(spark):
-    from vector_lake_spark.multimodal import extract_jpeg_features
+    from vector_lake_spark.multimodal import extract_image_stats
 
     px1 = np.full((6, 4, 3), 0, dtype=np.uint8)
     px1[:, :, 0] = 200
@@ -115,7 +115,7 @@ def test_jpeg_through_spark_arrow_boundary(spark):
         (2, bytearray(encode_jpeg(px2, 100))),
     ]
     df = spark.createDataFrame(rows, "media_id long, payload binary")
-    out = {r["media_id"]: r for r in extract_jpeg_features(df).collect()}
+    out = {r["media_id"]: r for r in extract_image_stats(df).collect()}
     assert (out[1]["width"], out[1]["height"]) == (4, 6)
     assert (out[1]["mean_r"], out[1]["mean_g"], out[1]["mean_b"]) == (
         200.0,
@@ -126,10 +126,8 @@ def test_jpeg_through_spark_arrow_boundary(spark):
 
 
 def test_dispatch_recognizes_jpeg():
-    from vector_lake_spark.multimodal import _decode_image
-
     img = np.full((8, 8), 5, dtype=np.uint8)
-    d = _decode_image(encode_jpeg(img, 100))
+    d = image_stats(encode_jpeg(img, 100))
     assert (d["width"], d["height"], d["mean_r"]) == (8, 8, 5.0)
 
 
@@ -271,10 +269,9 @@ class TestProgressive:
 
     def test_dispatch_reaches_progressive(self):
         from vector_lake_spark.jpeg import encode_jpeg_progressive
-        from vector_lake_spark.multimodal import _decode_image
 
         img = np.full((8, 16, 3), 200, dtype=np.uint8)
-        d = _decode_image(encode_jpeg_progressive(img, 100))
+        d = image_stats(encode_jpeg_progressive(img, 100))
         assert (d["width"], d["height"]) == (16, 8)
         assert d["mean_r"] == 200.0
 

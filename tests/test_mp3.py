@@ -120,10 +120,22 @@ def test_coincidental_header_is_not_mp3():
     assert not is_mp3(one_frame[:4] + b"not mpeg payload at all")
     # nor a header whose single frame is truncated
     assert not is_mp3(one_frame[:-7])
-    from vector_lake_spark.multimodal import _decode_audio
+    from vector_lake_spark.multimodal import audio_stats
 
     with pytest.raises(NotImplementedError, match="unrecognized audio"):
-        _decode_audio(one_frame[:4] + b"not mpeg payload at all")
+        audio_stats(one_frame[:4] + b"not mpeg payload at all")
+
+
+def test_fingerprint_and_stats_agree_mp3_is_unsupported():
+    """An MP3 is legal but undecodable audio in every entry: the audio
+    fingerprint's decode raises the same named gate as the stats."""
+    from vector_lake_spark.multimodal import audio_stats
+    from vector_lake_spark.operators.audiofp import decode_wav_samples
+
+    mp3 = mux_mp3_frames(3, "1", 3, 9, 0)
+    for decode in (audio_stats, decode_wav_samples):
+        with pytest.raises(NotImplementedError):
+            decode(mp3)
 
 
 def test_truncated_real_mp3_routes_to_corrupt():
@@ -173,9 +185,9 @@ def test_id3_tagged_non_mpeg_is_not_mp3():
     assert not is_mp3(adts_aac)
     # and a REAL tagged stream still passes
     assert is_mp3(mux_mp3_frames(2, "1", 3, 9, 0, id3v2_bytes=10))
-    from vector_lake_spark.multimodal import _decode_audio
+    from vector_lake_spark.multimodal import audio_stats
     with pytest.raises(NotImplementedError, match="unrecognized audio"):
-        _decode_audio(id3 + adts_aac)
+        audio_stats(id3 + adts_aac)
 
 
 def test_single_frame_recognized_trailers():

@@ -43,7 +43,7 @@ def test_extract_image_features_batch_shape(media_df):
 
 def test_decode_stub_raises():
     with pytest.raises(NotImplementedError):
-        mm._decode_image(b"bytes")
+        mm.image_stats(b"bytes")
 
 
 def test_sample_video_frames(media_df):
@@ -779,17 +779,56 @@ def test_real_bmp_decode_through_spark(spark):
     """r05: uncompressed BMP decodes FOR REAL (stdlib struct) through the
     Arrow mapInPandas boundary — known solid-color pixels round-trip to
     exact channel means."""
-    from vector_lake_spark.multimodal import extract_bmp_features
+    from vector_lake_spark.multimodal import extract_image_stats
 
     rows = [
         (1, _make_bmp(5, 3, (200, 100, 50))),
         (2, _make_bmp(2, 2, (0, 255, 8))),
     ]
     df = spark.createDataFrame(rows, "media_id long, payload binary")
-    out = {r["media_id"]: r for r in extract_bmp_features(df).collect()}
+    out = {r["media_id"]: r for r in extract_image_stats(df).collect()}
     assert (out[1]["width"], out[1]["height"]) == (5, 3)
     assert (out[1]["mean_r"], out[1]["mean_g"], out[1]["mean_b"]) == (200.0, 100.0, 50.0)
     assert (out[2]["mean_r"], out[2]["mean_g"], out[2]["mean_b"]) == (0.0, 255.0, 8.0)
+
+
+def test_bmp_stats_match_per_row_reference():
+    """The BMP stats fold over the numpy pixel array equals the former
+    per-row Python byte sums (kept here as the reference) on random
+    pixels, odd widths (row padding) and both row orders."""
+    import struct
+
+    import numpy as np
+
+    from vector_lake_spark.multimodal import image_stats
+
+    def reference(payload):
+        off = struct.unpack_from("<I", payload, 10)[0]
+        w, h = struct.unpack_from("<ii", payload, 18)
+        h = abs(h)
+        stride = (w * 3 + 3) & ~3
+        tot = [0, 0, 0]
+        for r in range(h):
+            row = payload[off + r * stride : off + r * stride + w * 3]
+            tot = [tot[c] + sum(row[c::3]) for c in range(3)]
+        n = w * h
+        return {
+            "width": w, "height": h, "mean_r": round(tot[2] / n, 6),
+            "mean_g": round(tot[1] / n, 6), "mean_b": round(tot[0] / n, 6),
+        }
+
+    rng = np.random.default_rng(4)
+    for w, h in [(1, 1), (3, 5), (7, -4), (33, 17)]:
+        stride = (w * 3 + 3) & ~3
+        pixels = rng.integers(0, 256, stride * abs(h), dtype=np.uint8)
+        payload = (
+            b"BM"
+            + struct.pack("<IHHI", 54 + pixels.size, 0, 0, 54)
+            + struct.pack("<IiiHHIIiiII", 40, w, h, 1, 24, 0,
+                          pixels.size, 2835, 2835, 0, 0)
+            + pixels.tobytes()
+        )
+        assert image_stats(payload) == reference(payload), (w, h)
 
 
 def test_real_wav_decode_through_spark(spark):
@@ -797,13 +836,13 @@ def test_real_wav_decode_through_spark(spark):
     RMS of a known square wave are exact."""
     import math
 
-    from vector_lake_spark.multimodal import extract_wav_features
+    from vector_lake_spark.multimodal import extract_audio_stats
 
     square = [10000, -10000] * 800  # 1600 samples at 16 kHz = 100 ms
     df = spark.createDataFrame(
         [(7, _make_wav(16000, square))], "media_id long, payload binary"
     )
-    r = extract_wav_features(df).collect()[0]
+    r = extract_audio_stats(df).collect()[0]
     assert r["sample_rate"] == 16000
     assert r["n_samples"] == 1600
     assert r["duration_ms"] == 100
@@ -815,16 +854,16 @@ def test_wav_all_pcm_widths_decode():
     24-bit (sign-extended byte composition) and 32-bit PCM all decode;
     a known square wave's RMS is exact at every width, including
     amplitudes that only exist beyond 16 bits."""
-    from vector_lake_spark.multimodal import decode_wav
+    from vector_lake_spark.multimodal import audio_stats
 
     for width, amp in [(1, 100), (2, 30000), (3, 5_000_000), (4, 2_000_000_000)]:
         square = [amp, -amp] * 100
-        out = decode_wav(_make_wav(8000, square, width=width))
+        out = audio_stats(_make_wav(8000, square, width=width))
         assert out["n_samples"] == 200
         assert out["duration_ms"] == 25
         assert out["rms"] == pytest.approx(float(amp), rel=1e-9), width
     # negative edge: 24-bit most-negative value sign-extends correctly
-    out = decode_wav(_make_wav(8000, [-(1 << 23), -(1 << 23)], width=3))
+    out = audio_stats(_make_wav(8000, [-(1 << 23), -(1 << 23)], width=3))
     assert out["rms"] == pytest.approx(float(1 << 23))
     # unsupported widths still gate loudly by name (stdlib wave refuses
     # to WRITE width 5, so hand-assemble the RIFF header)
@@ -838,7 +877,7 @@ def test_wav_all_pcm_widths_decode():
         + b"data" + struct.pack("<I", len(data)) + data
     )
     with pytest.raises(NotImplementedError, match="40 bits"):
-        decode_wav(wav40)
+        audio_stats(wav40)
 
 
 def test_image_decode_gates_are_loud(spark):
@@ -847,18 +886,18 @@ def test_image_decode_gates_are_loud(spark):
     (gif.py), so a malformed GIF now fails structurally like a
     malformed JPEG, and only a genuinely unknown magic raises the
     honest NotImplementedError naming what decodes natively."""
-    from vector_lake_spark.multimodal import _decode_image
+    from vector_lake_spark.multimodal import image_stats
 
     with pytest.raises(ValueError):
-        _decode_image(b"\xff\xd8\xff\xe0fakejpeg")  # SOI but garbage
+        image_stats(b"\xff\xd8\xff\xe0fakejpeg")  # SOI but garbage
     with pytest.raises(ValueError):
-        _decode_image(b"GIF89a notsupported")  # GIF magic but garbage
+        image_stats(b"GIF89a notsupported")  # GIF magic but garbage
     with pytest.raises(ValueError):
         # r08: TIFF dispatches for real, so a malformed TIFF fails
         # structurally like the others
-        _decode_image(b"II*\x00unknown-tiff-ish")
+        image_stats(b"II*\x00unknown-tiff-ish")
     with pytest.raises(NotImplementedError, match="decode natively"):
-        _decode_image(b"ICO?unknown-magic")  # honestly unsupported
+        image_stats(b"ICO?unknown-magic")  # honestly unsupported
 
 
 def _make_png(pixels, color_type, filters):
@@ -916,18 +955,62 @@ def _make_png(pixels, color_type, filters):
     )
 
 
+def test_png_gray_alpha_decodes():
+    """PNG color type 4 (gray + alpha) is legal at depths 8 and 16: the
+    stats report the gray channel as all three means, and the image
+    hash's decoder reads the same gray plane; alpha enters neither."""
+    import struct
+    import zlib
+
+    import numpy as np
+
+    from vector_lake_spark.multimodal import image_stats
+    from vector_lake_spark.operators.imagehash import decode_image_gray
+
+    ga = np.array(
+        [[[10, 255], [20, 0], [30, 128]], [[40, 7], [50, 9], [60, 255]]],
+        dtype=np.uint8,
+    )  # 3x2, (gray, alpha) per pixel
+    d = image_stats(_make_png(ga, color_type=4, filters=[1, 4]))
+    assert d == {
+        "width": 3, "height": 2,
+        "mean_r": 35.0, "mean_g": 35.0, "mean_b": 35.0,
+    }
+    gray = decode_image_gray(_make_png(ga, color_type=4, filters=[0, 2]))
+    assert np.array_equal(gray, ga[:, :, 0].astype(np.float64))
+
+    def chunk(ctype, data):
+        return (
+            struct.pack(">I", len(data)) + ctype + data
+            + struct.pack(">I", zlib.crc32(ctype + data))
+        )
+
+    ga16 = ga.astype(">u2") * 257  # 16-bit gray+alpha, filter None rows
+    raw = b"".join(b"\x00" + row.tobytes() for row in ga16)
+    png16 = (
+        b"\x89PNG\r\n\x1a\n"
+        + chunk(b"IHDR", struct.pack(">IIBBBBB", 3, 2, 16, 4, 0, 0, 0))
+        + chunk(b"IDAT", zlib.compress(raw))
+        + chunk(b"IEND", b"")
+    )
+    assert image_stats(png16)["mean_g"] == 35.0 * 257
+    assert np.array_equal(
+        decode_image_gray(png16), ga16[:, :, 0].astype(np.float64)
+    )
+
+
 def test_png_decode_inverts_every_filter():
-    """decode_png must invert all five PNG filter types exactly — the
+    """The PNG decode must invert all five PNG filter types exactly — the
     test encoder applies a different filter per row over random RGB
     pixels and the decoded channel means must equal numpy's."""
     import numpy as np
 
-    from vector_lake_spark.multimodal import decode_png
+    from vector_lake_spark.multimodal import image_stats
 
     rng = np.random.RandomState(9)
     px = rng.randint(0, 256, size=(5, 7, 3)).astype("uint8")
     payload = _make_png(px, color_type=2, filters=[0, 1, 2, 3, 4])
-    d = decode_png(payload)
+    d = image_stats(payload)
     assert (d["width"], d["height"]) == (7, 5)
     assert d["mean_r"] == round(float(px[:, :, 0].mean()), 6)
     assert d["mean_g"] == round(float(px[:, :, 1].mean()), 6)
@@ -935,10 +1018,10 @@ def test_png_decode_inverts_every_filter():
 
     # grayscale and RGBA variants (alpha excluded from means)
     gray = rng.randint(0, 256, size=(4, 4, 1)).astype("uint8")
-    dg = decode_png(_make_png(gray, color_type=0, filters=[4, 3, 1, 2]))
+    dg = image_stats(_make_png(gray, color_type=0, filters=[4, 3, 1, 2]))
     assert dg["mean_r"] == dg["mean_b"] == round(float(gray.mean()), 6)
     rgba = rng.randint(0, 256, size=(3, 3, 4)).astype("uint8")
-    da = decode_png(_make_png(rgba, color_type=6, filters=[1, 4, 2]))
+    da = image_stats(_make_png(rgba, color_type=6, filters=[1, 4, 2]))
     assert da["mean_g"] == round(float(rgba[:, :, 1].mean()), 6)
 
     # explicit format gates (16-bit / palette / interlaced)
@@ -960,9 +1043,9 @@ def test_png_decode_inverts_every_filter():
     # combo the SPEC disallows is corrupt, not unimplemented
     for depth, color in [(16, 3), (4, 2), (2, 6), (3, 0)]:
         with pytest.raises(ValueError, match="illegal depth/color"):
-            decode_png(bad_header(depth, color, 0))
+            image_stats(bad_header(depth, color, 0))
     with pytest.raises(ValueError, match="interlace method"):
-        decode_png(bad_header(8, 2, 2))
+        image_stats(bad_header(8, 2, 2))
 
     # degenerate dimensions raise instead of emitting NaN means
     zero_ihdr = struct.pack(">IIBBBBB", 0, 1, 8, 2, 0, 0, 0)
@@ -973,7 +1056,7 @@ def test_png_decode_inverts_every_filter():
         + struct.pack(">I", _z.crc32(b"IHDR" + zero_ihdr))
     )
     with pytest.raises(ValueError, match="degenerate"):
-        decode_png(zero_png)
+        image_stats(zero_png)
 
 
 def test_real_png_decode_through_spark(spark):
@@ -981,7 +1064,7 @@ def test_real_png_decode_through_spark(spark):
     through the Arrow mapInPandas boundary."""
     import numpy as np
 
-    from vector_lake_spark.multimodal import extract_png_features
+    from vector_lake_spark.multimodal import extract_image_stats
 
     rng = np.random.RandomState(3)
     px1 = rng.randint(0, 256, size=(6, 4, 3)).astype("uint8")
@@ -991,7 +1074,7 @@ def test_real_png_decode_through_spark(spark):
         (2, _make_png(px2, color_type=2, filters=[0, 2])),
     ]
     df = spark.createDataFrame(rows, "media_id long, payload binary")
-    out = {r["media_id"]: r for r in extract_png_features(df).collect()}
+    out = {r["media_id"]: r for r in extract_image_stats(df).collect()}
     assert (out[1]["width"], out[1]["height"]) == (4, 6)
     assert out[1]["mean_r"] == round(float(px1[:, :, 0].mean()), 6)
     assert (out[2]["mean_r"], out[2]["mean_g"], out[2]["mean_b"]) == (
@@ -1489,7 +1572,7 @@ def test_palette_png_decodes_via_plte():
 
     import numpy as np
 
-    from vector_lake_spark.multimodal import decode_png
+    from vector_lake_spark.multimodal import image_stats
 
     pal = [(255, 0, 0), (0, 255, 0), (0, 0, 255)]
     idx = np.array([[0, 1, 2, 1], [2, 2, 0, 0]], dtype=np.uint8)
@@ -1510,7 +1593,7 @@ def test_palette_png_decodes_via_plte():
         + chunk(b"IDAT", _z.compress(raw))
         + chunk(b"IEND", b"")
     )
-    d = decode_png(payload)
+    d = image_stats(payload)
     expect = np.array([pal[i] for i in idx.flat], dtype=float).reshape(h, w, 3)
     assert (d["width"], d["height"]) == (w, h)
     assert d["mean_r"] == round(float(expect[:, :, 0].mean()), 6)
@@ -1525,7 +1608,7 @@ def test_palette_png_decodes_via_plte():
         + chunk(b"IEND", b"")
     )
     with pytest.raises(ValueError, match="palette index"):
-        decode_png(short)
+        image_stats(short)
 
 
 def _scd2_time_batches(spark, n=3):
@@ -1838,7 +1921,7 @@ def test_png_depth_and_interlace_variants():
 
     import numpy as np
 
-    from vector_lake_spark.multimodal import decode_png
+    from vector_lake_spark.multimodal import image_stats
 
     def chunk(ctype, data):
         return (
@@ -1930,49 +2013,49 @@ def test_png_depth_and_interlace_variants():
 
     # 16-bit RGB with every filter type (byte-level inversion at bpp=6)
     px16 = rng.randint(0, 65536, size=(5, 4, 3))
-    d = decode_png(png(px16, 16, 2, filters=[0, 1, 2, 3, 4]))
+    d = image_stats(png(px16, 16, 2, filters=[0, 1, 2, 3, 4]))
     assert (d["width"], d["height"]) == (4, 5)
     assert d["mean_r"] == round(float(px16[:, :, 0].mean()), 6)
     assert d["mean_b"] == round(float(px16[:, :, 2].mean()), 6)
 
     # 16-bit grayscale + 16-bit RGBA (alpha excluded)
     g16 = rng.randint(0, 65536, size=(3, 7, 1))
-    assert decode_png(png(g16, 16, 0, filters=[4, 3, 1]))["mean_g"] == round(
+    assert image_stats(png(g16, 16, 0, filters=[4, 3, 1]))["mean_g"] == round(
         float(g16.mean()), 6
     )
     a16 = rng.randint(0, 65536, size=(2, 3, 4))
-    assert decode_png(png(a16, 16, 6, filters=[1, 2]))["mean_g"] == round(
+    assert image_stats(png(a16, 16, 6, filters=[1, 2]))["mean_g"] == round(
         float(a16[:, :, 1].mean()), 6
     )
 
     # sub-byte grayscale: native-domain means at depths 1/2/4
     for depth in (1, 2, 4):
         gs = rng.randint(0, 1 << depth, size=(6, 11, 1))
-        out = decode_png(png(gs, depth, 0, filters=[0, 1, 2, 3, 4, 0]))
+        out = image_stats(png(gs, depth, 0, filters=[0, 1, 2, 3, 4, 0]))
         assert out["mean_r"] == round(float(gs.mean()), 6), depth
 
     # 2-bit palette: indices pack 4/byte, colors via PLTE
     plte = [10, 20, 30, 200, 100, 50, 0, 255, 8, 7, 6, 5]
     idx = rng.randint(0, 4, size=(5, 9, 1))
-    out = decode_png(png(idx, 2, 3, plte=plte))
+    out = image_stats(png(idx, 2, 3, plte=plte))
     pal = np.array(plte).reshape(4, 3)
     assert out["mean_r"] == round(float(pal[idx[:, :, 0]][:, :, 0].mean()), 6)
 
     # Adam7 interlaced 8-bit RGB — odd dims so pass widths vary
     px = rng.randint(0, 256, size=(11, 13, 3))
-    out = decode_png(png(px, 8, 2, interlace=1))
+    out = image_stats(png(px, 8, 2, interlace=1))
     assert (out["width"], out["height"]) == (13, 11)
     assert out["mean_r"] == round(float(px[:, :, 0].mean()), 6)
     assert out["mean_g"] == round(float(px[:, :, 1].mean()), 6)
 
     # Adam7 at 16-bit, tiny canvas (some passes empty)
     px = rng.randint(0, 65536, size=(2, 2, 3))
-    out = decode_png(png(px, 16, 2, interlace=1))
+    out = image_stats(png(px, 16, 2, interlace=1))
     assert out["mean_b"] == round(float(px[:, :, 2].mean()), 6)
 
     # Adam7 1-bit grayscale — bit packing inside each pass
     bits = rng.randint(0, 2, size=(9, 10, 1))
-    out = decode_png(png(bits, 1, 0, interlace=1))
+    out = image_stats(png(bits, 1, 0, interlace=1))
     assert out["mean_r"] == round(float(bits.mean()), 6)
 
 

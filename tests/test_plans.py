@@ -1464,6 +1464,35 @@ def test_store_writes_have_one_path_each():
     assert sorted(set(fs_calls)) == ["fsutil.py"]
 
 
+def test_signature_operators_reach_codecs_only_through_multimodal():
+    """``multimodal`` is the one place that picks a media decoder: the
+    image/video signature and audio fingerprint operators import no
+    codec module, so they decode only through its per-kind entries."""
+    import ast
+    import pathlib
+
+    codecs = {
+        "gif", "jpeg", "tiff", "vp8l", "webp", "flac", "avi", "mp4",
+        "mkv", "mp3", "ogg",
+    }
+    root = pathlib.Path(Q.__file__).parent / "operators"
+    for name in ("imagehash.py", "audiofp.py"):
+        imported = set()
+        for node in ast.walk(ast.parse((root / name).read_text())):
+            if isinstance(node, ast.Import):
+                imported |= {a.name for a in node.names}
+            elif isinstance(node, ast.ImportFrom):
+                imported.add(node.module or "")
+                imported |= {
+                    f"{node.module}.{a.name}" for a in node.names
+                }
+        hits = sorted(
+            m for m in imported if set(m.split(".")) & codecs
+        )
+        assert hits == [], (name, hits)
+        assert "vector_lake_spark.multimodal" in imported, name
+
+
 def test_engine_reads_no_correctness_records():
     """The driver's sampling order lives in ``__spark_entry__.queries()``:
     no module under ``vector_lake_spark/`` names the driver's

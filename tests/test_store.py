@@ -914,6 +914,38 @@ def test_concurrent_mutator_fails_fast_and_loses_nothing(
     assert second.count() == 0
 
 
+def test_rewrite_refuses_rows_appended_after_its_scan(spark, tmp_path, rng):
+    """Appends take no lease, so rows a second instance appends to a
+    touched shard between a rewrite's ``load()`` and its swap would
+    leave with the old shard directory. The swap lists the touched
+    shards first and refuses: ``compact`` raises, the staged copy is
+    dropped, every row (late ones included) survives, and a retried
+    ``compact`` keeps them all."""
+    import os
+
+    loc = str(tmp_path / "lake")
+    a = SparkVectorLake(spark, loc, dimension=4, approx_shards=4)
+    a.add_batch((rng.rand(40, 4) - 0.5).tolist())
+    a.persist()
+    b = SparkVectorLake(spark, loc, dimension=4, approx_shards=4)
+    swap = a._swap_shards
+
+    def append_then_swap(*args, **kwargs):
+        b.add_batch((rng.rand(20, 4) - 0.5).tolist())
+        b.persist()
+        return swap(*args, **kwargs)
+
+    a._swap_shards = append_then_swap
+    with pytest.raises(IOError, match="concurrent append"):
+        a.compact()
+    assert a.count() == 60
+    assert not os.path.exists(os.path.join(loc, "_rewrite_tmp"))
+    assert not os.path.exists(os.path.join(loc, "_trash"))
+    a._swap_shards = swap
+    a.compact()
+    assert a.count() == 60
+
+
 def test_maintenance_lock_released_on_failure(spark, tmp_path, rng):
     """A mutator that fails validation mid-lease must release the lock —
     otherwise one bad batch wedges all future maintenance."""

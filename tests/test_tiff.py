@@ -13,7 +13,6 @@ import pytest
 
 from vector_lake_spark.tiff import (
     _unpackbits,
-    decode_tiff,
     decode_tiff_pixels,
     encode_tiff,
     is_tiff,
@@ -147,8 +146,8 @@ def test_gates_and_corruption():
 
 def test_stats_contract_and_dispatch(spark):
     from vector_lake_spark.multimodal import (
-        _decode_image,
-        extract_tiff_features,
+        extract_image_stats,
+        image_stats,
     )
 
     px = np.zeros((5, 8, 3), dtype=np.uint8)
@@ -156,14 +155,14 @@ def test_stats_contract_and_dispatch(spark):
     px[:, :, 1] = 50
     px[:, :, 2] = 60
     f = encode_tiff(px, compression="packbits")
-    assert _decode_image(f) == {
+    assert image_stats(f) == {
         "width": 8, "height": 5,
         "mean_r": 40.0, "mean_g": 50.0, "mean_b": 60.0,
     }
     df = spark.createDataFrame(
         [(3, bytearray(f))], "media_id long, payload binary"
     )
-    r = extract_tiff_features(df).collect()[0]
+    r = extract_image_stats(df).collect()[0]
     assert (r["width"], r["height"], r["mean_g"]) == (8, 5, 50.0)
 
 

@@ -8,7 +8,8 @@ import struct
 
 import pytest
 
-from vector_lake_spark.webp import decode_webp, is_webp, probe_webp
+from vector_lake_spark.multimodal import image_stats
+from vector_lake_spark.webp import is_webp, probe_webp
 
 
 def _riff(fourcc: bytes, body: bytes) -> bytes:
@@ -70,12 +71,12 @@ def test_not_webp_and_corrupt():
 def test_decode_gates_naming_variant_and_dims():
     """VP8L decodes for real since r08; VP8 and VP8X stay named gates."""
     with pytest.raises(NotImplementedError, match="vp8,.*10x10"):
-        decode_webp(_vp8(10, 10))
+        image_stats(_vp8(10, 10))
     with pytest.raises(NotImplementedError, match="vp8x.*12x7"):
-        decode_webp(_vp8x(12, 7, True, False))
+        image_stats(_vp8x(12, 7, True, False))
     # a header-only VP8L body is now CORRUPT, not unimplemented
     with pytest.raises(ValueError, match="corrupt VP8L"):
-        decode_webp(_vp8l(33, 9, False))
+        image_stats(_vp8l(33, 9, False))
 
 
 def test_decode_webp_lossless_stats_contract():
@@ -87,7 +88,7 @@ def test_decode_webp_lossless_stats_contract():
     px[:, :, 0] = 10
     px[:, :, 1] = 20
     px[:, :, 2] = 30
-    out = decode_webp(encode_webp_lossless(px))
+    out = image_stats(encode_webp_lossless(px))
     assert out == {
         "width": 8, "height": 4,
         "mean_r": 10.0, "mean_g": 20.0, "mean_b": 30.0,
@@ -95,21 +96,40 @@ def test_decode_webp_lossless_stats_contract():
 
 
 def test_image_dispatch_names_webp():
-    from vector_lake_spark.multimodal import _decode_image
-
     with pytest.raises(NotImplementedError, match="vp8"):
-        _decode_image(_vp8(10, 10))
+        image_stats(_vp8(10, 10))
+
+
+def test_hashing_and_stats_agree_on_webp_variants():
+    """The image hash decodes through the same dispatch as the stats:
+    an animated WebP hashes its first composed frame, and a lossy VP8
+    still is unsupported (NotImplementedError) in both entries."""
+    import numpy as np
+
+    from vector_lake_spark.operators.imagehash import decode_image_gray
+    from vector_lake_spark.webp import encode_webp_animation
+
+    rng = np.random.default_rng(3)
+    frames = [rng.integers(0, 256, (4, 6, 4), dtype=np.uint8) for _ in range(2)]
+    for f in frames:
+        f[:, :, 3] = 255
+    payload = encode_webp_animation(frames, [10, 10], blends=[False] * 2)
+    rgb = frames[0][:, :, :3].astype(np.float64)
+    want = (299 * rgb[:, :, 0] + 587 * rgb[:, :, 1] + 114 * rgb[:, :, 2]) / 1000.0
+    assert np.array_equal(decode_image_gray(payload), want)
+    for decode in (decode_image_gray, image_stats):
+        with pytest.raises(NotImplementedError, match="vp8,.*10x10"):
+            decode(_vp8(10, 10))
 
 
 def test_image_dispatch_decodes_lossless_webp():
     import numpy as np
 
-    from vector_lake_spark.multimodal import _decode_image
     from vector_lake_spark.vp8l import encode_webp_lossless
 
     rng = np.random.default_rng(5)
     px = rng.integers(0, 256, (6, 9, 3), dtype=np.uint8)
-    out = _decode_image(encode_webp_lossless(px))
+    out = image_stats(encode_webp_lossless(px))
     assert (out["width"], out["height"]) == (9, 6)
     assert out["mean_r"] == round(float(px[:, :, 0].mean()), 6)
 
@@ -146,7 +166,7 @@ def test_vp8x_wrapped_lossless_decodes():
     assert [f for f, _, _ in walk_webp_chunks(payload)] == [
         b"VP8X", b"EXIF", b"VP8L",
     ]
-    out = decode_webp(payload)
+    out = image_stats(payload)
     assert (out["width"], out["height"]) == (7, 5)
     assert out["mean_g"] == round(float(px[:, :, 1].mean()), 6)
 
@@ -154,7 +174,7 @@ def test_vp8x_wrapped_lossless_decodes():
 def test_vp8x_without_decodable_still_gates_by_name():
     # VP8X without any VP8L still (e.g. lossy-only) keeps the plain gate
     with pytest.raises(NotImplementedError, match="vp8x"):
-        decode_webp(_vp8x(8, 8, False, False))
+        image_stats(_vp8x(8, 8, False, False))
 
 
 # ---------------------------------------------------------------------------
@@ -246,7 +266,6 @@ def test_animation_alpha_blend_and_background_disposal():
 
 def test_animation_stats_contract_and_selective_decode():
     np = _np()
-    from vector_lake_spark.multimodal import _decode_image
     from vector_lake_spark.webp import decode_webp_frames, encode_webp_animation
 
     rng = np.random.default_rng(41)
@@ -257,7 +276,7 @@ def test_animation_stats_contract_and_selective_decode():
         f[:, :, 3] = 255
     payload = encode_webp_animation(frames, [10] * 4, blends=[False] * 4)
     # image dispatch: stats over the FIRST composed frame (GIF stance)
-    out = _decode_image(payload)
+    out = image_stats(payload)
     assert out["mean_r"] == round(float(frames[0][:, :, 0].mean()), 6)
     # selective decode: frame 2 composes 0..2 but outputs only 2
     _, got = decode_webp_frames(payload, [2])
@@ -323,11 +342,11 @@ def test_animation_selective_decode_stops_early():
 def test_animated_file_with_no_frames_raises_by_name():
     """r08 advice fix: a VP8X payload flagged animated but holding zero
     ANMF chunks must raise the module's named corrupt-input ValueError,
-    not leak an IndexError out of decode_webp's frames[0]."""
-    from vector_lake_spark.webp import decode_webp, decode_webp_frames
+    not leak an IndexError out of the image dispatch's frames[0]."""
+    from vector_lake_spark.webp import decode_webp_frames
 
     payload = _vp8x(8, 8, False, True)  # animated flag, no ANIM/ANMF
     with pytest.raises(ValueError, match="no ANMF frames"):
         decode_webp_frames(payload)
     with pytest.raises(ValueError, match="no ANMF frames"):
-        decode_webp(payload)
+        image_stats(payload)

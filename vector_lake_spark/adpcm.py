@@ -1,6 +1,6 @@
 """IMA/DVI ADPCM (WAV format tag 0x0011) — the most common non-PCM,
 non-G.711 WAV codec in the wild, closed in r10 (was a named gate at
-``multimodal._decode_wav_ext``).
+``multimodal._decode_wav_ext_samples``).
 
 The algorithm is fully public (IMA "Recommended Practices for Enhancing
 Digital Audio Compatibility", the same tables every implementation

@@ -7,7 +7,7 @@ machinery — Rice/Golomb residual coding under fixed or LPC predictors —
 is fully implementable here, like GIF's LZW and VP8L's prefix codes
 before it.
 
-Decoder (`decode_flac`) — the complete subset real encoders emit:
+Decoder (`decode_flac_samples`) — the complete subset real encoders emit:
 - STREAMINFO metadata block (+ skipping all other block types).
 - Frame headers: sync, blocking strategy, all block-size / sample-rate
   / sample-size codes (incl. the 8/16-bit explicit forms), UTF-8-coded
@@ -561,26 +561,6 @@ def decode_flac_samples(payload: bytes) -> dict:
     out = dict(info)
     out["samples"] = samples
     return out
-
-
-def decode_flac(payload: bytes) -> dict:
-    """Stats-shaped decode (the ``extract_wav_features`` contract):
-    rate / channels / duration / RMS over the decoded integer samples
-    (raw-domain, like ``decode_wav``)."""
-    import math
-
-    out = decode_flac_samples(payload)
-    s = out["samples"].astype(np.float64)
-    rms = math.sqrt(float((s * s).sum()) / s.size) if s.size else 0.0
-    rate = out["sample_rate"]
-    n = int(out["samples"].shape[0])
-    return {
-        "sample_rate": rate,
-        "n_channels": out["n_channels"],
-        "n_samples": n,
-        "duration_ms": int(n * 1000 / rate) if rate else 0,
-        "rms": round(rms, 6),
-    }
 
 
 # ---------------------------------------------------------------------------

@@ -25,8 +25,8 @@ square waves at exact codec levels round-trip with RMS equal to the
 level, recomputed arithmetically in SQL.
 
 Everything is numpy LUT/vector arithmetic — inside the engine these run
-under Arrow ``mapInPandas`` batches (multimodal.decode_wav), so the
-per-sample cost is a table lookup, not a Python loop.
+under Arrow ``mapInPandas`` batches (``multimodal.decode_audio_samples``),
+so the per-sample cost is a table lookup, not a Python loop.
 """
 
 from __future__ import annotations

@@ -408,19 +408,6 @@ def decode_gif_pixels(payload: bytes) -> np.ndarray:
     return frames[0][1]
 
 
-def decode_gif(payload: bytes) -> dict:
-    """Stats-shaped decode (the ``multimodal._decode_image`` contract)."""
-    px = decode_gif_pixels(payload).astype(np.float64)
-    h, w = px.shape[:2]
-    return {
-        "width": int(w),
-        "height": int(h),
-        "mean_r": round(float(px[:, :, 0].mean()), 6),
-        "mean_g": round(float(px[:, :, 1].mean()), 6),
-        "mean_b": round(float(px[:, :, 2].mean()), 6),
-    }
-
-
 def encode_gif(pixels: np.ndarray) -> bytes:
     """Static single-frame GIF89a from (h, w, 3) uint8 RGB with ≤256
     unique colors (GIF's lossless domain — exact round-trip provable)."""

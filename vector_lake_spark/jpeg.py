@@ -1,8 +1,9 @@
 """Baseline JPEG codec — pure stdlib + numpy, no PIL/opencv.
 
-Closes the last "DCT codecs are environment-gated" gap
-(`multimodal._decode_image`) the honest way PNG was closed in r06:
-implement the subset for real and gate the rest loudly. Scope:
+Closes the last "DCT codecs are environment-gated" gap in the image
+dispatch (`multimodal.decode_image_pixels`) the honest way PNG was
+closed in r06: implement the subset for real and gate the rest loudly.
+Scope:
 
 - **Decoder** (`decode_jpeg_pixels`): baseline sequential DCT (SOF0)
   AND progressive DCT (SOF2, r07 — full spectral selection +
@@ -40,7 +41,7 @@ implement the subset for real and gate the rest loudly. Scope:
   a valid DHT; optimal tables buy compression, not correctness).
 
 At 100 TB the decode runs inside the same Arrow `mapInPandas` operator
-shape as BMP/PNG (`multimodal.extract_jpeg_features`): payloads stay an
+shape as BMP/PNG (`multimodal.extract_image_stats`): payloads stay an
 opaque binary column, the scan projects (id, payload) only, and decoder
 memory is bounded by the Arrow batch.
 """
@@ -916,25 +917,6 @@ def decode_jpeg_pixels(payload: bytes) -> np.ndarray:
                             k += 1
     geom = (hmax, vmax, mcus_x, mcus_y, None)
     return _idct_assemble(sof, geom, coefs, qtbls, precision)
-
-
-def decode_jpeg(payload: bytes) -> dict:
-    """Stats-shaped decode (the `multimodal._decode_stats`
-    contract): dimensions + per-channel means."""
-    px = decode_jpeg_pixels(payload).astype(np.float64)
-    if px.ndim == 2:
-        mr = mg = mb = float(px.mean())
-        h, w = px.shape
-    else:
-        h, w = px.shape[:2]
-        mr, mg, mb = (float(px[:, :, i].mean()) for i in range(3))
-    return {
-        "width": int(w),
-        "height": int(h),
-        "mean_r": round(mr, 6),
-        "mean_g": round(mg, 6),
-        "mean_b": round(mb, 6),
-    }
 
 
 # ---------------------------------------------------------------------------

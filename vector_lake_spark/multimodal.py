@@ -4,37 +4,32 @@ Media are opaque ``binary`` columns + typed metadata structs. Every
 per-document transform is one ``rowmap.map_rows`` stage: (media_id,
 payload) reaches the Python worker in Arrow batches, a per-document
 function decodes or probes each payload there, and only its typed
-result rows come back, so the bytes never leave the executors. Decode
-status (r06):
+result rows come back, so the bytes never leave the executors.
 
-- REAL, stdlib-only: uncompressed 24-bit BMP (``decode_bmp`` — struct
-  parsing → dims + channel means), PNG at **every legal IHDR
-  combination** (``decode_png`` — stdlib zlib inflate + full
-  None/Sub/Up/Average/Paeth filter reconstruction; depths 1/2/4/8/16
-  and Adam7 interlace since r08), and WAV at **every sample format**
-  (``decode_wav`` — 8-bit biased / 16 / sign-extended 24 / 32 integer
-  PCM since r08; IEEE float 32/64 and G.711 A-law/μ-law through the
-  manual RIFF walk since r09), each with a Spark operator
-  (``extract_bmp_features`` /
-  ``extract_png_features`` / ``extract_wav_features``) and
-  exact-pixel/exact-sample tests through the Arrow boundary.
-- REAL, numpy-only: baseline + progressive JPEG (``jpeg.py`` — Huffman
-  + dequant + IDCT + YCbCr + Annex G scans, with matching encoders so
-  exactness is provable; ``extract_jpeg_features``), GIF87a/89a
-  (``gif.py`` — LZW, interlace, animation composition;
-  ``extract_gif_features``), **lossless WebP** (``vp8l.py`` — the
-  complete VP8L bitstream, simple / VP8X-wrapped / animated with
-  composition in ``webp.py``; ``extract_webp_features``; r08), and
-  **video**: MJPEG-in-AVI (``avi.py``) + photo-JPEG-in-MP4
-  (``mp4.py`` — full sample-table probe) behind the shared
-  ``extract_video_frames`` dispatch, decoding ONLY sampled frames.
-- All three video containers PROBE for real (RIFF/AVI, ISO-BMFF/MP4,
-  EBML/Matroska — ``probe_media`` is the unified metadata pass);
-  remaining gates are named codec subsets (arithmetic-coded JPEG,
-  lossy VP8, motion-compensated video codecs — Matroska block decode
-  raises listing the codecs it found, though V_MJPEG tracks decode for
-  real; RLE8-in-AVI interframe deltas and lossless SOF3 JPEG decode
-  for real since r09).
+This module is the one place that decides which decoder opens a
+payload, one entry per media kind; every consumer is a fold over it:
+
+- ``decode_image_pixels`` — BMP, PNG (every legal IHDR combination),
+  baseline/progressive/extended/lossless JPEG (``jpeg.py``), GIF
+  (``gif.py``), lossless WebP (``vp8l.py`` + ``webp.py``, first
+  composed frame) and TIFF (``tiff.py``). Folds: ``image_stats``
+  (``extract_image_stats``) and ``operators/imagehash``'s signatures.
+- ``decode_audio_samples`` — FLAC (``flac.py``), WAV at every sample
+  format (stdlib ``wave`` for integer PCM, the manual RIFF walk for
+  IEEE float, G.711, both ADPCM families and the extensible wrapper);
+  MPEG audio and Ogg are recognized and raise their named gates.
+  Folds: ``audio_stats`` (``extract_audio_stats``) and
+  ``operators/audiofp``'s fingerprints.
+- ``sniff_video`` — RIFF/AVI, ISO-BMFF/MP4 and EBML/Matroska: the
+  header probe and the selective frame decoder. Folds:
+  ``probe_media``, ``extract_video_frames`` and
+  ``imagehash.decode_video_frames_gray``.
+
+Error classes are the module contract: ``ValueError`` means corrupt
+input, ``NotImplementedError`` legal but unsupported input (a named
+codec subset: arithmetic-coded JPEG, lossy VP8, interframe video
+codecs), and ``UnrecognizedMedia`` — a ``NotImplementedError`` — a
+payload whose magic bytes no decoder claims.
 
 At 100 TB: binary payloads dominate row size, so every transform projects
 only the columns it needs (column pruning keeps untouched media out of the
@@ -77,46 +72,61 @@ IMAGE_FEATURES_SCHEMA = T.StructType(
 )
 
 
-def _decode_image(payload: bytes):
-    """Decode an image payload. Uncompressed 24-bit BMP (r05), 8-bit
-    PNG (r06 — DEFLATE is stdlib zlib, filters reconstructed here),
-    baseline + progressive JPEG (r06/r07 — full Huffman + dequant +
-    IDCT + Annex G progressive scans in ``jpeg.py``, numpy only) and
-    GIF (r07 — LZW + frame composition in ``gif.py``) decode for real;
-    the remaining gates are format subsets (arithmetic-coded JPEG,
-    lossy VP8), each raising with the feature named; lossless SOF3
-    decodes for real since late r09."""
-    if payload is not None and payload[:2] == b"BM":
-        return decode_bmp(payload)
-    if payload is not None and payload[:8] == PNG_SIGNATURE:
-        return decode_png(payload)
-    if payload is not None and payload[:2] == b"\xff\xd8":
-        from vector_lake_spark.jpeg import decode_jpeg
+class UnrecognizedMedia(NotImplementedError):
+    """No decoder of the media kind claims the payload's magic bytes."""
 
-        return decode_jpeg(payload)
-    if payload is not None and payload[:6] in (b"GIF87a", b"GIF89a"):
-        from vector_lake_spark.gif import decode_gif
 
-        return decode_gif(payload)
-    if payload is not None and payload[:4] == b"RIFF" and payload[8:12] == b"WEBP":
-        from vector_lake_spark.webp import decode_webp
+def decode_image_pixels(payload: bytes):
+    """The one image-format dispatch: the magic bytes pick the decoder,
+    which returns the pixel array — (h, w) or (h, w, ch) in the file's
+    native sample domain (ch 1 gray, 2 gray+alpha, 3 RGB, 4 RGBA). A
+    WebP yields its first composed frame, stills and animations alike.
+    Decoders raise their named gates for unsupported subsets."""
+    b = bytes(payload)
+    if b[:2] == b"BM":
+        return decode_bmp_pixels(b)
+    if b[:8] == PNG_SIGNATURE:
+        return decode_png_pixels(b)
+    if b[:2] == b"\xff\xd8":
+        from vector_lake_spark.jpeg import decode_jpeg_pixels
 
-        # lossless (VP8L) decodes for real; VP8/VP8X raise named gates
-        return decode_webp(payload)
-    if payload is not None and payload[:4] in (b"II*\x00", b"MM\x00*"):
-        from vector_lake_spark.tiff import decode_tiff
+        return decode_jpeg_pixels(b)
+    if b[:6] in (b"GIF87a", b"GIF89a"):
+        from vector_lake_spark.gif import decode_gif_pixels
 
-        # none/LZW/PackBits, striped or tiled, 8/16-bit and palette
-        # pages decode for real (r08/r09 — 16-bit/palette means are in
-        # the 16-bit range); 1/2/4-bit, fax, JPEG-in-TIFF and planar
-        # raise named gates
-        return decode_tiff(payload)
-    raise NotImplementedError(
+        return decode_gif_pixels(b)
+    if b[:4] == b"RIFF" and b[8:12] == b"WEBP":
+        from vector_lake_spark.webp import decode_webp_frames
+
+        return decode_webp_frames(b, [0])[1][0][1]
+    if b[:4] in (b"II*\x00", b"MM\x00*"):
+        from vector_lake_spark.tiff import decode_tiff_pixels
+
+        return decode_tiff_pixels(b)
+    raise UnrecognizedMedia(
         "unrecognized image payload (BMP, PNG, JPEG, GIF, lossless WebP "
-        "and baseline TIFF decode natively — decode_bmp / decode_png / "
-        "jpeg.decode_jpeg / gif.decode_gif / webp.decode_webp / "
-        "tiff.decode_tiff; lossy WebP probes via webp.probe_webp)"
+        "and TIFF decode natively; lossy WebP probes via webp.probe_webp)"
     )
+
+
+def image_stats(payload: bytes) -> dict:
+    """Dimensions + per-channel means over ``decode_image_pixels``, in
+    the file's native sample domain (0..65535 for 16-bit samples). Gray
+    and gray+alpha report channel 0 as all three means; alpha never
+    enters a mean. Samples are integers, so each float64 channel sum is
+    exact and the mean does not depend on the sample dtype."""
+    px = decode_image_pixels(payload)
+    c = px if px.ndim == 3 else px[:, :, None]
+    h, w = c.shape[:2]
+    idx = (0, 1, 2) if c.shape[2] >= 3 else (0, 0, 0)
+    mr, mg, mb = (round(float(c[:, :, i].mean()), 6) for i in idx)
+    return {
+        "width": int(w),
+        "height": int(h),
+        "mean_r": mr,
+        "mean_g": mg,
+        "mean_b": mb,
+    }
 
 
 PNG_SIGNATURE = b"\x89PNG\r\n\x1a\n"
@@ -191,21 +201,17 @@ def _png_samples(rows, w, ch, depth):
 
 
 def decode_png_pixels(payload: bytes):
-    """REAL decode of a PNG (grayscale / RGB / palette / RGBA) to its
-    pixel array — (h, w, ch) float64 in the file's native sample domain
-    (palette resolved to RGB) — with pure stdlib ``zlib`` + numpy:
-    chunk walk, DEFLATE inflate, full scanline filter reconstruction
-    (None/Sub/Up/Average/Paeth). Split out of ``decode_png`` in r10 so
-    perceptual hashing (``operators/imagehash.py``) can reach pixels.
+    """REAL decode of a PNG (gray / gray+alpha / RGB / palette / RGBA)
+    to its pixel array — (h, w, ch) float64 in the file's native sample
+    domain (palette resolved to RGB) — with pure stdlib ``zlib`` +
+    numpy: chunk walk, DEFLATE inflate, full scanline filter
+    reconstruction (None/Sub/Up/Average/Paeth).
 
-    r08 closed the format gates: EVERY legal IHDR combination decodes —
-    bit depths 1/2/4 (gray + palette, MSB-first unpacking), 8, and 16
-    (big-endian pairs), plus Adam7 interlacing (seven independently
-    filtered passes scattered into the canvas). Channel means are
-    reported in the file's native sample domain (0..65535 for 16-bit,
-    0..2^d-1 for shallow grays) — the same raw-domain stance as
-    ``decode_wav``'s width-dependent RMS. Illegal depth/color combos
-    are corrupt input (ValueError), no longer NotImplementedError."""
+    Every legal IHDR combination decodes: bit depths 1/2/4 (gray +
+    palette, MSB-first unpacking), 8 and 16 (big-endian pairs) for each
+    color type the spec allows them with, plus Adam7 interlacing (seven
+    independently filtered passes scattered into the canvas). Illegal
+    depth/color combos are corrupt input (ValueError)."""
     import struct
     import zlib
 
@@ -230,7 +236,10 @@ def decode_png_pixels(payload: bytes):
     if header is None:
         raise ValueError("PNG without IHDR")
     w, h, depth, color, _comp, _filt, interlace = header
-    legal = {0: (1, 2, 4, 8, 16), 2: (8, 16), 3: (1, 2, 4, 8), 6: (8, 16)}
+    legal = {
+        0: (1, 2, 4, 8, 16), 2: (8, 16), 3: (1, 2, 4, 8), 4: (8, 16),
+        6: (8, 16),
+    }
     if color not in legal or depth not in legal[color]:
         raise ValueError(
             f"corrupt PNG: illegal depth/color combination "
@@ -242,7 +251,7 @@ def decode_png_pixels(payload: bytes):
         raise ValueError("palette PNG without a valid PLTE chunk")
     if w == 0 or h == 0:
         raise ValueError(f"degenerate PNG dimensions {w}x{h}")
-    ch = {0: 1, 2: 3, 3: 1, 6: 4}[color]
+    ch = {0: 1, 2: 3, 3: 1, 4: 2, 6: 4}[color]
     bpp = max(1, ch * depth // 8)
     raw = zlib.decompress(b"".join(idat))
     if interlace == 0:
@@ -276,101 +285,108 @@ def decode_png_pixels(payload: bytes):
     return px
 
 
-def decode_png(payload: bytes) -> dict:
-    """Stats-shaped PNG decode (dimensions + per-channel means) over
-    ``decode_png_pixels``. Channel means are reported in the file's
-    native sample domain (0..65535 for 16-bit, 0..2^d-1 for shallow
-    grays) — the same raw-domain stance as ``decode_wav``'s
-    width-dependent RMS. Illegal depth/color combos are corrupt input
-    (ValueError), not NotImplementedError (r08 closed every legal IHDR
-    combination: depths 1/2/4/8/16 and Adam7 interlacing)."""
-    px = decode_png_pixels(payload)
-    h, w, ch = px.shape
-    if ch == 1:
-        mr = mg = mb = float(px.mean())
-    else:  # RGB / RGBA (alpha excluded from the channel means)
-        mr, mg, mb = (float(px[:, :, i].mean()) for i in range(3))
-    return {
-        "width": int(w),
-        "height": int(h),
-        "mean_r": round(mr, 6),
-        "mean_g": round(mg, 6),
-        "mean_b": round(mb, 6),
-    }
-
-
-def decode_bmp(payload: bytes) -> dict:
-    """Real decode of an uncompressed 24-bit BMP (BITMAPINFOHEADER) with
-    pure stdlib struct parsing: dimensions + per-channel means. BMP rows
-    are bottom-up and padded to 4-byte boundaries."""
+def decode_bmp_pixels(payload: bytes):
+    """Uncompressed 24-bit BMP (BITMAPINFOHEADER) → (h, w, 3) uint8 RGB:
+    struct header parse + numpy row slicing. Rows are padded to 4 bytes
+    and stored bottom-up, or top-down when the height is negative
+    (legal per the spec, not corruption). Other depths and compressions
+    raise NotImplementedError by name."""
     import struct
+
+    import numpy as np
 
     if payload[:2] != b"BM":
         raise ValueError("not a BMP payload")
-    data_offset = struct.unpack_from("<I", payload, 10)[0]
-    width, height = struct.unpack_from("<ii", payload, 18)
-    bpp = struct.unpack_from("<H", payload, 28)[0]
-    compression = struct.unpack_from("<I", payload, 30)[0]
+    (off,) = struct.unpack_from("<I", payload, 10)
+    w, h = struct.unpack_from("<ii", payload, 18)
+    (bpp,) = struct.unpack_from("<H", payload, 28)
+    (compression,) = struct.unpack_from("<I", payload, 30)
     if bpp != 24 or compression != 0:
         raise NotImplementedError(
             f"only uncompressed 24-bit BMP supported (got {bpp}bpp, "
             f"compression={compression})"
         )
-    h = abs(height)
-    row_stride = (width * 3 + 3) & ~3
-    tot = [0, 0, 0]  # B, G, R accumulator (BMP byte order)
-    for r in range(h):
-        base = data_offset + r * row_stride
-        row = payload[base : base + width * 3]
-        tot[0] += sum(row[0::3])
-        tot[1] += sum(row[1::3])
-        tot[2] += sum(row[2::3])
-    n = max(width * h, 1)
-    return {
-        "width": width,
-        "height": h,
-        "mean_r": round(tot[2] / n, 6),
-        "mean_g": round(tot[1] / n, 6),
-        "mean_b": round(tot[0] / n, 6),
-    }
+    if w <= 0 or h == 0:
+        raise ValueError(f"degenerate BMP dimensions {w}x{h}")
+    row = (w * 3 + 3) & ~3
+    if off + abs(h) * row > len(payload):
+        raise ValueError("corrupt BMP: pixel rows run past the payload")
+    rows = np.frombuffer(
+        payload, dtype=np.uint8, count=abs(h) * row, offset=off
+    ).reshape(abs(h), row)
+    if h > 0:  # bottom-up
+        rows = rows[::-1]
+    return rows[:, : w * 3].reshape(abs(h), w, 3)[:, :, ::-1]  # BGR → RGB
 
 
-def decode_wav(payload: bytes) -> dict:
-    """Real decode of a WAV payload: sample rate, channel count,
-    duration, and RMS amplitude.
-
-    All integer PCM widths decode (r08 — the sub-16-bit gate is
-    closed): 8-bit is UNSIGNED with a 128 bias per the RIFF spec,
-    16/24/32-bit are signed little-endian (24-bit unpacked by byte
-    composition — no stdlib struct code exists for it). Format tags
-    beyond PCM decode too (late r09, via the manual RIFF walk the
-    stdlib ``wave`` module refuses): IEEE float 32/64 (tag 3), A-law
-    (tag 6) and μ-law (tag 7, both G.711 — ``g711.py``, expanded to
-    16-bit linear before the RMS), both common ADPCM families (r10 —
-    IMA/DVI tag 0x11 and MS tag 0x02, ``adpcm.py``, fact-chunk frame
-    trim), plus WAVE_FORMAT_EXTENSIBLE wrapping any of those. RMS is
-    computed on the raw samples of whatever domain the file carries
-    (bias-corrected for 8-bit, [-1, 1] floats for tag 3, 16-bit linear
-    for G.711/ADPCM), so the value is format-dependent by design — it
-    reports THIS file's amplitude, not a normalized loudness."""
+def decode_audio_samples(payload: bytes):
+    """The one audio-format dispatch → (samples, sample_rate,
+    n_channels, codec). ``samples`` is 1-D and channel-interleaved, in
+    the file's own domain: integers for integer PCM and FLAC (8-bit PCM
+    bias-corrected), 16-bit linear for G.711 and ADPCM, [-1, 1] floats
+    for IEEE float. FLAC decodes through ``flac.py``; integer-PCM WAV
+    through stdlib ``wave``; every WAV format ``wave`` refuses through
+    the manual RIFF walk, whose damage reports raise as ``corrupt WAV
+    payload`` ValueErrors. MPEG audio and Ogg are recognized and raise
+    their named gates."""
     import io
     import wave
 
-    try:
-        with wave.open(io.BytesIO(payload), "rb") as w:
-            n_channels = w.getnchannels()
-            rate = w.getframerate()
-            n_frames = w.getnframes()
-            width = w.getsampwidth()
-            frames = w.readframes(n_frames)
-    except (wave.Error, EOFError):
-        # stdlib wave only opens plain integer PCM (and raises EOFError,
-        # not wave.Error, on some truncated headers) — companded/float/
-        # extensible/corrupt payloads take the manual RIFF chunk walk,
-        # which decodes or raises the named ValueError contract
-        return _decode_wav_ext(payload)
-    samples = _pcm_samples(frames, width)
-    return _wav_stats(samples, rate, n_channels, n_frames, "pcm")
+    b = bytes(payload)
+    if b[:4] == b"fLaC":
+        from vector_lake_spark.flac import decode_flac_samples
+
+        out = decode_flac_samples(b)
+        s = out["samples"]  # (n_samples, n_channels)
+        return s.reshape(-1), out["sample_rate"], out["n_channels"], "flac"
+    if b[:4] == b"RIFF" and b[8:12] == b"WAVE":
+        try:
+            with wave.open(io.BytesIO(b), "rb") as w:
+                n_channels, width, rate = (
+                    w.getnchannels(), w.getsampwidth(), w.getframerate()
+                )
+                frames = w.readframes(w.getnframes())
+        except (wave.Error, EOFError):
+            # stdlib wave only opens plain integer PCM (and raises
+            # EOFError, not wave.Error, on some truncated headers)
+            try:
+                return _decode_wav_ext_samples(b)
+            except ValueError as e:
+                raise ValueError(f"corrupt WAV payload: {e}") from e
+        return _pcm_samples(frames, width), rate, n_channels, "pcm"
+    from vector_lake_spark.mp3 import decode_mp3, is_mp3
+    from vector_lake_spark.ogg import decode_ogg, is_ogg
+
+    if is_mp3(b):
+        decode_mp3(b)  # raises the named layer gate
+    if is_ogg(b):
+        decode_ogg(b)  # raises the named codec gate
+    raise UnrecognizedMedia(
+        "unrecognized audio payload (WAV and FLAC decode natively; MPEG "
+        "audio and Ogg probe via mp3.probe_mp3 / ogg.probe_ogg)"
+    )
+
+
+def audio_stats(payload: bytes) -> dict:
+    """Rate / channels / frames / duration / RMS / codec over
+    ``decode_audio_samples``. The RMS is taken over the raw samples of
+    whatever domain the file carries, so it reports THIS file's
+    amplitude, not a normalized loudness."""
+    import math
+
+    samples, rate, n_channels, codec = decode_audio_samples(payload)
+    n_frames = len(samples) // n_channels
+    # square-sum in float64: int64 would overflow past ~2^31.5 amplitude
+    sf = samples.astype("float64")
+    rms = math.sqrt(float((sf * sf).sum()) / len(sf)) if len(sf) else 0.0
+    return {
+        "sample_rate": rate,
+        "n_channels": n_channels,
+        "n_samples": n_frames,
+        "duration_ms": int(n_frames * 1000 / rate) if rate else 0,
+        "rms": round(rms, 6),
+        "codec": codec,
+    }
 
 
 def _pcm_samples(frames: bytes, width: int):
@@ -398,41 +414,16 @@ def _pcm_samples(frames: bytes, width: int):
     )
 
 
-def _wav_stats(samples, rate, n_channels, n_frames, codec) -> dict:
-    import math
-
-    # square-sum in float64: int64 would overflow past ~2^31.5 amplitude
-    sf = samples.astype("float64")
-    rms = math.sqrt(float((sf * sf).sum()) / len(sf)) if len(sf) else 0.0
-    return {
-        "sample_rate": rate,
-        "n_channels": n_channels,
-        "n_samples": n_frames,
-        "duration_ms": int(n_frames * 1000 / rate) if rate else 0,
-        "rms": round(rms, 6),
-        "codec": codec,
-    }
-
-
-def _decode_wav_ext(payload: bytes) -> dict:
-    """RIFF walk for the WAV formats stdlib ``wave`` refuses: IEEE
-    float (3), A-law (6), μ-law (7), and WAVE_FORMAT_EXTENSIBLE
-    (0xFFFE, resolved through the SubFormat GUID's leading tag —
-    including extensible INTEGER PCM, the form multichannel/24-bit
-    encoders emit), and IMA/DVI ADPCM (0x0011 — ``adpcm.py``, r10).
-    Anything else (MP3-in-WAV …) raises a named NotImplementedError."""
-    samples, rate, n_channels, codec = _decode_wav_ext_samples(payload)
-    n_frames = len(samples) // n_channels
-    return _wav_stats(samples, rate, n_channels, n_frames, codec)
-
-
 def _decode_wav_ext_samples(payload: bytes):
-    """The samples-level half of ``_decode_wav_ext`` (split out r12,
-    VERDICT r11 #2 so the audio fingerprint stack can route non-PCM
-    WAV through the SAME decoders instead of gating them out):
-    returns (interleaved samples ndarray, rate, n_channels, codec) —
-    int64 for the integer codecs (G.711/ADPCM expand to 16-bit linear),
-    float for IEEE-float payloads."""
+    """RIFF walk for the WAV formats stdlib ``wave`` refuses: IEEE
+    float (3), A-law (6), μ-law (7), IMA/DVI (0x11) and MS (0x02)
+    ADPCM (``adpcm.py``, fact-chunk frame trim), and
+    WAVE_FORMAT_EXTENSIBLE (0xFFFE, resolved through the SubFormat
+    GUID's leading tag — including extensible integer PCM, the form
+    multichannel/24-bit encoders emit). Anything else (MP3-in-WAV …)
+    raises a named NotImplementedError. Returns (interleaved samples,
+    rate, n_channels, codec) — int64 for the integer codecs (G.711 and
+    ADPCM expand to 16-bit linear), float for IEEE-float payloads."""
     import struct
 
     import numpy as np
@@ -529,9 +520,9 @@ def _decode_wav_ext_samples(payload: bytes):
 def encode_wav_ext(
     samples, rate: int = 8000, fmt: str = "ulaw", n_channels: int = 1
 ) -> bytes:
-    """Mux samples into the non-PCM WAV formats ``_decode_wav_ext``
-    reads — the test/oracle-side writer proving the decode inverts a
-    real stream. ``fmt``: 'ulaw'/'alaw' take int16 linear samples and
+    """Mux samples into the non-PCM WAV formats
+    ``_decode_wav_ext_samples`` reads — the test/oracle-side writer
+    proving the decode inverts a real stream. ``fmt``: 'ulaw'/'alaw' take int16 linear samples and
     compand them through ``g711.py``; 'float32'/'float64' take floats
     verbatim."""
     import struct
@@ -646,143 +637,144 @@ MEDIA_PROBE_SCHEMA = T.StructType(
 )
 
 
+def _avi_probe(data: bytes) -> dict:
+    from vector_lake_spark.avi import probe_avi
+
+    info = probe_avi(data)
+    fps, n = info.get("fps"), info["n_frames"]
+    return {
+        "container": "avi",
+        "codec": info.get("codec", "MJPG"),
+        "width": info.get("width"),
+        "height": info.get("height"),
+        "duration_ms": int(n * 1000 / fps) if fps else None,
+        "n_frames": n,
+        "decodable": True,
+        "fps": fps,
+        "track_frames": n,
+    }
+
+
+def _mp4_probe(data: bytes) -> dict:
+    from vector_lake_spark.mp4 import probe_mp4
+
+    info = probe_mp4(data)
+    t = next((t for t in info["tracks"] if t["handler"] == "vide"), None)
+    fps = 0
+    if t is not None:
+        # rate from the track's own timescale and raw stts tick
+        # duration — the floor-rounded duration_ms drifts the stride
+        # for real-world timescales
+        ticks = sum(c * d for c, d in t["timing"])
+        if ticks:
+            fps = t["n_samples"] * t["timescale"] / ticks
+        elif t["duration_ms"]:
+            fps = t["n_samples"] * 1000.0 / t["duration_ms"]
+    return {
+        "container": "mp4",
+        "codec": t and t["codec"],
+        "width": t and t["width"],
+        "height": t and t["height"],
+        "duration_ms": info["duration_ms"],
+        "n_frames": t["n_samples"] if t else 0,
+        "decodable": bool(t and t["codec"] in ("jpeg", "mjpa")),
+        "fps": fps,
+        "track_frames": t and t["n_samples"],
+    }
+
+
+def _mkv_probe(data: bytes) -> dict:
+    from vector_lake_spark.mkv import probe_mkv
+
+    info = probe_mkv(data)
+    video = [t for t in info["tracks"] if t["track_type"] == 1]
+    first = video[0] if video else None
+    # sampling reads the track decode_mkv_frames picks — any V_MJPEG
+    # one; a no-MJPEG file keeps video[0] so decode raises its named
+    # codec gate
+    tr = next((t for t in video if t["codec"] == "V_MJPEG"), first)
+    n = tr and info["blocks_by_track"].get(tr["track_number"], 0)
+    dur = info["duration_ms"]
+    return {
+        "container": info["doc_type"],
+        "codec": first and first["codec"],
+        "width": first and first["width"],
+        "height": first and first["height"],
+        "duration_ms": dur,
+        "n_frames": info["n_blocks"],
+        "decodable": any(v["codec"] == "V_MJPEG" for v in video),
+        "fps": n * 1000.0 / dur if n and dur else 0,
+        "track_frames": n,
+    }
+
+
+def sniff_video(data: bytes):
+    """The one video-container dispatch: the magic bytes pick (probe,
+    decode_frames) for RIFF/AVI, EBML/Matroska or ISO-BMFF/MP4.
+    ``probe(data)`` walks headers only and returns the
+    ``MEDIA_PROBE_SCHEMA`` columns after ``media_id`` plus ``fps`` and
+    ``track_frames``, the rate and frame count of the track
+    ``decode_frames(data, frame_indices)`` reads (None without a video
+    track). The decoders entropy-decode only the requested frames
+    (MJPEG in AVI, photo-JPEG in MP4, V_MJPEG in Matroska; RLE8 AVI
+    replays its delta chain) and raise interframe codecs by name."""
+    if data[:4] == b"RIFF" and data[8:12] == b"AVI ":
+        from vector_lake_spark.avi import decode_avi_frames
+
+        return _avi_probe, decode_avi_frames
+    from vector_lake_spark.mkv import decode_mkv_frames, is_mkv
+    from vector_lake_spark.mp4 import decode_mp4_frames, is_mp4
+
+    if is_mkv(data):
+        return _mkv_probe, decode_mkv_frames
+    if is_mp4(data):
+        return _mp4_probe, decode_mp4_frames
+    raise UnrecognizedMedia(
+        "unrecognized video payload (MJPEG/RLE8 AVI, photo-JPEG MP4 and "
+        "V_MJPEG Matroska decode natively)"
+    )
+
+
 def probe_media(df: DataFrame) -> DataFrame:
     """Unified container-metadata pass over a binary payload column —
     the FIRST operator a 100 TB media pipeline runs: route, filter and
     budget by (container, codec, dims, duration, frame count) WITHOUT
-    entropy-decoding anything. All three container probes are real
-    header walks (RIFF/AVI, ISO-BMFF/MP4, EBML/Matroska); `decodable`
-    reports whether this repo's native decoders can open the video
-    stream (MJPEG in AVI, photo-JPEG in MP4 — interframe codecs are
-    honest NotImplementedError gates at decode time)."""
-    from vector_lake_spark.avi import probe_avi
-    from vector_lake_spark.mkv import is_mkv, probe_mkv
-    from vector_lake_spark.mp4 import is_mp4, probe_mp4
+    entropy-decoding anything (``sniff_video``'s header probes).
+    `decodable` reports whether this repo's native decoders can open
+    the video stream (MJPEG in AVI, photo-JPEG in MP4, any V_MJPEG
+    track in Matroska — interframe codecs are honest
+    NotImplementedError gates at decode time)."""
+    cols = MEDIA_PROBE_SCHEMA.fieldNames()[1:]
 
     def one(row):
         mid, payload = row
         data = bytes(payload)
-        if is_mp4(data):
-            info = probe_mp4(data)
-            video = [t for t in info["tracks"] if t["handler"] == "vide"]
-            t = video[0] if video else None
-            yield (
-                mid,
-                "mp4",
-                t["codec"] if t else None,
-                t["width"] if t else None,
-                t["height"] if t else None,
-                info["duration_ms"],
-                t["n_samples"] if t else 0,
-                bool(t and t["codec"] in ("jpeg", "mjpa")),
-            )
-        elif is_mkv(data):
-            info = probe_mkv(data)
-            video = [t for t in info["tracks"] if t["track_type"] == 1]
-            t = video[0] if video else None
-            yield (
-                mid,
-                info["doc_type"],
-                t["codec"] if t else None,
-                t["width"] if t else None,
-                t["height"] if t else None,
-                info["duration_ms"],
-                info["n_blocks"],
-                # intraframe V_MJPEG blocks decode natively (late r09);
-                # interframe codecs still gate by name — the flag must
-                # agree with decode_mkv_frames, which picks ANY V_MJPEG
-                # video track, not just the first
-                any(v["codec"] == "V_MJPEG" for v in video),
-            )
-        else:
-            info = probe_avi(data)  # raises its own named error on non-AVI
-            yield (
-                mid,
-                "avi",
-                info.get("codec", "MJPG"),
-                info.get("width"),
-                info.get("height"),
-                (
-                    int(info["n_frames"] * 1000 / info["fps"])
-                    if info.get("fps")
-                    else None
-                ),
-                info["n_frames"],
-                True,
-            )
+        v = sniff_video(data)[0](data)
+        yield (mid, *(v[c] for c in cols))
 
     return map_rows(df.select("media_id", "payload"), one, MEDIA_PROBE_SCHEMA)
 
 
 def extract_video_frames(df: DataFrame, every_ms: int = 1000) -> DataFrame:
-    """REAL video decode over Arrow batches (r06): MJPEG-in-AVI payloads
-    are probed (header walk, no frame decode), the timeline is sampled
-    every ``every_ms``, and ONLY the sampled frames decode through the
-    native JPEG codec — per sampled frame: (frame_no, offset_ms, dims,
-    channel means).
+    """REAL video decode over Arrow batches: the payload is probed
+    (header walk, no frame decode), the timeline is sampled every
+    ``every_ms``, and ONLY the sampled frames decode — per sampled
+    frame: (frame_no, offset_ms, dims, channel means).
 
     The 100 TB shape: frame independence (MJPEG) means a sampled frame
     never touches its neighbors, so sampling cost is
-    frames_sampled × decode, not duration × decode; the probe slices
+    frames_sampled × decode, not duration × decode; the probes slice
     frame chunks by (offset, length) so unsampled frames are never even
-    copied out of the payload buffer. r07 adds the MP4 container
-    (photo-JPEG samples, ``mp4.py``) and late r09 Matroska V_MJPEG
-    tracks (``mkv.py``) behind the same magic dispatch; interframe
-    codecs raise by name."""
-    from vector_lake_spark.avi import decode_avi_frames, probe_avi
-    from vector_lake_spark.mkv import decode_mkv_frames, is_mkv, probe_mkv
-    from vector_lake_spark.mp4 import decode_mp4_frames, is_mp4, probe_mp4
+    copied out of the payload buffer."""
 
     def frames_of(row):
         mid, payload = row
         data = bytes(payload)
-        if is_mkv(data):
-            info = probe_mkv(data)
-            video = [
-                t for t in info["tracks"] if t["track_type"] == 1
-            ]
-            if not video:
-                raise ValueError("Matroska has no video track")
-            # size the sampling from the SAME track decode will
-            # pick (the V_MJPEG one); a no-MJPEG file keeps
-            # video[0] so decode raises its named codec gate
-            tr = next(
-                (t for t in video if t["codec"] == "V_MJPEG"),
-                video[0],
-            )
-            n_frames = info["blocks_by_track"].get(
-                tr["track_number"], 0
-            )
-            fps = (
-                n_frames * 1000.0 / info["duration_ms"]
-                if info["duration_ms"]
-                else 0
-            )
-            decode = decode_mkv_frames
-        elif is_mp4(data):
-            info = probe_mp4(data)
-            video = [
-                t for t in info["tracks"] if t["handler"] == "vide"
-            ]
-            if not video:
-                raise ValueError("MP4 has no video track")
-            tr = video[0]
-            # rate from the track's own timescale and raw stts
-            # tick duration — the floor-rounded duration_ms
-            # drifts the stride for real-world timescales
-            # (r07 advice)
-            ticks = sum(c * d for c, d in tr["timing"])
-            if ticks:
-                fps = tr["n_samples"] * tr["timescale"] / ticks
-            elif tr["duration_ms"]:
-                fps = tr["n_samples"] * 1000.0 / tr["duration_ms"]
-            else:
-                fps = 0
-            n_frames, decode = tr["n_samples"], decode_mp4_frames
-        else:
-            info = probe_avi(data)
-            fps = info.get("fps")
-            n_frames, decode = info["n_frames"], decode_avi_frames
+        probe, decode = sniff_video(data)
+        v = probe(data)
+        if v["track_frames"] is None:
+            raise ValueError(f"{v['container']} payload has no video track")
+        fps = v["fps"]
         if not fps:
             # never fabricate timestamps from an invented rate —
             # the module contract is raise-by-name
@@ -791,8 +783,7 @@ def extract_video_frames(df: DataFrame, every_ms: int = 1000) -> DataFrame:
                 "compute sample offsets"
             )
         stride = max(int(round(every_ms * fps / 1000.0)), 1)
-        wanted = list(range(0, n_frames, stride))
-        _, frames = decode(data, wanted)
+        _, frames = decode(data, list(range(0, v["track_frames"], stride)))
         for fno, px in frames:
             px3 = px if px.ndim == 3 else px[:, :, None].repeat(3, 2)
             means = px3.reshape(-1, 3).mean(axis=0)
@@ -824,7 +815,7 @@ def media_stats(df: DataFrame) -> DataFrame:
     )
 
 
-BMP_FEATURES_SCHEMA = T.StructType(
+IMAGE_STATS_SCHEMA = T.StructType(
     [
         T.StructField("media_id", T.LongType(), False),
         T.StructField("width", T.IntegerType(), True),
@@ -835,7 +826,7 @@ BMP_FEATURES_SCHEMA = T.StructType(
     ]
 )
 
-WAV_FEATURES_SCHEMA = T.StructType(
+AUDIO_STATS_SCHEMA = T.StructType(
     [
         T.StructField("media_id", T.LongType(), False),
         T.StructField("sample_rate", T.IntegerType(), True),
@@ -847,71 +838,30 @@ WAV_FEATURES_SCHEMA = T.StructType(
 )
 
 
-def _decode_stats(df: DataFrame, decode_fn, schema) -> DataFrame:
-    """Shared stats operator for real image and audio decodes: the
-    shape (column-pruned ``map_rows``, one stats row per payload) is
-    identical for every codec — swapping a codec in changes only
-    ``decode_fn``, whose result dict supplies ``schema``'s columns
-    after ``media_id``."""
+def _decode_stats(df: DataFrame, stats_fn, schema) -> DataFrame:
+    """One stats row per payload through a column-pruned ``map_rows``:
+    ``stats_fn``'s dict supplies ``schema``'s columns after
+    ``media_id``."""
     cols = schema.fieldNames()[1:]
 
     def one(row):
         mid, payload = row
-        d = decode_fn(bytes(payload))
+        d = stats_fn(payload)
         yield (mid, *(d[c] for c in cols))
 
     return map_rows(df.select("media_id", "payload"), one, schema)
 
 
-def extract_bmp_features(df: DataFrame) -> DataFrame:
-    """REAL image decode over Arrow batches (r05): uncompressed 24-bit
-    BMP payloads → dimensions + channel means, stdlib-only."""
-    return _decode_stats(df, decode_bmp, BMP_FEATURES_SCHEMA)
+def extract_image_stats(df: DataFrame) -> DataFrame:
+    """Dimensions + channel means of every image payload, whatever its
+    format (``image_stats``)."""
+    return _decode_stats(df, image_stats, IMAGE_STATS_SCHEMA)
 
 
-def extract_png_features(df: DataFrame) -> DataFrame:
-    """REAL compressed-image decode over Arrow batches (r06): 8-bit PNG
-    payloads → dimensions + channel means via stdlib zlib + numpy
-    filter reconstruction."""
-    return _decode_stats(df, decode_png, BMP_FEATURES_SCHEMA)
-
-
-def extract_jpeg_features(df: DataFrame) -> DataFrame:
-    """REAL DCT-codec decode over Arrow batches (r06): baseline 4:4:4
-    JPEG payloads → dimensions + channel means via the numpy-only
-    Huffman + IDCT decoder (``jpeg.py``)."""
-    from vector_lake_spark.jpeg import decode_jpeg
-
-    return _decode_stats(df, decode_jpeg, BMP_FEATURES_SCHEMA)
-
-
-def extract_gif_features(df: DataFrame) -> DataFrame:
-    """REAL LZW-codec decode over Arrow batches (r07): GIF87a/89a
-    payloads → first composed frame's dimensions + channel means via the
-    stdlib/numpy decoder (``gif.py``); animation frames compose per the
-    disposal spec before the stats are taken."""
-    from vector_lake_spark.gif import decode_gif
-
-    return _decode_stats(df, decode_gif, BMP_FEATURES_SCHEMA)
-
-
-def extract_tiff_features(df: DataFrame) -> DataFrame:
-    """REAL scanned-document decode over Arrow batches (r08): baseline
-    TIFF payloads (none/LZW/PackBits strips, horizontal-differencing
-    predictor, gray/RGB) → dimensions + channel means (``tiff.py``)."""
-    from vector_lake_spark.tiff import decode_tiff
-
-    return _decode_stats(df, decode_tiff, BMP_FEATURES_SCHEMA)
-
-
-def extract_webp_features(df: DataFrame) -> DataFrame:
-    """REAL prefix-code/LZ77 decode over Arrow batches (r08): lossless
-    WebP (VP8L) payloads → dimensions + channel means via the
-    numpy-only decoder (``vp8l.py``); lossy VP8 / extended VP8X
-    payloads raise their named gates."""
-    from vector_lake_spark.webp import decode_webp
-
-    return _decode_stats(df, decode_webp, BMP_FEATURES_SCHEMA)
+def extract_audio_stats(df: DataFrame) -> DataFrame:
+    """Rate / channels / duration / RMS of every audio payload, whatever
+    its format (``audio_stats``)."""
+    return _decode_stats(df, audio_stats, AUDIO_STATS_SCHEMA)
 
 
 EXIF_SCHEMA = (
@@ -944,47 +894,3 @@ def extract_exif(df: DataFrame) -> DataFrame:
         yield (mid, *(d[c] for c in cols))
 
     return map_rows(df.select("media_id", "payload"), one, EXIF_SCHEMA)
-
-
-def _decode_audio(payload: bytes) -> dict:
-    """Magic-dispatched audio decode: WAV (all four integer PCM widths,
-    IEEE float 32/64, G.711 A-law/μ-law) and FLAC (``flac.py`` — full
-    Rice/LPC lossless decode, r08) both return the same
-    rate/channels/duration/RMS stats shape. MPEG audio is RECOGNIZED
-    and probed (``mp3.py``) but its decode raises the named gate — the
-    probe is the scale operator for that format."""
-    if payload is not None and payload[:4] == b"fLaC":
-        from vector_lake_spark.flac import decode_flac
-
-        return decode_flac(bytes(payload))
-    if (
-        payload is not None
-        and payload[:4] == b"RIFF"
-        and payload[8:12] == b"WAVE"
-    ):
-        return decode_wav(bytes(payload))
-    from vector_lake_spark.mp3 import decode_mp3, is_mp3
-    from vector_lake_spark.ogg import decode_ogg, is_ogg
-
-    if is_mp3(payload):
-        decode_mp3(bytes(payload))  # raises the named layer gate
-    if is_ogg(payload):
-        decode_ogg(bytes(payload))  # raises the named codec gate
-    raise NotImplementedError(
-        "unrecognized audio payload (WAV and FLAC decode natively — "
-        "decode_wav / flac.decode_flac; MPEG audio and Ogg probe via "
-        "mp3.probe_mp3 / ogg.probe_ogg)"
-    )
-
-
-def extract_wav_features(df: DataFrame) -> DataFrame:
-    """REAL audio decode over Arrow batches (r05; all integer PCM
-    widths since r08): WAV payloads → rate/channels/duration/RMS via
-    the stdlib ``wave`` module."""
-    return _decode_stats(df, decode_wav, WAV_FEATURES_SCHEMA)
-
-
-def extract_audio_features(df: DataFrame) -> DataFrame:
-    """Magic-dispatched audio stats over a mixed WAV/FLAC column — the
-    audio counterpart of ``probe_media``'s route-by-container stance."""
-    return _decode_stats(df, _decode_audio, WAV_FEATURES_SCHEMA)

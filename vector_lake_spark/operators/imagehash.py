@@ -18,8 +18,8 @@ approximation like hyperplane LSH.
 Scale posture: pixels never leave the Arrow stage — the decoder and
 the hash both run inside one ``rowmap.map_rows`` stage and only (id, int64
 signature) rows shuffle. The reference has no image operators at all
-(SURVEY §2.B multimodal); decoders are this repo's own
-(gif/jpeg/tiff/png/vp8l modules).
+(SURVEY §2.B multimodal); decoders are this repo's own, reached
+through ``multimodal``'s one image and one video dispatch.
 """
 
 from __future__ import annotations
@@ -27,17 +27,19 @@ from __future__ import annotations
 import numpy as np
 from pyspark.sql import DataFrame
 
+from vector_lake_spark.multimodal import decode_image_pixels, sniff_video
 from vector_lake_spark.rowmap import map_rows
 
 
 def _to_gray(px: np.ndarray) -> np.ndarray:
     """(h, w[, ch]) array in any sample domain → (h, w) float64 luma.
-    Integer-coefficient Rec.601 luma for color; alpha ignored."""
+    Integer-coefficient Rec.601 luma for color; gray is channel 0;
+    alpha ignored."""
     a = np.asarray(px, dtype=np.float64)
     if a.ndim == 2:
         return a
     if a.ndim == 3:
-        if a.shape[2] == 1:
+        if a.shape[2] < 3:  # gray, gray+alpha
             return a[:, :, 0]
         r, g, b = a[:, :, 0], a[:, :, 1], a[:, :, 2]
         return (299 * r + 587 * g + 114 * b) / 1000.0
@@ -221,61 +223,10 @@ INVERSE_ORIENTATION = {1: 1, 2: 2, 3: 3, 4: 4, 5: 5, 6: 8, 7: 7, 8: 6}
 
 
 def decode_image_gray(payload: bytes) -> np.ndarray:
-    """Magic-dispatched pixel decode → (h, w) float64 luma, over the
-    repo's own codecs (the pixels-level twin of
-    ``multimodal._decode_image``'s stats dispatch): GIF, PNG, JPEG,
-    lossless WebP, TIFF and BMP."""
-    b = bytes(payload)
-    if b[:6] in (b"GIF87a", b"GIF89a"):
-        from vector_lake_spark.gif import decode_gif_pixels
-
-        return _to_gray(decode_gif_pixels(b))
-    if b[:8] == b"\x89PNG\r\n\x1a\n":
-        from vector_lake_spark.multimodal import decode_png_pixels
-
-        return _to_gray(decode_png_pixels(b))
-    if b[:2] == b"\xff\xd8":
-        from vector_lake_spark.jpeg import decode_jpeg_pixels
-
-        return _to_gray(decode_jpeg_pixels(b))
-    if b[:4] == b"RIFF" and b[8:12] == b"WEBP":
-        from vector_lake_spark.vp8l import decode_webp_pixels
-
-        return _to_gray(decode_webp_pixels(b)["pixels"])
-    if b[:4] in (b"II*\x00", b"MM\x00*"):
-        from vector_lake_spark.tiff import decode_tiff_pixels
-
-        return _to_gray(decode_tiff_pixels(b))
-    if b[:2] == b"BM":
-        from vector_lake_spark.multimodal import decode_bmp
-
-        # decode_bmp is stats-shaped but owns the format validation
-        # (uncompressed 24-bit only — 32bpp/palette/compressed raise
-        # its named gates instead of silently hashing garbage, review
-        # r10); after it accepts, the row slicing here is safe
-        decode_bmp(b)
-        import struct
-
-        off, = struct.unpack_from("<I", b, 10)
-        w, h = struct.unpack_from("<ii", b, 18)
-        # negative height = top-down row order (legal per the BMP spec,
-        # and decode_bmp's stats path accepts it) — same pixels, no
-        # bottom-up flip (r11, ADVICE r10: this is a well-formed layout,
-        # not corruption)
-        flip = h > 0
-        h = abs(h)
-        row = (w * 3 + 3) & ~3
-        px = np.frombuffer(
-            b, dtype=np.uint8, count=h * row, offset=off
-        ).reshape(h, row)
-        if flip:
-            px = px[::-1]
-        px = px[:, : w * 3].reshape(h, w, 3)
-        return _to_gray(px[:, :, ::-1])  # BGR → RGB
-    raise NotImplementedError(
-        "unrecognized image payload for perceptual hashing (GIF, PNG, "
-        "JPEG, lossless WebP, TIFF and BMP decode natively)"
-    )
+    """Image payload → (h, w) float64 luma: ``_to_gray`` over
+    ``multimodal.decode_image_pixels``, the one image-format
+    dispatch."""
+    return _to_gray(decode_image_pixels(payload))
 
 
 def image_signatures(
@@ -316,30 +267,14 @@ def image_signatures(
 
 
 def decode_video_frames_gray(payload: bytes, frame_indices):
-    """Magic-dispatched selective video decode → [(frame_no, (h, w)
-    float64 luma)] over the repo's own container/codec stack (the
-    pixels-level twin of ``multimodal.extract_video_frames``'s stats
-    dispatch): MJPEG/RLE8 AVI, photo-JPEG MP4, V_MJPEG Matroska. Only
-    the requested frames are entropy-decoded (RLE8 replays its delta
-    chain up to the last request — the interframe cost model);
-    interframe codecs raise their named gates inside the decoders."""
+    """Selective video decode → [(frame_no, (h, w) float64 luma)]
+    through ``multimodal.sniff_video``'s frame decoder (MJPEG/RLE8 AVI,
+    photo-JPEG MP4, V_MJPEG Matroska). Only the requested frames are
+    entropy-decoded (RLE8 replays its delta chain up to the last
+    request — the interframe cost model); interframe codecs raise
+    their named gates inside the decoders."""
     b = bytes(payload)
-    if b[:4] == b"RIFF" and b[8:12] == b"AVI ":
-        from vector_lake_spark.avi import decode_avi_frames as dec
-    else:
-        from vector_lake_spark.mkv import is_mkv
-        from vector_lake_spark.mp4 import is_mp4
-
-        if is_mkv(b):
-            from vector_lake_spark.mkv import decode_mkv_frames as dec
-        elif is_mp4(b):
-            from vector_lake_spark.mp4 import decode_mp4_frames as dec
-        else:
-            raise NotImplementedError(
-                "unrecognized video payload for perceptual hashing "
-                "(MJPEG/RLE8 AVI, photo-JPEG MP4 and V_MJPEG Matroska "
-                "decode natively)"
-            )
+    dec = sniff_video(b)[1]
     idx = list(frame_indices)
     try:
         _info, frames = dec(b, idx)

@@ -8096,11 +8096,11 @@ def q_mm_wav_depths(spark, sf):
     formats the stdlib `wave` module refuses: G.711 μ-law and A-law
     (`g711.py`, cross-checked bit-exact against stdlib `audioop` over
     the complete code/sample domain) and IEEE float 32/64, through the
-    manual RIFF walk (`multimodal._decode_wav_ext`) — and, r10, BOTH
+    manual RIFF walk (`multimodal._decode_wav_ext_samples`) — and, r10, BOTH
     common ADPCM families (`adpcm.py`: IMA/DVI tag 0x0011 and MS tag
     0x0002). Per document,
     doc_id%10 picks the mode; a ±amp square wave is muxed and the REAL
-    `decode_wav` reads it back, the emitted codec string coming from
+    `audio_stats` reads it back, the emitted codec string coming from
     the decoder, not the parameters. Amplitude choices keep every RMS
     closed-form: integer modes scale past 16 bits (proving the wide
     paths), the companded modes sit on EXACT G.711 decode levels
@@ -8116,7 +8116,7 @@ def q_mm_wav_depths(spark, sf):
     triangles and their RMS are closed-form even though the codecs are
     lossy in general; the fact-chunk trim of padded final blocks is
     part of what the hash proves."""
-    from vector_lake_spark.multimodal import decode_wav, encode_wav_ext
+    from vector_lake_spark.multimodal import audio_stats, encode_wav_ext
 
     d = _t(spark, sf, "documents")
     params = d.select(
@@ -8222,7 +8222,7 @@ def q_mm_wav_depths(spark, sf):
                 block, 8000, 1, 7 + len(packed), n
             )
             bits = 4
-        out = decode_wav(payload)
+        out = audio_stats(payload)
         yield (
             r.media_id,
             out["codec"],
@@ -8385,12 +8385,13 @@ def q_mm_flac_roundtrip(spark, sf):
     with doc-derived amplitude, length and channel count (mono or
     stereo) goes through the REAL FLAC encoder (FIXED predictors +
     Rice residuals, `flac.py`) and back through the full frame/CRC/
-    residual decoder via the magic-dispatched audio operator shape.
+    residual decoder via the one audio stats entry (`audio_stats`).
     A square wave's RMS is exactly its amplitude, so every output has
     a closed form; a green hash proves encode+decode invert exactly —
     predictors, Rice coding, frame CRCs and STREAMINFO — over every
     document with an independent derivation of the result."""
-    from vector_lake_spark.flac import decode_flac, encode_flac
+    from vector_lake_spark.flac import encode_flac
+    from vector_lake_spark.multimodal import audio_stats
 
     d = _t(spark, sf, "documents")
     params = d.select(
@@ -8406,7 +8407,7 @@ def q_mm_flac_roundtrip(spark, sf):
             np.arange(r.n) % 2 == 0, r.amp, -r.amp
         ).astype(np.int64)
         s = np.repeat(wave[:, None], r.ch, axis=1)
-        out = decode_flac(encode_flac(s, 8000, 16))
+        out = audio_stats(encode_flac(s, 8000, 16))
         yield (
             r.media_id,
             out["sample_rate"],

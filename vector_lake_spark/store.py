@@ -65,6 +65,7 @@ import json
 import os
 import time
 from collections.abc import Sequence
+from urllib.parse import unquote, urlparse
 
 from pyspark.sql import DataFrame, SparkSession, functions as F, types as T
 
@@ -564,7 +565,16 @@ class SparkVectorLake:
         exactly what to inspect and delete (same recovery posture as
         ``_check_no_leftover_trash``). Note s3a caveat: S3 create is not
         atomic-exclusive — on S3 run maintenance from a single scheduler
-        (docs/S3.md)."""
+        (docs/S3.md).
+
+        Appends (``persist``, ``stream_ingest``) take no lease. A rewrite
+        instead refuses its swap when a touched shard holds a file its
+        scan did not read (``_swap_shards`` lists the shards after the
+        staged write, before the first rename). One window remains: a
+        file an append commits into a touched shard between that listing
+        and the shard's own rename leaves with the old directory. The
+        window is as long as the rename loop (per shard, two renames and
+        a delete), not the rewrite job."""
         lock = f"{self.location}/_maintenance.lock"
         fs, p = self._fs_path(lock)
         try:
@@ -616,7 +626,14 @@ class SparkVectorLake:
         and the next swap REFUSES to start until it is recovered (renamed
         back) or explicitly deleted. A shard with no rewritten rows is
         simply removed (retention can empty a shard). Its callers have
-        already refused on leftover trash (``_locked``)."""
+        already refused on leftover trash (``_locked``).
+
+        Before the first rename every listed shard directory is listed:
+        a data file there that ``rewritten``'s scan did not read
+        (``inputFiles``, which runs no job) was appended after the
+        rewrite's ``load()`` and would be lost with the old directory,
+        so the swap refuses with ``IOError``, drops the staged copy and
+        leaves the store unchanged."""
         self._read_schema = None
         tmp = f"{self.location}/_rewrite_tmp"
         trash_root = f"{self.location}/_trash"
@@ -628,6 +645,24 @@ class SparkVectorLake:
             .partitionBy("shard_id")
             .parquet(tmp)
         )
+        read = {unquote(urlparse(f).path) for f in rewritten.inputFiles()}
+        for sid in shard_ids:
+            fs, dst = self._fs_path(f"{self._data_path}/shard_id={sid}")
+            if not fs.exists(dst):
+                continue
+            unread = [
+                s.getPath() for s in fs.listStatus(dst)
+                if not s.getPath().getName().startswith(("_", "."))
+                and s.getPath().toUri().getPath() not in read
+            ]
+            if unread:
+                fs.delete(self._fs_path(tmp)[1], True)
+                raise IOError(
+                    f"refusing shard swap: shard {sid} gained "
+                    f"{len(unread)} file(s) after this rewrite read it "
+                    f"(e.g. {unread[0]}), from a concurrent append; the "
+                    f"store is unchanged, retry the call"
+                )
         fs.mkdirs(trash_root_p)
         for sid in shard_ids:
             fs, dst = self._fs_path(f"{self._data_path}/shard_id={sid}")

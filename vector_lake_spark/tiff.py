@@ -668,27 +668,6 @@ def _decode_tiled(
     return px
 
 
-def decode_tiff(payload: bytes) -> dict:
-    """Stats-shaped decode (the ``multimodal._decode_image`` contract).
-    Means come straight off the integer array (np.mean accumulates in
-    float64 anyway) — no full float64 copy of a scanned page. Means are
-    RAW-domain: 0..255 for 8-bit pages, 0..65535 for 16-bit and palette
-    pages (``decode_tiff_pixels`` returns uint16 there)."""
-    px = decode_tiff_pixels(payload)
-    h, w = px.shape[:2]
-    if px.shape[2] == 1:
-        mr = mg = mb = float(px.mean())
-    else:
-        mr, mg, mb = (float(px[:, :, i].mean()) for i in range(3))
-    return {
-        "width": int(w),
-        "height": int(h),
-        "mean_r": round(mr, 6),
-        "mean_g": round(mg, 6),
-        "mean_b": round(mb, 6),
-    }
-
-
 def _diff_rows(px: np.ndarray) -> np.ndarray:
     """Predictor-2 forward pass: per-row horizontal differencing, mod
     2^depth of the sample dtype."""

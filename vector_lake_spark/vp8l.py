@@ -833,8 +833,8 @@ def decode_vp8l(chunk: bytes) -> dict:
 
 def decode_webp_pixels(payload: bytes) -> dict:
     """Decode a simple-format lossless WebP file (RIFF + one VP8L
-    chunk) to RGBA pixels. Lossy (VP8) and extended (VP8X) files gate
-    by name in `webp.decode_webp`."""
+    chunk) to RGBA pixels. Extended (VP8X) files decode, and lossy
+    (VP8) files gate by name, in `webp.decode_webp_frames`."""
     if (
         len(payload) < 20
         or payload[:4] != b"RIFF"

@@ -18,12 +18,12 @@ Header layouts (public spec):
   blend/dispose flags, then the frame's own image chunks).
 
 ``probe_webp`` reports (format, width, height, has_alpha, animated,
-n_frames) touching only chunk headers; ``decode_webp`` decodes VP8L
-(simple, VP8X-wrapped, or the first composed animation frame) and
-gates VP8 by name. ``decode_webp_frames`` composes animation frames
-per spec (both blending methods, dispose-to-background). The probe
-also rides ``multimodal._decode_image``'s dispatch so a lossy WebP
-fails with its REAL identity named instead of "unrecognized".
+n_frames) touching only chunk headers. ``decode_webp_frames`` decodes
+VP8L stills (simple or VP8X-wrapped) and composes animation frames
+per spec (both blending methods, dispose-to-background); lossy VP8
+gates by name with the variant and dimensions the probe read, so a
+lossy WebP fails with its REAL identity named instead of
+"unrecognized". ``multimodal.decode_image_pixels`` takes frame 0.
 """
 
 from __future__ import annotations
@@ -119,46 +119,6 @@ def walk_webp_chunks(payload: bytes):
             )
         yield fourcc, body, body + size
         pos = body + size + (size & 1)  # chunks pad to even offsets
-
-
-def decode_webp(payload: bytes) -> dict:
-    """Stats-shaped decode (the ``multimodal._decode_image`` contract).
-
-    LOSSLESS WebP (VP8L) decodes for real — full prefix-code + LZ77 +
-    transform inversion in ``vp8l.py`` (r08) — as a simple-format file,
-    wrapped in an extended (VP8X) container (the chunk walk finds the
-    VP8L still), or ANIMATED with VP8L frames (stats over the first
-    COMPOSED frame, the `decode_gif` stance). Lossy VP8 (a boolean-
-    coder intra video frame + loop filter) stays gated by name."""
-    from vector_lake_spark.vp8l import decode_vp8l
-
-    info = probe_webp(payload)
-    px = None
-    if info["format"] == "vp8x" and info["animated"]:
-        _, frames = decode_webp_frames(payload, [0])
-        px = frames[0][1]
-    elif info["format"] in ("vp8l", "vp8x"):
-        for fourcc, s, e in walk_webp_chunks(payload):
-            if fourcc == b"VP8L":
-                px = decode_vp8l(payload[s:e])["pixels"]
-                break
-    if px is not None:
-        px = px.astype(np.float64)
-        h, w = px.shape[:2]
-        return {
-            "width": int(w),
-            "height": int(h),
-            "mean_r": round(float(px[:, :, 0].mean()), 6),
-            "mean_g": round(float(px[:, :, 1].mean()), 6),
-            "mean_b": round(float(px[:, :, 2].mean()), 6),
-        }
-    raise NotImplementedError(
-        f"WebP pixel decode unsupported ({info['format']}, "
-        f"{info['width']}x{info['height']}) — lossless VP8L decodes "
-        f"natively (vp8l.py), simple or VP8X-wrapped; VP8 needs a "
-        f"boolean-coder intra decoder; the metadata probe (probe_webp) "
-        f"reads all three"
-    )
 
 
 # ---------------------------------------------------------------------------
@@ -263,7 +223,6 @@ def decode_webp_frames(payload: bytes, frame_indices=None):
 
     info = probe_webp(payload)
     if info["format"] != "vp8x" or not info["animated"]:
-        # one decode, not decode_webp-for-stats plus a second for pixels
         px = None
         for fourcc, s, e in walk_webp_chunks(payload):
             if fourcc == b"VP8L":
@@ -271,9 +230,11 @@ def decode_webp_frames(payload: bytes, frame_indices=None):
                 break
         if px is None:
             raise NotImplementedError(
-                f"WebP still frame undecodable ({info['format']}, "
-                f"{info['width']}x{info['height']}) — only VP8L stills "
-                f"decode natively"
+                f"WebP pixel decode unsupported ({info['format']}, "
+                f"{info['width']}x{info['height']}) — lossless VP8L "
+                f"decodes natively (vp8l.py), simple or VP8X-wrapped; VP8 "
+                f"needs a boolean-coder intra decoder; the metadata probe "
+                f"(probe_webp) reads all three"
             )
         meta = {
             "width": int(px.shape[1]), "height": int(px.shape[0]),
@@ -296,7 +257,7 @@ def decode_webp_frames(payload: bytes, frame_indices=None):
             anmf.append((s, e))
     n = len(anmf)
     if n == 0:
-        # keeps the module's corrupt-input contract: _decode_image
+        # keeps the module's corrupt-input contract: the image
         # dispatch expects ValueError/NotImplementedError, never a bare
         # IndexError from frames[0] downstream (r08 advice)
         raise ValueError("corrupt WebP: animated file with no ANMF frames")
