@@ -7,6 +7,7 @@ fixture's closed-form parity (synth → mux → REAL decode → fingerprint
 import numpy as np
 import pytest
 
+from vector_lake_spark.multimodal import UnrecognizedMedia
 from vector_lake_spark.operators.audiofp import (
     audio_fingerprint64,
     audio_signatures,
@@ -171,11 +172,12 @@ def test_remaining_audio_gate_is_named():
 
 def test_corrupt_wav_routes_to_valueerror():
     """Review r11: damage and format novelty must split per the repo's
-    routing contract — a non-WAV blob or a PCM WAV truncated inside its
-    header is corrupt (ValueError), NOT an unsupported format."""
+    routing contract — a RIFF/WAVE payload damaged inside its header is
+    corrupt (ValueError); a payload no audio decoder claims is
+    ``UnrecognizedMedia``, as on the stats path."""
     with pytest.raises(ValueError, match="corrupt WAV"):
         decode_wav_samples(b"RIFFxxxxWAVE" + b"\x01" * 8)
-    with pytest.raises(ValueError, match="corrupt WAV"):
+    with pytest.raises(UnrecognizedMedia):
         decode_wav_samples(b"not a wav at all, definitely")
     # a real PCM WAV cut inside the header is damage, not novelty
     good = mux_pcm16_wav(np.zeros(512, dtype=np.int16))

@@ -671,10 +671,7 @@ def test_neardup_ingest_bounded_state_multi_batch(spark, tmp_path):
     ends up holding exactly one row per ingested vector."""
     import json
 
-    from pyspark.sql import functions as F
-
     from vector_lake_spark import queries as Q
-    from vector_lake_spark.functions.vectors import to_double_array
     from vector_lake_spark.operators.ann import lsh_neardup_pairs
     from vector_lake_spark.streaming.neardup import NearDupIngest, banded_keys
 
@@ -688,8 +685,9 @@ def test_neardup_ingest_bounded_state_multi_batch(spark, tmp_path):
         .option("maxFilesPerTrigger", 1)
         .parquet(src)
     )
-    v = to_double_array(F.col("embedding"))
-    shard, bkeys = banded_keys(v, Q.H4, Q.NEARDUP_BANDS)
+    shard, bkeys = banded_keys(
+        "CAST(`embedding` AS ARRAY<DOUBLE>)", Q.H4, Q.NEARDUP_BANDS
+    )
     keyed = stream.select("vec_id", shard.alias("shard"), bkeys.alias("bkeys"))
 
     ingest = NearDupIngest(
@@ -726,7 +724,6 @@ def test_neardup_ingest_bounded_state_multi_batch(spark, tmp_path):
             threshold=-1.0,  # keep ALL candidates: compare candidate sets
             n_bands=Q.NEARDUP_N_BANDS,
             band_bits=Q.NEARDUP_BAND_BITS,
-            carry_vectors=True,
         ).collect()
     }
     assert got == want
@@ -898,6 +895,28 @@ def test_image_decode_gates_are_loud(spark):
         image_stats(b"II*\x00unknown-tiff-ish")
     with pytest.raises(NotImplementedError, match="decode natively"):
         image_stats(b"ICO?unknown-magic")  # honestly unsupported
+
+
+@pytest.mark.parametrize(
+    "payload",
+    [
+        b"BMxx",
+        mm.PNG_SIGNATURE + b"\x00\x00\x00\x0dIHDR\x00\x00\x00\x10",
+        b"II*\x00",
+        b"MM\x00*",
+    ],
+    ids=["bmp", "png", "tiff-le", "tiff-be"],
+)
+def test_truncated_image_header_is_corrupt(payload):
+    """A payload whose magic matches but whose header is cut short is
+    corrupt input (ValueError), never a ``struct.error``, through both
+    the stats and the perceptual-signature decode."""
+    from vector_lake_spark.operators.imagehash import decode_image_gray
+
+    with pytest.raises(ValueError, match="header truncated"):
+        mm.image_stats(payload)
+    with pytest.raises(ValueError, match="header truncated"):
+        decode_image_gray(payload)
 
 
 def _make_png(pixels, color_type, filters):
@@ -1207,17 +1226,15 @@ def test_neardup_ingest_compact_history(spark, tmp_path):
     AFTER compaction still pairs correctly against the full history."""
     import glob
 
-    from pyspark.sql import functions as F
-
     from vector_lake_spark import queries as Q
-    from vector_lake_spark.functions.vectors import to_double_array
     from vector_lake_spark.operators.ann import lsh_neardup_pairs
     from vector_lake_spark.streaming.neardup import NearDupIngest, banded_keys
 
     sf = "/root/testdata/sf0.001"
     emb = spark.read.parquet(f"{sf}/embeddings.parquet")
-    v = to_double_array(F.col("embedding"))
-    shard, bkeys = banded_keys(v, Q.H4, Q.NEARDUP_BANDS)
+    shard, bkeys = banded_keys(
+        "CAST(`embedding` AS ARRAY<DOUBLE>)", Q.H4, Q.NEARDUP_BANDS
+    )
     keyed = emb.select("vec_id", shard.alias("shard"), bkeys.alias("bkeys"))
 
     hist_path = str(tmp_path / "history")
@@ -1254,7 +1271,6 @@ def test_neardup_ingest_compact_history(spark, tmp_path):
             threshold=-1.0,
             n_bands=Q.NEARDUP_N_BANDS,
             band_bits=Q.NEARDUP_BAND_BITS,
-            carry_vectors=True,
         ).collect()
     }
     assert got == want and got
@@ -1304,17 +1320,15 @@ def test_neardup_ingest_replay_is_idempotent(spark, tmp_path):
     batch re-processed with the SAME batch_id — the crash-and-replay
     case — must leave history and pairs byte-identical: no duplicate
     history keys, no duplicate pairs, no batch-vs-own-keys pairing."""
-    from pyspark.sql import functions as F
-
     from vector_lake_spark import queries as Q
-    from vector_lake_spark.functions.vectors import to_double_array
     from vector_lake_spark.operators.ann import lsh_neardup_pairs
     from vector_lake_spark.streaming.neardup import NearDupIngest, banded_keys
 
     sf = "/root/testdata/sf0.001"
     emb = spark.read.parquet(f"{sf}/embeddings.parquet")
-    v = to_double_array(F.col("embedding"))
-    shard, bkeys = banded_keys(v, Q.H4, Q.NEARDUP_BANDS)
+    shard, bkeys = banded_keys(
+        "CAST(`embedding` AS ARRAY<DOUBLE>)", Q.H4, Q.NEARDUP_BANDS
+    )
     keyed = emb.select("vec_id", shard.alias("shard"), bkeys.alias("bkeys"))
     halves = [keyed.filter(f"vec_id % 2 = {i}") for i in range(2)]
 
@@ -1344,7 +1358,6 @@ def test_neardup_ingest_replay_is_idempotent(spark, tmp_path):
             threshold=-1.0,
             n_bands=Q.NEARDUP_N_BANDS,
             band_bits=Q.NEARDUP_BAND_BITS,
-            carry_vectors=True,
         ).collect()
     }
     assert got == want
@@ -1529,7 +1542,6 @@ def test_neardup_compact_between_crash_and_replay(spark, tmp_path):
     """Same hole for the near-dup history: after crash→compact→replay
     the history holds each key exactly once and the replayed batch's
     pair emission equals its pre-compact emission."""
-    from vector_lake_spark.functions.vectors import to_double_array
     from vector_lake_spark.queries import H4, NEARDUP_BANDS
     from vector_lake_spark.streaming.neardup import NearDupIngest, banded_keys
 
@@ -1538,8 +1550,9 @@ def test_neardup_compact_between_crash_and_replay(spark, tmp_path):
         .limit(120)
         .localCheckpoint(eager=True)
     )
-    v = to_double_array(F.col("embedding"))
-    shard, bkeys = banded_keys(v, H4, NEARDUP_BANDS)
+    shard, bkeys = banded_keys(
+        "CAST(`embedding` AS ARRAY<DOUBLE>)", H4, NEARDUP_BANDS
+    )
     keyed = emb.select(
         "vec_id", shard.alias("shard"), bkeys.alias("bkeys")
     ).localCheckpoint(eager=True)

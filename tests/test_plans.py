@@ -933,45 +933,23 @@ def test_url_dedup_two_hash_keys_no_python(spark):
     assert keys <= {"url", "domain"}, keys
 
 
-def test_neardup_bucket_cap_exchange_economy(spark):
-    """The r09 bucket-size guard's shuffle contract, per strategy:
-
-    - narrow path: the counting window hash-partitions on the same
-      (shard, band, bkey) the bucket join needs, so the cap adds NO
-      exchange on those keys — one per join side, window included (the
-      shingle df-cap contract, operators/dedup.py).
-    - carry path: the cap deliberately runs BEFORE vectors attach, so
-      when it binds only SURVIVOR vectors shuffle into the bucket join;
-      the price is one extra narrow key-row exchange per side (~40 B
-      rows), never a second vector shuffle.
-    """
-    from vector_lake_spark import queries as Q
+def test_neardup_bucket_join_exchange_count(spark):
+    """lsh_neardup_pairs' shuffle contract: vectors ride the bucket join,
+    so the only hash exchanges are the two sides of the (shard, band,
+    bkey) join — no pair-keyed exchange re-attaches vectors after it."""
     from vector_lake_spark.operators.ann import lsh_neardup_pairs
 
     emb = spark.read.parquet(f"{SF}/embeddings.parquet")
-    kw = dict(
-        threshold=Q.NEARDUP_COS_THRESHOLD, n_bands=Q.NEARDUP_N_BANDS,
-        band_bits=Q.NEARDUP_BAND_BITS, max_bucket_size=64,
+    df = lsh_neardup_pairs(
+        emb, Q.H4, threshold=Q.NEARDUP_COS_THRESHOLD,
+        n_bands=Q.NEARDUP_N_BANDS, band_bits=Q.NEARDUP_BAND_BITS,
     )
-
-    def bucket_exchanges(df):
-        simple = plan_string(df, "simple")
-        return [
-            s.split("\n")[0]
-            for s in simple.split("Exchange ")[1:]
-            if s.startswith("hashpartitioning") and "bkey" in s.split("\n")[0]
-        ]
-
-    narrow = lsh_neardup_pairs(emb, Q.H4, **kw)
-    assert len(bucket_exchanges(narrow)) <= 2  # one per side, reused
-
-    carry = lsh_neardup_pairs(emb, Q.H4, carry_vectors=True, **kw)
-    ex = bucket_exchanges(carry)
-    assert len(ex) <= 4
-    # the vector column must ride only the POST-cap exchanges: the
-    # window-side (pre-id-join) exchanges shuffle narrow key rows
-    narrow_key_ex = [e for e in ex if " v#" not in e and "va" not in e and "vb" not in e]
-    assert len(narrow_key_ex) >= 2, ex
+    hashed = [
+        s.split("\n")[0]
+        for s in plan_string(df, "simple").split("Exchange ")[1:]
+        if s.startswith("hashpartitioning")
+    ]
+    assert len(hashed) == 2 and all("bkey" in e for e in hashed), hashed
 
 
 def test_image_neardup_shuffles_signatures_not_pixels(spark):
@@ -1281,17 +1259,22 @@ def test_lit_vector_expr_identical(spark):
 
 
 def test_shard_id_sql_matches_dsl(spark):
-    """shard_id_expr's SQL-fragment fast path (r12) builds the identical
-    expression to the Column DSL path — plan and results."""
+    """shard_id_expr's one-parse SQL construction (r12) builds the
+    identical expression to the per-hyperplane Column DSL tree it
+    replaced — plan and results."""
     from pyspark.sql import functions as F
 
-    from vector_lake_spark.functions.vectors import to_double_array
+    from vector_lake_spark.functions.vectors import dot, lit_vector, to_double_array
     from vector_lake_spark.operators import lsh as L
 
     H = L.make_hyperplanes(64, 4)
     emb = Q._t(spark, SF, "embeddings")
     v = to_double_array(F.col("embedding"))
-    dsl = emb.select(L.shard_id_expr(v, H).alias("s"))
+    shard = F.lit(0).cast("long")
+    for j, row in enumerate(H):
+        bit = (dot(v, lit_vector(row)) > 0).cast("long")
+        shard = shard + bit * F.lit(2 ** (len(H) - 1 - j)).cast("long")
+    dsl = emb.select(shard.alias("s"))
     sql = emb.select(
         L.shard_id_expr("CAST(`embedding` AS ARRAY<DOUBLE>)", H).alias("s")
     )
@@ -1513,3 +1496,65 @@ def test_engine_reads_no_correctness_records():
             if isinstance(text, str) and "CORRECTNESS_" in text:
                 hits.append((p.relative_to(root).as_posix(), node.lineno))
     assert hits == []
+
+
+def test_every_flag_has_two_library_values():
+    """A bool option that no caller outside the tests ever flips picks a
+    code path only tests run. For every public parameter with a bool
+    literal default in ``store.py``, ``adapter.py`` and ``operators/``,
+    the non-test call sites (the library, ``scripts/``, ``examples/``,
+    ``perfbench/``, ``bench.py``, ``__spark_entry__.py``) together must
+    use both values. A call site is matched by the callee's name;
+    omitting the keyword counts as the default, and a non-literal value
+    counts as both."""
+    import ast
+    import pathlib
+
+    lib = pathlib.Path(Q.__file__).parent
+    repo = lib.parent
+    flags = {}  # (function, parameter) -> default
+    for p in [lib / "store.py", lib / "adapter.py", *(lib / "operators").rglob("*.py")]:
+        tree = ast.parse(p.read_text())
+        fns = [n for n in tree.body if isinstance(n, ast.FunctionDef)]
+        for c in tree.body:
+            if isinstance(c, ast.ClassDef) and not c.name.startswith("_"):
+                fns += [n for n in c.body if isinstance(n, ast.FunctionDef)]
+        for fn in fns:
+            a = fn.args
+            pos = a.posonlyargs + a.args
+            pairs = list(zip(pos[len(pos) - len(a.defaults):], a.defaults))
+            pairs += list(zip(a.kwonlyargs, a.kw_defaults))
+            for arg, d in pairs:
+                if (
+                    not fn.name.startswith("_")
+                    and not arg.arg.startswith("_")
+                    and isinstance(d, ast.Constant)
+                    and isinstance(d.value, bool)
+                ):
+                    flags[(fn.name, arg.arg)] = d.value
+    callers = [
+        *lib.rglob("*.py"), *(repo / "scripts").rglob("*.py"),
+        *(repo / "examples").rglob("*.py"),
+        *(repo / "perfbench").rglob("*.py"),
+        repo / "bench.py", repo / "__spark_entry__.py",
+    ]
+    used = {k: set() for k in flags}
+    for p in callers:
+        if "tests" in p.relative_to(repo).parts:
+            continue
+        for node in ast.walk(ast.parse(p.read_text())):
+            if not isinstance(node, ast.Call):
+                continue
+            f = node.func
+            name = f.id if isinstance(f, ast.Name) else getattr(f, "attr", None)
+            kws = {k.arg: k.value for k in node.keywords}
+            for (fn, param), default in flags.items():
+                if fn != name:
+                    continue
+                v = kws.get(param, ast.Constant(default))
+                used[(fn, param)] |= (
+                    {v.value} if isinstance(v, ast.Constant) else {True, False}
+                )
+    assert flags  # the scan found the flags it guards
+    single = sorted(f"{fn}.{p}" for (fn, p), vals in used.items() if len(vals) < 2)
+    assert single == [], single

@@ -97,8 +97,6 @@ def test_hamming_total_bits_validation(spark):
         hamming_neardup_pairs(df, radius=1, total_bits=65)
     with pytest.raises(ValueError, match="total_bits"):
         hamming_neardup_pairs(df, radius=1, total_bits=0)
-    with pytest.raises(ValueError, match="legacy spelling"):
-        hamming_neardup_pairs(df, radius=1, n_bands=2, total_bits=60)
     # short signatures pair exactly: two equal 2-bit sigs at radius 1
     got = hamming_neardup_pairs(
         df, radius=1, n_blocks=2, total_bits=2

@@ -432,25 +432,6 @@ def test_round_trip_over_scheme(spark, tmp_path, rng, scheme):
     assert lake.count() == 0
 
 
-def test_compact_splits_hot_shard(spark, tmp_path, rng):
-    import glob
-
-    loc = str(tmp_path / "lake")
-    # approx_shards=2 → 1 hash → 2 shards; most rows land in few shards
-    lake = SparkVectorLake(spark, loc, dimension=4, approx_shards=2)
-    lake.add_batch((rng.rand(400, 4) - 0.5).tolist())
-    lake.persist()
-    lake.compact(target_files_per_shard=3)
-    per_shard = {}
-    for f in glob.glob(f"{loc}/data/*/*.parquet"):
-        shard = f.split("shard_id=")[1].split("/")[0]
-        per_shard[shard] = per_shard.get(shard, 0) + 1
-    assert lake.count() == 400
-    # the knob must be able to split a shard into multiple files
-    assert max(per_shard.values()) > 1
-    assert max(per_shard.values()) <= 3
-
-
 @pytest.mark.parametrize("k", [1, 3, 5, 50])
 def test_query_k_fuzzing(spark, tmp_path, rng, k):
     """Reference test_query_size_fuzzing parity: any k returns at most
@@ -783,74 +764,6 @@ def test_query_filtered_empty_and_none(spark, tmp_path, rng):
         == 0
     )
     assert lake.query(q, k=5, n_probes=2, where=None).count() == 5
-
-
-def test_compact_time_cluster_narrows_footers(spark, tmp_path, rng):
-    """time_cluster=True leaves every shard file covering a narrow,
-    contiguous timestamp range (footer min/max), where the default
-    hash-salted compact leaves files spanning ~the full range — the
-    property that lets retention skip young row groups."""
-    import datetime
-    import glob
-
-    import pyarrow.parquet as pq_
-
-    loc = str(tmp_path / "lake")
-    lake = SparkVectorLake(spark, loc, dimension=3, approx_shards=2)
-    base = datetime.datetime(2024, 1, 1)
-    rows = [
-        (
-            str(i),
-            [float(x) for x in rng.rand(3)],
-            "{}",
-            "d",
-            base + datetime.timedelta(hours=i),
-        )
-        for i in range(400)
-    ]
-    df = spark.createDataFrame(
-        rows,
-        "id string, vector array<double>, metadata string, "
-        "document string, timestamp timestamp",
-    )
-    lake.add_dataframe(df)
-    lake.persist()
-    full_span = datetime.timedelta(hours=399)
-
-    def file_spans():
-        spans = []
-        for f in glob.glob(f"{loc}/data/*/*.parquet"):
-            md = pq_.ParquetFile(f).metadata
-            idx = {
-                md.schema.column(i).name: i for i in range(md.num_columns)
-            }["timestamp"]
-            st = [
-                md.row_group(rg).column(idx).statistics
-                for rg in range(md.num_row_groups)
-                if md.row_group(rg).num_rows > 0
-            ]
-            st = [s for s in st if s is not None and s.has_min_max]
-            if not st:  # empty file from an unused salt/range slot
-                continue
-            spans.append(
-                max(s.max for s in st) - min(s.min for s in st)
-            )
-        return spans
-
-    lake.compact(target_files_per_shard=4)
-    hash_spans = file_spans()
-    assert max(hash_spans) > 0.9 * full_span  # hash salt: full-span files
-
-    lake.compact(target_files_per_shard=4, time_cluster=True)
-    time_spans = file_spans()
-    assert lake.count() == 400
-    assert len(time_spans) >= 4
-    # contiguous ranges: every file well under half the full span
-    assert max(time_spans) < 0.5 * full_span
-    # retention still exact after the clustered rewrite
-    n = lake.delete_older_than(base + datetime.timedelta(hours=200))
-    assert n >= 1
-    assert lake.count() == 200
 
 
 def test_concurrent_mutator_fails_fast_and_loses_nothing(

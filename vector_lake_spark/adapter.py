@@ -263,25 +263,17 @@ class SparkVectorLakeStore:
             for i in selected
         ]
 
-    def delete(self, ids: Sequence[str], compact: bool = False) -> bool:
+    def delete(self, ids: Sequence[str]) -> bool:
         """LangChain ``VectorStore.delete`` surface (optional in the
         protocol; absent in the reference adapter): row-level removal via
         the store's shard-pruned ``delete_ids`` rewrite. Returns ``True``
         per the protocol's Optional[bool] success contract — deleting
         ids that are already absent is an idempotent success, NOT a
         falsy 0 (r05 review finding); callers wanting the rewrite count
-        use ``store.lake.delete_ids`` directly.
-
-        ``compact=True`` additionally runs the store's shard compaction
-        afterwards: the delete rewrite leaves each touched shard with
-        its surviving rows spread over the pre-delete file count, and
-        repeated deletes fragment shards into many small files — the
-        same pathology the reference's 256-tiny-segments layout has
-        (SURVEY.md §7.7). Off by default: compaction rewrites EVERY
-        shard, so batch it (delete many, compact once)."""
+        use ``store.lake.delete_ids`` directly. Repeated deletes leave
+        touched shards fragmented into small files; batch them (delete
+        many, then ``store.lake.compact()`` once)."""
         self.lake.delete_ids(list(ids))
-        if compact:
-            self.lake.compact()
         return True
 
     def get_by_ids(self, ids: Sequence[str]) -> list[dict]:

@@ -226,7 +226,9 @@ def decode_png_pixels(payload: bytes):
         data = payload[pos + 8 : pos + 8 + length]
         pos += 12 + length  # length + type + data + crc
         if ctype == b"IHDR":
-            header = struct.unpack(">IIBBBBB", data)
+            if len(data) < 13:
+                raise ValueError("corrupt PNG: header truncated")
+            header = struct.unpack_from(">IIBBBBB", data)
         elif ctype == b"PLTE":
             plte = data
         elif ctype == b"IDAT":
@@ -297,6 +299,8 @@ def decode_bmp_pixels(payload: bytes):
 
     if payload[:2] != b"BM":
         raise ValueError("not a BMP payload")
+    if len(payload) < 34:
+        raise ValueError("corrupt BMP: header truncated")
     (off,) = struct.unpack_from("<I", payload, 10)
     w, h = struct.unpack_from("<ii", payload, 18)
     (bpp,) = struct.unpack_from("<H", payload, 28)

@@ -120,11 +120,9 @@ def lsh_neardup_pairs(
     threshold: float = 0.35,
     vec_col: str = "embedding",
     id_col: str = "vec_id",
-    n_bands: int = 0,
+    *,
+    n_bands: int,
     band_bits: int | None = 0,
-    band_seed: int = 137,
-    carry_vectors: bool = False,
-    max_bucket_size: int | None = None,
     n_rows: int | None = None,
 ) -> DataFrame:
     """LSH shard-bucketed near-duplicate pairs — the 100 TB scale path for
@@ -133,16 +131,17 @@ def lsh_neardup_pairs(
     restriction is deterministic (seeded hyperplanes), so the result is
     still oracle-checkable.
 
-    **Second-level banding** (``n_bands``/``band_bits`` — VERDICT r02 #2):
-    a shard-only equi-join is quadratic *within* a shard, and LSH shards on
-    real embedding distributions are skewed — a hot shard holding x% of a
-    100 TB corpus contributes (x%·N)² candidate pairs regardless of AQE.
-    With banding, each row also gets ``n_bands`` keys from independent
-    seeded hyperplanes (``band_bits`` sign bits each, SimHash-band style)
-    and a pair is a candidate iff it shares the shard AND agrees on ALL
-    bits of AT LEAST ONE band. The join key becomes (shard, band, key):
-    per-key bucket size drops by ~2^band_bits regardless of how skewed the
-    shard distribution is, which is what bounds the pair count by design.
+    **Second-level banding** (``n_bands`` ≥ 1, ``band_bits`` — VERDICT
+    r02 #2): a shard-only equi-join is quadratic *within* a shard, and
+    LSH shards on real embedding distributions are skewed — a hot shard
+    holding x% of a 100 TB corpus contributes (x%·N)² candidate pairs
+    regardless of AQE. So each row also gets ``n_bands`` keys from
+    independent seeded hyperplanes (``band_bits`` sign bits each,
+    SimHash-band style) and a pair is a candidate iff it shares the
+    shard AND agrees on ALL bits of AT LEAST ONE band. The join key is
+    (shard, band, key): per-key bucket size drops by ~2^band_bits
+    regardless of how skewed the shard distribution is, which is what
+    bounds the pair count by design.
 
     Recall at the threshold boundary is 1-(1-p^band_bits)^n_bands with
     p = 1 - arccos(threshold)/π. Tune per threshold: at a real dedup
@@ -150,55 +149,24 @@ def lsh_neardup_pairs(
     ~30× candidate reduction at ~90% recall; at the low testdata
     threshold (0.35) only shallow bands (band_bits=2) keep recall, so the
     default registry config trades a smaller split for ~94% recall.
-    ``n_bands=0`` disables banding (exact within-shard semantics).
 
     Measured cliff (r09, SCALE.md "Semantic dedup mult100 rung"): on a
     200k-row corpus that is DENSE at the threshold (17 clusters total),
     band_bits=2 leaves only 4 keys per band and the bucket cliques go
     quadratic — 2037.6 s end-to-end vs 216.1 s at band_bits=6 on the
     same corpus. Size ``2^band_bits`` to at least the expected bucket
-    density (≥6 for low thresholds at scale).
+    density (≥6 for low thresholds at scale); ``band_bits=None`` does
+    that from the corpus row count (``auto_band_bits``).
 
-    ``max_bucket_size`` (r09) is the per-bucket twin of the shingle
-    df-cap: a (shard, band, key) bucket larger than the cap is dropped
-    before the join, bounding candidates per bucket at cap² by
-    construction. Degradation is graceful for SKEW: a pair survives if
-    it shares ANY surviving bucket (the cap switches pair-dedup from
-    the first-matching-band residual — which would wrongly suppress a
-    pair whose first match was in a dropped bucket — to an explicit
-    per-pair aggregate), so only pairs whose EVERY shared bucket is
-    degenerate are lost. Shuffle economy (plan-pinned,
-    test_neardup_bucket_cap_exchange_economy): on the narrow path the
-    counting window hash-partitions on the same (shard, band, bkey) the
-    join needs and the cap adds NO exchange; on the carry path the cap
-    runs BEFORE vectors attach — one extra narrow key-row exchange
-    buys a survivor-only vector shuffle when the cap binds. Know which
-    failure you have: on the cliff corpus
-    above the density is CORPUS-WIDE (64 buckets per band, all
-    1.8k-5.2k rows), so a 512 cap suppresses everything — 13.5 s,
-    0 pairs: a loud refusal valve against quadratic work, not a fix —
-    while re-banding (band_bits=6) is the correct tool (216.1 s, full
-    pair set). The cap is for isolated hot buckets in an otherwise
-    healthy corpus (tests/test_lsh.py::test_banded_neardup_bucket_cap:
-    a 40-row duplicate blob is suppressed, unrelated near-dup pairs
-    keep matching).
-
-    ``carry_vectors`` picks the shuffle strategy for the exact kernel
-    (r04, from the 200k-row stress — SCALE.md "Near-dup at 200k rows"):
-
-    - ``False`` (default): candidate (id_a, id_b) pairs are generated
-      narrow, then each side's vector is joined back by id. Optimal when
-      candidates are SPARSE (production thresholds ≥0.8 with deep
-      bands): the pair-keyed shuffle is pairs × ~1 KB, smaller than
-      re-shuffling the corpus n_bands times.
-    - ``True``: each banded row carries its vector INTO the bucket join
-      (n_bands × corpus shuffle, narrow ids only afterwards), so
-      candidate pairs are scored as the join streams and never
-      materialize unscored. Required when candidates are DENSE (low
-      threshold, shallow bands, replica-heavy corpora): measured at 200k
-      rows / ~10⁸ candidates, the default strategy's pair shuffle
-      exceeds 80 GB of local spill (ENOSPC) while this one completes
-      with a ~1 GB bucket-join shuffle.
+    Shuffle (r04, from the 200k-row stress — SCALE.md "Near-dup at 200k
+    rows"): each banded row carries its vector INTO the bucket join
+    (n_bands × corpus shuffle, narrow ids only afterwards), so candidate
+    pairs are scored as the join streams and never materialize
+    unscored. Each pair is scored once, at its FIRST matching band (the
+    residual requires earlier band keys to differ), so no pair-dedup
+    exchange follows. Measured at 200k rows / ~10⁸ candidates, a
+    candidate-then-join-back plan exceeded 80 GB of local spill
+    (ENOSPC) where this one completes with a ~1 GB bucket-join shuffle.
     """
     from vector_lake_spark.functions.vectors import dot, norm
     from vector_lake_spark.operators.lsh import (
@@ -206,7 +174,9 @@ def lsh_neardup_pairs(
         shard_id_expr,
     )
 
-    if n_bands and band_bits is None:
+    if n_bands < 1:
+        raise ValueError(f"n_bands must be >= 1, got {n_bands}")
+    if band_bits is None:
         # auto-size the band width from the corpus (r10, VERDICT r09 #2):
         # one count job — cheap against the banded join it protects, and
         # at 100 TB a count over parquet footers is metadata work. The
@@ -226,52 +196,20 @@ def lsh_neardup_pairs(
     ).withColumn("shard", shard_id_expr("`v`", hyperplanes))
     base = base.withColumn("nv", norm(F.col("v")))
     # NOT materialized (r12 negative result, twice measured): base is
-    # consumed up to four times below (both banded key sides + both
-    # exact-kernel vector lookups — 8 scans in vec_neardup_lsh's
-    # plan), but its subtree is scan + sign-hash codegen, and BOTH a
-    # lazy localCheckpoint (1.34 → 2.90 s) and a repartition-for-AQE-
-    # reuse barrier (1.33 → 1.91 s) measured worse than recomputing
-    # it. Materialize-for-reuse pays only when the duplicated subtree
-    # holds expensive Python/Arrow work (the Hamming codec chain, the
+    # consumed by both banded key sides and both vector attachments,
+    # but its subtree is scan + sign-hash codegen, and BOTH a lazy
+    # localCheckpoint (1.34 → 2.90 s) and a repartition-for-AQE-reuse
+    # barrier (1.33 → 1.91 s) measured worse than recomputing it.
+    # Materialize-for-reuse pays only when the duplicated subtree holds
+    # expensive Python/Arrow work (the Hamming codec chain, the
     # shingle tokenize pass) — not cheap whole-stage arithmetic.
 
     sim = F.round(
         F.try_divide(dot(F.col("va"), F.col("vb")), F.col("na") * F.col("nb")), 6
     )
-    va = base.select(
-        F.col("id").alias("id_a"), F.col("v").alias("va"), F.col("nv").alias("na")
-    )
-    vb = base.select(
-        F.col("id").alias("id_b"), F.col("v").alias("vb"), F.col("nv").alias("nb")
-    )
-
-    if not n_bands:
-        # simple within-shard join: vectors ride along (one shuffle)
-        a = base.select(
-            F.col("id").alias("id_a"), F.col("v").alias("va"),
-            F.col("nv").alias("na"), "shard",
-        )
-        b = base.select(
-            F.col("id").alias("id_b"), F.col("v").alias("vb"),
-            F.col("nv").alias("nb"), "shard",
-        )
-        return (
-            a.join(b, ["shard"])
-            .filter(F.col("id_a") < F.col("id_b"))
-            .withColumn("sim", sim)
-            .filter(F.col("sim") >= threshold)
-            .select("id_a", "id_b", "sim")
-        )
-
-    bands = make_band_hyperplanes(
-        hyperplanes.shape[1], n_bands, band_bits, seed=band_seed
-    )
-    # candidate generation is NARROW: one (id, shard, band, bkey) row per
-    # (vector, band) — the 8-byte keys explode n_bands×, the 512-byte
-    # vectors never do. Each candidate pair is emitted exactly once, at
-    # its FIRST matching band (the residual requires earlier band keys to
-    # differ) — no pair-dedup exchange at all — and only then are the two
-    # vectors joined back for the exact kernel: one evaluation per pair.
+    bands = make_band_hyperplanes(hyperplanes.shape[1], n_bands, band_bits)
+    # one (id, shard, band, bkey) row per (vector, band): the 8-byte keys
+    # explode n_bands×, and the vectors attach once per row below
     keys = base.select(
         "id",
         "shard",
@@ -292,81 +230,29 @@ def lsh_neardup_pairs(
         F.element_at("bkeys", F.col("band") + 1).alias("bkey"),
         "bkeys",
     )
-    if max_bucket_size is not None:
-        # bucket-size guard: count per join key with a window that
-        # hash-partitions exactly like the join below — the filter
-        # reuses one exchange (the shingle df-cap pattern, dedup.py)
-        from pyspark.sql import Window
-
-        w_bucket = Window.partitionBy("shard", "band", "bkey")
-        keys = (
-            keys.withColumn("bsz", F.count(F.lit(1)).over(w_bucket))
-            .filter(F.col("bsz") <= max_bucket_size)
-            .drop("bsz")
-        )
-        # the first-matching-band residual is UNSOUND under the cap (it
-        # assumes every earlier matching band's bucket rows exist, and a
-        # dropped bucket would suppress the pair at its later matches),
-        # so pair-dedup becomes an explicit aggregate; candidates are
-        # bounded by the cap, which is what pays for the extra exchange
-        first_match = F.col("id_a") < F.col("id_b")
-    else:
-        first_match = reduce(
-            lambda acc, j: acc
-            & (
-                (F.col("band") <= F.lit(j))
-                | (F.element_at("bka", j + 1) != F.element_at("bkb", j + 1))
-            ),
-            range(n_bands - 1),
-            F.col("id_a") < F.col("id_b"),
-        )
-    if carry_vectors:
-        # dense-candidate strategy: vectors ride the bucket join, pairs
-        # are scored as the join streams — no pair-keyed vector shuffle
-        keyed = keys.join(base.select("id", "v", "nv"), "id")
-        ka = keyed.select(
-            F.col("id").alias("id_a"), "shard", "band", "bkey",
-            F.col("bkeys").alias("bka"),
-            F.col("v").alias("va"), F.col("nv").alias("na"),
-        )
-        kb = keyed.select(
-            F.col("id").alias("id_b"), "shard", "band", "bkey",
-            F.col("bkeys").alias("bkb"),
-            F.col("v").alias("vb"), F.col("nv").alias("nb"),
-        )
-        scored = (
-            ka.join(kb, ["shard", "band", "bkey"])
-            .filter(first_match)
-            .withColumn("sim", sim)
-            .filter(F.col("sim") >= threshold)
-            .select("id_a", "id_b", "sim")
-        )
-        if max_bucket_size is not None:
-            # a pair may now match in several surviving buckets; sim is
-            # band-independent, so max == the single exact value
-            scored = scored.groupBy("id_a", "id_b").agg(
-                F.max("sim").alias("sim")
-            )
-        return scored
-    ka = keys.select(
+    first_match = reduce(
+        lambda acc, j: acc
+        & (
+            (F.col("band") <= F.lit(j))
+            | (F.element_at("bka", j + 1) != F.element_at("bkb", j + 1))
+        ),
+        range(n_bands - 1),
+        F.col("id_a") < F.col("id_b"),
+    )
+    keyed = keys.join(base.select("id", "v", "nv"), "id")
+    ka = keyed.select(
         F.col("id").alias("id_a"), "shard", "band", "bkey",
         F.col("bkeys").alias("bka"),
+        F.col("v").alias("va"), F.col("nv").alias("na"),
     )
-    kb = keys.select(
+    kb = keyed.select(
         F.col("id").alias("id_b"), "shard", "band", "bkey",
         F.col("bkeys").alias("bkb"),
+        F.col("v").alias("vb"), F.col("nv").alias("nb"),
     )
-    cand_ids = (
+    return (
         ka.join(kb, ["shard", "band", "bkey"])
         .filter(first_match)
-        .select("id_a", "id_b")
-    )
-    if max_bucket_size is not None:
-        # dedup BEFORE the vector join: each pair's vectors move once
-        cand_ids = cand_ids.distinct()
-    return (
-        cand_ids.join(va, "id_a")
-        .join(vb, "id_b")
         .withColumn("sim", sim)
         .filter(F.col("sim") >= threshold)
         .select("id_a", "id_b", "sim")

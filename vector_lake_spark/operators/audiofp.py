@@ -42,10 +42,7 @@ from __future__ import annotations
 import numpy as np
 from pyspark.sql import DataFrame
 
-from vector_lake_spark.multimodal import (
-    UnrecognizedMedia,
-    decode_audio_samples,
-)
+from vector_lake_spark.multimodal import decode_audio_samples
 from vector_lake_spark.rowmap import map_rows
 
 FRAME = 64
@@ -62,12 +59,10 @@ def decode_wav_samples(payload: bytes):
     count not divisible by the channel count) is trimmed. The
     fingerprint is amplitude-scale-invariant (energy ORDERING), so the
     decoders' differing sample domains need no normalization here. A
-    payload no audio decoder recognizes is corrupt input to this stage
-    (ValueError), where the stats path names it unsupported."""
-    try:
-        samples, rate, n_channels, _codec = decode_audio_samples(payload)
-    except UnrecognizedMedia as e:
-        raise ValueError("corrupt WAV payload for audio fingerprinting") from e
+    payload no audio decoder recognizes raises ``UnrecognizedMedia``,
+    as it does on the stats path; a damaged payload of a recognized
+    format raises ValueError."""
+    samples, rate, n_channels, _codec = decode_audio_samples(payload)
     n_frames = samples.size // n_channels
     mono = samples[: n_frames * n_channels].astype(np.float64)
     return mono.reshape(-1, n_channels).mean(axis=1), rate

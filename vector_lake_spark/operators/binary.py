@@ -180,7 +180,6 @@ def hamming_neardup_pairs(
     radius: int,
     sig_col: str = "sig",
     id_col: str = "media_id",
-    n_bands: int | None = None,
     n_blocks: int | None = None,
     n_longs: int = 1,
     group_cols: Sequence[str] = (),
@@ -221,17 +220,7 @@ def hamming_neardup_pairs(
     corpus size and the join goes quadratic on large corpora (measured:
     311 s at 2M rows for radius 7). More blocks multiply the tables,
     C(b, t), but widen keys exponentially. Default (None) auto-sizes
-    from one corpus count (``auto_hamming_blocks``); ``n_bands`` is the
-    legacy spelling of ``n_blocks`` (same meaning, stricter validation:
-    must divide 64). NOTE (r11, ADVICE r10): one-table-per-band holds
-    only at the minimal config n_bands == radius+1; pinning
-    n_bands > radius+1 expands to C(n_bands, n_bands−radius)
-    combination tables (e.g. n_bands=8 at radius 3 → C(8,5) = 56
-    tables of 40-bit keys, not 8 single-band tables) — still exact,
-    but a materially larger plan than classic single-band LSH banding.
-    Callers wanting exactly one table per band should pass
-    n_bands = radius+1 (the measured-optimal config anyway — see
-    ``auto_hamming_blocks``).
+    from one corpus count (``auto_hamming_blocks``).
 
     Shuffle economy: signatures are 8 bytes, so they ride the band join
     (no second join to re-attach payloads); each pair is emitted at its
@@ -271,21 +260,6 @@ def hamming_neardup_pairs(
             f"({64 * (n_longs - 1)}, {64 * n_longs}] for n_longs={n_longs}"
         )
     min_blocks = (total_bits + 63) // 64  # every block must fit an int64
-    if n_bands is not None:
-        if n_longs > 1 or total_bits != 64:
-            raise ValueError(
-                "n_bands is the 64-bit legacy spelling; pass n_blocks "
-                "for multi-long or short signatures"
-            )
-        if not 0 < n_bands <= 64 or 64 % n_bands:
-            raise ValueError(f"n_bands must divide 64, got {n_bands}")
-        if radius >= n_bands:
-            raise ValueError(
-                f"radius {radius} >= n_bands {n_bands}: the pigeonhole "
-                f"guarantee needs radius < n_bands (raise n_bands or "
-                f"use an LSH strategy for lossy recall)"
-            )
-        n_blocks = n_bands
     if n_blocks is None:
         n_blocks = auto_hamming_blocks(
             df.count(), radius, total_bits=total_bits,

@@ -604,7 +604,6 @@ def embedding_neardup_pairs(
     threshold: float = 0.95,
     vec_col: str = "embedding",
     id_col: str = "vec_id",
-    parallelism: int | None = None,
     max_rows: int = 100_000,
 ) -> DataFrame:
     """Exact cosine near-duplicate pairs (a < b, sim ≥ threshold).
@@ -638,7 +637,7 @@ def embedding_neardup_pairs(
         to_double_array(F.col(vec_col)).alias("va"),
     ).withColumn(
         "na", norm(F.col("va"))
-    ).repartition(parallelism or df.sparkSession.sparkContext.defaultParallelism)
+    ).repartition(df.sparkSession.sparkContext.defaultParallelism)
     b = df.select(
         F.col(id_col).alias("id_b"),
         to_double_array(F.col(vec_col)).alias("vb"),
@@ -685,7 +684,6 @@ def duplicated_spans(
     id_col: str = "doc_id",
     n: int = 5,
     min_docs: int = 3,
-    checkpoint: bool = True,
 ) -> DataFrame:
     """Maximal corpus-duplicated token spans per document (r12 — the
     dedupe-spans-not-docs recipe from the public C4 / "Deduplicating
@@ -700,9 +698,9 @@ def duplicated_spans(
     (running-max window: overlapping shingle footprints union — a
     plain consecutive-starts grouping would double-count coverage).
     Shuffles carry (id, pos, h) rows only."""
-    pos = positional_shingle_hashes(df, text_col, id_col, n)
-    if checkpoint:
-        pos = pos.localCheckpoint(eager=False)
+    pos = positional_shingle_hashes(df, text_col, id_col, n).localCheckpoint(
+        eager=False
+    )
     freq = (
         pos.groupBy("h")
         .agg(F.countDistinct(id_col).alias("nd"))

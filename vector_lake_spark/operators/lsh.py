@@ -25,7 +25,7 @@ import math
 import numpy as np
 from pyspark.sql import Column, functions as F
 
-from vector_lake_spark.functions.vectors import dot, lit_vector, sql_double_lit
+from vector_lake_spark.functions.vectors import sql_dot, sql_vector_lit
 
 
 def num_hashes_for(approx_shards: int) -> int:
@@ -48,9 +48,8 @@ def make_hyperplanes(dim: int, num_hashes: int, seed: int = 42) -> np.ndarray:
 
 
 def spark_shard_id_sql(vec_sql: str, hyperplanes: np.ndarray) -> str:
-    """Spark-SQL text computing the identical shard id over a vector
-    expressed as a SQL fragment — the single-parse fast path of
-    ``shard_id_expr`` (r12 optimization): the per-``F.lit``/``dot``
+    """Spark-SQL text computing the shard id over a vector expressed as
+    a SQL fragment (r12 optimization): the per-``F.lit``/``dot``
     construction of the same tree costs ~90 ms of py4j round-trips per
     hyperplane bank and is charged to every query construction; one
     ``F.expr`` parse of this text is <1 ms and yields the identical
@@ -59,11 +58,7 @@ def spark_shard_id_sql(vec_sql: str, hyperplanes: np.ndarray) -> str:
     nh = len(hyperplanes)
     out = "CAST(0 AS BIGINT)"
     for j, row in enumerate(hyperplanes):
-        arr = "array(" + ",".join(sql_double_lit(v) for v in row) + ")"
-        d = (
-            f"aggregate(zip_with({vec_sql}, {arr}, (x, y) -> x * y), "
-            f"0.0D, (acc, x) -> acc + x)"
-        )
+        d = sql_dot(vec_sql, sql_vector_lit(row))
         out = (
             f"({out} + CAST(({d}) > 0 AS BIGINT) * "
             f"CAST({2 ** (nh - 1 - j)} AS BIGINT))"
@@ -71,26 +66,17 @@ def spark_shard_id_sql(vec_sql: str, hyperplanes: np.ndarray) -> str:
     return out
 
 
-def shard_id_expr(vec: Column | str, hyperplanes: np.ndarray) -> Column:
-    """shard_id as a native column expression (MSB-first sign bits → int).
+def shard_id_expr(vec_sql: str, hyperplanes: np.ndarray) -> Column:
+    """shard_id as a native column expression (MSB-first sign bits → int)
+    over a vector given as a SQL fragment (e.g.
+    ``"CAST(`embedding` AS ARRAY<DOUBLE>)"``), built in ONE ``F.expr``
+    parse of ``spark_shard_id_sql``.
 
     Each hyperplane is inlined as a literal array — Catalyst treats it as a
     constant, so the whole hash runs inside whole-stage codegen with no
     Python round-trip and no shuffle.
-
-    ``vec`` may be a Column (legacy DSL construction) or a SQL fragment
-    string (e.g. ``"CAST(`embedding` AS ARRAY<DOUBLE>)"``) — the string
-    form builds the identical expression in ONE ``F.expr`` parse instead
-    of hundreds of py4j calls (see ``spark_shard_id_sql``).
     """
-    if isinstance(vec, str):
-        return F.expr(spark_shard_id_sql(vec, hyperplanes))
-    nh = len(hyperplanes)
-    out = F.lit(0).cast("long")
-    for j, row in enumerate(hyperplanes):
-        bit = (dot(vec, lit_vector(row)) > 0).cast("long")
-        out = out + bit * F.lit(2 ** (nh - 1 - j)).cast("long")
-    return out
+    return F.expr(spark_shard_id_sql(vec_sql, hyperplanes))
 
 
 def make_band_hyperplanes(

@@ -105,8 +105,11 @@ def topk_cosine_batch(
     100 TB the corpus streams through once and only winners shuffle.
     Returns (query_id, vec_id, score, rn) with rn ∈ [1, k].
 
-    For query batches too large to broadcast, use
-    ``store.query_batch`` (routed blocked-matmul, winners-only shuffle).
+    Against ``store.SparkVectorLake.query_batch``: this operator is
+    exact and scores every row; ``query_batch`` is LSH-routed, scores
+    only the probed shards and takes at most ``max_queries`` queries
+    collected to the driver. Both put their whole query side into a
+    broadcast, so neither serves a query side too large for the driver.
     """
     q = F.broadcast(
         queries_df.select(

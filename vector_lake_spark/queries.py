@@ -484,11 +484,6 @@ SELECT n.label, n.n_vectors, c.centroid_norm FROM n JOIN c ON n.label = c.label
 
 
 def q_vec_neardup_lsh(spark, sf):
-    # carry_vectors: at this threshold (0.35, shallow bands) candidates
-    # are dense, so vectors ride the bucket join — measured ~30% faster
-    # at sf0.1 AND the only strategy that survives the 200k replica
-    # stress (SCALE.md "Near-dup at 200k rows"); both strategies emit
-    # identical pairs (tests/test_lsh.py).
     from vector_lake_spark.operators.ann import lsh_neardup_pairs
 
     return lsh_neardup_pairs(
@@ -501,7 +496,6 @@ def q_vec_neardup_lsh(spark, sf):
         # oracle scale (≤ 16·256·4 rows), so the static SQL stays exact,
         # and to the measured-safe 6 on the 200k cliff corpus
         band_bits=None,
-        carry_vectors=True,
         # r13: the cached footer row count feeds the sizer — same value
         # as df.count() (whole immutable table), no job per build
         n_rows=_t_rows(spark, sf, "embeddings"),
@@ -562,8 +556,6 @@ def q_vec_semantic_dedup(spark, sf):
         band_bits=None,  # auto-sized (r10): =2 at oracle scales, =6 on
         # the r09 mult100 cliff corpus — fixes the measured 2038 s
         # quadratic without touching the sf0.01/sf0.1 pair sets
-        carry_vectors=True,  # dense candidates at this threshold — see
-        # q_vec_neardup_lsh and SCALE.md "Near-dup at 200k rows"
         n_rows=_t_rows(spark, sf, "embeddings"),  # r13 cached statistic
     )
     return connected_components_star(
@@ -1200,7 +1192,6 @@ def _knn_candidate_pairs(spark, sf):
         threshold=-2.0,
         n_bands=NEARDUP_N_BANDS,
         band_bits=None,
-        carry_vectors=True,
         n_rows=_t_rows(spark, sf, "embeddings"),  # r13 cached statistic
     )
 
@@ -4646,8 +4637,7 @@ def q_dedup_stream_neardup(spark, sf):
         .option("pathGlobFilter", "embeddings.parquet")
         .parquet(sf)
     )
-    v = to_double_array(F.col("embedding"))
-    shard, bkeys = banded_keys(v, H4, NEARDUP_BANDS)
+    shard, bkeys = banded_keys(EMB_SPARK, H4, NEARDUP_BANDS)
     keyed = stream.select(
         F.col("vec_id"), shard.alias("shard"), bkeys.alias("bkeys")
     )

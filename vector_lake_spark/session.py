@@ -40,9 +40,9 @@ def get_spark(
         .config("spark.sql.session.timeZone", "UTC")
         # INT96 (the legacy default) writes NO parquet min/max stats for
         # timestamp columns, so retention scans can't skip row groups;
-        # micros is the modern type, carries stats, and round-trips the
-        # store's timestamps exactly (store.compact(time_cluster=True)
-        # depends on those footers — test_store.py)
+        # micros is the modern type, carries stats in the footers that
+        # delete_older_than prunes on, and round-trips the store's
+        # timestamps exactly
         .config("spark.sql.parquet.outputTimestampType", "TIMESTAMP_MICROS")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.ui.enabled", "false")

@@ -365,30 +365,24 @@ class SparkVectorLake:
             keep_cols=("metadata", "document", "timestamp", "vector"),
         )
 
-    def stream_ingest(
-        self,
-        stream_df: DataFrame,
-        checkpoint_dir: str,
-        trigger_available_now: bool = True,
-    ):
+    def stream_ingest(self, stream_df: DataFrame, checkpoint_dir: str):
         """Structured-Streaming ingest: each micro-batch is routed and
         appended exactly like ``persist`` (same shard clustering), with
         the stream checkpoint playing the role of the reference's
         ``_synced_rows`` watermark (index.py:289 — SURVEY §2.A I3).
-        Returns the started StreamingQuery."""
+        Returns the started availableNow StreamingQuery."""
 
         def write_batch(batch_df: DataFrame, batch_id: int) -> None:
             self._append(
                 batch_df.withColumn("vector", self._validated(F.col("vector")))
             )
 
-        writer = (
+        return (
             stream_df.writeStream.foreachBatch(write_batch)
             .option("checkpointLocation", checkpoint_dir)
+            .trigger(availableNow=True)
+            .start()
         )
-        if trigger_available_now:
-            writer = writer.trigger(availableNow=True)
-        return writer.start()
 
     def query_batch(
         self,
@@ -413,7 +407,14 @@ class SparkVectorLake:
         shard_id produces |shard|×|queries-in-shard| pair rows (tens of
         millions at 50k×1k) and the rank shuffles all of them. The Arrow
         path keeps the pair explosion inside numpy (a ~0.1s matmul) and
-        shuffles only winners. Store rows never shuffle at all."""
+        shuffles only winners. Store rows never shuffle at all.
+
+        Against ``operators.topk.topk_cosine_batch``: this method is
+        LSH-routed and approximate — it scores only the probed shards,
+        for at most ``max_queries`` queries collected to the driver;
+        ``topk_cosine_batch`` is exact and scores every row. Both put
+        their whole query side into a broadcast, so neither serves a
+        query side too large for the driver."""
         import numpy as np
         import pandas as pd
 
@@ -428,11 +429,10 @@ class SparkVectorLake:
         if len(qrows) > max_queries:
             raise ValueError(
                 f"query_batch collects the query side driver-side and the "
-                f"batch has > max_queries={max_queries} rows. Use the "
-                f"distributed broadcast-join path "
-                f"(operators.topk.topk_cosine_batch) for large query "
-                f"tables, or raise max_queries explicitly if the driver "
-                f"can hold the batch."
+                f"batch has > max_queries={max_queries} rows. Split the "
+                f"batch, or raise max_queries explicitly if the driver "
+                f"can hold it (operators.topk.topk_cosine_batch, the "
+                f"exact unrouted path, also broadcasts its query side)."
             )
         by_shard: dict[str, tuple[list, "np.ndarray"]] = {}
         for r in qrows:
@@ -794,46 +794,13 @@ class SparkVectorLake:
         return sum(touched.values())
 
     @_locked
-    def compact(
-        self,
-        target_files_per_shard: int = 1,
-        time_cluster: bool = False,
-    ) -> None:
-        """Rewrite each shard into ``target_files_per_shard`` files — the
-        small-files fix for the reference's 256-tiny-segments pathology
-        (SURVEY.md §7.7). Atomic per shard via temp-dir + rename swap.
-
-        ``time_cluster=True`` instead lays every rewritten file out as a
-        CONTIGUOUS time range (range-partition on (shard_id, timestamp),
-        sampled bounds, one shuffle + in-partition sort — the same move
-        as ``operators/layout.zorder_layout`` with time as the only
-        dimension): each file's parquet footer then carries a tight
-        timestamp min/max, so ``delete_older_than``'s
-        ``timestamp < cutoff`` scan skips whole files/row-groups of
-        young data and retention I/O tracks the EXPIRED fraction, not
-        the shard size. (A hash salt here would interleave times across
-        every file and leave footers full-span — measured in
-        tests/test_store.py::test_compact_time_cluster_narrows_footers.)"""
-
-        def staged(rows: DataFrame, n_shards: int) -> DataFrame:
-            n_out = target_files_per_shard * n_shards
-            if time_cluster:
-                return rows.repartitionByRange(
-                    n_out, "shard_id", "timestamp"
-                ).sortWithinPartitions("shard_id", "timestamp")
-            # repartition on shard_id alone would put each shard in ONE
-            # task (one file, knob ignored); an intra-shard salt splits
-            # hot shards into up to target_files_per_shard files for
-            # parallel reads
-            salted = rows.withColumn(
-                "__salt",
-                F.pmod(F.xxhash64("id"), F.lit(target_files_per_shard)),
-            )
-            return salted.repartition(n_out, "shard_id", "__salt").drop(
-                "__salt"
-            )
-
-        self._rewrite(staged=staged)
+    def compact(self) -> None:
+        """Rewrite each shard into one file — the small-files fix for the
+        reference's 256-tiny-segments pathology (SURVEY.md §7.7). Atomic
+        per shard via temp-dir + rename swap."""
+        self._rewrite(
+            staged=lambda rows, n_shards: rows.repartition(n_shards, "shard_id")
+        )
 
     @_locked
     def delete_shards(self, shard_ids: Sequence) -> None:

@@ -56,15 +56,16 @@ OUTPUT_SCHEMA = T.StructType(
 
 
 def banded_keys(
-    v: Column, hyperplanes, bands
+    vec_sql: str, hyperplanes, bands
 ) -> tuple[Column, Column]:
-    """(shard, bkeys) columns from the SAME native expressions the batch
-    path uses — the LSH arithmetic is never duplicated in Python."""
+    """(shard, bkeys) columns over a vector given as a SQL fragment, from
+    the SAME native expressions the batch path uses — the LSH arithmetic
+    is never duplicated in Python."""
     from vector_lake_spark.operators.lsh import shard_id_expr
 
-    shard = shard_id_expr(v, hyperplanes).cast("long")
+    shard = shard_id_expr(vec_sql, hyperplanes).cast("long")
     bkeys = F.array(
-        *[shard_id_expr(v, b).cast("long") for b in bands]
+        *[shard_id_expr(vec_sql, b).cast("long") for b in bands]
     )
     return shard, bkeys
 

@@ -91,6 +91,8 @@ def _read_ifd(payload: bytes, pos: int, lt: str) -> tuple[dict, int]:
             vals = list(payload[off : off + count])
         tags[tag] = vals
         pos += 12
+    if pos + 4 > len(payload):
+        raise ValueError("corrupt TIFF: truncated IFD")
     (next_ifd,) = struct.unpack_from(lt + "I", payload, pos)
     return tags, next_ifd
 
@@ -98,6 +100,8 @@ def _read_ifd(payload: bytes, pos: int, lt: str) -> tuple[dict, int]:
 def _walk_ifds(payload: bytes):
     if not is_tiff(payload):
         raise ValueError("not a TIFF payload (II*/MM* magic missing)")
+    if len(payload) < 8:
+        raise ValueError("corrupt TIFF: header truncated")
     lt = "<" if payload[:2] == b"II" else ">"
     (off,) = struct.unpack_from(lt + "I", payload, 4)
     seen = set()
